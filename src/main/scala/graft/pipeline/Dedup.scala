@@ -667,7 +667,8 @@ object Dedup {
     val edgesWide = p.select(col("a").as("x"), col("b").as("y"))
       .union(p.select(col("b").as("x"), col("a").as("y")))
     // = edgesWide.count(), reading the pairs checkpoint once, not twice:
-    // the two symmetrized directions are disjoint by a<b construction
+    // DataFrame `union` is UNION ALL, so the symmetrized list holds
+    // exactly twice p's rows whatever the pairs look like
     val nEdges = 2L * p.count()
     // AQE is off for the loop (see connectedComponents), so size the loop
     // shuffles manually: the label/edge sets are typically orders of

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.{ShardedLayer, ShardedLayout}
 
 /** [EXT] Persisted inverted text index — the reference's salted bucketed
   * store applied to term lookup, the third instance of the same layout
@@ -22,6 +23,11 @@ import org.apache.spark.sql.functions._
   * layout are listed and only matching row groups read. A conjunctive
   * (AND) query then groups the few surviving postings by doc —
   * bounded by the rarest term's posting list, never the corpus.
+  *
+  * Its lifecycle — manifest, `_delta` segments, `_deletes` tombstones,
+  * fold, compact, reshard — is the [[graft.store.ShardedLayout]] shared
+  * with GramIndex and BandIndex, with the postings as its one layer at
+  * the root.
   */
 object TextIndex {
 
@@ -51,7 +57,7 @@ object TextIndex {
 
   /** md5-derived term shard — identical arithmetic in DuckDB via
     * [[Dedup.duckBaseHash32]], so the oracle can replay pruning. */
-  def shardOf(t: org.apache.spark.sql.Column, shards: Int): org.apache.spark.sql.Column =
+  def shardOf(t: Column, shards: Int): Column =
     pmod(Dedup.baseHash32(t), lit(shards.toLong))
 
   def shardOfTerm(t: String, shards: Int): Long = {
@@ -60,47 +66,45 @@ object TextIndex {
     java.lang.Long.parseLong(hex.substring(0, 8), 16) % shards
   }
 
-  private def fsOf(spark: SparkSession, path: String) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    (root.getFileSystem(spark.sessionState.newHadoopConf()), root)
-  }
-
-  // ---- delta segments (the append grain) -----------------------------
-
   /** Unfolded append segments live under `_delta/seg_*` — underscore-
     * prefixed so the sharded root keeps reading clean (Spark's file
     * listing skips `_`-prefixed dirs, the `_deletes` trick), each
-    * segment ONE single-file parquet layer of plain posting rows
-    * (t, doc_id, tf, dl, positions), published atomically by rename.
-    * This is the GramIndex/BandIndex delta discipline ported to the
-    * text index: the previous sharded append paid ~one file commit per
-    * touched shard — the O(nShards) LSM commit floor the r16 scale
-    * harness measured at 165s for a 151-doc insert on a 6400-shard
-    * gram base (a realistic micro-batch's terms touch nearly every
-    * shard), re-paid here by EVERY streaming text micro-batch. A
-    * segment costs one file commit; probes union the (bounded) delta
-    * under their own term filters; [[compact]] folds segments into the
-    * sharded base — O(touched shards) once per compact cadence. */
+    * segment ONE single-file parquet of plain posting rows. */
   val DeltaDir = "_delta"
 
-  /** Marker for an in-flight delta fold (see [[compact]]): while it
-    * stands, segment rows may exist in BOTH the sharded base and the
-    * delta, so probes refuse loudly instead of double-counting tf. */
   val FoldingMarker = "_text_folding"
 
   private val PostingsCols = Seq("t", "doc_id", "tf", "dl", "positions")
 
-  /** One parquet frame over all published UNFOLDED delta segments —
-    * None when no live segment exists. In-flight publishes sit at
-    * dot-prefixed `.tmp_*` (invisible: only explicit `seg_*` dirs are
-    * globbed); segments already folded into the base but not yet
-    * reclaimed are excluded via [[graft.store.DeltaSegments]]. */
-  private def deltaPostings(spark: SparkSession, path: String): Option[DataFrame] = {
-    val d = new org.apache.hadoop.fs.Path(path, DeltaDir)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val segs = graft.store.DeltaSegments.liveSegs(fs, d)
-    if (segs.isEmpty) None
-    else Some(spark.read.parquet(segs.map(_.toString): _*))
+  /** The one layer: (t, doc_id, tf, dl, positions) postings at the root,
+    * sharded on the term, sorted by (t, doc_id) inside each shard. */
+  private val Root = ShardedLayer("", "t", Seq("t", "doc_id"))
+
+  private[graft] object layout extends ShardedLayout("TextIndex", "text", Seq(Root),
+      ManifestFile, "shards", FoldingMarker, DeltaDir) {
+    def shardOf(c: Column, nShards: Int): Column = TextIndex.shardOf(c, nShards)
+
+    protected def project(postings: DataFrame): Seq[DataFrame] = Seq(postings)
+
+    /** base ∪ delta, DISTINCT: identical (t, doc, tf, dl, positions) rows,
+      * so distinct is exact, and under the disjoint-doc append contract
+      * no legitimate duplicate posting row exists to collapse. */
+    protected def liveRows(spark: SparkSession, path: String): Seq[DataFrame] =
+      Seq(live(withDelta(spark, path, Root, readAll(spark, path, Root))(
+        _.select(PostingsCols.map(col): _*)).distinct(), spark, path, "doc_id"))
+
+    /** The (docs, tokens) totals recounted from the postings at rest at
+      * `root` — tombstones folded, so the pending counters are zero. */
+    override def writeMeta(spark: SparkSession, root: String, nShards: Int): Unit = {
+      val r = spark.read.parquet(root)
+        .agg(count_distinct(col("doc_id")), coalesce(sum("tf"), lit(0L))).head()
+      writeManifest(spark, root, nShards, r.getLong(0), r.getLong(1))
+    }
+
+    /** Folded tombstones make the totals exact again: recount them. */
+    override protected def afterMajor(spark: SparkSession, path: String, nShards: Int,
+                                      hadTombstones: Boolean): Unit =
+      if (hadTombstones) writeMeta(spark, path, nShards)
   }
 
   /** Whether unfolded append segments exist (the fold-pending signal —
@@ -108,53 +112,18 @@ object TextIndex {
   def hasDeltaSegments(spark: SparkSession, path: String): Boolean =
     deltaAdvisory(spark, path)._1 > 0
 
-  /** Delta accumulation advisory: (published segment count, delta
-    * bytes). Every probe unions EVERY published segment, so a caller
-    * that appends per-micro-batch and never compacts converts the
-    * removed write amplification into unbounded read amplification —
-    * this is the number that tells them (the `needsCompaction`
-    * discipline applied to the delta layer). Pure driver listing. */
-  def deltaAdvisory(spark: SparkSession, path: String): (Long, Long) = {
-    val d = new org.apache.hadoop.fs.Path(path, DeltaDir)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val segs = graft.store.DeltaSegments.liveSegs(fs, d)
-    val bytes = segs.map(s =>
-      fs.listStatus(s).filter(_.isFile).map(_.getLen).sum).sum
-    (segs.length.toLong, bytes)
-  }
+  def deltaAdvisory(spark: SparkSession, path: String): (Long, Long) =
+    layout.deltaAdvisory(spark, path)
 
   /** The pruned LIVE postings a probe reads: the named terms' shards of
-    * the sharded base — MANIFEST-BACKED ([[graft.store.FileManifest]]:
-    * zero exists/list calls at any shard count, the same listing-free
-    * path the gram/band probes ride; the marker-aware listing read
-    * serves layouts mid-maintenance or written before the manifest
-    * existed) — UNIONed with the delta segments under the same term
-    * filter (one bounded delta scan, never a corpus read), tombstones
-    * anti-joined over the whole. */
-  /** Construction-coherence guard for every text probe
-    * (ConcurrentFoldSpec): the manifest read and the delta listing must
-    * come from the same side of a racing fold's publish, or folded
-    * rows double-count/vanish. */
-  private def coherentProbe[T](spark: SparkSession, path: String)(build: => T): T = {
-    val (fs, root) = fsOf(spark, path)
-    graft.store.DeltaSegments.coherentSnapshot(fs,
-      new org.apache.hadoop.fs.Path(root, DeltaDir),
-      new org.apache.hadoop.fs.Path(root, FoldingMarker),
-      Seq(new org.apache.hadoop.fs.Path(root,
-        graft.store.FileManifest.ManifestFile)),
-      "text probe")(build)
-  }
-
+    * the sharded base ∪ the delta segments, both under `flt`, with
+    * tombstones anti-joined over the whole. */
   private def probePostings(spark: SparkSession, path: String,
                             shards: Seq[Long], flt: DataFrame => DataFrame): DataFrame =
-    coherentProbe(spark, path) {
-      val base = flt(graft.store.FileManifest.readPartitions(spark, path, shards)
-        .getOrElse(graft.store.SaltedStore.readPartitions(spark, path, shards,
-          partitionPrefix = "shard"))).select(PostingsCols.map(col): _*)
-      val all = deltaPostings(spark, path)
-        .map(d => base.unionByName(flt(d).select(PostingsCols.map(col): _*)))
-        .getOrElse(base)
-      live(all, spark, path)
+    layout.coherentProbe(spark, path, "text probe") {
+      layout.live(layout.withDelta(spark, path, Root,
+        layout.readLayer(spark, path, Root, shards))(
+        d => flt(d).select(PostingsCols.map(col): _*)), spark, path, "doc_id")
     }
 
   /** Build the index from `docs(doc_id, text)`: tokenize, count term
@@ -167,20 +136,19 @@ object TextIndex {
     * same contract as any append ingest); [[searchAll]] aggregates per
     * doc across files, so a doc whose postings span batches still sums
     * correctly. An append onto an EXISTING layout lands as ONE atomic
-    * DELTA SEGMENT ([[DeltaDir]]) — one file commit per micro-batch
-    * instead of the O(nShards) sharded-write floor — which probes union
-    * under their term filters and [[compact]] folds into the base.
+    * delta segment, which probes union under their term filters and
+    * [[compact]] folds into the base; an append onto a fresh path
+    * creates the sharded layout.
     *
     * Single corpus pass: the tokenize→shuffle lineage executes exactly
-    * once (the parquet write). The doc count the manifest needs for idf
-    * is then harvested from the data just written — a doc_id-only
-    * column-pruned scan of the index, whose cost is bounded by postings
-    * size, never a second pass over the raw corpus. */
+    * once (the parquet write). */
   def write(docs: DataFrame, path: String, mode: String = "overwrite",
             shards: Int = DefaultShards): Unit = {
     require(shards > 0, s"shard count must be positive, got $shards")
     val spark = docs.sparkSession
-    if (mode == "append") {
+    val appending = mode == "append"
+    val stored = if (appending) storedShards(spark, path) else None
+    if (appending) {
       storedFormat(spark, path).foreach { f =>
         if (f != Format) throw new IllegalStateException(
           s"text index at $path has layout format $f, this writer produces " +
@@ -190,7 +158,7 @@ object TextIndex {
       // ones, so appending a deleted doc would leave BOTH hidden until
       // the fold and then resurrect the stale postings too: refuse, and
       // point at update() (delete → fold → append)
-      tombstones(spark, path).foreach { t =>
+      layout.tombstones(spark, path).foreach { t =>
         if (!docs.select(col("doc_id")).join(broadcast(t), Seq("doc_id"), "left_semi")
               .isEmpty)
           throw new IllegalStateException(
@@ -198,19 +166,16 @@ object TextIndex {
               s"(or compact $path first) to replace deleted documents")
       }
     }
-    val (prevDocs, prevTokens, nShards) =
-      if (mode == "append")
-        (storedDocs(spark, path).getOrElse(0L),
-         storedTokens(spark, path).getOrElse(0L),
-         storedShards(spark, path).getOrElse(shards))
-      else (0L, 0L, shards)
-    // an append with tombstones pending (of OTHER docs — overlap was
-    // refused above) must carry the pending counters forward
-    val (prevTDocs, prevTTokens) =
-      if (mode == "append")
-        (pendingDeletedDocs(spark, path).getOrElse(0L),
+    val nShards = stored.getOrElse(shards)
+    // an append carries the stored totals forward, and with tombstones
+    // pending (of OTHER docs — overlap was refused above) the pending
+    // counters too
+    val (prevDocs, prevTokens, prevTDocs, prevTTokens) =
+      if (appending)
+        (storedDocs(spark, path).getOrElse(0L), storedTokens(spark, path).getOrElse(0L),
+         pendingDeletedDocs(spark, path).getOrElse(0L),
          pendingDeletedTokens(spark, path).getOrElse(0L))
-      else (0L, 0L)
+      else (0L, 0L, 0L, 0L)
     // POSITIONAL postings: each (term, doc) row carries the sorted token
     // positions, the standard positional-index layout — phrase queries
     // verify adjacency from the index alone, no document rescan. The
@@ -243,53 +208,21 @@ object TextIndex {
         count(lit(1)).as("tokens"))
       .groupBy("t", "doc_id").agg(count(lit(1)).as("tf"), max("dl").as("dl"),
         sort_array(collect_list(col("pos"))).as("positions"))
-    if (mode == "append" && storedShards(spark, path).nonEmpty) {
-      // append onto an EXISTING layout = one atomic delta segment: one
-      // file commit per batch instead of ~one per touched shard (the
-      // O(nShards) commit floor — see [[DeltaDir]]). A fresh path still
-      // takes the sharded branch below (the bootstrap append the
-      // streaming writer's first batch makes creates the layout).
-      val (fs, root) = fsOf(spark, path)
-      require(!fs.exists(new org.apache.hadoop.fs.Path(root, FoldingMarker)),
-        s"append: $path has an in-flight delta fold ($FoldingMarker) — " +
-          "re-run TextIndex.compact to finish it")
-      val segId = java.lang.Long.toHexString(System.nanoTime()) +
-        s"_p${ProcessHandle.current().pid()}"
-      val tmp = new org.apache.hadoop.fs.Path(root, s"$DeltaDir/.tmp_$segId")
-      rows.repartition(1).sortWithinPartitions("t", "doc_id")
-        .write.mode("overwrite").parquet(tmp.toString)
-      val seg = new org.apache.hadoop.fs.Path(root, s"$DeltaDir/seg_$segId")
-      require(fs.rename(tmp, seg), s"text append: publishing $seg failed")
-    } else {
-      rows
-        .withColumn("shard", shardOf(col("t"), nShards))
-        .repartition(col("shard"))
-        .sortWithinPartitions("t", "doc_id")
-        .write.partitionBy("shard").mode(mode).parquet(path)
-      if (mode != "append") {
-        // an overwrite replaces the GENERATION: unfolded segments of the
-        // replaced index would resurrect replaced postings — purge them
-        // AFTER the new layout commits (the GramIndex purge-last rule)
-        val (fs, root) = fsOf(spark, path)
-        fs.delete(new org.apache.hadoop.fs.Path(root, DeltaDir), true)
-      }
-      // the layout is at rest: record the file set so probes go
-      // listing-free (the gram/band FileManifest lifecycle)
-      graft.store.FileManifest.write(spark, path)
+    def manifest(): Unit = {
+      val m = obs.get
+      writeManifest(spark, path, nShards,
+        prevDocs + m("docs").asInstanceOf[Long],
+        prevTokens + m("tokens").asInstanceOf[Long], prevTDocs, prevTTokens)
     }
-    val m = obs.get
-    val (n, tokens) =
-      (prevDocs + m("docs").asInstanceOf[Long],
-       prevTokens + m("tokens").asInstanceOf[Long])
-    writeManifest(spark, path, nShards, n, tokens, prevTDocs, prevTTokens)
+    if (stored.nonEmpty) {
+      layout.append(rows, path)
+      manifest()
+    } else layout.writeWith(rows, path, nShards, mode)(manifest())
   }
 
   /** Tombstone directory: parquet doc_id lists under an underscore-
     * prefixed dir, so the postings read never picks them up as data. */
-  val DeletesDir = "_deletes"
-
-  private def deletesPath(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, DeletesDir)
+  val DeletesDir: String = ShardedLayout.DeletesDir
 
   /** DELETE documents from the index without rewriting it: append their
     * ids as TOMBSTONES. Every probe anti-joins the tombstone set, so the
@@ -312,24 +245,17 @@ object TextIndex {
   /** [[delete]] with the ids as a DataFrame (`doc_id` column) — the form
     * a corpus-scale refresh pipeline produces. */
   def deleteDocs(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    val nShards = layoutShards(spark, path) // fail loudly on a foreign dir
-    val (_, root) = fsOf(spark, path)
-    ids.select(col("doc_id").cast("long")).distinct()
-      .write.mode("append").parquet(deletesPath(root).toString)
+    val nShards = layout.delete(spark, path, ids)
     // recount the pending totals from the FULL live tombstone set (an
     // append may repeat already-tombstoned ids — recount, don't
     // increment): ids that never existed in the index match no posting
     // and cost nothing; dl is per-doc constant, max() survives the
-    // file split. One column-pruned postings scan per delete batch.
-    val t = tombstones(spark, path).get
-    // the recount must see DELTA postings too — a delete may target a
-    // doc whose postings still sit in an unfolded append segment
-    val baseDl = graft.store.SaltedStore
-      .read(spark, path, partitionPrefix = "shard")
-      .select("doc_id", "dl")
-    val allDl = deltaPostings(spark, path)
-      .map(d => baseDl.unionByName(d.select("doc_id", "dl"))).getOrElse(baseDl)
-    val affected = allDl
+    // file split. One column-pruned postings scan per delete batch,
+    // delta postings included — a delete may target a doc whose
+    // postings still sit in an unfolded append segment.
+    val t = layout.tombstones(spark, path).get
+    val affected = layout.withDelta(spark, path, Root, layout.readAll(spark, path, Root))(
+        _.select("doc_id", "dl"))
       .join(broadcast(t), Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(max("dl").as("dl"))
       .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
@@ -339,25 +265,9 @@ object TextIndex {
       affected.getLong(0), affected.getLong(1))
   }
 
-  /** The live tombstone set, if any deletions are pending. */
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val (fs, root) = fsOf(spark, path)
-    val p = deletesPath(root)
-    if (fs.exists(p))
-      Some(spark.read.parquet(p.toString).select("doc_id").distinct())
-    else None
-  }
-
   /** Whether deletions are pending (tombstones not yet folded). */
   def hasPendingDeletes(spark: SparkSession, path: String): Boolean =
-    tombstones(spark, path).isDefined
-
-  /** Drop tombstoned docs from a postings frame — applied by every
-    * probe. The set broadcasts against the already-pruned postings. */
-  private def live(df: DataFrame, spark: SparkSession, path: String): DataFrame =
-    tombstones(spark, path)
-      .map(t => df.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      .getOrElse(df)
+    layout.tombstones(spark, path).isDefined
 
   /** REPLACE documents in place: tombstone the old postings, fold them
     * out (one index compaction — never a corpus re-tokenize), then
@@ -372,93 +282,15 @@ object TextIndex {
     write(docs, path, mode = "append")
   }
 
-  /** Compact = a PROBE-ATOMIC delta fold plus, when warranted, the
-    * major tombstone-fold/coalescing rewrite — the text-index instance
-    * of the GramIndex/BandIndex compact contract (full argument:
-    * [[graft.store.DeltaSegments]]).
-    *
-    * THE FOLD is strictly ADDITIVE (the r17 pause-probes caveat is
-    * gone): segment postings append as NEW files into the sharded base
-    * (no existing file moves), the file manifest is atomically
-    * rewritten, and the folded segments are MARKED in the delta's
-    * `_folded` list rather than deleted — reclaimed at the next
-    * maintenance op. A probe constructed before the fold reads exactly
-    * the old state (pinned manifest file set + still-present segs);
-    * after, exactly the new one; during, refused by [[FoldingMarker]]
-    * — never a silent tf double count.
-    *
-    * THE MAJOR HALF runs only when tombstones are pending or a shard's
-    * manifest-counted file count exceeds `maxFilesPerShard`:
-    * SaltedStore.compact's marker-guarded two-rename swap on the
-    * `shard=N` layout, each shard rewritten sorted by term, pending
-    * TOMBSTONES folded into the same rewrite (free — every row is
-    * already moving), then the (docs, tokens) totals recounted from the
-    * surviving postings — the one moment they can be made exact again.
-    * It MOVES base files: pause the streaming writer for it (same
-    * discipline as the salted store / vector index), and a
-    * pre-constructed probe executing past it fails loudly
-    * (FileNotFound), never silently. */
+  /** The [[ShardedLayout.compact]] lifecycle on the postings: delta fold,
+    * then — with tombstones pending or a shard past `maxFilesPerShard`
+    * files — the major per-shard rewrite sorted by term, after which
+    * the (docs, tokens) totals are recounted from the surviving
+    * postings, the one moment they can be made exact again. */
   def compact(spark: SparkSession, path: String,
-              targetBytes: Long = 128L * 1024 * 1024,
-              maxFilesPerShard: Int = 4): Unit = {
-    val nShardsM = storedShards(spark, path).getOrElse(
-      throw new IllegalStateException(s"no text index at $path"))
-    val (fsF, rootF) = fsOf(spark, path)
-    val deltaDir = new org.apache.hadoop.fs.Path(rootF, DeltaDir)
-    val foldMarker = new org.apache.hadoop.fs.Path(rootF, FoldingMarker)
-    if (fsF.exists(foldMarker)) {
-      // a previous fold crashed mid-append: segment rows may now exist
-      // in BOTH the sharded base and the delta. Recover through the
-      // staged full rewrite (reshard at the unchanged count): it unions
-      // base ∪ live delta, dedups the crash-duplicated rows, folds
-      // tombstones and recounts the manifest before the atomic swap
-      // (folded-segment debris parks with the old generation).
-      reshard(spark, path, nShardsM)
-      fsF.delete(foldMarker, false)
-      return
-    }
-    // deferred reclamation of the PREVIOUS fold's segments — probes
-    // constructed before it have had a full maintenance cycle to finish
-    graft.store.DeltaSegments.reclaimFolded(fsF, deltaDir)
-    val liveSegNames = graft.store.DeltaSegments.liveSegs(fsF, deltaDir).map(_.getName)
-    if (liveSegNames.nonEmpty) {
-      fsF.create(foldMarker, true).close()
-      deltaPostings(spark, path).foreach(
-        _.select(PostingsCols.map(col): _*)
-          .withColumn("shard", shardOf(col("t"), nShardsM))
-          .repartition(col("shard")).sortWithinPartitions("t", "doc_id")
-          .write.mode("append").partitionBy("shard").parquet(path))
-      // atomic manifest swap: a reader sees the pre-fold file set or
-      // the post-fold one, never a mix
-      graft.store.FileManifest.write(spark, path)
-      graft.store.DeltaSegments.markFolded(fsF, deltaDir, liveSegNames)
-      fsF.delete(foldMarker, false)
-    }
-    val del = tombstones(spark, path)
-    val needMajor = del.isDefined ||
-      graft.store.FileManifest.maxFilesPerPartition(spark, path)
-        .getOrElse(Int.MaxValue) > maxFilesPerShard
-    if (needMajor) {
-      // the file manifest dies first: the per-shard swap mutates the
-      // file set; probes fall back to the listing read until at rest
-      graft.store.FileManifest.delete(spark, path)
-      graft.store.SaltedStore.compact(spark, path, col("t"), targetBytes,
-        partitionPrefix = "shard",
-        transform = del match {
-          case Some(t) => df => df.join(broadcast(t), Seq("doc_id"), "left_anti")
-          case None => identity
-        })
-      if (del.isDefined) {
-        fsF.delete(deletesPath(rootF), true)
-        val r = graft.store.SaltedStore.read(spark, path, partitionPrefix = "shard")
-          .agg(count_distinct(col("doc_id")), coalesce(sum("tf"), lit(0L))).head()
-        val nShards = layoutShards(spark, path)
-        // tombstones folded: totals exact again, pending counters to zero
-        writeManifest(spark, path, nShards, r.getLong(0), r.getLong(1))
-      }
-      graft.store.FileManifest.write(spark, path) // listing-free probes resume
-    }
-  }
+              targetBytes: Long = ShardedLayout.TargetBytes,
+              maxFilesPerShard: Int = 4): Unit =
+    layout.compact(spark, path, targetBytes, maxFilesPerShard)
 
   /** Compact only when some shard has accumulated more than
     * `maxFilesPerShard` posting files (the flush-accumulation signal —
@@ -469,7 +301,7 @@ object TextIndex {
     * `maxDeltaSegments` — the call a periodic maintenance loop makes.
     * Returns whether a compaction ran. */
   def compactIfNeeded(spark: SparkSession, path: String,
-                      targetBytes: Long = 128L * 1024 * 1024,
+                      targetBytes: Long = ShardedLayout.TargetBytes,
                       maxFilesPerShard: Int = 4,
                       maxDeltaSegments: Int = 8): Boolean = {
     val need = hasPendingDeletes(spark, path) ||
@@ -477,14 +309,13 @@ object TextIndex {
         .map(_ > maxFilesPerShard)
         .getOrElse(graft.store.SaltedStore.needsCompaction(
           spark, path, maxFilesPerShard, partitionPrefix = "shard")) ||
-      // appends land as delta segments now, so the per-shard file count
-      // no longer grows between compactions — the accumulation signal
+      // appends land as delta segments, so the per-shard file count no
+      // longer grows between compactions — the accumulation signal
       // moved to the delta layer (every probe unions every segment)
-      deltaAdvisory(spark, path)._1 > maxDeltaSegments
+      layout.needsCompaction(spark, path, maxDeltaSegments)
     if (need) compact(spark, path, targetBytes, maxFilesPerShard)
     need
   }
-
   /** MERGE the index at `srcPath` into the index at `destPath` — the
     * Lucene segment-merge step for independently built indexes (per-
     * month corpora, per-tenant shards, a backfill next to the live
@@ -509,8 +340,8 @@ object TextIndex {
     * many small files. */
   def merge(spark: SparkSession, destPath: String, srcPath: String,
             checkDisjoint: Boolean = true): Unit = {
-    val destShards = layoutShards(spark, destPath)
-    layoutShards(spark, srcPath) // fail loudly before touching dest
+    val destShards = layout.shards(spark, destPath)
+    layout.shards(spark, srcPath) // fail loudly before touching dest
     Seq(destPath, srcPath).foreach { p =>
       val f = storedFormat(spark, p)
       if (!f.contains(Format)) throw new IllegalStateException(
@@ -541,7 +372,7 @@ object TextIndex {
       storedTokens(spark, srcPath).getOrElse(0L))
     // the file manifest dies before the file-set mutation (probes fall
     // back to the listing read mid-merge) and is reborn at rest below
-    graft.store.FileManifest.delete(spark, destPath)
+    layout.dropManifests(spark, destPath)
     src
       .withColumn("shard", shardOf(col("t"), destShards))
       .repartition(col("shard"))
@@ -552,7 +383,7 @@ object TextIndex {
     // append leaves dest's OLD manifest: see writeManifest's recovery
     // note (compact dest, don't re-run the merge).
     writeManifest(spark, destPath, destShards, docsA + docsB, tokensA + tokensB)
-    graft.store.FileManifest.write(spark, destPath)
+    layout.writeManifests(spark, destPath)
   }
 
   /** Atomic manifest write: temp file + rename into place, so a reader
@@ -567,58 +398,38 @@ object TextIndex {
     * score against live-corpus stats without waiting for a compaction. */
   private def writeManifest(spark: SparkSession, path: String, shards: Int,
                             docs: Long, tokens: Long,
-                            tdocs: Long = 0L, ttokens: Long = 0L): Unit = {
-    val (fs, root) = fsOf(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(root, ManifestFile + ".tmp")
-    val dst = new org.apache.hadoop.fs.Path(root, ManifestFile)
-    val out = fs.create(tmp, true)
-    try out.write(
-      (s"""{"format":$Format,"shards":$shards,"docs":$docs,""" +
-        s""""tokens":$tokens,"tdocs":$tdocs,"ttokens":$ttokens}""")
-        .getBytes("UTF-8")) finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(
-      s"text-index manifest rename failed: $tmp -> $dst")
-  }
+                            tdocs: Long = 0L, ttokens: Long = 0L): Unit =
+    layout.writeMetaFields(spark, path, Seq("format" -> Format.toLong,
+      "shards" -> shards.toLong, "docs" -> docs, "tokens" -> tokens,
+      "tdocs" -> tdocs, "ttokens" -> ttokens))
 
-  private def manifestField(spark: SparkSession, path: String, field: String): Option[Long] = {
-    val (fs, root) = fsOf(spark, path)
-    val p = new org.apache.hadoop.fs.Path(root, ManifestFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      ("\"" + field + "\":(\\d+)").r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    }
-  }
-
+  /** The stored shard count, without the marker guards probes apply. */
   def storedShards(spark: SparkSession, path: String): Option[Int] =
-    manifestField(spark, path, "shards").map(_.toInt)
+    layout.readMeta(spark, path)
 
   /** Total distinct docs indexed (manifest; accumulated over appends —
     * exact under the disjoint-batch append contract). */
   def storedDocs(spark: SparkSession, path: String): Option[Long] =
-    manifestField(spark, path, "docs")
+    layout.metaField(spark, path, "docs")
 
   /** Total corpus tokens indexed (manifest) — avgdl's numerator. */
   def storedTokens(spark: SparkSession, path: String): Option[Long] =
-    manifestField(spark, path, "tokens")
+    layout.metaField(spark, path, "tokens")
 
   /** Docs tombstoned but not yet folded by [[compact]] (manifest;
     * absent on pre-counter manifests — probes then fall back to the
     * stale-between-merges Lucene behavior). */
   def pendingDeletedDocs(spark: SparkSession, path: String): Option[Long] =
-    manifestField(spark, path, "tdocs")
+    layout.metaField(spark, path, "tdocs")
 
   /** Token mass of the pending tombstoned docs (manifest). */
   def pendingDeletedTokens(spark: SparkSession, path: String): Option[Long] =
-    manifestField(spark, path, "ttokens")
+    layout.metaField(spark, path, "ttokens")
 
   /** Layout format version; pre-versioning indexes read as format 1. */
   def storedFormat(spark: SparkSession, path: String): Option[Int] =
     if (storedShards(spark, path).isEmpty) None
-    else Some(manifestField(spark, path, "format").map(_.toInt).getOrElse(1))
+    else Some(layout.metaField(spark, path, "format").map(_.toInt).getOrElse(1))
 
   /** Idempotent build (the VectorIndex.ensure pattern): skip when a
     * complete index with the REQUESTED shard count is already at `path`;
@@ -664,7 +475,7 @@ object TextIndex {
                             b: Double): DataFrame = {
     require(terms.nonEmpty, "ranked search needs at least one term")
     require(b >= 0.0 && b <= 1.0, s"BM25 b must be in [0,1], got $b")
-    val nShards = layoutShards(spark, path)
+    val nShards = layout.shards(spark, path)
     // LIVE doc count: manifest total minus the pending tombstone counter
     // ([[deleteDocs]] maintains it), so idf/avgdl track deletions
     // immediately instead of waiting for the next compaction fold
@@ -743,7 +554,7 @@ object TextIndex {
   def termDf(spark: SparkSession, path: String,
              terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "termDf needs at least one term")
-    val nShards = layoutShards(spark, path)
+    val nShards = layout.shards(spark, path)
     val shards = terms.map(shardOfTerm(_, nShards)).distinct
     probePostings(spark, path, shards, _.filter(col("t").isin(terms: _*)))
       .groupBy("t").agg(count_distinct(col("doc_id")).as("df"))
@@ -778,97 +589,21 @@ object TextIndex {
     * pruned shards, never the corpus. */
   private def excludedDocs(spark: SparkSession, path: String,
                            terms: Seq[String]): DataFrame = {
-    val nShards = layoutShards(spark, path)
+    val nShards = layout.shards(spark, path)
     val shards = terms.map(shardOfTerm(_, nShards)).distinct
     probePostings(spark, path, shards, _.filter(col("t").isin(terms: _*)))
       .select(col("doc_id").as("__ex_id")).distinct()
   }
 
-  /** The shard count every probe must use — read from the manifest, the
-    * single source of truth for the layout (the reference reconstructs
-    * distributor parameters from serialized params the same way,
-    * wd/AbstractRowKeyDistributor.java:83-89). Probes never take a count
-    * of their own: guessing one that differs from the writer's would
-    * prune to the WRONG shards and silently miss postings, so the only
-    * failure mode left is a missing manifest, which fails loudly. */
-  private def layoutShards(spark: SparkSession, path: String): Int = {
-    val (fs, root) = fsOf(spark, path)
-    // a shard-count migration changes the SET of shard dirs — no
-    // consistent prune exists mid-swap (reshard is offline; a standing
-    // marker is a crashed migration: resume it via reshard)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, ReshardMarker)),
-      s"probe: $path has an in-flight shard migration ($ReshardMarker) — " +
-        "re-invoke TextIndex.reshard with the original shard count to finish it")
-    // a mid-fold delta has segment rows on BOTH sides — a probe would
-    // double-count tf; refuse loudly (the GramIndex fold discipline)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, FoldingMarker)),
-      s"probe: $path has an in-flight delta fold ($FoldingMarker) — " +
-        "re-run TextIndex.compact to finish it")
-    storedShards(spark, path).getOrElse(throw new IllegalStateException(
-      s"no $ManifestFile manifest at $path — not a graft text index " +
-        "(the shard count is a stored layout parameter; a probe cannot guess it)"))
-  }
+  val ReshardMarker: String = ShardedLayout.ReshardMarker
 
-  /** Marker for an in-flight shard-count migration (see [[reshard]]). */
-  val ReshardMarker = "_graft_resharding"
-
-  /** SHARD-COUNT MIGRATION — rewrite the index under a NEW shard count:
-    * the text-index instance of the pinned-layout-parameter migration
-    * (`SaltedStore.resalt` for bucket counts, `VectorIndex.recluster`
-    * for codebooks — all three ride `StagedSwap`'s crash-resumable
-    * stage→park→swap protocol). The shard count is a probe-throughput /
-    * prune-selectivity trade pinned in the manifest at creation; when a
-    * grown corpus outsizes it, reshard moves POSTINGS — the corpus is
-    * never re-tokenized — through one shuffle on the new shard hash.
-    * Pending tombstones fold into the rewrite (the compact discipline:
-    * every row is already moving) and the staged manifest is recounted
-    * from surviving postings, so the new generation starts exact with
-    * zero pending counters. OFFLINE: pause writers and probes;
-    * [[layoutShards]] (every probe's first call) refuses a standing
-    * marker. Resume = re-invoke with the same shard count. */
-  def reshard(spark: SparkSession, path: String, newShards: Int): Unit = {
-    require(newShards > 0, s"shard count must be positive, got $newShards")
-    // on a RESUME the marker stands and layoutShards refuses by design —
-    // only a fresh start validates the old layout
-    val (fs0, root0) = fsOf(spark, path)
-    if (!fs0.exists(new org.apache.hadoop.fs.Path(root0, ReshardMarker)) &&
-        !fs0.exists(new org.apache.hadoop.fs.Path(root0, FoldingMarker)))
-      // storedShards, not layoutShards: reshard is also compact's
-      // recovery path for a crashed delta fold (runs under FoldingMarker)
-      require(storedShards(spark, path).nonEmpty, s"no text index at $path")
-    graft.store.StagedSwap.migrate(spark, path, ReshardMarker,
-      ".reshard_new", ".reshard_old",
-      opName = "reshard", what = "shard count", tag = s"shards=$newShards",
-      // whole root is generation-owned: shard dirs, manifest, tombstones
-      parkFilter = _ => true, swapFilter = _ => true,
-      stage = { staging =>
-        // base ∪ unfolded delta, DISTINCT: a crashed fold may have the
-        // same segment rows on both sides — the rewrite dedups them
-        // (identical (t, doc, tf, dl, positions) rows, so distinct is
-        // exact; under the disjoint-doc append contract no LEGITIMATE
-        // duplicate posting row exists to collapse)
-        val baseP = graft.store.SaltedStore
-          .read(spark, path, partitionPrefix = "shard")
-          .select(PostingsCols.map(col): _*)
-        val allP = deltaPostings(spark, path)
-          .map(d => baseP.unionByName(d.select(PostingsCols.map(col): _*))
-            .distinct())
-          .getOrElse(baseP)
-        val postings = live(allP, spark, path)
-        postings
-          .withColumn("shard", shardOf(col("t"), newShards))
-          .repartition(col("shard"))
-          .sortWithinPartitions("t", "doc_id")
-          .write.partitionBy("shard").parquet(staging)
-        // recount totals from the surviving postings (tombstones folded)
-        val r = spark.read.parquet(staging)
-          .agg(count_distinct(col("doc_id")), coalesce(sum("tf"), lit(0L))).head()
-        writeManifest(spark, staging, newShards, r.getLong(0), r.getLong(1))
-        // file manifest commits into staging and swaps in with the data
-        // (relative paths survive the rename — the gram/band pattern)
-        graft.store.FileManifest.write(spark, staging)
-      })
-  }
+  /** SHARD-COUNT MIGRATION ([[ShardedLayout.reshard]]): when a grown
+    * corpus outsizes the pinned count, reshard moves POSTINGS — the
+    * corpus is never re-tokenized — through one shuffle on the new shard
+    * hash; the staged manifest is recounted from the surviving postings,
+    * so the new generation starts exact with zero pending counters. */
+  def reshard(spark: SparkSession, path: String, newShards: Int): Unit =
+    layout.reshard(spark, path, newShards)
 
   /** Exact-PHRASE search against the positional index: same driver-side
     * shard prune as [[searchAll]] (the shard list of the phrase's
@@ -884,7 +619,7 @@ object TextIndex {
     * array_intersect), no UDFs. */
   def searchPhrase(spark: SparkSession, path: String, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "searchPhrase needs at least one term")
-    val nShards = layoutShards(spark, path)
+    val nShards = layout.shards(spark, path)
     val terms = phrase.distinct
     val shards = terms.map(shardOfTerm(_, nShards)).distinct
     import spark.implicits._
@@ -930,7 +665,7 @@ object TextIndex {
     val dterms = terms.distinct
     require(dterms.size >= 2, "searchProximity needs at least two distinct terms")
     require(slop >= 1, "searchProximity needs slop >= 1")
-    val nShards = layoutShards(spark, path)
+    val nShards = layout.shards(spark, path)
     val shards = dterms.map(shardOfTerm(_, nShards)).distinct
     import spark.implicits._
     val slots = dterms.zipWithIndex.map { case (t, i) => (i, t) }.toDF("slot", "st")
@@ -970,16 +705,11 @@ object TextIndex {
     * listing read serving mid-maintenance layouts. */
   def searchPrefix(spark: SparkSession, path: String, prefix: String): DataFrame = {
     require(prefix.nonEmpty, "searchPrefix needs a non-empty prefix")
-    layoutShards(spark, path) // fail loudly on a foreign/incomplete dir
-    coherentProbe(spark, path) {
-      val base = graft.store.FileManifest.readAllPartitions(spark, path)
-        .getOrElse(graft.store.SaltedStore.read(spark, path, partitionPrefix = "shard"))
-        .filter(col("t").startsWith(prefix)).select(PostingsCols.map(col): _*)
-      val all = deltaPostings(spark, path)
-        .map(d => base.unionByName(
-          d.filter(col("t").startsWith(prefix)).select(PostingsCols.map(col): _*)))
-        .getOrElse(base)
-      live(all, spark, path)
+    layout.shards(spark, path) // fail loudly on a foreign/incomplete dir
+    layout.coherentProbe(spark, path, "text probe") {
+      layout.live(layout.withDelta(spark, path, Root, layout.readAll(spark, path, Root))(
+          _.filter(col("t").startsWith(prefix)).select(PostingsCols.map(col): _*)),
+        spark, path, "doc_id")
         // append-safe: re-aggregate per (t, doc) before counting df
         .groupBy("t", "doc_id").agg(sum("tf").as("tf"))
         .groupBy("t").agg(count(lit(1)).as("df"), sum("tf").as("total_tf"))
@@ -994,7 +724,7 @@ object TextIndex {
     * foreign layout fails loudly. */
   def searchAll(spark: SparkSession, path: String, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "searchAll needs at least one term")
-    val nShards = layoutShards(spark, path)
+    val nShards = layout.shards(spark, path)
     val shards = terms.map(shardOfTerm(_, nShards)).distinct
     // SaltedStore's marker-aware read on the shard layout: a probe during
     // (or after a crash of) compact waits out the swap instead of

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Dedup
 
@@ -12,7 +12,14 @@ import graft.pipeline.Dedup
   * maintenance twin, completing the persisted-store family (text,
   * vector, CDC, secondary/range — and now the band index).
   *
-  * Layout under `path`:
+  * Layers under `path`, in the [[ShardedLayout]] write order (its
+  * lifecycle — meta, delta segments, tombstones, fold, compact, reshard
+  * — is shared with GramIndex and TextIndex):
+  *  - `sketches/shard=S/` — per-doc verification sets (doc_id, sh): the
+  *    exact shingle-hash sets the Jaccard verify reads for matched INDEX
+  *    docs, sharded on doc_id so the verify side reads only candidate
+  *    shards ([[sketchesFor]]). Written first: every candidate a probe
+  *    can generate has its verification sketch.
   *  - `bands/shard=S/` — RAW (doc_id, band, sig) rows, hash-sharded on
   *    the band signature: `shard = pmod(hash(sig), nShards)` (pmod, not
   *    abs-mod — the reference's `Math.abs(Integer.MIN_VALUE)` trap,
@@ -26,11 +33,7 @@ import graft.pipeline.Dedup
   *    [[Dedup.probePairs]] applies its deterministic hot-bucket cap at
   *    that moment, so append order can never change candidate
   *    semantics.
-  *  - `sketches/` — per-doc verification sets (doc_id, sh): the exact
-  *    shingle-hash sets the Jaccard verify reads for matched INDEX
-  *    docs. Row-selective join (candidate ids only), no pruning needed.
-  *  - `_band_meta.json` — nShards, pinned at creation; append and probe
-  *    must shard identically or pruning would silently miss buckets.
+  *  - `delta/seg_*`, `_deletes`, `_band_meta.json` — the layout's.
   *
   * Append contract: batches carry DISJOINT doc sets (the standard
   * append-ingest contract, same as the text index). Streaming
@@ -38,232 +41,61 @@ import graft.pipeline.Dedup
 object BandIndex {
   val MetaFile = "_band_meta.json"
   val DefaultShards = 64
-
-  private def fsOf(spark: SparkSession, path: String) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    (root.getFileSystem(spark.sessionState.newHadoopConf()), root)
-  }
-
-  def shardOf(sig: org.apache.spark.sql.Column, nShards: Int): org.apache.spark.sql.Column =
-    pmod(hash(sig), lit(nShards))
-
-  private val Layers = Seq("bands", "sketches")
-
-  /** Manifest-backed pruned shard read with listing fallback — see
-    * [[GramIndex.readLayer]]: removes the per-dir exists/list work that
-    * made probe reads grow with the ∝-corpus shard count. */
-  private def readLayer(spark: SparkSession, path: String, layer: String,
-                        shards: Seq[Long]): DataFrame =
-    FileManifest.readPartitions(spark, s"$path/$layer", shards)
-      .getOrElse(SaltedStore.readPartitions(spark, s"$path/$layer", shards,
-        partitionPrefix = "shard"))
-
-  private def writeManifests(spark: SparkSession, path: String): Unit =
-    Layers.foreach(l => FileManifest.write(spark, s"$path/$l"))
-
-  private def dropManifests(spark: SparkSession, path: String): Unit =
-    Layers.foreach(l => FileManifest.delete(spark, s"$path/$l"))
-
-  private def writeMeta(spark: SparkSession, path: String, nShards: Int): Unit = {
-    val (fs, root) = fsOf(spark, path)
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, MetaFile), true)
-    try out.write(s"""{"n_shards":$nShards}""".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Marker for an in-flight delta fold (see [[compact]]): while it
-    * stands, segment rows may exist in BOTH the sharded base and the
-    * delta, so probes refuse loudly instead of double-counting. */
   val FoldingMarker = "_band_folding"
+  val ReshardMarker: String = ShardedLayout.ReshardMarker
 
-  /** nShards the index was created with; None if no index exists. */
-  def storedShards(spark: SparkSession, path: String): Option[Int] = {
-    val (fs, root) = fsOf(spark, path)
-    // every probe's first call — refuse a mid-migration layout (the
-    // shard-dir set changes during reshard; no consistent prune exists)
-    // and a mid-fold delta (rows may sit on both sides)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, ReshardMarker)),
-      s"probe: $path has an in-flight shard migration ($ReshardMarker) — " +
-        "re-invoke BandIndex.reshard with the original shard count to finish it")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, FoldingMarker)),
-      s"probe: $path has an in-flight delta fold ($FoldingMarker) — " +
-        "re-run BandIndex.compact to finish it")
-    readMeta(spark, path)
+  def shardOf(sig: Column, nShards: Int): Column = pmod(hash(sig), lit(nShards))
+
+  private val Sketches = ShardedLayer("sketches", "doc_id", Seq("doc_id"))
+  private val Bands = ShardedLayer("bands", "sig", Seq("sig", "doc_id"))
+
+  private[graft] object layout extends ShardedLayout("BandIndex", "band",
+      Seq(Sketches, Bands), MetaFile, "n_shards", FoldingMarker, "delta") {
+    def shardOf(c: Column, nShards: Int): Column = BandIndex.shardOf(c, nShards)
+
+    /** A per-doc sketch frame (the [[Dedup.docSketch]] shape: doc_id, sh,
+      * h0..h{K-1}) → sketches, bands. */
+    protected def project(sketch: DataFrame): Seq[DataFrame] = Seq(
+      sketch.select("doc_id", "sh"),
+      Dedup.bandRows(sketch, "doc_id").select("doc_id", "band", "sig"))
+
+    protected def liveRows(spark: SparkSession, path: String): Seq[DataFrame] = Seq(
+      live(withDelta(spark, path, Sketches, readAll(spark, path, Sketches))(
+        _.select("doc_id", "sh")).dropDuplicates("doc_id"), spark, path, "doc_id"),
+      live(withDelta(spark, path, Bands, readAll(spark, path, Bands))(
+        _.select("doc_id", "band", "sig")).distinct(), spark, path, "doc_id"))
   }
 
-  /** Raw meta read with NO marker guards — for the maintenance ops that
-    * must run exactly when a marker stands (compact's fold recovery). */
-  private def readMeta(spark: SparkSession, path: String): Option[Int] = {
-    val (fs, root) = fsOf(spark, path)
-    val p = new org.apache.hadoop.fs.Path(root, MetaFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      """"n_shards":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-    }
-  }
+  /** nShards the index was created with; None if no index exists.
+    * Refuses a standing reshard or fold marker. */
+  def storedShards(spark: SparkSession, path: String): Option[Int] =
+    layout.storedShards(spark, path)
 
-  /** One parquet frame per delta LAYER across all published UNFOLDED
-    * segments — None when no live segment exists (the GramIndex delta
-    * shape; folded-but-unreclaimed segments are excluded via
-    * [[DeltaSegments]]). */
-  private def deltaLayer(spark: SparkSession, path: String,
-                         layer: String): Option[DataFrame] = {
-    val d = new org.apache.hadoop.fs.Path(path, "delta")
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val segs = DeltaSegments.liveSegs(fs, d)
-    if (segs.isEmpty) None
-    else Some(spark.read.parquet(segs.map(p => s"$p/$layer"): _*))
-  }
+  def deltaAdvisory(spark: SparkSession, path: String): (Long, Long) =
+    layout.deltaAdvisory(spark, path)
 
-  /** Delta accumulation advisory: (published segment count, delta
-    * bytes across both layers) — see [[GramIndex.deltaAdvisory]]: probes
-    * union every published segment, so unbounded segment accumulation
-    * is read amplification nothing else reports. Driver listing only. */
-  def deltaAdvisory(spark: SparkSession, path: String): (Long, Long) = {
-    val d = new org.apache.hadoop.fs.Path(path, "delta")
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val segs = DeltaSegments.liveSegs(fs, d) // folded segs are read by no probe
-    val bytes = segs.map { s =>
-      fs.listStatus(s).filter(_.isDirectory).map(l =>
-        fs.listStatus(l.getPath).filter(_.isFile).map(_.getLen).sum).sum
-    }.sum
-    (segs.length.toLong, bytes)
-  }
-
-  /** Whether the unfolded delta has accumulated past `maxSegments` —
-    * the maintenance-loop compaction signal (one directory listing). */
   def needsCompaction(spark: SparkSession, path: String,
                       maxSegments: Int = 8): Boolean =
-    deltaAdvisory(spark, path)._1 > maxSegments
+    layout.needsCompaction(spark, path, maxSegments)
 
-  /** Create the index from a per-doc sketch frame (the
-    * [[Dedup.docSketch]] shape: doc_id, sh, h0..h{K-1}). Both layouts
-    * are hash-sharded (bands on the signature, sketches on doc_id) so
-    * [[compact]] can reuse the per-partition swap machinery on each. */
+  /** Create the index from a per-doc sketch frame (doc_id, sh,
+    * h0..h{K-1}). */
   def write(sketch: DataFrame, path: String,
-            nShards: Int = DefaultShards): Unit = {
-    val spark = sketch.sparkSession
-    // an index overwrite means the WHOLE index (the VectorIndex rule):
-    // dynamic partition overwrite would leave untouched shard dirs of
-    // the old generation (possibly a different shard count) in place
-    val ovwMode = spark.conf
-      .get("spark.sql.sources.partitionOverwriteMode", "static")
-    require(!ovwMode.equalsIgnoreCase("dynamic"),
-      "BandIndex.write under spark.sql.sources.partitionOverwriteMode=" +
-        "dynamic is unsupported (stale shards/tombstones would survive); " +
-        "use static overwrite, or append + delete + compact")
-    // a standing streaming commit log belongs to the REPLACED index's
-    // query lifecycle: a writer resuming under the same commitTag would
-    // silently SKIP early batches of the new corpus — refused up front
-    // (same guard as GramIndex.write)
-    locally {
-      val (fs, root) = fsOf(spark, path)
-      require(!fs.exists(new org.apache.hadoop.fs.Path(root, "_graft_commits")),
-        s"BandIndex.write: $path carries a _graft_commits log from a " +
-          "previous generation — a streaming writer resuming under the same " +
-          "commitTag would silently skip early batches of the rebuilt index; " +
-          "clear the log or use a fresh commitTag, then rebuild")
-    }
-    // repartition ON the shard before the partitioned write: without it
-    // every input task holds rows of ~every shard and the commit fans
-    // out to tasks × shards FILES — measured 465s vs 36s for the same
-    // bytes at 500k docs / 6400 shards (graft.Scaling, r14). One
-    // exchange buys one file per shard and a sorted run inside it (the
-    // same sort compact() maintains, so sig/doc row-group skipping
-    // works from the first write).
-    //
-    // WRITE ORDER IS THE ISOLATION CONTRACT: sketches commit BEFORE
-    // bands (here and in append). Candidates come off the bands scan
-    // and are verified against sketches, so a probe that catches an
-    // in-flight batch can only observe {old bands, any sketches} —
-    // every candidate it generates has its verification sketch. The
-    // reverse order would expose new-band candidates whose sketches
-    // don't exist yet, silently mis-verdicting dups as fresh
-    // (BandIndexSpec pins this per-snapshot verifiability).
-    sketch.select("doc_id", "sh")
-      .withColumn("shard", pmod(hash(col("doc_id")), lit(nShards)))
-      .repartition(col("shard"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$path/sketches")
-    Dedup.bandRows(sketch, "doc_id")
-      .withColumn("shard", shardOf(col("sig"), nShards))
-      .repartition(col("shard"))
-      .sortWithinPartitions("sig", "doc_id")
-      .write.mode("overwrite").partitionBy("shard").parquet(s"$path/bands")
-    writeMeta(spark, path, nShards)
-    writeManifests(spark, path)
-    // drop tombstones of the REPLACED generation (they would silently
-    // hide new docs with reused ids) — AFTER the new layouts commit: a
-    // purge-first ordering would leave a crashed rebuild's still-live
-    // old index with its tombstones resurrected. The purge-last window
-    // can only HIDE reused-id docs from an in-flight probe — the same
-    // transient the append isolation contract already tolerates.
-    locally {
-      val (fs, root) = fsOf(spark, path)
-      fs.delete(new org.apache.hadoop.fs.Path(deletesPath(path)), true)
-      // unfolded segments of the replaced generation would resurrect
-      // replaced docs — same purge-last reasoning as the tombstones
-      fs.delete(new org.apache.hadoop.fs.Path(root, "delta"), true)
-    }
-  }
+            nShards: Int = DefaultShards): Unit =
+    layout.write(sketch, path, nShards)
 
-  /** Append a batch's sketches (disjoint doc set contract) as ONE DELTA
-    * SEGMENT, published atomically by rename — the GramIndex append
-    * grain: two single-file layers instead of ~one file commit per
-    * touched shard per layout (the O(nShards) LSM floor the r16 scale
-    * harness measured). Probes union the (bounded) delta; [[compact]]
-    * folds segments into the sharded base. Atomic publish supersedes
-    * the sketches-first mid-append contract for delta appends (a probe
-    * sees either no segment or both layers). */
-  def append(sketch: DataFrame, path: String): Unit = {
-    val spark = sketch.sparkSession
-    storedShards(spark, path).getOrElse(
-      throw new IllegalStateException(s"no band index at $path — write() first"))
-    val (fs, root) = fsOf(spark, path)
-    val segId = java.lang.Long.toHexString(System.nanoTime()) +
-      s"_p${ProcessHandle.current().pid()}"
-    val tmp = new org.apache.hadoop.fs.Path(root, s"delta/.tmp_$segId")
-    // sketches BEFORE bands — uniform with write(); within the hidden
-    // tmp dir the ordering is writer-only
-    sketch.select("doc_id", "sh").repartition(1)
-      .write.mode("overwrite").parquet(s"$tmp/sketches")
-    Dedup.bandRows(sketch, "doc_id")
-      .select("doc_id", "band", "sig").repartition(1)
-      .write.mode("overwrite").parquet(s"$tmp/bands")
-    val seg = new org.apache.hadoop.fs.Path(root, s"delta/seg_$segId")
-    require(fs.rename(tmp, seg), s"band append: publishing $seg failed")
-  }
+  /** Append a batch's sketches (disjoint doc set contract) as one delta
+    * segment. */
+  def append(sketch: DataFrame, path: String): Unit = layout.append(sketch, path)
 
-  // ---- deletes (takedown lifecycle, the VectorIndex tombstone shape) ----
-
-  private def deletesPath(path: String) = s"$path/_deletes"
-
-  /** Tombstone doc ids: visible to every probe immediately (anti-join),
-    * physically removed at [[compact]]. The raw-row layout makes this
-    * exact — a tombstoned doc's band rows are excluded BEFORE the
-    * per-bucket aggregation, so it neither matches nor occupies a
-    * hot-bucket cap slot. */
+  /** Tombstone doc ids. The raw-row layout makes this exact — a
+    * tombstoned doc's band rows are excluded BEFORE the per-bucket
+    * aggregation, so it neither matches nor occupies a hot-bucket cap
+    * slot. */
   def delete(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
-    require(storedShards(spark, path).nonEmpty, s"no band index at $path")
     import spark.implicits._
-    ids.toDF("doc_id").write.mode("append").parquet(deletesPath(path))
+    layout.delete(spark, path, ids.toDF("doc_id"))
   }
-
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val (fs, _) = fsOf(spark, deletesPath(path))
-    if (!fs.exists(new org.apache.hadoop.fs.Path(deletesPath(path)))) None
-    else Some(spark.read.parquet(deletesPath(path)).select("doc_id").distinct())
-  }
-
-  private def live(df: DataFrame, spark: SparkSession, path: String,
-                   idCol: String): DataFrame =
-    tombstones(spark, path) match {
-      case Some(t) =>
-        df.join(broadcast(t.select(col("doc_id").as(idCol))), Seq(idCol), "left_anti")
-      case None => df
-    }
 
   /** Candidate (index_id, batch_id) pairs for a batch of band rows —
     * EXACTLY [[Dedup.probePairs]] semantics (same hot-bucket cap, same
@@ -272,67 +104,40 @@ object BandIndex {
     * file-listing time, so probe cost is bucket-sized, never
     * corpus-sized. Tombstoned docs are excluded before the bucket
     * aggregation. */
-  /** Construction-coherence guard shared by every probe entry here
-    * (ConcurrentFoldSpec): the manifest reads and the delta listing
-    * must come from the same side of a racing fold's publish, or
-    * folded rows double-count/vanish. */
-  private def coherentProbe[T](spark: SparkSession, path: String,
-                               what: String)(build: => T): T = {
-    val (fs, root) = fsOf(spark, path)
-    DeltaSegments.coherentSnapshot(fs,
-      new org.apache.hadoop.fs.Path(root, "delta"),
-      new org.apache.hadoop.fs.Path(root, FoldingMarker),
-      Layers.map(l => new org.apache.hadoop.fs.Path(root,
-        s"$l/${FileManifest.ManifestFile}")),
-      what)(build)
-  }
-
   def probeCandidates(spark: SparkSession, path: String, probeBands: DataFrame,
                       idCol: String,
                       maxBucket: Int = Dedup.MaxBucket,
                       bucketStat: Option[org.apache.spark.sql.Observation] = None): DataFrame =
-    coherentProbe(spark, path, "band probe") {
-      probeCandidatesImpl(spark, path, probeBands, idCol, maxBucket, bucketStat)
+    layout.coherentProbe(spark, path, "band probe") {
+      val nShards = layout.shards(spark, path)
+      val shards = probeBands.select(shardOf(col("sig"), nShards).as("s"))
+        .distinct().collect().map(_.getInt(0).toLong).toSeq
+      // empty probe (no band rows — an empty micro-batch): no candidate
+      // can exist; short-circuit rather than letting readPartitions fall
+      // back to the O(corpus-shard-dirs) full-listing slowPath. The
+      // empty-index side of probePairs keeps the output schema/types
+      // (and still fires a passed Observation — zeros, not a hang).
+      if (shards.isEmpty)
+        Dedup.probePairs(probeBands.limit(0), probeBands, idCol, maxBucket, bucketStat)
+      else {
+        // unfolded delta segments union in before the bucket aggregation,
+        // so the hot-bucket cap sees exactly the membership a folded
+        // layout would
+        val idx = layout.live(layout.withDelta(spark, path, Bands,
+            layout.readLayer(spark, path, Bands, shards))(_.select(idCol, "band", "sig")),
+          spark, path, idCol)
+        Dedup.probePairs(idx, probeBands, idCol, maxBucket, bucketStat)
+      }
     }
 
-  private def probeCandidatesImpl(spark: SparkSession, path: String,
-                      probeBands: DataFrame, idCol: String, maxBucket: Int,
-                      bucketStat: Option[org.apache.spark.sql.Observation]): DataFrame = {
-    val nShards = storedShards(spark, path).getOrElse(
-      throw new IllegalStateException(s"no band index at $path — write() first"))
-    val shards = probeBands.select(shardOf(col("sig"), nShards).as("s"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    // empty probe (no band rows — an empty micro-batch): no candidate
-    // can exist; short-circuit rather than letting readPartitions fall
-    // back to the O(corpus-shard-dirs) full-listing slowPath. The
-    // empty-index side of probePairs keeps the output schema/types
-    // (and still fires a passed Observation — zeros, not a hang).
-    if (shards.isEmpty)
-      return Dedup.probePairs(probeBands.limit(0), probeBands, idCol,
-        maxBucket, bucketStat)
-    // manifest-backed probe read (listing-free at any corpus size),
-    // marker-aware via the SaltedStore fallback when no manifest stands
-    val base = readLayer(spark, path, "bands", shards.map(_.toLong))
-      .select(idCol, "band", "sig")
-    // unfolded delta segments union in before the bucket aggregation
-    // (bounded by appends since the last compact); the hot-bucket cap
-    // then sees exactly the same membership a folded layout would
-    val idx = live(deltaLayer(spark, path, "bands")
-        .map(d => base.unionByName(d.select(idCol, "band", "sig")))
-        .getOrElse(base),
-      spark, path, idCol)
-    Dedup.probePairs(idx, probeBands, idCol, maxBucket, bucketStat)
-  }
-
   /** The LIVE per-doc verification sets (doc_id, sh) — tombstoned docs
-    * excluded, same visibility rule as the probes. Reads (and LISTS)
-    * the whole table: fine for audits and whole-corpus jobs, wrong for
-    * a probe's verify side — use [[sketchesFor]] there. */
+    * excluded, same visibility rule as the probes. Reads the whole
+    * table: fine for audits and whole-corpus jobs, wrong for a probe's
+    * verify side — use [[sketchesFor]] there. */
   def sketches(spark: SparkSession, path: String): DataFrame =
-    coherentProbe(spark, path, "band sketches read") {
-      val base = spark.read.parquet(s"$path/sketches").select("doc_id", "sh")
-      live(deltaLayer(spark, path, "sketches")
-        .map(d => base.unionByName(d.select("doc_id", "sh"))).getOrElse(base),
+    layout.coherentProbe(spark, path, "band sketches read") {
+      layout.live(layout.withDelta(spark, path, Sketches,
+        layout.readAll(spark, path, Sketches))(_.select("doc_id", "sh")),
         spark, path, "doc_id")
     }
 
@@ -351,10 +156,8 @@ object BandIndex {
     * layout's own shard function, so the read can never miss a live
     * candidate's shard. */
   def sketchesFor(spark: SparkSession, path: String, ids: DataFrame): DataFrame = {
-    val nShards = storedShards(spark, path).getOrElse(
-      throw new IllegalStateException(s"no band index at $path — write() first"))
-    val shards = ids
-      .select(pmod(hash(col(ids.columns.head)), lit(nShards)).as("s"))
+    val nShards = layout.shards(spark, path)
+    val shards = ids.select(shardOf(col(ids.columns.head), nShards).as("s"))
       .distinct().collect().map(_.getInt(0).toLong).toSeq
     sketchesForShards(spark, path, shards)
   }
@@ -367,8 +170,7 @@ object BandIndex {
     * derives its ids from an already-collected frame should prefer this
     * over [[sketchesFor]]'s distinct-collect round-trip. */
   def sketchesForIds(spark: SparkSession, path: String, ids: Seq[Long]): DataFrame = {
-    val nShards = storedShards(spark, path).getOrElse(
-      throw new IllegalStateException(s"no band index at $path — write() first"))
+    val nShards = layout.shards(spark, path)
     sketchesForShards(spark, path, ids.map(shardOfId(_, nShards)).distinct)
   }
 
@@ -385,161 +187,24 @@ object BandIndex {
 
   private def sketchesForShards(spark: SparkSession, path: String,
                                 shards: Seq[Long]): DataFrame =
-    coherentProbe(spark, path, "band sketch-shard read") {
-      sketchesForShardsImpl(spark, path, shards)
-    }
-
-  private def sketchesForShardsImpl(spark: SparkSession, path: String,
-                                shards: Seq[Long]): DataFrame = {
     // empty candidate set: nothing can verify — return the empty frame
     // directly instead of letting readPartitions fall back to its
     // full-table slowPath (whose ROOT LISTING alone is O(corpus shard
     // dirs); a no-candidate micro-batch — common in streaming — would
     // silently re-pay the cost this pruned read exists to remove)
     if (shards.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, sh ARRAY<BIGINT>"))
-    val base = readLayer(spark, path, "sketches", shards).select("doc_id", "sh")
-    live(deltaLayer(spark, path, "sketches")
-      .map(d => base.unionByName(d.select("doc_id", "sh"))).getOrElse(base),
-      spark, path, "doc_id")
-  }
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, sh ARRAY<BIGINT>"))
+    else layout.coherentProbe(spark, path, "band sketch-shard read") {
+      layout.live(layout.withDelta(spark, path, Sketches,
+        layout.readLayer(spark, path, Sketches, shards))(_.select("doc_id", "sh")),
+        spark, path, "doc_id")
+    }
 
-  /** Compact = a PROBE-ATOMIC delta fold plus, when warranted, the
-    * major tombstone-fold/coalescing rewrite (the GramIndex.compact
-    * contract — see [[DeltaSegments]] for the full argument).
-    *
-    * THE FOLD is strictly ADDITIVE (the r17 pause-probes caveat is
-    * gone): segment rows append as NEW files into both sharded layouts
-    * (sketches first — the write-order isolation contract), the file
-    * manifests are atomically rewritten, and the folded segments are
-    * MARKED in the delta's `_folded` list rather than deleted; physical
-    * reclamation waits for the next maintenance op. A probe constructed
-    * before the fold reads exactly the old state (its pinned manifest
-    * file set and segment paths all still exist); after, exactly the
-    * new one; during, it is refused by [[FoldingMarker]] — never a
-    * silent double count.
-    *
-    * THE MAJOR HALF (runs only when tombstones are pending or a shard's
-    * manifest-counted file count exceeds `maxFilesPerShard`) reuses
-    * [[SaltedStore.compact]]'s marker-guarded per-partition swap on
-    * BOTH layouts (bands sorted by sig, sketches by doc_id). Tombstone
-    * markers are cleared LAST: a crash between the rewrites leaves them
-    * in place and every probe keeps anti-joining — idempotent, never
-    * lossy. It MOVES base files, so a pre-constructed probe executing
-    * past it dies on its pinned paths (FileNotFound), never silently —
-    * callers holding the probe CONSTRUCTION recover through
-    * [[ProbeRetry.retryOnce]] (retries once against the rewritten
-    * manifest, then fails loudly). */
   def compact(spark: SparkSession, path: String,
-              maxFilesPerShard: Int = 4): Unit = {
-    val nShards = readMeta(spark, path).getOrElse(
-      throw new IllegalStateException(s"no band index at $path"))
-    val (fsF, rootF) = fsOf(spark, path)
-    val deltaDir = new org.apache.hadoop.fs.Path(rootF, "delta")
-    val foldMarker = new org.apache.hadoop.fs.Path(rootF, FoldingMarker)
-    if (fsF.exists(foldMarker)) {
-      // a previous fold crashed mid-append: recover through the staged
-      // full rewrite (reshard at the unchanged count dedups rows that
-      // sit on both sides and parks the folded-segment debris with the
-      // old generation), then clear the marker
-      reshard(spark, path, nShards)
-      fsF.delete(foldMarker, false)
-      return
-    }
-    // deferred reclamation of the PREVIOUS fold's segments — probes
-    // constructed before it have had a full maintenance cycle to finish
-    DeltaSegments.reclaimFolded(fsF, deltaDir)
-    val liveSegNames = DeltaSegments.liveSegs(fsF, deltaDir).map(_.getName)
-    if (liveSegNames.nonEmpty) {
-      fsF.create(foldMarker, true).close()
-      deltaLayer(spark, path, "sketches").foreach(
-        _.withColumn("shard", pmod(hash(col("doc_id")), lit(nShards)))
-          .repartition(col("shard")).sortWithinPartitions("doc_id")
-          .write.mode("append").partitionBy("shard").parquet(s"$path/sketches"))
-      deltaLayer(spark, path, "bands").foreach(
-        _.withColumn("shard", shardOf(col("sig"), nShards))
-          .repartition(col("shard")).sortWithinPartitions("sig", "doc_id")
-          .write.mode("append").partitionBy("shard").parquet(s"$path/bands"))
-      // atomic per-layer manifest swaps: old file set or new, never a mix
-      writeManifests(spark, path)
-      DeltaSegments.markFolded(fsF, deltaDir, liveSegNames)
-      fsF.delete(foldMarker, false)
-    }
-    val drop = tombstones(spark, path)
-    val needMajor = drop.isDefined ||
-      Layers.exists(l => FileManifest.maxFilesPerPartition(spark, s"$path/$l")
-        .getOrElse(Int.MaxValue) > maxFilesPerShard)
-    if (needMajor) {
-      // manifests die first: the per-shard swaps mutate the file sets;
-      // probes fall back to the listing read until the rewrite rests
-      dropManifests(spark, path)
-      def strip(df: DataFrame): DataFrame = drop match {
-        case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
-        case None => df
-      }
-      SaltedStore.compact(spark, s"$path/bands", col("sig"),
-        partitionPrefix = "shard", transform = strip)
-      SaltedStore.compact(spark, s"$path/sketches", col("doc_id"),
-        partitionPrefix = "shard", transform = strip)
-      fsF.delete(new org.apache.hadoop.fs.Path(deletesPath(path)), true)
-      writeManifests(spark, path) // at rest again: listing-free probes resume
-    }
-  }
+              maxFilesPerShard: Int = 4): Unit =
+    layout.compact(spark, path, ShardedLayout.TargetBytes, maxFilesPerShard)
 
-  /** Marker for an in-flight shard-count migration (see [[reshard]]). */
-  val ReshardMarker = "_graft_resharding"
-
-  /** SHARD-COUNT MIGRATION — the band index's instance of the pinned-
-    * layout-parameter migration (StagedSwap's stage→park→swap, same as
-    * resalt / recluster / the text index's reshard). Both sharded
-    * layouts move together as one generation (bands re-hashed on the
-    * signature, sketches on doc_id — a probe shards them identically or
-    * pruning silently misses buckets, which is why the count is pinned)
-    * plus a fresh meta; pending tombstones fold into the rewrite, so
-    * the new generation starts clean. OFFLINE: pause writers and
-    * probes; [[storedShards]] (every probe's first call) refuses a
-    * standing marker. Resume = re-invoke with the same count. */
-  def reshard(spark: SparkSession, path: String, newShards: Int): Unit = {
-    require(newShards > 0, s"shard count must be positive, got $newShards")
-    // on a RESUME the marker stands and probes (incl. storedShards)
-    // refuse by design — only a fresh start validates the old layout
-    val (fs0, root0) = fsOf(spark, path)
-    if (!fs0.exists(new org.apache.hadoop.fs.Path(root0, ReshardMarker)))
-      // readMeta, not storedShards: reshard is also compact's recovery
-      // path for a crashed delta fold, which runs under FoldingMarker
-      require(readMeta(spark, path).nonEmpty, s"no band index at $path")
-    StagedSwap.migrate(spark, path, ReshardMarker,
-      ".reshard_new", ".reshard_old",
-      opName = "reshard", what = "shard count", tag = s"shards=$newShards",
-      parkFilter = _ => true, swapFilter = _ => true,
-      stage = { staging =>
-        // base ∪ unfolded delta, deduped per key: a crashed fold may
-        // have the same segment rows on both sides
-        val bandsBase = spark.read.parquet(s"$path/bands").drop("shard")
-          .select("doc_id", "band", "sig")
-        val bandsAll = deltaLayer(spark, path, "bands")
-          .map(d => bandsBase.unionByName(d.select("doc_id", "band", "sig")))
-          .getOrElse(bandsBase).distinct()
-        live(bandsAll, spark, path, "doc_id")
-          .withColumn("shard", shardOf(col("sig"), newShards))
-          .repartition(col("shard"))
-          .sortWithinPartitions("sig", "doc_id")
-          .write.mode("overwrite").partitionBy("shard").parquet(s"$staging/bands")
-        val skBase = spark.read.parquet(s"$path/sketches").drop("shard")
-          .select("doc_id", "sh")
-        val skAll = deltaLayer(spark, path, "sketches")
-          .map(d => skBase.unionByName(d.select("doc_id", "sh")))
-          .getOrElse(skBase).dropDuplicates("doc_id")
-        live(skAll, spark, path, "doc_id")
-          .withColumn("shard", pmod(hash(col("doc_id")), lit(newShards)))
-          .repartition(col("shard"))
-          .sortWithinPartitions("doc_id")
-          .write.mode("overwrite").partitionBy("shard").parquet(s"$staging/sketches")
-        writeMeta(spark, staging, newShards)
-        writeManifests(spark, staging)
-      })
-  }
+  def reshard(spark: SparkSession, path: String, newShards: Int): Unit =
+    layout.reshard(spark, path, newShards)
 }

@@ -11,298 +11,102 @@ import org.apache.spark.sql.functions._
   * Jaccard one: q_simjoin_containment is the batch self-join,
   * this store is its batch-vs-history form.
   *
-  * Layout under `path` (all three hash-sharded, count pinned in meta —
-  * the same pinned-at-creation discipline as the reference's
-  * distributor params, wd/Parametrizable.java:24-27):
+  * Layers under `path`, in the [[ShardedLayout]] write order (its
+  * lifecycle — meta, delta segments, tombstones, fold, compact, reshard
+  * — is shared with BandIndex and TextIndex):
+  *  - `profiles/shard=S` — (doc_id, sh, n): the exact verification sets,
+  *    sharded on doc_id; the verify join reads only the candidate docs'
+  *    shards. Written first: every candidate a probe can generate has
+  *    its verification profile.
   *  - `postings/shard=S` — (x, doc_id, n): one row per distinct
   *    (shingle-hash, doc); `n` = that doc's distinct-set size rides
   *    along so the τ size filter (den·n ≥ num·na) kills candidates
-  *    BEFORE any profile read. Sharded `pmod(hash(x), nShards)`.
+  *    BEFORE any profile read. Sharded on x.
   *  - `dfs/shard=S` — (x, df): document-frequency SUMMARY, one small row
-  *    per token, same sharding. Appends add per-batch partial rows;
-  *    probes fold with a sum. df is an OPTIMIZATION INPUT ONLY: it picks
-  *    WHICH prefix tokens probe the postings, and the prefix filter is
-  *    sound for ANY (na − ⌈τ·na⌉ + 1)-subset of A's tokens (pigeonhole:
-  *    a qualifying B misses at most na − ⌈τ·na⌉ of them) — so stale,
-  *    partial, or tombstone-inflated dfs can cost candidates, never
-  *    correctness.
-  *  - `profiles/shard=S` — (doc_id, n, sh): the exact verification sets,
-  *    sharded on `pmod(hash(doc_id), nShards)`; the verify join reads
-  *    only the candidate docs' shards.
-  *  - `delta/seg_*` — unfolded APPEND segments (one single-file
-  *    postings/dfs/profiles layer each, published atomically by
-  *    rename): an append costs 3 file commits instead of ~one per
-  *    touched shard per layout — the O(nShards) LSM commit floor the
-  *    r16 scale harness measured at 165s per 151-doc insert on a
-  *    6400-shard base. Probes union the (bounded) delta under their
-  *    batch-bounded filters; [[compact]] folds segments into the
-  *    sharded base.
-  *  - `_gram_meta.json` — nShards.
+  *    per token, sharded on x. Appends and folds add per-batch partial
+  *    rows; probes fold them with a sum; the major compaction recomputes
+  *    them exactly. df is an OPTIMIZATION INPUT ONLY: it picks WHICH
+  *    prefix tokens probe the postings, and the prefix filter is sound
+  *    for ANY (na − ⌈τ·na⌉ + 1)-subset of A's tokens (pigeonhole: a
+  *    qualifying B misses at most na − ⌈τ·na⌉ of them) — so stale,
+  *    partial, or tombstone-inflated dfs (and a missing df row, read as
+  *    df = 0) can cost candidates, never correctness.
+  *  - `delta/seg_*`, `_deletes`, `_gram_meta.json` — the layout's.
   *
-  * WRITE ORDER IS THE ISOLATION CONTRACT (the BandIndex discipline):
-  * profiles commit BEFORE postings. Candidates come off the postings
-  * scan and verify against profiles, so a probe catching an in-flight
-  * batch observes {old postings, any profiles} — every candidate it can
-  * generate has its verification profile. dfs commit last; a missing df
-  * row reads as df = 0 (sorts rarest-first), which the soundness
-  * argument above already covers.
-  *
-  * Append contract: batches carry DISJOINT doc sets. Takedowns:
-  * [[delete]] tombstones are anti-joined by every probe and folded at
-  * [[compact]]; dfs stay inflated until compact recomputes them from
-  * the compacted postings (sound, see above). Streaming maintenance:
-  * `StreamingIngest.gramIndexWriter`; containment-screened ingest
-  * (contained batch docs never enter): `screenGramIngestWriter`. */
+  * Append contract: batches carry DISJOINT doc sets. Streaming
+  * maintenance: `StreamingIngest.gramIndexWriter`; containment-screened
+  * ingest (contained batch docs never enter): `screenGramIngestWriter`. */
 object GramIndex {
   val MetaFile = "_gram_meta.json"
   val DefaultShards = 64
-
-  /** Marker for an in-flight delta fold (see [[compact]]): while it
-    * stands, segment rows may exist in BOTH the sharded base and the
-    * delta, so probes refuse loudly instead of double-counting. */
   val FoldingMarker = "_gram_folding"
-
-  private def fsOf(spark: SparkSession, path: String) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    (root.getFileSystem(spark.sessionState.newHadoopConf()), root)
-  }
+  val ReshardMarker: String = ShardedLayout.ReshardMarker
 
   def shardOf(c: Column, nShards: Int): Column = pmod(hash(c), lit(nShards))
 
-  private val Layers = Seq("postings", "dfs", "profiles")
+  private val Profiles = ShardedLayer("profiles", "doc_id", Seq("doc_id"))
+  private val Postings = ShardedLayer("postings", "x", Seq("x", "doc_id"))
+  private val Dfs = ShardedLayer("dfs", "x", Seq("x"))
 
-  /** The probe-side shard read: manifest-backed when the layout has a
-    * file manifest ([[FileManifest]] — ZERO exists/list calls, the fix
-    * for the one probe cost that grew with the corpus: the per-dir
-    * listing of ∝-corpus many shard dirs, measured as refresh_corpus's
-    * 10.5→37.7s screen growth for a FIXED increment), falling back to
-    * the marker-aware listing read for layouts mid-maintenance or
-    * written before the manifest existed. */
-  private def readLayer(spark: SparkSession, path: String, layer: String,
-                        shards: Seq[Long]): DataFrame =
-    FileManifest.readPartitions(spark, s"$path/$layer", shards)
-      .getOrElse(SaltedStore.readPartitions(spark, s"$path/$layer", shards,
-        partitionPrefix = "shard"))
+  private def dfsOf(sets: DataFrame): DataFrame =
+    sets.groupBy("x").agg(count(lit(1)).as("df"))
 
-  private def writeManifests(spark: SparkSession, path: String): Unit =
-    Layers.foreach(l => FileManifest.write(spark, s"$path/$l"))
+  private[graft] object layout extends ShardedLayout("GramIndex", "gram",
+      Seq(Profiles, Postings, Dfs), MetaFile, "n_shards", FoldingMarker, "delta") {
+    def shardOf(c: Column, nShards: Int): Column = GramIndex.shardOf(c, nShards)
 
-  /** Manifests die BEFORE any op that mutates the sharded file sets and
-    * are reborn only after it commits — mid-op probes fall back to the
-    * listing read, which handles every in-flight state. */
-  private def dropManifests(spark: SparkSession, path: String): Unit =
-    Layers.foreach(l => FileManifest.delete(spark, s"$path/$l"))
+    /** (doc_id, x) DISTINCT set rows → profiles, postings, dfs. */
+    protected def project(sets: DataFrame): Seq[DataFrame] = {
+      val profiles = sets.groupBy("doc_id")
+        .agg(collect_list(col("x")).as("sh"), count(lit(1)).as("n"))
+      Seq(profiles,
+        sets.join(profiles.select(col("doc_id"), col("n")), "doc_id")
+          .select(col("x"), col("doc_id"), col("n")),
+        dfsOf(sets))
+    }
 
-  private def writeMeta(spark: SparkSession, path: String, nShards: Int): Unit = {
-    val (fs, root) = fsOf(spark, path)
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, MetaFile), true)
-    try out.write(s"""{"n_shards":$nShards}""".getBytes("UTF-8")) finally out.close()
+    /** Every layer re-derived from the live (doc_id, x) set rows. */
+    protected def liveRows(spark: SparkSession, path: String): Seq[DataFrame] =
+      project(live(withDelta(spark, path, Postings, readAll(spark, path, Postings))(
+        _.select("doc_id", "x")).distinct(), spark, path, "doc_id"))
+
+    override protected def compactedLayers: Seq[ShardedLayer] = Seq(Profiles, Postings)
+
+    /** dfs recomputed EXACTLY from the compacted postings. A probe racing
+      * the rewrite can read a partial summary, which only re-orders its
+      * prefix choice (sound). */
+    override protected def afterMajor(spark: SparkSession, path: String, nShards: Int,
+                                      hadTombstones: Boolean): Unit =
+      writeLayer(dfsOf(readAll(spark, path, Postings)), path, Dfs, nShards, "overwrite")
   }
 
   /** nShards the index was created with; None if no index exists.
-    * Every probe's first call — refuses a mid-migration layout and a
-    * mid-fold delta (either can double-count or half-read). */
-  def storedShards(spark: SparkSession, path: String): Option[Int] = {
-    val (fs, root) = fsOf(spark, path)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, ReshardMarker)),
-      s"probe: $path has an in-flight shard migration ($ReshardMarker) — " +
-        "re-invoke GramIndex.reshard with the original shard count to finish it")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, FoldingMarker)),
-      s"probe: $path has an in-flight delta fold ($FoldingMarker) — " +
-        "re-run GramIndex.compact to finish it")
-    readMeta(spark, path)
-  }
+    * Refuses a standing reshard or fold marker. */
+  def storedShards(spark: SparkSession, path: String): Option[Int] =
+    layout.storedShards(spark, path)
 
-  /** Raw meta read with NO marker guards — for the maintenance ops that
-    * must run exactly when a marker stands (compact's fold recovery). */
-  private def readMeta(spark: SparkSession, path: String): Option[Int] = {
-    val (fs, root) = fsOf(spark, path)
-    val p = new org.apache.hadoop.fs.Path(root, MetaFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      """"n_shards":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-    }
-  }
+  def deltaAdvisory(spark: SparkSession, path: String): (Long, Long) =
+    layout.deltaAdvisory(spark, path)
 
-  // ---- delta segments (the append grain) -----------------------------
-
-  /** One parquet frame per delta LAYER across all published UNFOLDED
-    * segments — None when no live segment exists. Hidden `.tmp_*` dirs
-    * (in-flight publishes) are excluded by construction (dot-prefixed
-    * paths are invisible to Spark's listing, and we glob explicit seg
-    * dirs); segments already folded into the base but not yet reclaimed
-    * ([[DeltaSegments]]) are excluded by the `_folded` list. */
-  private def deltaLayer(spark: SparkSession, path: String,
-                         layer: String): Option[DataFrame] = {
-    val d = new org.apache.hadoop.fs.Path(path, "delta")
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val segs = DeltaSegments.liveSegs(fs, d)
-    if (segs.isEmpty) None
-    else Some(spark.read.parquet(segs.map(p => s"$p/$layer"): _*))
-  }
-
-  /** Delta accumulation advisory: (published segment count, delta
-    * bytes across all three layers). Every probe unions EVERY published
-    * segment into its batch-bounded reads, so a caller that appends
-    * per-micro-batch and never compacts converts the removed write
-    * amplification into unbounded READ amplification — this number is
-    * what tells them (the `SaltedStore.needsCompaction` discipline
-    * applied to the delta layer). Pure driver listing, no Spark job —
-    * free to call every maintenance tick. */
-  def deltaAdvisory(spark: SparkSession, path: String): (Long, Long) = {
-    val d = new org.apache.hadoop.fs.Path(path, "delta")
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    val segs = DeltaSegments.liveSegs(fs, d) // folded segs are read by no probe
-    val bytes = segs.map { s =>
-      fs.listStatus(s).filter(_.isDirectory).map(l =>
-        fs.listStatus(l.getPath).filter(_.isFile).map(_.getLen).sum).sum
-    }.sum
-    (segs.length.toLong, bytes)
-  }
-
-  /** Whether the unfolded delta has accumulated past `maxSegments` —
-    * the signal a periodic maintenance loop keys [[compact]] on (which
-    * also folds tombstones). Steady state costs one directory listing. */
   def needsCompaction(spark: SparkSession, path: String,
                       maxSegments: Int = 8): Boolean =
-    deltaAdvisory(spark, path)._1 > maxSegments
+    layout.needsCompaction(spark, path, maxSegments)
 
-  /** (doc_id, x) DISTINCT set rows → the three sharded layouts. One
-    * shard exchange per layout (the repartition-before-partitionBy rule
-    * graft.Scaling r14 measured at 13× on the band index). */
+  /** (doc_id, x) DISTINCT set rows → a new index generation. */
   def write(sets: DataFrame, path: String,
-            nShards: Int = DefaultShards): Unit = {
-    val spark = sets.sparkSession
-    // an index overwrite means the WHOLE index (the VectorIndex rule):
-    // dynamic partition overwrite would leave untouched shard dirs of
-    // the old generation (possibly a different shard count) in place
-    val ovwMode = spark.conf
-      .get("spark.sql.sources.partitionOverwriteMode", "static")
-    require(!ovwMode.equalsIgnoreCase("dynamic"),
-      "GramIndex.write under spark.sql.sources.partitionOverwriteMode=" +
-        "dynamic is unsupported (stale shards/tombstones would survive); " +
-        "use static overwrite, or append + delete + compact")
-    // a standing streaming commit log belongs to the REPLACED index's
-    // query lifecycle: a writer resuming under the same commitTag would
-    // silently SKIP early batches of the new corpus as
-    // "already committed" — a data-loss path, refused up front (the
-    // dynamic-overwrite guard's philosophy). Rebuilders clear the log
-    // or restart their stream under a fresh commitTag.
-    val (fs, root) = fsOf(spark, path)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, "_graft_commits")),
-      s"GramIndex.write: $path carries a _graft_commits log from a " +
-        "previous generation — a streaming writer resuming under the same " +
-        "commitTag would silently skip early batches of the rebuilt index; " +
-        "clear the log or use a fresh commitTag, then rebuild")
-    writeLayouts(sets, path, nShards, "overwrite")
-    writeMeta(spark, path, nShards)
-    writeManifests(spark, path)
-    // drop tombstones AND unfolded delta segments of the REPLACED
-    // generation (stale tombstones would silently hide new docs with
-    // reused ids; stale segments would resurrect replaced docs) — but
-    // only AFTER the new layouts commit: purging first would leave a
-    // crashed rebuild's still-live old index with its tombstones
-    // resurrected / its appends lost. Rebuilds are offline by contract,
-    // so the purge-last window is writer-only.
-    fs.delete(new org.apache.hadoop.fs.Path(deletesPath(path)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(root, "delta"), true)
-  }
+            nShards: Int = DefaultShards): Unit =
+    layout.write(sets, path, nShards)
 
-  /** Append a batch's set rows (disjoint doc contract) as ONE DELTA
-    * SEGMENT, published atomically by rename. The previous sharded
-    * append paid ~one file commit per touched shard per layout — the
-    * r16 scale harness measured 165s for a 151-doc insert against a
-    * 6400-shard base (a 500-doc batch carries ~30k distinct grams, so
-    * the postings/dfs layers touch nearly every shard): the
-    * O(nShards) commit floor of LSM write amplification. A segment is
-    * three single-file layers instead; probes union the (bounded)
-    * delta under the same batch-bounded filters, and [[compact]] folds
-    * segments into the sharded base — O(touched shards) ONCE per
-    * compact cadence, not once per append. Atomic publish also
-    * strengthens the isolation contract for appends: a probe sees
-    * either no segment or all three layers (the profiles-first
-    * ordering below is kept for uniformity; it matters only to the
-    * base layout's in-place writes). Segments are ingest-grain by the
-    * append contract — each layer is one narrow exchange to a
-    * single-task file write; corpus-scale loads belong to [[write]]. */
-  def append(sets: DataFrame, path: String): Unit = {
-    val spark = sets.sparkSession
-    val nShards = storedShards(spark, path).getOrElse(
-      throw new IllegalStateException(s"no gram index at $path — write() first"))
-    val _ = nShards // layout validated; delta layers are unsharded
-    val (fs, root) = fsOf(spark, path)
-    val segId = java.lang.Long.toHexString(System.nanoTime()) +
-      s"_p${ProcessHandle.current().pid()}"
-    val tmp = new org.apache.hadoop.fs.Path(root, s"delta/.tmp_$segId")
-    val profiles = sets.groupBy("doc_id")
-      .agg(collect_list(col("x")).as("sh"), count(lit(1)).as("n"))
-    profiles.repartition(1)
-      .write.mode("overwrite").parquet(s"$tmp/profiles")
-    sets.join(profiles.select(col("doc_id"), col("n")), "doc_id")
-      .select("x", "doc_id", "n")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$tmp/postings")
-    sets.groupBy("x").agg(count(lit(1)).as("df"))
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$tmp/dfs")
-    val seg = new org.apache.hadoop.fs.Path(root, s"delta/seg_$segId")
-    require(fs.rename(tmp, seg), s"gram append: publishing $seg failed")
-  }
+  /** Append a batch's set rows (disjoint doc contract) as one delta
+    * segment; corpus-scale loads belong to [[write]]. */
+  def append(sets: DataFrame, path: String): Unit = layout.append(sets, path)
 
-  private def writeLayouts(sets: DataFrame, path: String, nShards: Int,
-                           mode: String): Unit = {
-    val profiles = sets.groupBy("doc_id")
-      .agg(collect_list(col("x")).as("sh"), count(lit(1)).as("n"))
-    // profiles FIRST — see the isolation contract in the scaladoc
-    profiles
-      .withColumn("shard", shardOf(col("doc_id"), nShards))
-      .repartition(col("shard"))
-      .sortWithinPartitions("doc_id")
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/profiles")
-    sets
-      .join(profiles.select(col("doc_id"), col("n")), "doc_id")
-      .select(col("x"), col("doc_id"), col("n"))
-      .withColumn("shard", shardOf(col("x"), nShards))
-      .repartition(col("shard"))
-      .sortWithinPartitions("x", "doc_id")
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/postings")
-    sets.groupBy("x").agg(count(lit(1)).as("df"))
-      .withColumn("shard", shardOf(col("x"), nShards))
-      .repartition(col("shard"))
-      .sortWithinPartitions("x")
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/dfs")
-  }
-
-  // ---- deletes (the BandIndex/VectorIndex tombstone shape) -----------
-
-  private def deletesPath(path: String) = s"$path/_deletes"
-
-  /** Tombstone corpus doc ids: excluded from every probe's candidates
-    * immediately, physically removed at [[compact]]. dfs are NOT
-    * corrected until compact — inflated df only re-orders the prefix
-    * choice (sound, see scaladoc). */
+  /** Tombstone corpus doc ids. dfs stay inflated until [[compact]]
+    * recomputes them — inflated df only re-orders the prefix choice. */
   def delete(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
-    require(storedShards(spark, path).nonEmpty, s"no gram index at $path")
     import spark.implicits._
-    ids.toDF("doc_id").write.mode("append").parquet(deletesPath(path))
+    layout.delete(spark, path, ids.toDF("doc_id"))
   }
-
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val (fs, _) = fsOf(spark, deletesPath(path))
-    if (!fs.exists(new org.apache.hadoop.fs.Path(deletesPath(path)))) None
-    else Some(spark.read.parquet(deletesPath(path)).select("doc_id").distinct())
-  }
-
-  private def live(df: DataFrame, spark: SparkSession, path: String,
-                   idCol: String): DataFrame =
-    tombstones(spark, path) match {
-      case Some(t) =>
-        df.join(broadcast(t.select(col("doc_id").as(idCol))), Seq(idCol), "left_anti")
-      case None => df
-    }
 
   /** Upper bound on prefix rows a probe may collect to the driver (see
     * [[probeContainment]]). The collected prefix is (na − ⌈τ·na⌉ + 1)
@@ -347,20 +151,10 @@ object GramIndex {
     * na − ⌈τ·na⌉ + 1 of each doc's na rows — one tiny groupBy agg). */
   def probeContainment(spark: SparkSession, path: String, batchSets: DataFrame,
                        num: Int = 3, den: Int = 4,
-                       stageTimer: (String, Double) => Unit = (_, _) => ()): DataFrame = {
-    // construction-coherence guard (ConcurrentFoldSpec): the manifest
-    // reads and the delta listing below must come from the same side of
-    // a racing fold's publish, or folded rows double-count/vanish
-    val (fsC, rootC) = fsOf(spark, path)
-    DeltaSegments.coherentSnapshot(fsC,
-      new org.apache.hadoop.fs.Path(rootC, "delta"),
-      new org.apache.hadoop.fs.Path(rootC, FoldingMarker),
-      Layers.map(l => new org.apache.hadoop.fs.Path(rootC,
-        s"$l/${FileManifest.ManifestFile}")),
-      "gram probe") {
+                       stageTimer: (String, Double) => Unit = (_, _) => ()): DataFrame =
+    layout.coherentProbe(spark, path, "gram probe") {
       probeContainmentImpl(spark, path, batchSets, num, den, stageTimer)
     }
-  }
 
   private def probeContainmentImpl(spark: SparkSession, path: String,
                        batchSets: DataFrame, num: Int, den: Int,
@@ -375,8 +169,7 @@ object GramIndex {
     // is attributable to its stage.
     require(num > 0 && den > 0 && num <= den, s"threshold $num/$den not in (0,1]")
     val tStart = System.nanoTime()
-    val nShards = storedShards(spark, path).getOrElse(
-      throw new IllegalStateException(s"no gram index at $path — write() first"))
+    val nShards = layout.shards(spark, path)
     val sets = batchSets.select(col("doc_id").as("a"), col("x"))
     val maxCollect = spark.conf.getOption(MaxPrefixCollectKey)
       .map { v =>
@@ -401,15 +194,10 @@ object GramIndex {
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val withNa = sets.withColumn("na", count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy("a")).cast("bigint"))
-    // unfolded delta segments (appends since the last compact): each
-    // layer unions under the SAME batch-bounded filters as its base
-    // read — one bounded delta scan per layer, never a corpus read
-    val deltaDfs = deltaLayer(spark, path, "dfs")
-    val deltaPostings = deltaLayer(spark, path, "postings")
-    val deltaProfiles = deltaLayer(spark, path, "profiles")
-    // 1. df lookup — shard list is ≤ nShards by construction (pmod);
-    // all three reads below are manifest-backed (readLayer): listing-
-    // free path construction at any corpus size
+    // 1. df lookup — shard list is ≤ nShards by construction (pmod).
+    // All three reads below are manifest-backed shard reads unioned with
+    // the unfolded delta under the SAME batch-bounded filters — one
+    // bounded delta scan per layer, never a corpus read
     val tokShards = sets.select(shardOf(col("x"), nShards).as("s"))
       .distinct().collect().map(_.getInt(0).toLong).toSeq
     // empty batch (a no-doc micro-batch): nothing can be contained —
@@ -421,9 +209,8 @@ object GramIndex {
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType.fromDDL(
           "a BIGINT, b BIGINT, containment DOUBLE"))
-    val dfBase = readLayer(spark, path, "dfs", tokShards).select("x", "df")
-    val dfOfTok = deltaDfs.map(d => dfBase.unionByName(d.select("x", "df")))
-      .getOrElse(dfBase)
+    val dfOfTok = layout.withDelta(spark, path, Dfs,
+        layout.readLayer(spark, path, Dfs, tokShards))(_.select("x", "df"))
       .join(bc(sets.select("x").distinct()), "x")
       .groupBy("x").agg(sum(col("df")).as("df")) // fold per-batch partials
     // lazy, the dfs subtree would re-execute under the candidate-shard
@@ -465,12 +252,10 @@ object GramIndex {
     stageTimer("dfs_prefix", (System.nanoTime() - tStart) / 1e9)
     val tCand = System.nanoTime()
     // 2. candidates off the prefix tokens' postings, size-filtered
-    val postBase = readLayer(spark, path, "postings", postShards)
-      .select(col("x"), col("doc_id").as("b"), col("n").as("nb"))
-    val candPlan = live(
-        deltaPostings.map(d => postBase.unionByName(
-          d.select(col("x"), col("doc_id").as("b"), col("n").as("nb"))))
-          .getOrElse(postBase),
+    val candPlan = layout.live(
+        layout.withDelta(spark, path, Postings,
+          layout.readLayer(spark, path, Postings, postShards))(
+          _.select(col("x"), col("doc_id").as("b"), col("n").as("nb"))),
         spark, path, "b")
       .join(bc(prefix), "x")
       .filter(lit(den.toLong) * col("nb") >= lit(num.toLong) * col("na"))
@@ -493,12 +278,13 @@ object GramIndex {
     // over the four probe consumers: 33.3s vs 37.2s lazy, q_refresh_e2e
     // 16.9 vs 21.5). The shard list becomes driver arithmetic off the
     // same rows (the 5th projected column keeps the Column-side shardOf
-    // as the single hash definition). The collect is BOUNDED by
-    // candBound ≤ maxCollect — `small` alone bounds prefix rows, not
-    // candidates — and past either cap the localCheckpoint spelling is
-    // unchanged.
+    // as the single hash definition). The collect AND the verify-side
+    // broadcast are BOUNDED by candBound ≤ maxCollect — `small` alone
+    // bounds prefix rows, not candidates — and past either cap the
+    // candidates are localCheckpoint()ed and joined by shuffle.
+    val candSmall = small && candBound <= maxCollect
     val (cand, candShards) =
-      if (small && candBound <= maxCollect) {
+      if (candSmall) {
         val rows = candPlan
           .withColumn("bs", shardOf(col("b"), nShards))
           .collect()
@@ -514,14 +300,12 @@ object GramIndex {
           .distinct().collect().map(_.getInt(0).toLong).toSeq)
       }
     stageTimer("cand_postings", (System.nanoTime() - tCand) / 1e9)
-    val profBase = readLayer(spark, path, "profiles", candShards)
-      .select(col("doc_id").as("b"), col("sh").as("shb"))
-    val profs = deltaProfiles.map(d => profBase.unionByName(
-        d.select(col("doc_id").as("b"), col("sh").as("shb"))))
-      .getOrElse(profBase)
+    val profs = layout.withDelta(spark, path, Profiles,
+        layout.readLayer(spark, path, Profiles, candShards))(
+        _.select(col("doc_id").as("b"), col("sh").as("shb")))
     val batchFull = sets.groupBy("a").agg(collect_list(col("x")).as("sha"))
     profs
-      .join(bc(cand), "b")
+      .join(if (candSmall) broadcast(cand) else cand, "b")
       .join(bc(batchFull), "a")
       .withColumn("inter",
         size(array_intersect(col("sha"), col("shb"))).cast("bigint"))
@@ -531,144 +315,10 @@ object GramIndex {
       .select("a", "b", "containment")
   }
 
-  /** Compact = a PROBE-ATOMIC delta fold plus, when warranted, the
-    * major tombstone-fold/coalescing rewrite.
-    *
-    * THE FOLD ([[DeltaSegments]] — the r17 pause-probes caveat is
-    * gone): strictly ADDITIVE. Segment rows append as NEW files into
-    * the sharded base (no existing file moves), the file manifests are
-    * atomically rewritten, and the folded segments are MARKED — not
-    * deleted — in the delta's `_folded` list; physical reclamation is
-    * deferred to the start of the NEXT maintenance op. A probe
-    * constructed before the fold therefore reads exactly the old state
-    * (its pinned manifest file set and segment paths are all still
-    * present); a probe constructed after reads exactly the new one;
-    * one constructed during is refused by [[FoldingMarker]] — never a
-    * silent double count. dfs segments fold as per-batch PARTIAL rows
-    * (the summary probes already sum per token); the exact recompute
-    * happens in the major half.
-    *
-    * THE MAJOR HALF runs only when tombstones are pending (their fold
-    * is this method's correctness contract) or some shard's file count
-    * exceeds `maxFilesPerShard` (manifest-counted — no per-dir
-    * listing): SaltedStore.compact's per-shard swap on postings and
-    * profiles, then dfs recomputed EXACTLY from the compacted
-    * postings. It MOVES base files, so a probe constructed before it
-    * and executed after dies LOUDLY (FileNotFound on its pinned
-    * paths) — callers holding the probe CONSTRUCTION recover through
-    * [[ProbeRetry.retryOnce]] (one reconstruction against the
-    * rewritten manifest, then fail loudly); the appends-only pause
-    * rule applies to it, as to every SaltedStore.compact. A probe racing the dfs rewrite can read a
-    * partial summary — df = 0 for missing tokens — which only
-    * re-orders its prefix choice (sound). */
   def compact(spark: SparkSession, path: String,
-              maxFilesPerShard: Int = 4): Unit = {
-    val nShards = readMeta(spark, path).getOrElse(
-      throw new IllegalStateException(s"no gram index at $path"))
-    val (fsF, rootF) = fsOf(spark, path)
-    val deltaDir = new org.apache.hadoop.fs.Path(rootF, "delta")
-    val foldMarker = new org.apache.hadoop.fs.Path(rootF, FoldingMarker)
-    if (fsF.exists(foldMarker)) {
-      // a previous fold crashed mid-append: segment rows may now exist
-      // in BOTH the sharded base and unfolded segments. Recover through
-      // the staged full rewrite (reshard at the unchanged count): it
-      // unions base ∪ live delta, DISTINCTs the set rows, folds
-      // tombstones, recomputes dfs exactly, and parks the whole old
-      // generation (folded-segment debris included) before the swap.
-      reshard(spark, path, nShards)
-      fsF.delete(foldMarker, false)
-      return
-    }
-    // deferred reclamation of segments folded by the PREVIOUS compact —
-    // any probe constructed before that fold has had a full maintenance
-    // cycle to finish (the DeltaSegments grace contract)
-    DeltaSegments.reclaimFolded(fsF, deltaDir)
-    val liveSegNames = DeltaSegments.liveSegs(fsF, deltaDir).map(_.getName)
-    if (liveSegNames.nonEmpty) {
-      fsF.create(foldMarker, true).close()
-      // additive appends, profiles first (the write-order isolation
-      // contract), one new file per touched shard per layer
-      deltaLayer(spark, path, "profiles").foreach(
-        _.withColumn("shard", shardOf(col("doc_id"), nShards))
-          .repartition(col("shard")).sortWithinPartitions("doc_id")
-          .write.mode("append").partitionBy("shard").parquet(s"$path/profiles"))
-      deltaLayer(spark, path, "postings").foreach(
-        _.withColumn("shard", shardOf(col("x"), nShards))
-          .repartition(col("shard")).sortWithinPartitions("x", "doc_id")
-          .write.mode("append").partitionBy("shard").parquet(s"$path/postings"))
-      deltaLayer(spark, path, "dfs").foreach(
-        _.withColumn("shard", shardOf(col("x"), nShards))
-          .repartition(col("shard")).sortWithinPartitions("x")
-          .write.mode("append").partitionBy("shard").parquet(s"$path/dfs"))
-      // atomic per-layer manifest swaps: a reader sees the pre-fold file
-      // set or the post-fold one, never a mix of generations
-      writeManifests(spark, path)
-      DeltaSegments.markFolded(fsF, deltaDir, liveSegNames)
-      fsF.delete(foldMarker, false)
-    }
-    val drop = tombstones(spark, path)
-    val needMajor = drop.isDefined ||
-      Layers.exists(l => FileManifest.maxFilesPerPartition(spark, s"$path/$l")
-        .getOrElse(Int.MaxValue) > maxFilesPerShard)
-    if (needMajor) {
-      // manifests die first: the per-shard swaps below mutate the file
-      // sets; probes fall back to the listing read until the rewrite rests
-      dropManifests(spark, path)
-      def strip(df: DataFrame): DataFrame = drop match {
-        case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
-        case None => df
-      }
-      SaltedStore.compact(spark, s"$path/postings", col("x"),
-        partitionPrefix = "shard", transform = strip)
-      SaltedStore.compact(spark, s"$path/profiles", col("doc_id"),
-        partitionPrefix = "shard", transform = strip)
-      spark.read.parquet(s"$path/postings")
-        .groupBy("x").agg(count(lit(1)).as("df"))
-        .withColumn("shard", shardOf(col("x"), nShards))
-        .repartition(col("shard"))
-        .sortWithinPartitions("x")
-        .write.mode("overwrite").partitionBy("shard").parquet(s"$path/dfs")
-      fsF.delete(new org.apache.hadoop.fs.Path(deletesPath(path)), true)
-      writeManifests(spark, path) // at rest again: listing-free probes resume
-    }
-  }
+              maxFilesPerShard: Int = 4): Unit =
+    layout.compact(spark, path, ShardedLayout.TargetBytes, maxFilesPerShard)
 
-  /** Marker for an in-flight shard-count migration (see [[reshard]]). */
-  val ReshardMarker = "_graft_resharding"
-
-  /** SHARD-COUNT MIGRATION on the shared StagedSwap protocol — all three
-    * layouts move as one generation (postings/dfs re-hashed on x,
-    * profiles on doc_id) plus a fresh meta; pending tombstones fold in.
-    * OFFLINE: pause writers and probes; [[storedShards]] (every probe's
-    * first call) refuses a standing marker. Resume = re-invoke with the
-    * same count. */
-  def reshard(spark: SparkSession, path: String, newShards: Int): Unit = {
-    require(newShards > 0, s"shard count must be positive, got $newShards")
-    val (fs0, root0) = fsOf(spark, path)
-    if (!fs0.exists(new org.apache.hadoop.fs.Path(root0, ReshardMarker)))
-      // readMeta, not storedShards: reshard is also compact's recovery
-      // path for a crashed delta fold, which runs under FoldingMarker
-      require(readMeta(spark, path).nonEmpty, s"no gram index at $path")
-    StagedSwap.migrate(spark, path, ReshardMarker,
-      ".reshard_new", ".reshard_old",
-      opName = "reshard", what = "shard count", tag = s"shards=$newShards",
-      parkFilter = _ => true, swapFilter = _ => true,
-      stage = { staging =>
-        // base ∪ unfolded delta, DISTINCT: a crashed fold may have the
-        // same segment rows on both sides — the rewrite dedups them
-        val baseSets = spark.read.parquet(s"$path/postings")
-          .select("doc_id", "x")
-        val allSets = deltaLayer(spark, path, "postings")
-          .map(d => baseSets.unionByName(d.select("doc_id", "x")))
-          .getOrElse(baseSets).distinct()
-        val liveSets = live(allSets, spark, path, "doc_id")
-        // one staged rewrite through the same three-layout writer; meta
-        // + file manifests commit into the staging dir, swapped in with
-        // the data (the parked old generation — delta included — is
-        // dropped after)
-        writeLayouts(liveSets, staging, newShards, "overwrite")
-        writeMeta(spark, staging, newShards)
-        writeManifests(spark, staging)
-      })
-  }
+  def reshard(spark: SparkSession, path: String, newShards: Int): Unit =
+    layout.reshard(spark, path, newShards)
 }

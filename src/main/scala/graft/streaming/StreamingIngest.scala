@@ -304,15 +304,8 @@ object StreamingIngest {
                                nShards: Int = graft.store.GramIndex.DefaultShards,
                                commitTag: String = "q0"): Unit =
     withBatchCommit(batch, batchId, path, commitTag) {
-      import graft.store.GramIndex
-      val sets = gramSets(batch)
-      if (GramIndex.storedShards(batch.sparkSession, path).isEmpty)
-        GramIndex.write(sets, path, nShards)
-      else {
-        GramIndex.append(sets, path)
-        adviseDeltaFold("GramIndex", path,
-          GramIndex.deltaAdvisory(batch.sparkSession, path))
-      }
+      graft.store.GramIndex.layout.writeOrAppend(gramSets(batch), path, nShards)
+        .foreach(adviseDeltaFold("GramIndex", path, _))
     }
 
   /** CONTAINMENT-SCREENED ingest — decontamination at the door: a
@@ -379,12 +372,8 @@ object StreamingIngest {
             .select(col("a")).distinct().collect().map(_.getLong(0)).toSet
         val dropped = withinDropped ++ indexDropped
         val kept = antiIds(sets, dropped)
-        if (GramIndex.storedShards(spark, path).isEmpty)
-          GramIndex.write(kept, path, nShards)
-        else {
-          GramIndex.append(kept, path)
-          adviseDeltaFold("GramIndex", path, GramIndex.deltaAdvisory(spark, path))
-        }
+        GramIndex.layout.writeOrAppend(kept, path, nShards)
+          .foreach(adviseDeltaFold("GramIndex", path, _))
         out = Some(batch.select("doc_id").collect().map(_.getLong(0))
           .filterNot(dropped).toSeq.sorted)
       } finally sets.unpersist(blocking = false)
@@ -406,15 +395,9 @@ object StreamingIngest {
                                nShards: Int = graft.store.BandIndex.DefaultShards,
                                commitTag: String = "q0"): Unit =
     withBatchCommit(batch, batchId, path, commitTag) {
-      import graft.store.BandIndex
-      val sketch = graft.pipeline.Dedup.docSketch(batch)
-      if (BandIndex.storedShards(batch.sparkSession, path).isEmpty)
-        BandIndex.write(sketch, path, nShards)
-      else {
-        BandIndex.append(sketch, path)
-        adviseDeltaFold("BandIndex", path,
-          BandIndex.deltaAdvisory(batch.sparkSession, path))
-      }
+      graft.store.BandIndex.layout.writeOrAppend(
+          graft.pipeline.Dedup.docSketch(batch), path, nShards)
+        .foreach(adviseDeltaFold("BandIndex", path, _))
     }
 
   /** DEDUP-AT-INGEST document writer — the text-modality twin of
@@ -533,12 +516,8 @@ object StreamingIngest {
           }
         val dropped = withinDropped ++ indexDropped
         val kept = antiIds(sketch, dropped)
-        if (BandIndex.storedShards(spark, path).isEmpty)
-          BandIndex.write(kept, path, nShards)
-        else {
-          BandIndex.append(kept, path)
-          adviseDeltaFold("BandIndex", path, BandIndex.deltaAdvisory(spark, path))
-        }
+        BandIndex.layout.writeOrAppend(kept, path, nShards)
+          .foreach(adviseDeltaFold("BandIndex", path, _))
         out = Some(batch.select("doc_id").collect().map(_.getLong(0))
           .filterNot(dropped).toSeq.sorted)
       } finally sketch.unpersist(blocking = false)

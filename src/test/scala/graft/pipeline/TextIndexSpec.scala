@@ -550,6 +550,25 @@ class TextIndexSpec extends SparkSuite {
     assert(TextIndex.storedDocs(spark, p).contains(6L))
   }
 
+  test("write(overwrite) refuses dynamic partition overwrite: stale tombstones would hide reused ids") {
+    val p = java.nio.file.Files.createTempDirectory("tindex_dynamic").toString
+    TextIndex.write(docs, p)
+    TextIndex.delete(spark, p, Seq(3L)) // "cat and dog and bird"
+    // a dynamic overwrite keeps the root's _deletes: the rebuilt doc 3
+    // would stay hidden behind the replaced generation's tombstone
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try {
+      val e = intercept[IllegalArgumentException] { TextIndex.write(docs, p) }
+      assert(e.getMessage.contains("partitionOverwriteMode"))
+    } finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    // the refused rebuild left the old generation and its tombstone intact
+    assert(TextIndex.searchAll(spark, p, Seq("bird")).isEmpty)
+    // a static rebuild replaces the generation: reused id 3 is visible again
+    TextIndex.write(docs, p)
+    assert(TextIndex.searchAll(spark, p, Seq("bird")).select("doc_id")
+      .as[Long].collect().toSeq === Seq(3L))
+  }
+
   test("write(overwrite) purges unfolded delta segments of the replaced generation") {
     val p = java.nio.file.Files.createTempDirectory("tindex_purge").toString
     TextIndex.write(docs, p)

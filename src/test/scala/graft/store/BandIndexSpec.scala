@@ -231,23 +231,6 @@ class BandIndexSpec extends SparkSuite {
     BandIndex.compact(spark, p) // next maintenance op: debris reclaimed
     assert(!new java.io.File(s"$p/delta").exists(), "folded debris survived reclaim")
     assert(candidates === preFold)
-    // crashed-fold recovery: plant half-folded state (bands folded,
-    // delta + marker standing) — probes refuse, compact recovers exact
-    BandIndex.append(Dedup.docSketch(
-      Seq((77L, doc(77))).toDF("doc_id", "text")), p)
-    val clean = candidates
-    val nShards = BandIndex.storedShards(spark, p).get
-    Dedup.bandRows(Dedup.docSketch(Seq((77L, doc(77))).toDF("doc_id", "text")), "doc_id")
-      .withColumn("shard", BandIndex.shardOf(col("sig"), nShards))
-      .repartition(col("shard"))
-      .write.mode("append").partitionBy("shard").parquet(s"$p/bands")
-    val marker = new java.io.File(s"$p/${BandIndex.FoldingMarker}")
-    assert(marker.createNewFile())
-    val e = intercept[IllegalArgumentException] { candidates }
-    assert(e.getMessage.contains(BandIndex.FoldingMarker))
-    BandIndex.compact(spark, p)
-    assert(!marker.exists() && !new java.io.File(s"$p/delta").exists())
-    assert(candidates === clean)
   }
 
   test("probe during APPEND sees a verifiable generation (sketches-first ordering)") {

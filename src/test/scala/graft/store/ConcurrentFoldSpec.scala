@@ -1,31 +1,19 @@
 package graft.store
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
-/** The fold-vs-probe race under REAL concurrency (the r18 judge's ask:
-  * FoldAtomicSpec is sequential). Probes are constructed and executed
-  * CONCURRENTLY with `compact()`'s additive delta fold on gram, band
-  * and text; every probe that COMPLETES must return exactly the truth
-  * (for a pure fold, old state == new state, so there is one expected
-  * answer — a mid-fold mixed read would surface as DOUBLE-COUNTED pair
-  * rows or wrong scores), and the [[GramIndex.FoldingMarker]]-style
-  * refusal of a probe constructed during the fold window is allowed.
-  * Swept across seeds: each round re-appends a fresh delta segment and
-  * races the fold against a jittered probe loop. */
+/** The fold-vs-probe race under REAL concurrency (FoldAtomicSpec is
+  * sequential). Probes are constructed and executed CONCURRENTLY with
+  * `compact()`'s additive delta fold on every index of
+  * [[IndexLifecycle]]'s table; every probe that COMPLETES must return
+  * exactly the truth (for a pure fold, old state == new state, so there
+  * is one expected answer — a mid-fold mixed read would surface as
+  * DOUBLE-COUNTED rows or wrong scores), and the fold-marker refusal of
+  * a probe constructed during the fold window is allowed. Swept across
+  * seeds: each round re-appends a fresh delta segment and races the
+  * fold against a jittered probe loop. */
 class ConcurrentFoldSpec extends SparkSuite {
-  import spark.implicits._
-
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString + "/idx"
-
-  private def doc(i: Long) =
-    s"alpha bravo charlie delta echo token$i foxtrot golf hotel india$i"
-
-  private def setsOf(df: org.apache.spark.sql.DataFrame) =
-    graft.pipeline.TextAnalysis.shingleRows(df)
-      .withColumn("x", graft.pipeline.Dedup.baseHash32(col("s")))
-      .select("doc_id", "x").distinct()
+  import IndexLifecycle._
 
   private def isRefusal(e: Throwable): Boolean = {
     var c: Throwable = e
@@ -85,84 +73,23 @@ class ConcurrentFoldSpec extends SparkSuite {
     (completed, refused)
   }
 
-  test("gram: probes racing the delta fold return exact results or the marker refusal") {
-    val p = tmp("concfold_gram")
-    GramIndex.write(setsOf(
-      (0L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text")), p,
-      nShards = 4)
-    val batch = setsOf(Seq(
-      (9000L, doc(7).split(" ").dropRight(2).mkString(" ")),
-      (9001L, doc(104 - 100L).split(" ").dropRight(2).mkString(" ")))
-      .toDF("doc_id", "text")).persist()
+  private def title(name: String) =
+    s"$name: ${if (name == "text") "searches" else "probes"} racing the " +
+      "delta fold return exact results or the marker refusal"
+
+  for (name <- Names) test(title(name)) {
+    val ix = IndexLifecycle(spark, name)
+    val p = tmp(s"concfold_$name")
+    ix.write(docs(0L until 30L), p, 4)
     var totalCompleted = 0
     for (seed <- 1 to 3) {
       // fresh delta segment per round so each fold has work to do
-      GramIndex.append(setsOf(
-        Seq((100L + seed, doc(4))).toDF("doc_id", "text")), p)
-      val expected = GramIndex.probeContainment(spark, p, batch)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toList.sorted
+      ix.append(Seq((100L + seed, doc(7))), p)
+      val expected = answer(ix.probe(p))
       assert(expected.nonEmpty && expected.size === expected.distinct.size)
-      val (c, _) = race(seed,
-        () => GramIndex.compact(spark, p),
-        () => GramIndex.probeContainment(spark, p, batch)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          .toList.sorted,
-        expected)
+      val (c, _) = race(seed, () => ix.compact(p), () => answer(ix.probe(p)), expected)
       totalCompleted += c
     }
     assert(totalCompleted > 0, "no probe ever completed — the race never raced")
-    batch.unpersist()
-  }
-
-  test("band: probes racing the delta fold return exact results or the marker refusal") {
-    val p = tmp("concfold_band")
-    val sk = graft.pipeline.Dedup.docSketch(
-      (0L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text"))
-    BandIndex.write(sk, p, nShards = 4)
-    val probeSk = graft.pipeline.Dedup.docSketch(Seq(
-      (9000L, doc(7))).toDF("doc_id", "text")).persist()
-    val bands = graft.pipeline.Dedup.bandRows(probeSk, "doc_id")
-    var totalCompleted = 0
-    for (seed <- 1 to 3) {
-      BandIndex.append(graft.pipeline.Dedup.docSketch(
-        Seq((200L + seed, doc(11))).toDF("doc_id", "text")), p)
-      val expected = BandIndex.probeCandidates(spark, p, bands, "doc_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
-      assert(expected.nonEmpty && expected.size === expected.distinct.size)
-      val (c, _) = race(seed,
-        () => BandIndex.compact(spark, p),
-        () => BandIndex.probeCandidates(spark, p, bands, "doc_id")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted,
-        expected)
-      totalCompleted += c
-    }
-    assert(totalCompleted > 0)
-    probeSk.unpersist()
-  }
-
-  test("text: searches racing the delta fold return exact results or the marker refusal") {
-    val p = tmp("concfold_text")
-    graft.pipeline.TextIndex.write(
-      (0L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text"), p,
-      shards = 4)
-    var totalCompleted = 0
-    for (seed <- 1 to 3) {
-      graft.pipeline.TextIndex.write(
-        Seq((300L + seed, doc(13))).toDF("doc_id", "text"), p,
-        mode = "append")
-      val expected = graft.pipeline.TextIndex
-        .searchAll(spark, p, Seq("alpha", "token13"))
-        .collect().map(_.getLong(0)).toList.sorted
-      assert(expected.nonEmpty && expected.size === expected.distinct.size)
-      val (c, _) = race(seed,
-        () => graft.pipeline.TextIndex.compact(spark, p),
-        () => graft.pipeline.TextIndex
-          .searchAll(spark, p, Seq("alpha", "token13"))
-          .collect().map(_.getLong(0)).toList.sorted,
-        expected)
-      totalCompleted += c
-    }
-    assert(totalCompleted > 0)
   }
 }

@@ -1,168 +1,84 @@
 package graft.store
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
 
 /** The probe-atomic delta fold (DeltaSegments): a probe CONSTRUCTED
   * before compact() and EXECUTED after it returns exact results on
-  * gram, band AND text — the r17 "pause probes for the fold window"
-  * caveat, deleted and replaced with machinery. The fold is additive
-  * (old base files keep their paths), manifests swap atomically, and
-  * folded segments are only MARKED (reclaimed at the next maintenance
-  * op), so the pre-fold probe's pinned file set stays fully readable
-  * and double-counting is structurally impossible. */
+  * gram, band AND text. The fold is additive (old base files keep their
+  * paths), manifests swap atomically, and folded segments are only
+  * MARKED (reclaimed at the next maintenance op), so the pre-fold
+  * probe's pinned file set stays fully readable and double-counting is
+  * structurally impossible. A fold that crashed mid-way recovers
+  * through the staged rewrite. Run over [[IndexLifecycle]]'s table. */
 class FoldAtomicSpec extends SparkSuite {
-  import spark.implicits._
+  import IndexLifecycle._
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString + "/idx"
+  private val foldTitle = Map(
+    "gram" -> "gram: pre-fold probe executed post-compact is exact; fresh probe agrees; second compact reclaims",
+    "band" -> "band: pre-fold candidate+sketch probes executed post-compact are exact (no doubled rows)",
+    "text" -> "text: pre-fold searchAll executed post-compact keeps exact tf (no double count)")
 
-  private def doc(i: Long) =
-    s"alpha bravo charlie delta echo token$i foxtrot golf hotel india$i"
-
-  private def setsOf(df: org.apache.spark.sql.DataFrame) =
-    graft.pipeline.TextAnalysis.shingleRows(df)
-      .withColumn("x", graft.pipeline.Dedup.baseHash32(col("s")))
-      .select("doc_id", "x").distinct()
-
-  private def fsOf(p: String) = new org.apache.hadoop.fs.Path(p)
-    .getFileSystem(spark.sessionState.newHadoopConf())
-
-  test("gram: pre-fold probe executed post-compact is exact; fresh probe agrees; second compact reclaims") {
-    val p = tmp("foldatomic_gram")
-    GramIndex.write(setsOf(
-      (0L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text")), p,
-      nShards = 8)
-    // append lands as one delta segment
-    GramIndex.append(setsOf(
-      (100L until 110L).map(i => (i, doc(i - 100L))).toDF("doc_id", "text")), p)
-    val batch = setsOf(Seq(
-      (9000L, doc(7).split(" ").dropRight(2).mkString(" ")),
-      (9001L, doc(104 - 100L).split(" ").dropRight(2).mkString(" ")))
-      .toDF("doc_id", "text")).persist()
-    // expected = the pre-compact truth (fold must not change results,
-    // and any double count would emit duplicate pair rows)
-    val expected = GramIndex.probeContainment(spark, p, batch)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
-      .sorted
+  for (name <- Names) test(foldTitle(name)) {
+    val ix = IndexLifecycle(spark, name)
+    val p = tmp(s"foldatomic_$name")
+    ix.write(docs(0L until 30L), p, 8)
+    // the append lands as one delta segment; its docs repeat docs 0-9
+    ix.append(docs(100L until 110L, _ - 100L), p)
+    // expected = the pre-compact truth (a fold must not change results,
+    // and any double count would emit duplicate rows)
+    val expected = answer(ix.probe(p))
     assert(expected.nonEmpty && expected.size === expected.distinct.size)
-    // the probe under test: CONSTRUCTED before compact (its dfs/prefix
-    // stages run eagerly now; the verify join pins the pre-fold
-    // manifest file set + the segment paths), EXECUTED after
-    val preFold = GramIndex.probeContainment(spark, p, batch)
-    GramIndex.compact(spark, p)
-    val gotPre = preFold.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList.sorted
-    assert(gotPre === expected,
-      s"pre-fold probe diverged after the fold: $gotPre vs $expected")
+    assert(expected.exists(_.contains("107")), s"delta doc not probed: $expected")
+    // CONSTRUCTED before compact (eager stages run now; the lazy rest
+    // pins the pre-fold manifest file set + the segment paths),
+    // EXECUTED after
+    val preFold = ix.probe(p)
+    ix.compact(p)
+    assert(answer(preFold) === expected, "pre-fold probe diverged after the fold")
     // the folded segment is marked, not deleted; no live segs remain
-    val deltaDir = new org.apache.hadoop.fs.Path(p, "delta")
-    val fs = fsOf(p)
+    val deltaDir = new Path(p, ix.layout.deltaDir)
+    val fs = fsOf(spark, p)
     assert(fs.exists(deltaDir), "delta dir reclaimed too early")
     assert(DeltaSegments.foldedNames(fs, deltaDir).nonEmpty)
     assert(DeltaSegments.liveSegs(fs, deltaDir).isEmpty)
-    assert(GramIndex.deltaAdvisory(spark, p)._1 === 0L)
+    assert(ix.layout.deltaAdvisory(spark, p)._1 === 0L)
     // a probe constructed POST-fold sees exactly the new state = same rows
-    val gotPost = GramIndex.probeContainment(spark, p, batch)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
-      .sorted
-    assert(gotPost === expected)
+    assert(answer(ix.probe(p)) === expected)
     // the NEXT maintenance op reclaims the folded debris
-    GramIndex.compact(spark, p)
-    assert(!fs.exists(deltaDir) ||
-      DeltaSegments.foldedNames(fs, deltaDir).isEmpty)
-    batch.unpersist()
+    ix.compact(p)
+    assert(!fs.exists(deltaDir) || DeltaSegments.foldedNames(fs, deltaDir).isEmpty)
+    assert(answer(ix.probe(p)) === expected)
   }
 
-  test("band: pre-fold candidate+sketch probes executed post-compact are exact (no doubled rows)") {
-    val p = tmp("foldatomic_band")
-    val sk = graft.pipeline.Dedup.docSketch(
-      (0L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text"))
-    BandIndex.write(sk, p, nShards = 8)
-    BandIndex.append(graft.pipeline.Dedup.docSketch(
-      (100L until 110L).map(i => (i, doc(i - 100L))).toDF("doc_id", "text")), p)
-    val probeSk = graft.pipeline.Dedup.docSketch(
-      Seq((9000L, doc(7)), (9001L, doc(4))).toDF("doc_id", "text")).persist()
-    val pb = graft.pipeline.Dedup.bandRows(probeSk, "doc_id")
-    val expectedCand = BandIndex.probeCandidates(spark, p, pb, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
-    val allIds = (0L until 30L) ++ (100L until 110L)
-    val expectedSk = BandIndex.sketchesForIds(spark, p, allIds)
-      .count()
-    assert(expectedCand.nonEmpty && expectedSk === 40L)
-    val preCand = BandIndex.probeCandidates(spark, p, pb, "doc_id")
-    val preSk = BandIndex.sketchesForIds(spark, p, allIds)
-    BandIndex.compact(spark, p)
-    assert(preCand.collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
-      === expectedCand)
-    // a doubled sketch row (segment read from both sides) would show here
-    assert(preSk.count() === expectedSk)
-    assert(BandIndex.probeCandidates(spark, p, pb, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
-      === expectedCand)
-    assert(BandIndex.sketchesForIds(spark, p, allIds).count() === expectedSk)
-    probeSk.unpersist()
+  private def crashTitle(name: String) = {
+    val t = "a crashed fold (standing marker) still recovers through the staged rewrite, exactly"
+    if (name == "gram") t else s"$name: $t"
   }
 
-  test("text: pre-fold searchAll executed post-compact keeps exact tf (no double count)") {
-    val p = tmp("foldatomic_text")
-    graft.pipeline.TextIndex.write(
-      (0L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text"), p, shards = 8)
-    graft.pipeline.TextIndex.write(
-      (100L until 110L).map(i => (i, doc(i))).toDF("doc_id", "text"), p,
-      mode = "append")
-    val terms = Seq("alpha", "bravo")
-    val expected = graft.pipeline.TextIndex.searchAll(spark, p, terms)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
-    assert(expected.size === 40) // every doc carries both terms once
-    val preFold = graft.pipeline.TextIndex.searchAll(spark, p, terms)
-    graft.pipeline.TextIndex.compact(spark, p)
-    // doubled postings would double total_tf — the values pin exactness
-    assert(preFold.collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
-      === expected)
-    assert(graft.pipeline.TextIndex.searchAll(spark, p, terms)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
-      === expected)
-    val fs = fsOf(p)
-    val deltaDir = new org.apache.hadoop.fs.Path(p,
-      graft.pipeline.TextIndex.DeltaDir)
-    assert(DeltaSegments.liveSegs(fs, deltaDir).isEmpty)
-    assert(graft.pipeline.TextIndex.deltaAdvisory(spark, p)._1 === 0L)
-  }
-
-  test("a crashed fold (standing marker) still recovers through the staged rewrite, exactly") {
-    val p = tmp("foldatomic_crash")
-    GramIndex.write(setsOf(
-      (0L until 20L).map(i => (i, doc(i))).toDF("doc_id", "text")), p,
-      nShards = 4)
-    GramIndex.append(setsOf(
-      Seq((200L, doc(3))).toDF("doc_id", "text")), p)
-    val batch = setsOf(Seq(
-      (9000L, doc(3).split(" ").dropRight(2).mkString(" ")))
-      .toDF("doc_id", "text")).persist()
-    val expected = GramIndex.probeContainment(spark, p, batch)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(expected === Set((9000L, 3L), (9000L, 200L)))
-    // simulate the crash: fold the segment rows into the base by hand
-    // (the additive append), leave the segment UNMARKED and the marker up
-    val nShards = 4
-    val fs = fsOf(p)
-    val d = spark.read.parquet(
-      DeltaSegments.liveSegs(fs, new org.apache.hadoop.fs.Path(p, "delta"))
-        .map(s => s"$s/postings"): _*)
-    d.withColumn("shard", pmod(hash(col("x")), lit(nShards)))
-      .repartition(col("shard")).sortWithinPartitions("x", "doc_id")
-      .write.mode("append").partitionBy("shard").parquet(s"$p/postings")
-    fs.create(new org.apache.hadoop.fs.Path(p, GramIndex.FoldingMarker), true).close()
-    // probes refuse the crashed state loudly
-    intercept[IllegalArgumentException] {
-      GramIndex.probeContainment(spark, p, batch)
+  for (name <- Names) test(crashTitle(name)) {
+    val ix = IndexLifecycle(spark, name)
+    val p = tmp(s"foldatomic_crash_$name")
+    ix.write(docs(0L until 20L), p, 4)
+    ix.append(Seq((200L, doc(7))), p)
+    val expected = answer(ix.probe(p))
+    assert(expected.exists(_.contains("200")), s"delta doc not probed: $expected")
+    plantCrashedFold(spark, ix, p)
+    val marker = ix.layout.foldingMarker
+    // probes AND appends refuse the half-folded state loudly
+    val e = intercept[IllegalArgumentException] { ix.probe(p) }
+    assert(e.getMessage.contains(marker))
+    val e2 = intercept[IllegalArgumentException] {
+      ix.append(Seq((300L, doc(9))), p)
     }
-    // recovery dedups the both-sides rows through the staged rewrite
-    GramIndex.compact(spark, p)
-    val got = GramIndex.probeContainment(spark, p, batch)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === expected)
-    batch.unpersist()
+    assert(e2.getMessage.contains(marker))
+    // recovery: compact routes through the staged rewrite, dedups the
+    // two-sided rows, clears marker + delta — answers exactly clean
+    ix.compact(p)
+    val fs = fsOf(spark, p)
+    assert(!fs.exists(new Path(p, marker)))
+    assert(!fs.exists(new Path(p, ix.layout.deltaDir)))
+    assert(ix.storedShards(p).contains(4))
+    assert(answer(ix.probe(p)) === expected)
   }
 }

@@ -277,6 +277,48 @@ class GramIndexSpec extends SparkSuite {
     assert(GramIndex.storedShards(spark, p).nonEmpty)
   }
 
+  test("candidates past maxPrefixCollect are never broadcast, even when the prefix is under it") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val p = tmp("gramidx_candcap")
+    GramIndex.write(setsOf((0L until 40L).map(i => (i, doc(i))).toDF("doc_id", "text")), p)
+    // one truncated doc: 8 set rows, under the cap of 20, so the prefix
+    // is collected; but its 3-row prefix takes one shingle every corpus
+    // doc shares, so the candidate bound is 1 + 1 + 40 = 42 > 20
+    val batch = Seq((9000L, doc(7).split(" ").dropRight(2).mkString(" ")))
+      .toDF("doc_id", "text")
+    val want = probe(p, batch)
+    assert(want.get((9000L, 7L)).contains(1.0))
+    def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    // Spark's own size-based broadcast is off, so any BroadcastExchange
+    // left in the plan comes from the probe's explicit hints
+    spark.conf.set(GramIndex.MaxPrefixCollectKey, "20")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val out = GramIndex.probeContainment(spark, p, setsOf(batch))
+      val got = out.collect()
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      assert(got === want)
+      val all = nodes(out.queryExecution.executedPlan)
+      // the candidate set is localCheckpoint()ed past the cap: its scan
+      // is the plan's only RDD scan, and no broadcast may sit over it
+      assert(all.exists(_.isInstanceOf[RDDScanExec]), "candidates were not checkpointed")
+      val candBroadcasts = all.collect { case b: BroadcastExchangeExec => b }
+        .filter(b => nodes(b).exists(_.isInstanceOf[RDDScanExec]))
+      assert(candBroadcasts.isEmpty,
+        s"candidate side broadcast past the cap:\n${candBroadcasts.mkString("\n")}")
+    } finally {
+      spark.conf.unset(GramIndex.MaxPrefixCollectKey)
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
   test("malformed maxPrefixCollect conf fails loudly with the key name") {
     import spark.implicits._
     val p = tmp("gramidx_badconf")
@@ -309,56 +351,6 @@ class GramIndexSpec extends SparkSuite {
     fs.create(new org.apache.hadoop.fs.Path(p, GramIndex.ReshardMarker), true).close()
     intercept[IllegalArgumentException] { probe(p, batch) }
     fs.delete(new org.apache.hadoop.fs.Path(p, GramIndex.ReshardMarker), false)
-  }
-
-  test("reshard crash mid-PARK and mid-SWAP both resume to the identical probe answer") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    val corpus = (0L until 25L).map(i => (i, doc(i))).toDF("doc_id", "text")
-    val batch = Seq((9000L, doc(11).split(" ").dropRight(2).mkString(" ")))
-      .toDF("doc_id", "text")
-    def freshAt(shards: Int): String = {
-      val p = tmp("gramidx_crash")
-      GramIndex.write(setsOf(corpus), p, nShards = shards)
-      p
-    }
-    // mid-PARK: staged generation + marker up, one layout already
-    // parked, no _DONE — a resume must finish the park and swap
-    val p1 = freshAt(8)
-    val want = probe(p1, batch)
-    val root1 = new Path(p1)
-    val fs = root1.getFileSystem(spark.sessionState.newHadoopConf())
-    // plant the crash: stage the 32-shard generation the way reshard's
-    // stage callback does (same three-layout writer + meta), marker up,
-    // postings parked, no _DONE
-    val sets1 = spark.read.parquet(s"$p1/postings").select("doc_id", "x")
-    GramIndex.write(sets1, s"$p1/.reshard_new", nShards = 32)
-    val m = fs.create(new Path(root1, GramIndex.ReshardMarker), true)
-    try m.writeUTF("shards=32") finally m.close()
-    fs.mkdirs(new Path(root1, ".reshard_old"))
-    assert(fs.rename(new Path(root1, "postings"),
-      new Path(root1, ".reshard_old/postings")))
-    GramIndex.reshard(spark, p1, 32) // resume
-    assert(GramIndex.storedShards(spark, p1).contains(32))
-    assert(probe(p1, batch) === want)
-    assert(!fs.exists(new Path(root1, GramIndex.ReshardMarker)))
-    // mid-SWAP: _DONE present, one staged layout already swapped in
-    val p2 = freshAt(8)
-    val root2 = new Path(p2)
-    GramIndex.write(spark.read.parquet(s"$p2/postings").select("doc_id", "x"),
-      s"$p2/.reshard_new", nShards = 32)
-    val m2 = fs.create(new Path(root2, GramIndex.ReshardMarker), true)
-    try m2.writeUTF("shards=32") finally m2.close()
-    fs.mkdirs(new Path(root2, ".reshard_old"))
-    Seq("postings", "dfs", "profiles", GramIndex.MetaFile).foreach { n =>
-      assert(fs.rename(new Path(root2, n), new Path(root2, s".reshard_old/$n")))
-    }
-    fs.create(new Path(root2, ".reshard_old/_DONE"), true).close()
-    assert(fs.rename(new Path(root2, ".reshard_new/profiles"),
-      new Path(root2, "profiles")))
-    GramIndex.reshard(spark, p2, 32) // resume
-    assert(GramIndex.storedShards(spark, p2).contains(32))
-    assert(probe(p2, batch) === want)
   }
 
   test("deltaAdvisory reports unfolded segments; needsCompaction keys on them") {
@@ -438,41 +430,6 @@ class GramIndexSpec extends SparkSuite {
     GramIndex.compact(spark, p) // next maintenance op: debris reclaimed
     assert(!new java.io.File(s"$p/delta").exists(), "folded debris survived reclaim")
     assert(probe(p, batch) === preFold)
-  }
-
-  test("a crashed delta fold refuses probes and recovers to exact answers") {
-    import spark.implicits._
-    val p = tmp("gramidx_foldcrash")
-    val gen1 = (0L until 25L).map(i => (i, doc(i))).toDF("doc_id", "text")
-    GramIndex.write(setsOf(gen1), p)
-    val gen2 = (25L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text")
-    GramIndex.append(setsOf(gen2), p)
-    val batch = Seq(
-      (9000L, doc(27).split(" ").dropRight(2).mkString(" ")))
-      .toDF("doc_id", "text")
-    val clean = probe(p, batch)
-    assert(clean.get((9000L, 27L)).contains(1.0))
-    // plant the crash: fold the postings layer into the base (as a
-    // dying compact would) but leave the delta AND the marker standing
-    // — segment rows now sit on BOTH sides
-    val nShards = GramIndex.storedShards(spark, p).get
-    setsOf(gen2).groupBy("doc_id")
-      .agg(count(lit(1)).as("n"))
-      .join(setsOf(gen2), "doc_id").select("x", "doc_id", "n")
-      .withColumn("shard", GramIndex.shardOf(col("x"), nShards))
-      .repartition(col("shard"))
-      .write.mode("append").partitionBy("shard").parquet(s"$p/postings")
-    val marker = new java.io.File(s"$p/${GramIndex.FoldingMarker}")
-    assert(marker.createNewFile())
-    // probes refuse the half-folded state loudly…
-    val e = intercept[IllegalArgumentException] { probe(p, batch) }
-    assert(e.getMessage.contains(GramIndex.FoldingMarker))
-    // …and re-running compact recovers through the staged full rewrite:
-    // marker cleared, delta folded+deduped, answers exactly the clean ones
-    GramIndex.compact(spark, p)
-    assert(!marker.exists())
-    assert(!new java.io.File(s"$p/delta").exists())
-    assert(probe(p, batch) === clean)
   }
 
   test("write(overwrite) clears unfolded delta segments of the replaced generation") {

@@ -1,30 +1,18 @@
 package graft.store
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 /** Retry-once-with-fresh-manifest (ProbeRetry): a probe CONSTRUCTED
   * before a MAJOR compact (tombstone fold — SaltedStore.compact's
   * per-shard swap MOVES base files) and EXECUTED after it returns
   * exact results through [[ProbeRetry.retryOnce]] instead of the raw
   * task-level FileNotFoundException the pinned file set would
-  * otherwise die on — on gram, band AND text. Together with the
-  * probe-atomic delta fold (FoldAtomicSpec) this makes the ENTIRE
-  * maintenance surface probe-atomic for callers that hold the probe
-  * construction. */
+  * otherwise die on — on every index of [[IndexLifecycle]]'s table.
+  * Together with the probe-atomic delta fold (FoldAtomicSpec) this
+  * makes the ENTIRE maintenance surface probe-atomic for callers that
+  * hold the probe construction. */
 class ProbeRetrySpec extends SparkSuite {
-  import spark.implicits._
-
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString + "/idx"
-
-  private def doc(i: Long) =
-    s"alpha bravo charlie delta echo token$i foxtrot golf hotel india$i"
-
-  private def setsOf(df: org.apache.spark.sql.DataFrame) =
-    graft.pipeline.TextAnalysis.shingleRows(df)
-      .withColumn("x", graft.pipeline.Dedup.baseHash32(col("s")))
-      .select("doc_id", "x").distinct()
+  import IndexLifecycle._
 
   test("isStaleFileError: walks wrapped cause chains and stringified messages; rejects others") {
     val fnf = new java.io.FileNotFoundException("/gone/part-0.parquet")
@@ -39,84 +27,32 @@ class ProbeRetrySpec extends SparkSuite {
     assert(!ProbeRetry.isStaleFileError(loop))
   }
 
-  test("gram: probe constructed pre-MAJOR-compact executes post-compact via retryOnce, exactly") {
-    val p = tmp("proberetry_gram")
-    GramIndex.write(setsOf(
-      (0L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text")), p,
-      nShards = 4)
-    val batch = setsOf(Seq(
-      (9000L, doc(7).split(" ").dropRight(2).mkString(" ")))
-      .toDF("doc_id", "text")).persist()
+  private def title(name: String) =
+    s"$name: ${if (name == "text") "search" else "probe"} constructed " +
+      "pre-MAJOR-compact executes post-compact via retryOnce, exactly"
+
+  for (name <- Names) test(title(name)) {
+    val ix = IndexLifecycle(spark, name)
+    val p = tmp(s"proberetry_$name")
+    ix.write(docs(0L until 30L), p, 4)
     // the post-delete truth: doc 5 gone from the index
-    GramIndex.delete(spark, p, Seq(5L))
-    def collectProbe(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toList.sorted
-    val expected = collectProbe(GramIndex.probeContainment(spark, p, batch))
+    ix.delete(Seq(5L), p)
+    val expected = answer(ix.probe(p))
     assert(expected.nonEmpty)
     // construct BEFORE the major compact, execute after — the raw frame
     // dies on its pinned paths (proving the hazard), the retryOnce
     // execution reconstructs and returns the exact post-compact truth
-    val stale = GramIndex.probeContainment(spark, p, batch)
-    GramIndex.compact(spark, p) // tombstones present → per-shard swap
+    val stale = ix.probe(p)
+    ix.compact(p) // tombstones present → per-shard swap
     val raw = intercept[Throwable] { stale.collect() }
-    assert(ProbeRetry.isStaleFileError(raw),
-      s"expected a stale-file failure, got: $raw")
+    assert(ProbeRetry.isStaleFileError(raw), s"expected a stale-file failure, got: $raw")
     var constructions = 0
     val got = ProbeRetry.retryOnce {
       constructions += 1
       if (constructions == 1) stale // first attempt: the pinned pre-compact probe
-      else GramIndex.probeContainment(spark, p, batch)
-    }(collectProbe)
+      else ix.probe(p)
+    }(answer)
     assert(constructions === 2, "the retry must reconstruct the probe")
     assert(got === expected)
-    batch.unpersist()
-  }
-
-  test("band: probe constructed pre-MAJOR-compact executes post-compact via retryOnce, exactly") {
-    val p = tmp("proberetry_band")
-    val sk = graft.pipeline.Dedup.docSketch(
-      (0L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text"))
-    BandIndex.write(sk, p, nShards = 4)
-    val probeSk = graft.pipeline.Dedup.docSketch(Seq(
-      (9000L, doc(7))).toDF("doc_id", "text")).persist()
-    val bands = graft.pipeline.Dedup.bandRows(probeSk, "doc_id")
-    BandIndex.delete(spark, p, Seq(3L))
-    def run(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
-    val expected = run(BandIndex.probeCandidates(spark, p, bands, "doc_id"))
-    assert(expected.nonEmpty)
-    val stale = BandIndex.probeCandidates(spark, p, bands, "doc_id")
-    BandIndex.compact(spark, p)
-    val got = ProbeRetry.retryOnce {
-      BandIndex.probeCandidates(spark, p, bands, "doc_id")
-    }(run)
-    assert(got === expected)
-    // and the stale frame itself still fails loudly without the wrapper
-    val raw = intercept[Throwable] { stale.collect() }
-    assert(ProbeRetry.isStaleFileError(raw))
-    probeSk.unpersist()
-  }
-
-  test("text: search constructed pre-MAJOR-compact executes post-compact via retryOnce, exactly") {
-    val p = tmp("proberetry_text")
-    graft.pipeline.TextIndex.write(
-      (0L until 30L).map(i => (i, doc(i))).toDF("doc_id", "text"), p,
-      shards = 4)
-    graft.pipeline.TextIndex.delete(spark, p, Seq(2L))
-    def run(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.getLong(0)).toList.sorted
-    val expected = run(
-      graft.pipeline.TextIndex.searchAll(spark, p, Seq("alpha", "token7")))
-    assert(expected.nonEmpty)
-    val stale = graft.pipeline.TextIndex.searchAll(spark, p, Seq("alpha", "token7"))
-    graft.pipeline.TextIndex.compact(spark, p)
-    val got = ProbeRetry.retryOnce {
-      graft.pipeline.TextIndex.searchAll(spark, p, Seq("alpha", "token7"))
-    }(run)
-    assert(got === expected)
-    val raw = intercept[Throwable] { stale.collect() }
-    assert(ProbeRetry.isStaleFileError(raw),
-      s"expected a stale-file failure, got: $raw")
   }
 }

@@ -1,108 +1,116 @@
 package graft.store
 
 import graft.SparkSuite
-import graft.pipeline.{Dedup, TextIndex}
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Shard-count migrations (TextIndex.reshard / BandIndex.reshard) on the
-  * shared StagedSwap protocol: probe results invariant across the
-  * migration, tombstones folded, probes refuse mid-migration layouts,
-  * mismatched resumes refused. (Crash-phase resume of the protocol
-  * itself is pinned by ResaltSpec and VectorReclusterSpec — one shared
-  * implementation, tested once per phase.) */
+/** Shard-count migrations ([[ShardedLayout.reshard]] on the shared
+  * StagedSwap protocol), run over [[IndexLifecycle]]'s table: probe
+  * answers invariant across the migration, tombstones folded, probes
+  * refuse mid-migration layouts, mismatched resumes refused, and a
+  * migration crashed mid-PARK or mid-SWAP resumes to the same answer. */
 class ReshardSpec extends SparkSuite {
-  import spark.implicits._
+  import IndexLifecycle._
 
-  private def tmp(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString + "/idx"
-
-  private def fsOf(dir: String) = {
-    val root = new Path(dir)
-    (root.getFileSystem(spark.sessionState.newHadoopConf()), root)
+  private def plantMarker(fs: FileSystem, p: String, to: Int): Unit = {
+    val m = fs.create(new Path(p, ShardedLayout.ReshardMarker), true)
+    try m.writeUTF(s"shards=$to") finally m.close()
   }
 
-  // --- text index -----------------------------------------------------
+  private val identicalTitle = Map(
+    "gram" -> ("gram reshard 8 -> 32: probe answers identical, meta updated", 8, 32),
+    "band" -> ("band reshard 64 -> 17: probe candidates identical, meta updated", 64, 17),
+    "text" -> ("text reshard 4 -> 9: search results identical, manifest updated", 4, 9))
 
-  private def docs = Seq(
-    (1L, "the cat sat on the mat"),
-    (2L, "the dog chased the cat"),
-    (3L, "a bird sang a song of spring"),
-    (4L, "cat and dog and bird together"),
-    (5L, "entirely unrelated words here")).toDF("doc_id", "text")
-
-  private def ranked(dir: String) =
-    TextIndex.searchRanked(spark, dir, Seq("cat", "dog"))
-      .collect().map(_.toString).toSeq
-
-  test("text reshard 4 -> 9: search results identical, manifest updated") {
-    val dir = tmp("treshard")
-    TextIndex.write(docs, dir, shards = 4)
-    val before = ranked(dir)
-    TextIndex.reshard(spark, dir, 9)
-    assert(TextIndex.storedShards(spark, dir).contains(9))
-    assert(ranked(dir) === before)
+  for (name <- Names) {
+    val (title, from, to) = identicalTitle(name)
+    test(title) {
+      val ix = IndexLifecycle(spark, name)
+      val p = tmp(s"reshard_$name")
+      ix.write(docs(0L until 40L), p, from)
+      val before = answer(ix.probe(p))
+      assert(before.nonEmpty)
+      ix.reshard(p, to)
+      assert(ix.storedShards(p).contains(to))
+      assert(answer(ix.probe(p)) === before)
+    }
   }
 
-  test("text reshard folds pending tombstones; new generation starts clean") {
-    val dir = tmp("treshard_del")
-    TextIndex.write(docs, dir, shards = 4)
-    TextIndex.delete(spark, dir, Seq(2L))
-    TextIndex.reshard(spark, dir, 7)
-    assert(!TextIndex.hasPendingDeletes(spark, dir))
-    val hits = TextIndex.searchAll(spark, dir, Seq("dog"))
-      .select("doc_id").as[Long].collect().toSet
-    assert(hits === Set(4L)) // doc 2 physically gone
-  }
+  private def tombTitle(name: String) =
+    if (name == "text") "text reshard folds pending tombstones; new generation starts clean"
+    else s"$name reshard folds tombstones; probes refuse mid-migration"
 
-  test("text probes refuse a standing reshard marker; mismatched resume refused") {
-    val dir = tmp("treshard_guard")
-    TextIndex.write(docs, dir, shards = 4)
-    val (fs, root) = fsOf(dir)
-    val m = fs.create(new Path(root, TextIndex.ReshardMarker), true)
-    try m.writeUTF("shards=9") finally m.close()
-    val e = intercept[IllegalArgumentException](ranked(dir))
-    assert(e.getMessage.contains("in-flight shard migration"))
-    val e2 = intercept[IllegalArgumentException](TextIndex.reshard(spark, dir, 5))
-    assert(e2.getMessage.contains("in-flight migration targets shard count"))
-  }
-
-  // --- band index -----------------------------------------------------
-
-  private def bdoc(i: Long) =
-    s"alpha bravo charlie delta echo token$i foxtrot golf hotel india$i"
-
-  test("band reshard 64 -> 17: probe candidates identical, meta updated") {
-    val corpus = (0L until 40L).map(i => (i, bdoc(i))).toDF("doc_id", "text")
-    val batch = (0L until 5L).map(i => (1000L + i, bdoc(i))).toDF("doc_id", "text")
-    val dir = tmp("breshard")
-    BandIndex.write(Dedup.docSketch(corpus), dir)
-    val probeBands = Dedup.bandRows(Dedup.docSketch(batch), "doc_id")
-    val before = BandIndex.probeCandidates(spark, dir, probeBands, "doc_id")
-      .as[(Long, Long)].collect().toSet
-    BandIndex.reshard(spark, dir, 17)
-    assert(BandIndex.storedShards(spark, dir).contains(17))
-    val after = BandIndex.probeCandidates(spark, dir, probeBands, "doc_id")
-      .as[(Long, Long)].collect().toSet
-    assert(after === before)
-    // sketches co-migrated: every corpus doc's verification set survives
-    assert(BandIndex.sketches(spark, dir).count() === 40L)
-  }
-
-  test("band reshard folds tombstones; probes refuse mid-migration") {
-    val corpus = (0L until 30L).map(i => (i, bdoc(i))).toDF("doc_id", "text")
-    val dir = tmp("breshard_del")
-    BandIndex.write(Dedup.docSketch(corpus), dir)
-    BandIndex.delete(spark, dir, Seq(3L))
-    BandIndex.reshard(spark, dir, 11)
-    assert(BandIndex.sketches(spark, dir)
-      .filter(col("doc_id") === 3L).isEmpty)
-    val (fs, root) = fsOf(dir)
-    assert(!fs.exists(new Path(root, "_deletes")))
-    val m = fs.create(new Path(root, BandIndex.ReshardMarker), true)
-    try m.writeUTF("shards=11") finally m.close()
-    val e = intercept[IllegalArgumentException](
-      BandIndex.storedShards(spark, dir))
+  for (name <- Names) test(tombTitle(name)) {
+    val ix = IndexLifecycle(spark, name)
+    val p = tmp(s"reshard_del_$name")
+    ix.write(docs(0L until 30L), p, 4)
+    ix.delete(Seq(7L), p)
+    val expected = answer(ix.probe(p))
+    ix.reshard(p, 7)
+    val fs = fsOf(spark, p)
+    assert(!fs.exists(new Path(p, ShardedLayout.DeletesDir)), "tombstones must fold in")
+    assert(answer(ix.probe(p)) === expected) // doc 7 physically gone
+    plantMarker(fs, p, 11)
+    val e = intercept[IllegalArgumentException](ix.probe(p))
     assert(e.getMessage.contains("in-flight shard migration"))
   }
+
+  for (name <- Names)
+    test(s"$name probes refuse a standing reshard marker; mismatched resume refused") {
+      val ix = IndexLifecycle(spark, name)
+      val p = tmp(s"reshard_guard_$name")
+      ix.write(docs(0L until 10L), p, 4)
+      plantMarker(fsOf(spark, p), p, 9)
+      val e = intercept[IllegalArgumentException](ix.probe(p))
+      assert(e.getMessage.contains("in-flight shard migration"))
+      val e2 = intercept[IllegalArgumentException](ix.reshard(p, 5))
+      assert(e2.getMessage.contains("in-flight migration targets shard count"))
+    }
+
+  for (name <- Names)
+    test(s"$name reshard crash mid-PARK and mid-SWAP both resume to the identical answer") {
+      val ix = IndexLifecycle(spark, name)
+      val corpus = docs(0L until 25L)
+      val to = 32
+      // the generation a reshard stages: the same docs written at the
+      // new count into the staging dir, marker up
+      def staged(): (String, FileSystem) = {
+        val p = tmp(s"reshard_crash_$name")
+        ix.write(corpus, p, 8)
+        ix.write(corpus, s"$p/.reshard_new", to)
+        val fs = fsOf(spark, p)
+        plantMarker(fs, p, to)
+        fs.mkdirs(new Path(p, ".reshard_old"))
+        (p, fs)
+      }
+      def children(fs: FileSystem, dir: String) = fs.listStatus(new Path(dir))
+        .map(_.getPath.getName).filterNot(n => n.startsWith(".") ||
+          n == ShardedLayout.ReshardMarker).sorted.toSeq
+      def dataChild(fs: FileSystem, dir: String) =
+        children(fs, dir).filterNot(_.startsWith("_")).head
+      val want = {
+        val p = tmp(s"reshard_want_$name")
+        ix.write(corpus, p, 8)
+        answer(ix.probe(p))
+      }
+      // mid-PARK: one old-generation child parked, no _DONE — a resume
+      // must finish the park and swap
+      val (p1, fs) = staged()
+      val first = dataChild(fs, p1)
+      assert(fs.rename(new Path(p1, first), new Path(p1, s".reshard_old/$first")))
+      ix.reshard(p1, to)
+      assert(ix.storedShards(p1).contains(to))
+      assert(answer(ix.probe(p1)) === want)
+      assert(!fs.exists(new Path(p1, ShardedLayout.ReshardMarker)))
+      // mid-SWAP: the whole old generation parked with _DONE, one staged
+      // child already swapped in
+      val (p2, _) = staged()
+      children(fs, p2).foreach(n =>
+        assert(fs.rename(new Path(p2, n), new Path(p2, s".reshard_old/$n"))))
+      fs.create(new Path(p2, ".reshard_old/_DONE"), true).close()
+      val moved = dataChild(fs, s"$p2/.reshard_new")
+      assert(fs.rename(new Path(p2, s".reshard_new/$moved"), new Path(p2, moved)))
+      ix.reshard(p2, to)
+      assert(ix.storedShards(p2).contains(to))
+      assert(answer(ix.probe(p2)) === want)
+    }
 }

@@ -15,6 +15,7 @@ MAX_RATIO=${MAX_RATIO:-2.0}
 MAX_POLLS=${MAX_POLLS:-20}
 POLL_SLEEP=${POLL_SLEEP:-30}
 cd "$(dirname "$0")/.."
+failed=0
 for i in $(seq 1 "$RUNS"); do
   echo "[gate] run $i: scouting for a clean window (mem_ratio < $MAX_RATIO)"
   clean=0
@@ -27,9 +28,21 @@ for i in $(seq 1 "$RUNS"); do
     sleep "$POLL_SLEEP"
   done
   [ "$clean" = "1" ] || echo "[gate] run $i: NO clean window after $MAX_POLLS polls — launching anyway (see gate log)"
+  # a failed run must not leave the previous run's bench.json to be
+  # recorded as its own
+  rm -f target/bench.json
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
     tools/run_main.sh graft.Bench > "/tmp/bench_r${ROUND}_run$i.log" 2>&1
   rc=$?
-  cp target/bench.json "BENCH_LOCAL_r${ROUND}_run$i.json"
-  echo "[gate] run $i: rc=$rc -> BENCH_LOCAL_r${ROUND}_run$i.json"
+  if [ "$rc" = "0" ] && [ -f target/bench.json ]; then
+    cp target/bench.json "BENCH_LOCAL_r${ROUND}_run$i.json"
+    echo "[gate] run $i: rc=$rc -> BENCH_LOCAL_r${ROUND}_run$i.json"
+  else
+    failed=$((failed + 1))
+    echo "[gate] run $i: FAILED rc=$rc — nothing recorded (log: /tmp/bench_r${ROUND}_run$i.log)"
+  fi
 done
+if [ "$failed" != "0" ]; then
+  echo "[gate] $failed of $RUNS runs failed"
+  exit 1
+fi
