@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.store.{ShardedLayer, ShardedLayout}
+import graft.store.{SaltedStore, ShardedLayer, ShardedLayout}
 
 /** [EXT] Persisted inverted text index — the reference's salted bucketed
   * store applied to term lookup, the third instance of the same layout
@@ -288,7 +288,7 @@ object TextIndex {
     * the (docs, tokens) totals are recounted from the surviving
     * postings, the one moment they can be made exact again. */
   def compact(spark: SparkSession, path: String,
-              targetBytes: Long = ShardedLayout.TargetBytes,
+              targetBytes: Long = SaltedStore.DefaultTargetBytes,
               maxFilesPerShard: Int = 4): Unit =
     layout.compact(spark, path, targetBytes, maxFilesPerShard)
 
@@ -301,13 +301,13 @@ object TextIndex {
     * `maxDeltaSegments` — the call a periodic maintenance loop makes.
     * Returns whether a compaction ran. */
   def compactIfNeeded(spark: SparkSession, path: String,
-                      targetBytes: Long = ShardedLayout.TargetBytes,
+                      targetBytes: Long = SaltedStore.DefaultTargetBytes,
                       maxFilesPerShard: Int = 4,
                       maxDeltaSegments: Int = 8): Boolean = {
     val need = hasPendingDeletes(spark, path) ||
       graft.store.FileManifest.maxFilesPerPartition(spark, path)
         .map(_ > maxFilesPerShard)
-        .getOrElse(graft.store.SaltedStore.needsCompaction(
+        .getOrElse(SaltedStore.needsCompaction(
           spark, path, maxFilesPerShard, partitionPrefix = "shard")) ||
       // appends land as delta segments, so the per-shard file count no
       // longer grows between compactions — the accumulation signal
@@ -355,9 +355,9 @@ object TextIndex {
       compact(spark, destPath)
     if (hasPendingDeletes(spark, srcPath) || hasDeltaSegments(spark, srcPath))
       compact(spark, srcPath)
-    val src = graft.store.SaltedStore.read(spark, srcPath, partitionPrefix = "shard")
+    val src = SaltedStore.read(spark, srcPath, partitionPrefix = "shard")
     if (checkDisjoint) {
-      val dest = graft.store.SaltedStore.read(spark, destPath, partitionPrefix = "shard")
+      val dest = SaltedStore.read(spark, destPath, partitionPrefix = "shard")
       val overlap = src.select("doc_id").distinct()
         .join(dest.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
       if (!overlap.isEmpty) throw new IllegalStateException(

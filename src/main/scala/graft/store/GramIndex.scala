@@ -317,7 +317,7 @@ object GramIndex {
 
   def compact(spark: SparkSession, path: String,
               maxFilesPerShard: Int = 4): Unit =
-    layout.compact(spark, path, ShardedLayout.TargetBytes, maxFilesPerShard)
+    layout.compact(spark, path, SaltedStore.DefaultTargetBytes, maxFilesPerShard)
 
   def reshard(spark: SparkSession, path: String, newShards: Int): Unit =
     layout.reshard(spark, path, newShards)

@@ -70,6 +70,9 @@ object SaltedStore {
     * Underscore-prefixed, so Spark's file listing never reads it as data. */
   val CompactingMarker = "_graft_compacting"
 
+  /** Default target file size of a [[compact]] rewrite. */
+  val DefaultTargetBytes: Long = 128L * 1024 * 1024
+
   /** Read a salted bucketed table back. The `bucket` partition column
     * comes back as a partition-pruning-capable column. For schemaless
     * formats (csv) pass the schema via `schemaDDL` to avoid inference.
@@ -425,13 +428,13 @@ object SaltedStore {
     * schema-less read cannot infer parquet schema — read with an
     * explicit schemaDDL, or treat full expiry as store deletion. */
   def compactRetain(spark: SparkSession, path: String, keyCol: Column,
-                    keep: Column, targetBytes: Long = 128L * 1024 * 1024,
+                    keep: Column, targetBytes: Long = DefaultTargetBytes,
                     partitionPrefix: String = "bucket"): Unit =
     compact(spark, path, keyCol, targetBytes, partitionPrefix,
       transform = _.filter(keep))
 
   def compact(spark: SparkSession, path: String, keyCol: Column,
-              targetBytes: Long = 128L * 1024 * 1024,
+              targetBytes: Long = DefaultTargetBytes,
               partitionPrefix: String = "bucket",
               transform: DataFrame => DataFrame = identity): Unit = {
     import org.apache.hadoop.fs.Path

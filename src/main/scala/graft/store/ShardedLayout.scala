@@ -15,8 +15,6 @@ object ShardedLayout {
   /** Tombstone dir: parquet doc_id lists, underscore-prefixed so no
     * layer read picks them up as data. */
   val DeletesDir = "_deletes"
-  /** Target file size of the major compaction's per-shard rewrite. */
-  val TargetBytes: Long = 128L * 1024 * 1024
 }
 
 /** The LIFECYCLE PROTOCOL of a persisted sharded index, written once for

@@ -28,14 +28,23 @@ class FoldAtomicSpec extends SparkSuite {
     // expected = the pre-compact truth (a fold must not change results,
     // and any double count would emit duplicate rows)
     val expected = answer(ix.probe(p))
+    val audit = answer(ix.audit(p))
     assert(expected.nonEmpty && expected.size === expected.distinct.size)
     assert(expected.exists(_.contains("107")), s"delta doc not probed: $expected")
+    assert(audit.size === audit.distinct.size && auditIds(ix.audit(p)).contains(107L))
+    // band sketches and text scores cover every base and delta doc
+    val allIds = ((0L until 30L) ++ (100L until 110L)).toSet
+    if (name != "gram") assert(auditIds(ix.audit(p)) === allIds)
     // CONSTRUCTED before compact (eager stages run now; the lazy rest
     // pins the pre-fold manifest file set + the segment paths),
     // EXECUTED after
     val preFold = ix.probe(p)
+    val preFoldAudit = ix.audit(p)
     ix.compact(p)
     assert(answer(preFold) === expected, "pre-fold probe diverged after the fold")
+    // a doubled sketch or posting row (segment read from both sides)
+    // would show here
+    assert(answer(preFoldAudit) === audit, "pre-fold audit diverged after the fold")
     // the folded segment is marked, not deleted; no live segs remain
     val deltaDir = new Path(p, ix.layout.deltaDir)
     val fs = fsOf(spark, p)
@@ -45,10 +54,19 @@ class FoldAtomicSpec extends SparkSuite {
     assert(ix.layout.deltaAdvisory(spark, p)._1 === 0L)
     // a probe constructed POST-fold sees exactly the new state = same rows
     assert(answer(ix.probe(p)) === expected)
-    // the NEXT maintenance op reclaims the folded debris
+    assert(answer(ix.audit(p)) === audit)
+    // the NEXT maintenance op reclaims the folded debris; a tombstone on
+    // a folded delta doc makes it a major compact that strips the doc
+    ix.delete(Seq(107L), p)
+    val probeAfterDelete = answer(ix.probe(p))
+    val afterDelete = answer(ix.audit(p))
+    assert(!auditIds(ix.audit(p)).contains(107L))
     ix.compact(p)
     assert(!fs.exists(deltaDir) || DeltaSegments.foldedNames(fs, deltaDir).isEmpty)
-    assert(answer(ix.probe(p)) === expected)
+    assert(!fs.exists(new Path(p, ShardedLayout.DeletesDir)), "tombstones must fold in")
+    assert(answer(ix.probe(p)) === probeAfterDelete)
+    assert(answer(ix.audit(p)) === afterDelete)
+    assert(!auditIds(ix.audit(p)).contains(107L))
   }
 
   private def crashTitle(name: String) = {
@@ -62,6 +80,7 @@ class FoldAtomicSpec extends SparkSuite {
     ix.write(docs(0L until 20L), p, 4)
     ix.append(Seq((200L, doc(7))), p)
     val expected = answer(ix.probe(p))
+    val audit = answer(ix.audit(p))
     assert(expected.exists(_.contains("200")), s"delta doc not probed: $expected")
     plantCrashedFold(spark, ix, p)
     val marker = ix.layout.foldingMarker
@@ -80,5 +99,6 @@ class FoldAtomicSpec extends SparkSuite {
     assert(!fs.exists(new Path(p, ix.layout.deltaDir)))
     assert(ix.storedShards(p).contains(4))
     assert(answer(ix.probe(p)) === expected)
+    assert(answer(ix.audit(p)) === audit)
   }
 }

@@ -9,7 +9,11 @@ import org.apache.spark.sql.functions._
   * Docs are (doc_id, text) pairs; `probe` CONSTRUCTS the index's probe
   * for a fixed batch that matches every doc carrying the text of doc 7
   * or doc 4 ([[IndexLifecycle.doc]]) — the text index's probe matches
-  * every doc — and [[IndexLifecycle.answer]] executes it. */
+  * every doc — and [[IndexLifecycle.answer]] executes it. `audit` reads
+  * the index-specific state a lifecycle step must carry over, one row
+  * per live doc with its id in `doc_id`: gram's probe answer, band's
+  * per-doc verification sketches over the whole index, text's BM25
+  * scores (which depend on the manifest's doc and token totals). */
 final case class IndexUnderTest(
     name: String,
     layout: ShardedLayout,
@@ -19,7 +23,8 @@ final case class IndexUnderTest(
     compact: String => Unit,
     reshard: (String, Int) => Unit,
     storedShards: String => Option[Int],
-    probe: String => DataFrame)
+    probe: String => DataFrame,
+    audit: String => DataFrame)
 
 /** The table the lifecycle specs (FoldAtomicSpec, ConcurrentFoldSpec,
   * ProbeRetrySpec, ReshardSpec) run over: every crash and concurrency
@@ -39,6 +44,10 @@ object IndexLifecycle {
   def answer(df: DataFrame): List[String] =
     df.collect().map(_.toString).toList.sorted
 
+  /** The doc ids an audit frame holds. */
+  def auditIds(df: DataFrame): Set[Long] =
+    df.select("doc_id").collect().map(_.getLong(0)).toSet
+
   def fsOf(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -52,6 +61,7 @@ object IndexLifecycle {
       .withColumn("x", Dedup.baseHash32(col("s")))
       .select("doc_id", "x").distinct()
     val batch = Seq((9000L, doc(7)), (9001L, doc(4)))
+    def gramProbe(p: String) = GramIndex.probeContainment(spark, p, sets(batch))
     name match {
       case "gram" => IndexUnderTest(name, GramIndex.layout,
         (d, p, n) => GramIndex.write(sets(d), p, n),
@@ -60,7 +70,8 @@ object IndexLifecycle {
         p => GramIndex.compact(spark, p),
         (p, n) => GramIndex.reshard(spark, p, n),
         p => GramIndex.storedShards(spark, p),
-        p => GramIndex.probeContainment(spark, p, sets(batch)))
+        gramProbe,
+        p => gramProbe(p).select(col("b").as("doc_id"), col("a"), col("containment")))
       case "band" => IndexUnderTest(name, BandIndex.layout,
         (d, p, n) => BandIndex.write(Dedup.docSketch(frame(d)), p, n),
         (d, p) => BandIndex.append(Dedup.docSketch(frame(d)), p),
@@ -76,7 +87,8 @@ object IndexLifecycle {
           cand.join(BandIndex.sketchesFor(spark, p, cand.select("a"))
               .withColumnRenamed("doc_id", "a"), "a")
             .select(col("a"), col("b"), size(col("sh")))
-        })
+        },
+        p => BandIndex.sketches(spark, p))
       case "text" => IndexUnderTest(name, TextIndex.layout,
         (d, p, n) => TextIndex.write(frame(d), p, shards = n),
         (d, p) => TextIndex.write(frame(d), p, mode = "append"),
@@ -85,7 +97,9 @@ object IndexLifecycle {
         (p, n) => TextIndex.reshard(spark, p, n),
         p => TextIndex.storedShards(spark, p),
         // every doc carries both terms once: a doubled posting doubles tf
-        p => TextIndex.searchAll(spark, p, Seq("alpha", "bravo")))
+        p => TextIndex.searchAll(spark, p, Seq("alpha", "bravo")),
+        // b > 0: avgdl = tokens / docs enters every score
+        p => TextIndex.searchRanked(spark, p, Seq("alpha", "bravo"), b = 0.75))
     }
   }
 

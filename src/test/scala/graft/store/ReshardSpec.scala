@@ -28,10 +28,14 @@ class ReshardSpec extends SparkSuite {
       val p = tmp(s"reshard_$name")
       ix.write(docs(0L until 40L), p, from)
       val before = answer(ix.probe(p))
+      val audit = answer(ix.audit(p))
       assert(before.nonEmpty)
+      // band sketches and text scores cover every corpus doc
+      if (name != "gram") assert(auditIds(ix.audit(p)) === (0L until 40L).toSet)
       ix.reshard(p, to)
       assert(ix.storedShards(p).contains(to))
       assert(answer(ix.probe(p)) === before)
+      assert(answer(ix.audit(p)) === audit)
     }
   }
 
@@ -43,12 +47,23 @@ class ReshardSpec extends SparkSuite {
     val ix = IndexLifecycle(spark, name)
     val p = tmp(s"reshard_del_$name")
     ix.write(docs(0L until 30L), p, 4)
+    assert(auditIds(ix.audit(p)).contains(7L))
     ix.delete(Seq(7L), p)
     val expected = answer(ix.probe(p))
+    val audit = answer(ix.audit(p))
+    assert(!auditIds(ix.audit(p)).contains(7L))
     ix.reshard(p, 7)
     val fs = fsOf(spark, p)
     assert(!fs.exists(new Path(p, ShardedLayout.DeletesDir)), "tombstones must fold in")
-    assert(answer(ix.probe(p)) === expected) // doc 7 physically gone
+    // with the tombstones gone, doc 7 is absent only if physically gone;
+    // text scores agree only if the totals were recounted without it
+    assert(answer(ix.probe(p)) === expected)
+    assert(answer(ix.audit(p)) === audit)
+    assert(!auditIds(ix.audit(p)).contains(7L))
+    // and the migrated generation reads as one built from the survivors
+    val fresh = tmp(s"reshard_fresh_$name")
+    ix.write(docs((0L until 30L).filterNot(_ == 7L)), fresh, 7)
+    assert(answer(ix.audit(fresh)) === audit)
     plantMarker(fs, p, 11)
     val e = intercept[IllegalArgumentException](ix.probe(p))
     assert(e.getMessage.contains("in-flight shard migration"))
