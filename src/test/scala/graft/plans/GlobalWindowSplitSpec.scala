@@ -120,6 +120,33 @@ class GlobalWindowSplitSpec extends SparkSuite {
     assert(wp.length == 1 && wp.head.windowExpressions.length == 2)
   }
 
+  test("nth_value(x, 1) over a prefix frame plans as the running family, alone and beside rank()") {
+    // both the running family (a prefix nth_value(x, 1) IS a running
+    // first_value) and the nth-value family claim this expression; the
+    // running family is first in the family order and must keep it
+    tied.createOrReplaceTempView("gws_t4")
+    def isWindowExec(line: String) = line.trim.stripPrefix("+- ").startsWith("Window [")
+    for (over <- Seq("ORDER BY id", "PARTITION BY k ORDER BY id")) {
+      val alone = spark.sql(s"SELECT id, nth_value(v, 1) OVER ($over) AS f FROM gws_t4")
+      val pa = alone.queryExecution.executedPlan.toString
+      assert(pa.contains("GlobalRunningAgg ") && !pa.contains("GlobalNthValue ") &&
+        !pa.linesIterator.exists(isWindowExec), s"alone, OVER ($over):\n$pa")
+      // a def: the opt-out comparison below must plan afresh
+      def mixed = spark.sql(s"""SELECT id, nth_value(v, 1) OVER ($over) AS f,
+          rank() OVER ($over) AS r FROM gws_t4""")
+      val pm = mixed.queryExecution.executedPlan.toString
+      assert(pm.contains("GlobalRunningAgg ") && pm.contains("GlobalRowNumber ") &&
+        !pm.contains("GlobalNthValue ") && !pm.linesIterator.exists(isWindowExec),
+        s"beside rank(), OVER ($over):\n$pm")
+      def snap(d: org.apache.spark.sql.DataFrame) = d.collect().map(r =>
+        (0 until r.length).map(j => Option(r.get(j)).map(_.toString).getOrElse("null"))
+          .mkString("|")).sorted.toSeq
+      val got = snap(mixed)
+      val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(mixed) }
+      assert(got == expected)
+    }
+  }
+
   test("opt-out leaves mixed nodes unsplit") {
     tied.createOrReplaceTempView("gws_t3")
     withConf(GlobalRowNumberStrategy.ConfKey, "false") {
