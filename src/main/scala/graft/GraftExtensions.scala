@@ -13,8 +13,19 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark.sql("SELECT dot_product(a.v, b.v) FROM ...")
   *   spark.sql("SELECT word_shingles(split(text, ' '), 3) FROM docs")
   *
-  * and injects the [[graft.plans.DivRangePushdown]] optimizer rule
-  * (derived-time-unit key predicates become parquet-pushable raw bounds).
+  * and injects the plan rules:
+  *  - [[graft.plans.DivRangePushdown]] (optimizer): derived-time-unit key
+  *    predicates become parquet-pushable raw bounds;
+  *  - [[graft.plans.GlobalWindowSplit]] (optimizer): a Window node
+  *    mixing window families splits into one node per family;
+  *  - [[graft.plans.GlobalWindowStrategy]] (planner): the one strategy
+  *    for the window rescues, which plans a global or PARTITION BY
+  *    Window node as the exec of the first family in its table that
+  *    claims every expression (ranking, lag/lead, lag/lead IGNORE NULLS,
+  *    running, suffix, sliding ROWS, whole-table, RANGE-interval and
+  *    nth_value frames);
+  *  - [[graft.plans.GlobalWindowFallback]] (post-planner): warns about
+  *    and counts every global window left on a single-task WindowExec.
   *
   * Activate with
   *   .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -37,41 +48,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.saltedKey)
     ext.injectFunction(GraftExtensions.originalKey)
     ext.injectOptimizerRule(_ => graft.plans.DivRangePushdown)
-    // split MIXED-category global Window nodes (running + suffix + rank
-    // over one ORDER BY land in one node) so each frame family reaches
-    // its rescue strategy instead of dragging the node to a single task
+    // split mixed-family Window nodes (running + suffix + rank over one
+    // ORDER BY land in one node) so each family reaches its rescue
+    // instead of dragging the node to a single task
     ext.injectOptimizerRule(_ => graft.plans.GlobalWindowSplit)
-    // plans the naive single-task `row_number() OVER (ORDER BY ...)` as
-    // the two-pass range-shuffle + zipWithIndex exec (scale-safe global
-    // index even for naively-written SQL); covers all six ranking funcs
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRowNumberStrategy)
-    // same rescue for the frameless offset functions lag()/lead():
-    // range shuffle + boundary-row stitch instead of SinglePartition
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalOffsetWindowStrategy)
-    // and their IGNORE NULLS variants (variable lookbehind): per-function
-    // non-null value rings + pending-FIFO lead resolution, stitched with
-    // boundary VALUES instead of boundary rows
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalOffsetIgnoreNullsStrategy)
-    // and for global RUNNING aggregates (sum/count/min/max/avg OVER
-    // (ORDER BY ...)): the distributed prefix scan
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRunningAggStrategy)
-    // and for global SLIDING frames (ROWS k PRECEDING — the moving
-    // average): boundary-row stitch + per-row frame folds
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalSlidingAggStrategy)
-    // and for WHOLE-TABLE aggregates (`SUM(x) OVER ()` — share of
-    // total): partial buffers + driver merge + narrow constant attach,
-    // zero shuffle
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalConstantAggStrategy)
-    // and for RANGE-interval frames (`RANGE BETWEEN x PRECEDING AND
-    // CURRENT ROW` over ts — the time-series trailing window):
-    // value-window boundary stitch + tie-run frame folds
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRangeFrameStrategy)
-    // and for nth_value (prefix / whole-table frames + ordered
-    // first/last_value from either end): the n-th frame row is the
-    // global n-th row — one driver-computed constant plus a narrow
-    // eligibility pass
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalNthValueStrategy)
-    // loud fallback: any global Window shape NO strategy claimed still
+    // the window rescues: one strategy over the ordered family table
+    // (range exchange, per-partition edge summary, driver stitch,
+    // per-partition pass) in place of stock Spark's single-task
+    // global WindowExec and hot-key-bound PARTITION BY WindowExec
+    ext.injectPlannerStrategy(_ => graft.plans.GlobalWindowStrategy)
+    // loud fallback: any global Window shape NO family claimed still
     // plans the single-task built-in — warn + count at plan time, so
     // the one-task-stage-at-100TB failure mode is visible in the logs
     // before it hangs a cluster

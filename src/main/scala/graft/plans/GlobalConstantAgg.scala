@@ -5,10 +5,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, MutableProjection, NamedExpression, SortOrder, SpecifiedWindowFrame, SpecificInternalRow, UnboundedFollowing, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Complete, CountMinSketchAgg, DeclarativeAggregate, HyperLogLogPlusPlus, ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.catalyst.plans.physical.{Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Scale-safe planning for naive WHOLE-TABLE window aggregates.
   *
@@ -72,7 +70,7 @@ import org.apache.spark.sql.internal.SQLConf
   * Opt-out: shares `spark.graft.globalRowNumber.enabled` — one switch
   * restores every built-in global window.
   */
-object GlobalConstantAggStrategy extends SparkStrategy {
+object GlobalConstantAggStrategy extends WindowFamily {
   import GlobalConstantAggExec.ConstAgg
 
   /** Imperative SKETCH aggregates safe under partial-then-merge.
@@ -127,8 +125,9 @@ object GlobalConstantAggStrategy extends SparkStrategy {
     case _ => None
   }
 
-  /** Per-expression categorizer for [[GlobalWindowSplit]]. */
-  private[plans] def rescuable(e: NamedExpression): Boolean = funcOf(e).isDefined
+  /** A whole-table frame needs no ORDER BY. */
+  override def claimsNode(w: logical.Window): Boolean = true
+  override def claims(e: NamedExpression): Boolean = funcOf(e).isDefined
 
   /** Spread keys that let the range exchange split a hot key across
     * tasks: the ORDER BY if present, else the aggregates' orderable
@@ -153,32 +152,17 @@ object GlobalConstantAggStrategy extends SparkStrategy {
     }
   }
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case w: logical.Window
-        if w.partitionSpec.isEmpty &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(funcOf(_).isDefined) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean => {
-      val funcs = w.windowExpressions.map(funcOf(_).get)
+  override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] = {
+    val funcs = w.windowExpressions.map(funcOf(_).get)
+    val spread =
+      if (w.partitionSpec.nonEmpty) spreadOf(w, funcs)
       // an order-sensitive collector forces the ordered (range-exchange)
       // path even with no partition keys; order-insensitive constants
       // keep the zero-exchange two-pass
-      val spread = if (funcs.exists(c => sortedCollect(c.agg))) w.orderSpec else Nil
-      GlobalConstantAggExec(Nil, spread, funcs, planLater(w.child)) :: Nil
-    }
-    case w: logical.Window
-        if w.partitionSpec.nonEmpty && w.partitionSpec.forall(_.deterministic) &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(funcOf(_).isDefined) &&
-          GlobalWindowGate.perKeyWorthwhile(w) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean => {
-      val funcs = w.windowExpressions.map(funcOf(_).get)
-      val spread = spreadOf(w, funcs)
-      if (spread.isEmpty) Nil
-      else GlobalConstantAggExec(w.partitionSpec, spread, funcs,
-        planLater(w.child)) :: Nil
-    }
-    case _ => Nil
+      else if (funcs.exists(c => sortedCollect(c.agg))) w.orderSpec
+      else Nil
+    if (w.partitionSpec.nonEmpty && spread.isEmpty) None
+    else Some(GlobalConstantAggExec(w.partitionSpec, spread, funcs, child))
   }
 }
 
@@ -268,40 +252,35 @@ object GlobalConstantAggExec {
 case class GlobalConstantAggExec(partition: Seq[Expression],
                                  spread: Seq[SortOrder],
                                  funcs: Seq[GlobalConstantAggExec.ConstAgg],
-                                 child: SparkPlan) extends UnaryExecNode {
+                                 child: SparkPlan) extends GlobalWindowExec {
 
-  import GlobalConstantAggExec.{ImpOps, opsFor}
+  import GlobalConstantAggExec.{AggEdge, ImpOps, opsFor}
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
-
-  private def partOrders: Seq[SortOrder] =
-    partition.map(e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending))
+  override def order: Seq[SortOrder] = spread
 
   /** Ordered path — per-key constants OR an order-sensitive global
-    * collector (partition empty, spread = the node's ORDER BY). */
+    * collector (partition empty, spread = the node's ORDER BY). The
+    * unordered whole-table path needs no exchange at all. */
   private def ordered: Boolean = partition.nonEmpty || spread.nonEmpty
 
   override def requiredChildDistribution: Seq[Distribution] =
-    if (!ordered) UnspecifiedDistribution :: Nil
-    else OrderedDistribution(partOrders ++ spread) :: Nil
+    if (ordered) super.requiredChildDistribution else UnspecifiedDistribution :: Nil
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    if (!ordered) Seq(Nil) else Seq(partOrders ++ spread)
-  override def outputOrdering =
-    if (!ordered) child.outputOrdering else partOrders ++ spread
-  override def outputPartitioning: Partitioning = child.outputPartitioning
+    if (ordered) super.requiredChildOrdering else Seq(Nil)
+  override def outputOrdering: Seq[SortOrder] =
+    if (ordered) super.outputOrdering else child.outputOrdering
 
-  /** Per-key path: edge-group partials → driver segment merge → pass 2
-    * buffers one group at a time (slice-bounded), attaching the
-    * driver's constant for edge groups and a locally-evaluated one for
-    * interior groups. */
-  private def doExecutePartitioned(): RDD[InternalRow] = {
-    import GlobalConstantAggExec.AggEdge
+  override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val resultAttrs = output
     val partExprs = partition
     val nF = funcs.length
-    val dIdx = declIdx
-    val iIdx = impIdx
+    // declarative / imperative split: declaratives ride the projection
+    // machinery, imperatives the [[ImpOps]] object buffers; slot indexes
+    // map each back to its output column
+    val dIdx = funcs.indices.filter(funcs(_).agg.isInstanceOf[DeclarativeAggregate]).toArray
+    val iIdx = funcs.indices.filterNot(dIdx.contains).toArray
     val declAggs = dIdx.map(i =>
       funcs(i).agg.asInstanceOf[DeclarativeAggregate]).toSeq
     val bufAttrs = declAggs.flatMap(_.aggBufferAttributes)
@@ -315,17 +294,81 @@ case class GlobalConstantAggExec(partition: Seq[Expression],
     val attrTypes = funcs.map(_.attr.dataType).toArray
     val rdd = child.execute()
 
-    // pass 1: per task, the first and last key group's partials (decl
-    // buffer + serialized sketches)
+    def newBuffer(): SpecificInternalRow = {
+      val buf = new SpecificInternalRow(bufTypes)
+      MutableProjection.create(initExprs, Nil).target(buf)(InternalRow.empty)
+      buf
+    }
+    // one group's output values: declaratives from their evaluated
+    // buffer, sketches from their own buffers
+    def constants(evalRow: InternalRow, impBufs: Array[AnyRef]): Array[Any] = {
+      val vals = new Array[Any](nF)
+      dIdx.zipWithIndex.foreach { case (slot, m) =>
+        vals(slot) = InternalRow.copyValue(evalRow.get(m, attrTypes(slot)))
+      }
+      iIdx.zipWithIndex.foreach { case (slot, m) =>
+        vals(slot) = InternalRow.copyValue(impOps(m).eval(impBufs(m)))
+      }
+      vals
+    }
+    // driver: merge partials (decl buffer + serialized sketches) left to
+    // right and evaluate once — a few buffer-sized rows of work per
+    // merged group, independent of data size
+    val merge = MutableProjection.create(mergeExprs, bufAttrs ++ inputBufAttrs)
+    val driverEval = UnsafeProjection.create(evalExprs, bufAttrs)
+    val joinBB = new JoinedRow
+    def mergeAll(partials: Iterable[(UnsafeRow, Array[Array[Byte]])]): Array[Any] = {
+      val running = newBuffer()
+      merge.target(running)
+      val impBufs = impOps.map(_.newBuf())
+      partials.foreach { case (buf, imp) =>
+        merge(joinBB(running, buf))
+        var m = 0
+        while (m < impOps.length) {
+          impBufs(m) = impOps(m).mergeBytes(impBufs(m), imp(m)); m += 1
+        }
+      }
+      constants(driverEval(running), impBufs)
+    }
+
+    if (!ordered) {
+      // pass 1: one partial (decl buffer + serialized sketches) per
+      // partition — the map-side partial aggregation a groupBy would
+      // run, without the final exchange
+      val partials: Array[(UnsafeRow, Array[Array[Byte]])] =
+        rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
+          val buf = newBuffer()
+          val update = MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
+          update.target(buf)
+          val joinBI = new JoinedRow
+          val impBufs = impOps.map(_.newBuf())
+          while (iter.hasNext) {
+            val row = iter.next()
+            update(joinBI(buf, row))
+            var j = 0
+            while (j < impOps.length) {
+              impBufs(j) = impOps(j).update(impBufs(j), row); j += 1
+            }
+          }
+          (UnsafeProjection.create(bufAttrs, bufAttrs)(buf).copy(),
+            impOps.indices.map(j => impOps(j).serialize(impBufs(j))).toArray)
+        })
+      val constVals = mergeAll(partials)
+      // pass 2: narrow attach of the constants — full parallelism, no state
+      return rdd.mapPartitions { iter =>
+        val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
+        val join = new JoinedRow
+        val constRow = new GenericInternalRow(constVals)
+        iter.map(row => outProj(join(row, constRow)))
+      }
+    }
+
+    // per-key pass 1: per task, the first and last key group's partials
+    // (decl buffer + serialized sketches)
     val stats: Array[AggEdge] = rdd.sparkContext.runJob(rdd,
       (iter: Iterator[InternalRow]) => {
         val groupProj = UnsafeProjection.create(partExprs, childOutput)
         val bufProj = UnsafeProjection.create(bufAttrs, bufAttrs)
-        def newBuffer(): SpecificInternalRow = {
-          val buf = new SpecificInternalRow(bufTypes)
-          MutableProjection.create(initExprs, Nil).target(buf)(InternalRow.empty)
-          buf
-        }
         var buf = newBuffer()
         val update = MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
         update.target(buf)
@@ -363,67 +406,20 @@ case class GlobalConstantAggExec(partition: Seq[Expression],
       })
     val nParts = stats.length
 
-    // driver segment merge: adjacent edge slices with equal group keys
-    // belong to one group (contiguity under the sort); merge their
-    // partials left-to-right and evaluate once per group. Driver work
-    // is bounded by two partials per task.
+    // driver chain merge: the slices of one edge-group chain are one
+    // group (contiguity under the sort); merge their partials and
+    // evaluate once per group. Driver work is bounded by two partials
+    // per task.
     val firstConst = new Array[Array[Any]](nParts)
     val lastConst = new Array[Array[Any]](nParts)
-    locally {
-      case class Seg(p: Int, isFirst: Boolean, isLast: Boolean,
-                     g: UnsafeRow, buf: UnsafeRow, imp: Array[Array[Byte]])
-      val segs = new scala.collection.mutable.ArrayBuffer[Seg]
-      var p = 0
-      while (p < nParts) {
-        val e = stats(p)
-        if (e.firstG != null) {
-          if (e.lastG.equals(e.firstG))
-            segs += Seg(p, isFirst = true, isLast = true,
-              e.firstG, e.bufLast, e.impLast)
-          else {
-            segs += Seg(p, isFirst = true, isLast = false,
-              e.firstG, e.bufFirst, e.impFirst)
-            segs += Seg(p, isFirst = false, isLast = true,
-              e.lastG, e.bufLast, e.impLast)
-          }
-        }
-        p += 1
-      }
-      val merge = MutableProjection.create(mergeExprs, bufAttrs ++ inputBufAttrs)
-      val evalProj = UnsafeProjection.create(evalExprs, bufAttrs)
-      val joinBB = new JoinedRow
-      var i = 0
-      while (i < segs.length) {
-        var j = i + 1
-        while (j < segs.length && segs(j).g.equals(segs(i).g)) j += 1
-        val running = new SpecificInternalRow(bufTypes)
-        MutableProjection.create(initExprs, Nil).target(running)(InternalRow.empty)
-        merge.target(running)
-        val impBufs = impOps.map(_.newBuf())
-        var k = i
-        while (k < j) {
-          merge(joinBB(running, segs(k).buf))
-          var m = 0
-          while (m < impOps.length) {
-            impBufs(m) = impOps(m).mergeBytes(impBufs(m), segs(k).imp(m)); m += 1
-          }
-          k += 1
-        }
-        val vals = new Array[Any](nF)
-        val evalRow = evalProj(running)
-        dIdx.zipWithIndex.foreach { case (slot, m) =>
-          vals(slot) = InternalRow.copyValue(evalRow.get(m, attrTypes(slot)))
-        }
-        iIdx.zipWithIndex.foreach { case (slot, m) =>
-          vals(slot) = InternalRow.copyValue(impOps(m).eval(impBufs(m)))
-        }
-        k = i
-        while (k < j) {
-          if (segs(k).isFirst) firstConst(segs(k).p) = vals
-          if (segs(k).isLast) lastConst(segs(k).p) = vals
-          k += 1
-        }
-        i = j
+    EdgeChains(stats.map(_.firstG), stats.map(_.lastG)).foreach { chain =>
+      val vals = mergeAll(chain.map { s =>
+        val e = stats(s.p)
+        if (s.isLast) (e.bufLast, e.impLast) else (e.bufFirst, e.impFirst)
+      })
+      chain.foreach { s =>
+        if (s.isFirst) firstConst(s.p) = vals
+        if (s.isLast) lastConst(s.p) = vals
       }
     }
 
@@ -435,173 +431,45 @@ case class GlobalConstantAggExec(partition: Seq[Expression],
     PerPartition.stitch(rdd,
       (0 until nParts).map(p => (firstConst(p), lastConst(p)))) { (slice, iter) =>
       val (firstConstP, lastConstP) = slice
-      val groupProj = UnsafeProjection.create(partExprs, childOutput)
       val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
       val join = new JoinedRow
       val update = MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
       val evalProj = UnsafeProjection.create(evalExprs, bufAttrs)
       val joinBI = new JoinedRow
+      val groups = new Runs(iter, UnsafeProjection.create(partExprs, childOutput))
 
       new Iterator[InternalRow] {
-        private val buf = new scala.collection.mutable.ArrayBuffer[InternalRow]
-        private var bufPos = 0
         private var constRow: InternalRow = _
-        private var pendingNext: InternalRow = _
-        private var firstGroupOfTask = true
 
         private def fillGroup(): Unit = {
-          buf.clear(); bufPos = 0
-          if (pendingNext != null) { buf += pendingNext; pendingNext = null }
-          else if (iter.hasNext) buf += iter.next().copy()
-          else return
-          val g = groupProj(buf.head).copy()
-          val agg = new SpecificInternalRow(bufTypes)
-          MutableProjection.create(initExprs, Nil).target(agg)(InternalRow.empty)
-          update.target(agg)
-          val impBufs = impOps.map(_.newBuf())
-          def consume(r: InternalRow): Unit = {
-            update(joinBI(agg, r))
-            var m = 0
-            while (m < impOps.length) {
-              impBufs(m) = impOps(m).update(impBufs(m), r); m += 1
-            }
-          }
-          consume(buf.head)
-          var done = false
-          while (!done && iter.hasNext) {
-            val r = iter.next().copy()
-            if (groupProj(r).equals(g)) { buf += r; consume(r) }
-            else { pendingNext = r; done = true }
-          }
-          val isFirst = firstGroupOfTask
-          firstGroupOfTask = false
-          val isLast = pendingNext == null && !iter.hasNext
+          groups.fill()
           val vals: Array[Any] =
-            if (isFirst) firstConstP
-            else if (isLast) lastConstP
+            if (groups.isFirst) firstConstP
+            else if (groups.isLast) lastConstP
             else {
-              val v = new Array[Any](nF)
-              val evalRow = evalProj(agg)
-              dIdx.zipWithIndex.foreach { case (slot, m) =>
-                v(slot) = InternalRow.copyValue(evalRow.get(m, attrTypes(slot)))
+              // an interior group is whole in this task
+              val agg = newBuffer()
+              update.target(agg)
+              val impBufs = impOps.map(_.newBuf())
+              groups.rows.foreach { r =>
+                update(joinBI(agg, r))
+                var m = 0
+                while (m < impOps.length) {
+                  impBufs(m) = impOps(m).update(impBufs(m), r); m += 1
+                }
               }
-              iIdx.zipWithIndex.foreach { case (slot, m) =>
-                v(slot) = InternalRow.copyValue(impOps(m).eval(impBufs(m)))
-              }
-              v
+              constants(evalProj(agg), impBufs)
             }
           constRow = new GenericInternalRow(vals)
         }
 
-        override def hasNext: Boolean =
-          bufPos < buf.length || pendingNext != null || iter.hasNext
+        override def hasNext: Boolean = groups.hasNext
 
         override def next(): InternalRow = {
-          if (bufPos >= buf.length) fillGroup()
-          val out = outProj(join(buf(bufPos), constRow))
-          bufPos += 1
-          out
+          if (groups.exhausted) fillGroup()
+          outProj(join(groups.next(), constRow))
         }
       }
     }
   }
-
-  import GlobalConstantAggExec.{ImpOps, opsFor}
-
-  /** Declarative / imperative split: declaratives ride the projection
-    * machinery, imperatives the [[ImpOps]] object buffers; slot indexes
-    * map each back to its output column. */
-  private def declIdx: Array[Int] = funcs.zipWithIndex.collect {
-    case (c, i) if c.agg.isInstanceOf[DeclarativeAggregate] => i
-  }.toArray
-  private def impIdx: Array[Int] = funcs.zipWithIndex.collect {
-    case (c, i) if !c.agg.isInstanceOf[DeclarativeAggregate] => i
-  }.toArray
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    if (ordered) return doExecutePartitioned()
-    val childOutput = child.output
-    val resultAttrs = output
-    val nF = funcs.length
-    val dIdx = declIdx
-    val iIdx = impIdx
-    val declAggs = dIdx.map(i =>
-      funcs(i).agg.asInstanceOf[DeclarativeAggregate]).toSeq
-    val bufAttrs = declAggs.flatMap(_.aggBufferAttributes)
-    val bufTypes = bufAttrs.map(_.dataType)
-    val inputBufAttrs = declAggs.flatMap(_.inputAggBufferAttributes)
-    val initExprs = declAggs.flatMap(_.initialValues)
-    val updateExprs = declAggs.flatMap(_.updateExpressions)
-    val mergeExprs = declAggs.flatMap(_.mergeExpressions)
-    val evalExprs = declAggs.map(_.evaluateExpression)
-    val impOps: Array[ImpOps] = iIdx.map(i => opsFor(funcs(i).agg, childOutput))
-    val attrTypes = funcs.map(_.attr.dataType).toArray
-    val rdd = child.execute()
-
-    def newBuffer(): SpecificInternalRow = {
-      val buf = new SpecificInternalRow(bufTypes)
-      val p = MutableProjection.create(initExprs, Nil)
-      p.target(buf)(InternalRow.empty)
-      buf
-    }
-
-    // pass 1: one partial (decl buffer + serialized sketches) per
-    // partition — the map-side partial aggregation a groupBy would run,
-    // without the final exchange
-    val partials: Array[(UnsafeRow, Array[Array[Byte]])] =
-      rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-        val buf = newBuffer()
-        val update = MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
-        update.target(buf)
-        val joinBI = new JoinedRow
-        val impBufs = impOps.map(_.newBuf())
-        while (iter.hasNext) {
-          val row = iter.next()
-          update(joinBI(buf, row))
-          var j = 0
-          while (j < impOps.length) {
-            impBufs(j) = impOps(j).update(impBufs(j), row); j += 1
-          }
-        }
-        (UnsafeProjection.create(bufAttrs, bufAttrs)(buf).copy(),
-          impOps.indices.map(j => impOps(j).serialize(impBufs(j))).toArray)
-      })
-
-    // driver merge + one evaluation per function: #partitions
-    // buffer-sized rows of work, independent of data size
-    val constVals: Array[Any] = {
-      val running = newBuffer()
-      val merge = MutableProjection.create(mergeExprs, bufAttrs ++ inputBufAttrs)
-      merge.target(running)
-      val joinBB = new JoinedRow
-      val impBufs = impOps.map(_.newBuf())
-      partials.foreach { case (p, ib) =>
-        merge(joinBB(running, p))
-        var j = 0
-        while (j < impOps.length) {
-          impBufs(j) = impOps(j).mergeBytes(impBufs(j), ib(j)); j += 1
-        }
-      }
-      val vals = new Array[Any](nF)
-      val evalRow = UnsafeProjection.create(evalExprs, bufAttrs)(running)
-      dIdx.zipWithIndex.foreach { case (slot, j) =>
-        vals(slot) = InternalRow.copyValue(evalRow.get(j, attrTypes(slot)))
-      }
-      iIdx.zipWithIndex.foreach { case (slot, j) =>
-        vals(slot) = InternalRow.copyValue(impOps(j).eval(impBufs(j)))
-      }
-      vals
-    }
-
-    // pass 2: narrow attach of the constants — full parallelism, no state
-    rdd.mapPartitions { iter =>
-      val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
-      val join = new JoinedRow
-      val constRow = new GenericInternalRow(constVals)
-      iter.map(row => outProj(join(row, constRow)))
-    }
-  }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
 }

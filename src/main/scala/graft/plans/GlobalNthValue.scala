@@ -5,9 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CurrentRow, Expression, GenericInternalRow, IntegerLiteral, JoinedRow, NamedExpression, NthValue, SortOrder, SpecifiedWindowFrame, RangeFrame, UnboundedFollowing, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, First, Last}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.internal.SQLConf
 
 /** Scale-safe planning for naive global `nth_value` — the last member
@@ -53,7 +51,7 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
   */
-object GlobalNthValueStrategy extends SparkStrategy {
+object GlobalNthValueStrategy extends WindowFamily {
   import GlobalNthValueExec.NthF
 
   /** Candidate-collection cap. The GLOBAL path is NOT bounded by it in
@@ -103,8 +101,7 @@ object GlobalNthValueStrategy extends SparkStrategy {
     case _ => None
   }
 
-  /** Per-expression categorizer for [[GlobalWindowSplit]]. */
-  private[plans] def rescuable(e: NamedExpression): Boolean = funcOf(e).isDefined
+  override def claims(e: NamedExpression): Boolean = funcOf(e).isDefined
 
   /** PARTITION BY-rescuable shapes — all matched ones UP TO the n cap
     * (see [[MaxNKey]]: per-group heads and edge-candidate shipping are
@@ -116,27 +113,12 @@ object GlobalNthValueStrategy extends SparkStrategy {
     * slice's bounded candidate list, so each task knows its edge
     * groups' first/last n values and totals, and interior groups are
     * buffered one at a time (slice-bounded). */
-  private[plans] def rescuablePartitioned(e: NamedExpression): Boolean =
+  override def claimsPartitioned(e: NamedExpression): Boolean =
     funcOf(e).exists(_.n <= maxN)
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case w: logical.Window
-        if w.partitionSpec.isEmpty && w.orderSpec.nonEmpty &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(funcOf(_).isDefined) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean =>
-      GlobalNthValueExec(Nil, w.orderSpec,
-        w.windowExpressions.map(funcOf(_).get), planLater(w.child)) :: Nil
-    case w: logical.Window
-        if w.partitionSpec.nonEmpty && w.partitionSpec.forall(_.deterministic) &&
-          w.orderSpec.nonEmpty && w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(rescuablePartitioned) &&
-          GlobalWindowGate.perKeyWorthwhile(w) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean =>
-      GlobalNthValueExec(w.partitionSpec, w.orderSpec,
-        w.windowExpressions.map(funcOf(_).get), planLater(w.child)) :: Nil
-    case _ => Nil
-  }
+  override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] =
+    Some(GlobalNthValueExec(w.partitionSpec, w.orderSpec,
+      w.windowExpressions.map(funcOf(_).get), child))
 }
 
 object GlobalNthValueExec {
@@ -146,10 +128,11 @@ object GlobalNthValueExec {
                   isRange: Boolean, isFull: Boolean, attr: Attribute,
                   fromEnd: Boolean = false)
 
-  /** Per-task edge-group stats for the partitioned path: first/last
-    * group keys; per function, each edge group's slice (rows,
-    * non-nulls, first ≤n counting candidates). Top-level (not method-
-    * local) so the serialized task result carries no $outer. */
+  /** Per-task edge-group stats: first/last group keys; per function,
+    * each edge group's slice (rows, non-nulls, first — last for
+    * fromEnd — ≤n counting candidates). With no partition spec the task
+    * is one group. Top-level (not method-local) so the serialized task
+    * result carries no $outer. */
   private[plans] case class Edge(
       firstG: UnsafeRow, lastG: UnsafeRow,
       rowsFirst: Long, nnFirst: Array[Long],
@@ -168,19 +151,66 @@ object GlobalNthValueExec {
 case class GlobalNthValueExec(partition: Seq[Expression],
                               order: Seq[SortOrder],
                               funcs: Seq[GlobalNthValueExec.NthF],
-                              child: SparkPlan) extends UnaryExecNode {
+                              child: SparkPlan) extends GlobalWindowExec {
+  import GlobalNthValueExec.Edge
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
 
-  private def partOrders: Seq[SortOrder] =
-    partition.map(e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(partOrders ++ order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(partOrders ++ order)
-  override def outputOrdering: Seq[SortOrder] = partOrders ++ order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
+  /** Pass 1 for both paths: per task, its first and last key group's
+    * slice — row and non-null counts, and per function the first (last
+    * for fromEnd, a bounded ring) ≤ `caps(f)` counting candidates. */
+  private def edgeStats(rdd: RDD[InternalRow], caps: Array[Int]): Array[Edge] = {
+    val childOutput = child.output
+    val partExprs = partition
+    val funcsLocal = funcs.toArray
+    val nF = funcsLocal.length
+    rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
+      val groupProj = UnsafeProjection.create(partExprs, childOutput)
+      val projs = funcsLocal.map(f =>
+        UnsafeProjection.create(Seq(f.input), childOutput))
+      var firstG: UnsafeRow = null
+      var curG: UnsafeRow = null
+      var rows = 0L
+      var nn = new Array[Long](nF)
+      var cand = Array.fill(nF)(
+        new scala.collection.mutable.ArrayBuffer[UnsafeRow])
+      var rowsFirst = -1L
+      var nnFirst: Array[Long] = null
+      var candFirst: Array[Array[UnsafeRow]] = null
+      while (iter.hasNext) {
+        val row = iter.next()
+        val g = groupProj(row)
+        if (curG == null) { curG = g.copy(); firstG = curG }
+        else if (!g.equals(curG)) {
+          if (rowsFirst < 0) { // the first group just ended
+            rowsFirst = rows; nnFirst = nn; candFirst = cand.map(_.toArray)
+          }
+          curG = g.copy(); rows = 0L; nn = new Array[Long](nF)
+          cand = Array.fill(nF)(
+            new scala.collection.mutable.ArrayBuffer[UnsafeRow])
+        }
+        var i = 0
+        while (i < nF) {
+          val f = funcsLocal(i)
+          val v = projs(i)(row)
+          val isNull = v.isNullAt(0)
+          if (!isNull) nn(i) += 1
+          val counts = if (f.ignoreNulls) !isNull else true
+          if (counts) {
+            if (f.fromEnd) {
+              cand(i) += v.copy()
+              if (cand(i).length > caps(i)) cand(i).remove(0)
+            } else if (cand(i).length < caps(i)) cand(i) += v.copy()
+          }
+          i += 1
+        }
+        rows += 1
+      }
+      val candArr = cand.map(_.toArray)
+      if (rowsFirst < 0) { rowsFirst = rows; nnFirst = nn; candFirst = candArr }
+      Edge(firstG, curG, rowsFirst, nnFirst, candFirst, rows, nn, candArr)
+    })
+  }
 
   /** Per-key path: one stats job ships each task's edge-group slice
     * candidates (first ≤ n counting values of the FIRST and LAST key
@@ -202,69 +232,20 @@ case class GlobalNthValueExec(partition: Seq[Expression],
     val anyFull = funcsLocal.exists(_.isFull)
     val rdd = child.execute()
 
-    // edge stats: first/last group keys; per function, the last group's
-    // slice (rows, non-nulls, first ≤n counting candidates) and the
-    // first group's the same — the only slices neighbors can see
-    import GlobalNthValueExec.Edge
-    val stats: Array[Edge] =
-      rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-        val groupProj = UnsafeProjection.create(partExprs, childOutput)
-        val projs = funcsLocal.map(f =>
-          UnsafeProjection.create(Seq(f.input), childOutput))
-        var firstG: UnsafeRow = null
-        var curG: UnsafeRow = null
-        var rows = 0L
-        var nn = new Array[Long](nF)
-        var cand = Array.fill(nF)(
-          new scala.collection.mutable.ArrayBuffer[UnsafeRow])
-        var rowsFirst = -1L
-        var nnFirst: Array[Long] = null
-        var candFirst: Array[Array[UnsafeRow]] = null
-        while (iter.hasNext) {
-          val row = iter.next()
-          val g = groupProj(row)
-          if (curG == null) { curG = g.copy(); firstG = curG }
-          else if (!g.equals(curG)) {
-            if (rowsFirst < 0) { // the first group just ended
-              rowsFirst = rows; nnFirst = nn; candFirst = cand.map(_.toArray)
-            }
-            curG = g.copy(); rows = 0L; nn = new Array[Long](nF)
-            cand = Array.fill(nF)(
-              new scala.collection.mutable.ArrayBuffer[UnsafeRow])
-          }
-          var i = 0
-          while (i < nF) {
-            val f = funcsLocal(i)
-            val v = projs(i)(row)
-            val isNull = v.isNullAt(0)
-            if (!isNull) nn(i) += 1
-            val counts = if (f.ignoreNulls) !isNull else true
-            if (counts) {
-              // fromEnd keeps the LAST ≤n candidates (bounded ring),
-              // others the first ≤n
-              if (f.fromEnd) {
-                cand(i) += v.copy()
-                if (cand(i).length > f.n) cand(i).remove(0)
-              } else if (cand(i).length < f.n) cand(i) += v.copy()
-            }
-            i += 1
-          }
-          rows += 1
-        }
-        val candArr = cand.map(_.toArray)
-        if (rowsFirst < 0) { rowsFirst = rows; nnFirst = nn; candFirst = candArr }
-        Edge(firstG, curG, rowsFirst, nnFirst, candFirst, rows, nn, candArr)
-      })
+    // edge stats: per function ≤ n candidates of each edge group — the
+    // only slices neighbors can see
+    val stats = edgeStats(rdd, funcsLocal.map(_.n))
     val nParts = stats.length
 
-    // driver segment pass: adjacent edge slices with equal group keys
-    // form one task-crossing group. One walk yields BOTH products:
+    // driver chain pass: each chain of equal edge groups
+    // ([[EdgeChains]]) is one task-crossing group. One walk yields BOTH
+    // products:
     //  - prefix seeds (the carry of PRECEDING slices in the chain) for
     //    the streaming prefix-frame path, and
     //  - whole-chain merges (total rows/non-nulls + the merged bounded
     //    candidate list) for the whole-GROUP-frame functions, assigned
     //    to every member task's first/last slot.
-    // Driver state: ≤ 2 segments × (counts + n values per function)
+    // Driver state: ≤ 2 slices × (counts + n values per function)
     // per task, independent of data size.
     val seedRows = new Array[Long](nParts)
     val seedNn = Array.fill(nParts)(new Array[Long](nF))
@@ -278,70 +259,48 @@ case class GlobalNthValueExec(partition: Seq[Expression],
       Array.fill(nParts)(Array.fill(nF)(Array.empty[UnsafeRow]))
     val fullCandLast: Array[Array[Array[UnsafeRow]]] =
       Array.fill(nParts)(Array.fill(nF)(Array.empty[UnsafeRow]))
-    locally {
-      case class Seg(p: Int, isFirst: Boolean, isLast: Boolean,
-                     g: UnsafeRow, rows: Long, nn: Array[Long],
-                     cand: Array[Array[UnsafeRow]])
-      val segs = new scala.collection.mutable.ArrayBuffer[Seg]
-      var p = 0
-      while (p < nParts) {
-        val e = stats(p)
-        if (e.firstG != null) {
-          if (e.lastG.equals(e.firstG))
-            segs += Seg(p, isFirst = true, isLast = true,
-              e.firstG, e.rowsLast, e.nnLast, e.candLast)
-          else {
-            segs += Seg(p, isFirst = true, isLast = false,
-              e.firstG, e.rowsFirst, e.nnFirst, e.candFirst)
-            segs += Seg(p, isFirst = false, isLast = true,
-              e.lastG, e.rowsLast, e.nnLast, e.candLast)
-          }
-        }
-        p += 1
+    EdgeChains(stats.map(_.firstG), stats.map(_.lastG)).foreach { chain =>
+      val run = chain.map { s =>
+        val e = stats(s.p)
+        if (s.isLast) (s, e.rowsLast, e.nnLast, e.candLast)
+        else (s, e.rowsFirst, e.nnFirst, e.candFirst)
       }
-      var i = 0
-      while (i < segs.length) {
-        var j = i + 1
-        while (j < segs.length && segs(j).g.equals(segs(i).g)) j += 1
-        val run = segs.slice(i, j)
-        // whole-chain merge
-        val mergedRows = run.map(_.rows).sum
-        val mergedNn = Array.tabulate(nF)(f => run.map(_.nn(f)).sum)
-        val mergedCand = Array.tabulate(nF) { f =>
-          val all = run.flatMap(_.cand(f))
-          if (funcsLocal(f).fromEnd) all.takeRight(funcsLocal(f).n).toArray
-          else all.take(funcsLocal(f).n).toArray
+      // whole-chain merge
+      val mergedRows = run.map(_._2).sum
+      val mergedNn = Array.tabulate(nF)(f => run.map(_._3(f)).sum)
+      val mergedCand = Array.tabulate(nF) { f =>
+        val all = run.flatMap(_._4(f))
+        if (funcsLocal(f).fromEnd) all.takeRight(funcsLocal(f).n).toArray
+        else all.take(funcsLocal(f).n).toArray
+      }
+      // prefix carries + assignment
+      var accRows = 0L
+      val accNn = new Array[Long](nF)
+      var accCand: Array[Array[UnsafeRow]] = Array.fill(nF)(Array.empty)
+      run.foreach { case (s, rows, nn, cand) =>
+        if (s.isFirst) {
+          seedRows(s.p) = accRows
+          seedNn(s.p) = accNn.clone()
+          seedCand(s.p) = accCand.map(identity)
+          fullRowsFirst(s.p) = mergedRows
+          fullNnFirst(s.p) = mergedNn
+          fullCandFirst(s.p) = mergedCand
         }
-        // prefix carries + assignment
-        var accRows = 0L
-        val accNn = new Array[Long](nF)
-        var accCand: Array[Array[UnsafeRow]] = Array.fill(nF)(Array.empty)
-        run.foreach { s =>
-          if (s.isFirst) {
-            seedRows(s.p) = accRows
-            seedNn(s.p) = accNn.clone()
-            seedCand(s.p) = accCand.map(identity)
-            fullRowsFirst(s.p) = mergedRows
-            fullNnFirst(s.p) = mergedNn
-            fullCandFirst(s.p) = mergedCand
-          }
-          if (s.isLast) {
-            fullRowsLast(s.p) = mergedRows
-            fullNnLast(s.p) = mergedNn
-            fullCandLast(s.p) = mergedCand
-          }
-          accRows += s.rows
-          var f = 0
-          while (f < nF) {
-            accNn(f) += s.nn(f)
-            if (funcsLocal(f).fromEnd) {
-              // prefix seeds are never read by fromEnd (isFull) funcs
-            } else if (accCand(f).length < funcsLocal(f).n)
-              accCand(f) = (accCand(f) ++ s.cand(f)).take(funcsLocal(f).n)
-            f += 1
-          }
+        if (s.isLast) {
+          fullRowsLast(s.p) = mergedRows
+          fullNnLast(s.p) = mergedNn
+          fullCandLast(s.p) = mergedCand
         }
-        i = j
+        accRows += rows
+        var f = 0
+        while (f < nF) {
+          accNn(f) += nn(f)
+          if (funcsLocal(f).fromEnd) {
+            // prefix seeds are never read by fromEnd (isFull) funcs
+          } else if (accCand(f).length < funcsLocal(f).n)
+            accCand(f) = (accCand(f) ++ cand(f)).take(funcsLocal(f).n)
+          f += 1
+        }
       }
     }
 
@@ -426,32 +385,19 @@ case class GlobalNthValueExec(partition: Seq[Expression],
           if (anyRange) UnsafeProjection.create(keyExprs, childOutput) else null
         val sameRun =
           if (anyRange) KeyRunEquality.create(keyExprs.map(_.dataType)) else null
+        val groups = new Runs(iter, groupProj)
         new Iterator[InternalRow] {
-          private val buf = new scala.collection.mutable.ArrayBuffer[InternalRow]
           private val rowIdxs = new scala.collection.mutable.ArrayBuffer[Long]
           private val rowNns = new scala.collection.mutable.ArrayBuffer[Array[Long]]
           private var endIdxs: Array[Int] = Array.emptyIntArray
-          private var bufPos = 0
-          private var pendingNext: InternalRow = _
-          private var firstGroupOfTask = true
           // per-group values of the whole-frame functions (one per func)
           private val fullVals = new Array[Any](nF)
 
           private def fillGroup(): Unit = {
-            buf.clear(); rowIdxs.clear(); rowNns.clear(); bufPos = 0
-            if (pendingNext != null) { buf += pendingNext; pendingNext = null }
-            else if (iter.hasNext) buf += iter.next().copy()
-            else return
-            val g = groupProj(buf.head).copy()
-            var done = false
-            while (!done && iter.hasNext) {
-              val r = iter.next().copy()
-              if (groupProj(r).equals(g)) buf += r
-              else { pendingNext = r; done = true }
-            }
-            val isFirst = firstGroupOfTask
-            firstGroupOfTask = false
-            val isLast = pendingNext == null && !iter.hasNext
+            groups.fill(); rowIdxs.clear(); rowNns.clear()
+            val buf = groups.rows
+            val isFirst = groups.isFirst
+            val isLast = groups.isLast
             // prefix counters/heads: seeded for the task's first group
             relIdx = if (isFirst) seedRowP else 0L
             nnRel = if (isFirst) seedNnP.clone() else new Array[Long](nF)
@@ -512,12 +458,12 @@ case class GlobalNthValueExec(partition: Seq[Expression],
             }
           }
 
-          override def hasNext: Boolean =
-            bufPos < buf.length || pendingNext != null || iter.hasNext
+          override def hasNext: Boolean = groups.hasNext
 
           override def next(): InternalRow = {
-            if (bufPos >= buf.length) fillGroup()
-            val j = bufPos
+            if (groups.exhausted) fillGroup()
+            val j = groups.pos
+            val row = groups.next()
             val endJ = if (anyRange) endIdxs(j) else j
             val vals = new GenericInternalRow(nF)
             var i = 0
@@ -537,8 +483,7 @@ case class GlobalNthValueExec(partition: Seq[Expression],
               }
               i += 1
             }
-            bufPos += 1
-            outProj(joinOut(buf(j), vals))
+            outProj(joinOut(row, vals))
           }
         }
       } else if (!anyRange) {
@@ -548,50 +493,34 @@ case class GlobalNthValueExec(partition: Seq[Expression],
           outProj(joinOut(row, mkVals(relIdx, nnRel, relIdx, nnRel)))
         }
       } else {
-        // buffer one tie run at a time; a run never spans a group (the
-        // sort leads with the key), so the group check runs on the head
-        val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-        val sameRun = KeyRunEquality.create(keyExprs.map(_.dataType))
+        // buffer one tie run at a time; runs are keyed on (group ⧺
+        // order key), so a run never spans a group and the group check
+        // runs on the head
+        val runKeys = partExprs ++ keyExprs
+        val runs = new Runs(iter, UnsafeProjection.create(runKeys, childOutput),
+          KeyRunEquality.create(runKeys.map(_.dataType)))
         new Iterator[InternalRow] {
-          private val run = new scala.collection.mutable.ArrayBuffer[InternalRow]
           private val rowIdxs = new scala.collection.mutable.ArrayBuffer[Long]
           private val rowNns = new scala.collection.mutable.ArrayBuffer[Array[Long]]
-          private var runPos = 0
-          private var pendingNext: InternalRow = _
 
           private def fillRun(): Unit = {
-            run.clear(); rowIdxs.clear(); rowNns.clear(); runPos = 0
-            if (pendingNext != null) { run += pendingNext; pendingNext = null }
-            else if (iter.hasNext) run += iter.next().copy()
-            else return
-            groupCheck(run.head)
-            val runKey = keyProj(run.head).copy()
-            val runG = curG
-            var done = false
-            while (!done && iter.hasNext) {
-              val r = iter.next().copy()
-              if (groupProj(r).equals(runG) && sameRun(keyProj(r), runKey))
-                run += r
-              else { pendingNext = r; done = true }
-            }
+            runs.fill(); rowIdxs.clear(); rowNns.clear()
+            groupCheck(runs.rows.head)
             var j = 0
-            while (j < run.length) {
-              consume(run(j))
+            while (j < runs.rows.length) {
+              consume(runs.rows(j))
               rowIdxs += relIdx
               rowNns += nnRel.clone()
               j += 1
             }
           }
 
-          override def hasNext: Boolean =
-            runPos < run.length || pendingNext != null || iter.hasNext
+          override def hasNext: Boolean = runs.hasNext
 
           override def next(): InternalRow = {
-            if (runPos >= run.length) fillRun()
-            val row = run(runPos)
-            val vals = mkVals(rowIdxs(runPos), rowNns(runPos), relIdx, nnRel)
-            runPos += 1
-            outProj(joinOut(row, vals))
+            if (runs.exhausted) fillRun()
+            val vals = mkVals(rowIdxs(runs.pos), rowNns(runs.pos), relIdx, nnRel)
+            outProj(joinOut(runs.next(), vals))
           }
         }
       }
@@ -608,51 +537,19 @@ case class GlobalNthValueExec(partition: Seq[Expression],
     val anyRange = funcsLocal.exists(_.isRange)
     val rdd = child.execute()
 
-    // pass 1: per partition — total rows, and per function its non-null
-    // count plus the first ≤ min(n, cap) candidate values
+    // pass 1: per partition (one group) — total rows, and per function
+    // its non-null count plus the first ≤ min(n, cap) candidate values
     // (single-column rows); for fromEnd functions the LAST ≤ min(n,
     // cap) candidates instead (a bounded ring — memory identical
     // either way). The cap bounds task-result and driver memory for
     // adversarial n; a value beyond a capped head is fetched by the
     // targeted second job below.
-    val headCaps = funcsLocal.map(f =>
-      math.min(f.n.toLong, GlobalNthValueStrategy.maxN.toLong).toInt)
-    val stats: Array[(Long, Array[Long], Array[Array[UnsafeRow]])] =
-      rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-        val projs = funcsLocal.map(f =>
-          UnsafeProjection.create(Seq(f.input), childOutput))
-        val nn = new Array[Long](nF)
-        val heads = Array.fill(nF)(
-          new scala.collection.mutable.ArrayBuffer[UnsafeRow])
-        var rows = 0L
-        while (iter.hasNext) {
-          val row = iter.next()
-          var i = 0
-          while (i < nF) {
-            val f = funcsLocal(i)
-            val v = projs(i)(row)
-            val isNull = v.isNullAt(0)
-            if (!isNull) nn(i) += 1
-            val counts = if (f.ignoreNulls) !isNull else true
-            if (counts) {
-              if (f.fromEnd) {
-                heads(i) += v.copy()
-                if (heads(i).length > headCaps(i)) heads(i).remove(0)
-              } else if (heads(i).length < headCaps(i)) {
-                heads(i) += v.copy()
-              }
-            }
-            i += 1
-          }
-          rows += 1
-        }
-        (rows, nn, heads.map(_.toArray))
-      })
-
+    val stats = edgeStats(rdd, funcsLocal.map(f =>
+      math.min(f.n.toLong, GlobalNthValueStrategy.maxN.toLong).toInt))
     val nParts = stats.length
-    val rowOffsets = stats.map(_._1).scanLeft(0L)(_ + _)
+    val rowOffsets = stats.map(_.rowsLast).scanLeft(0L)(_ + _)
     val nnOffsets: Array[Array[Long]] = Array.tabulate(nF) { i =>
-      stats.map(_._2(i)).scanLeft(0L)(_ + _)
+      stats.map(_.nnLast(i)).scanLeft(0L)(_ + _)
     }
     val totalRows = rowOffsets.last
 
@@ -678,7 +575,7 @@ case class GlobalNthValueExec(partition: Seq[Expression],
             // 1-based position from the START of the n-th-from-end candidate
             val pos = offs.last - f.n + 1
             val p = (0 until nParts).find(q => offs(q + 1) >= pos).get
-            val tail = stats(p)._3(i)
+            val tail = stats(p).candLast(i)
             // distance from p's last candidate; < n by construction
             val fromEndIdx = offs(p + 1) - pos
             if (fromEndIdx < tail.length)
@@ -691,7 +588,7 @@ case class GlobalNthValueExec(partition: Seq[Expression],
           } else {
             val p = (0 until nParts).find(q => offs(q + 1) >= f.n).get
             val local = f.n - offs(p) - 1
-            val head = stats(p)._3(i)
+            val head = stats(p).candLast(i)
             if (local < head.length) Some(head(local.toInt))
             else { needs += ((i, p, local)); None }
           }
@@ -794,33 +691,20 @@ case class GlobalNthValueExec(partition: Seq[Expression],
         // buffer one tie run at a time (the range exchange co-locates
         // equal keys); per-row snapshots keep mixed ROWS functions
         // per-row exact while RANGE functions share the run end
-        val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-        val sameRun = KeyRunEquality.create(keyExprs.map(_.dataType))
+        val runs = new Runs(iter, UnsafeProjection.create(keyExprs, childOutput),
+          KeyRunEquality.create(keyExprs.map(_.dataType)))
         new Iterator[InternalRow] {
-          private val run = new scala.collection.mutable.ArrayBuffer[InternalRow]
           private val rowIdxs = new scala.collection.mutable.ArrayBuffer[Long]
           private val rowNns = new scala.collection.mutable.ArrayBuffer[Array[Long]]
-          private var runPos = 0
-          private var pendingNext: InternalRow = _
 
           private def fillRun(): Unit = {
-            run.clear(); rowIdxs.clear(); rowNns.clear(); runPos = 0
-            if (pendingNext != null) { run += pendingNext; pendingNext = null }
-            else if (iter.hasNext) run += iter.next().copy()
-            else return
-            val runKey = keyProj(run.head).copy()
-            var done = false
-            while (!done && iter.hasNext) {
-              val r = iter.next().copy()
-              if (sameRun(keyProj(r), runKey)) run += r
-              else { pendingNext = r; done = true }
-            }
+            runs.fill(); rowIdxs.clear(); rowNns.clear()
             var j = 0
-            while (j < run.length) {
+            while (j < runs.rows.length) {
               gidx += 1
               var i = 0
               while (i < nF) {
-                if (!projs(i)(run(j)).isNullAt(0)) nnSeen(i) += 1
+                if (!projs(i)(runs.rows(j)).isNullAt(0)) nnSeen(i) += 1
                 i += 1
               }
               rowIdxs += gidx
@@ -829,21 +713,15 @@ case class GlobalNthValueExec(partition: Seq[Expression],
             }
           }
 
-          override def hasNext: Boolean =
-            runPos < run.length || pendingNext != null || iter.hasNext
+          override def hasNext: Boolean = runs.hasNext
 
           override def next(): InternalRow = {
-            if (runPos >= run.length) fillRun()
-            val row = run(runPos)
-            val vals = mkVals(rowIdxs(runPos), rowNns(runPos), gidx, nnSeen)
-            runPos += 1
-            outProj(joinOut(row, vals))
+            if (runs.exhausted) fillRun()
+            val vals = mkVals(rowIdxs(runs.pos), rowNns(runs.pos), gidx, nnSeen)
+            outProj(joinOut(runs.next(), vals))
           }
         }
       }
     }
   }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
 }

@@ -4,10 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, FrameLessOffsetWindowFunction, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Scale-safe planning for naive global lag()/lead() with IGNORE NULLS.
   *
@@ -52,7 +49,7 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
   */
-object GlobalOffsetIgnoreNullsStrategy extends SparkStrategy {
+object GlobalOffsetIgnoreNullsStrategy extends WindowFamily {
 
   private def funcOf(e: NamedExpression): Option[(Expression, Int, Expression)] =
     e match {
@@ -66,23 +63,14 @@ object GlobalOffsetIgnoreNullsStrategy extends SparkStrategy {
       case _ => None
     }
 
-  /** Per-expression categorizer for [[GlobalWindowSplit]]. */
-  private[plans] def rescuable(e: NamedExpression): Boolean = funcOf(e).isDefined
+  override def claims(e: NamedExpression): Boolean = funcOf(e).isDefined
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case w: logical.Window
-        if w.partitionSpec.forall(_.deterministic) && w.orderSpec.nonEmpty &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(funcOf(_).isDefined) &&
-          (w.partitionSpec.isEmpty || GlobalWindowGate.perKeyWorthwhile(w)) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean =>
-      val funcs = w.windowExpressions.map { e =>
-        val (input, off, dflt) = funcOf(e).get
-        GlobalOffsetIgnoreNullsExec.NnOffsetFunc(input, off, dflt, e.toAttribute)
-      }
-      GlobalOffsetIgnoreNullsExec(w.partitionSpec, w.orderSpec, funcs,
-        planLater(w.child)) :: Nil
-    case _ => Nil
+  override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] = {
+    val funcs = w.windowExpressions.map { e =>
+      val (input, off, dflt) = funcOf(e).get
+      GlobalOffsetIgnoreNullsExec.NnOffsetFunc(input, off, dflt, e.toAttribute)
+    }
+    Some(GlobalOffsetIgnoreNullsExec(w.partitionSpec, w.orderSpec, funcs, child))
   }
 }
 
@@ -104,19 +92,9 @@ case class GlobalOffsetIgnoreNullsExec(
     partition: Seq[Expression],
     order: Seq[SortOrder],
     funcs: Seq[GlobalOffsetIgnoreNullsExec.NnOffsetFunc],
-    child: SparkPlan) extends UnaryExecNode {
+    child: SparkPlan) extends GlobalWindowExec {
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
-
-  private def partOrders: Seq[SortOrder] =
-    partition.map(e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(partOrders ++ order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(partOrders ++ order)
-  override def outputOrdering: Seq[SortOrder] = partOrders ++ order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
@@ -171,60 +149,40 @@ case class GlobalOffsetIgnoreNullsExec(
         (firstG, curG, heads.map(_.toArray), tails.map(_.toArray))
       })
     val nParts = stats.length
-    val firstGroups: Array[UnsafeRow] = stats.map(_._1)
-    val lastGroups: Array[UnsafeRow] = stats.map(_._2)
-    // does the chain continue from task i-…'s LAST group into task p's
-    // FIRST group? (empty tasks pass the walk through, contributing
-    // nothing; a multi-group predecessor terminates the walk after its
-    // last-group tail)
-    def sameGroup(a: UnsafeRow, b: UnsafeRow): Boolean =
-      !keyGuard || (a != null && b != null && a.equals(b))
 
-    // stitch: per partition, each lag function's missing predecessor
-    // values (newest-first walk over earlier same-group tails) and each
-    // lead function's successor values (oldest-first walk over later
-    // same-group heads)
-    def predecessorVals(p: Int, f: Int): Array[UnsafeRow] = {
-      val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-      val g = firstGroups(p)
-      if (g == null && keyGuard) return Array.empty
-      var i = p - 1
-      var open = true
-      while (i >= 0 && out.length < needs(f) && open) {
-        if (firstGroups(i) != null) { // skip empty tasks
-          if (sameGroup(lastGroups(i), g)) {
-            val t = stats(i)._4(f)
-            var j = t.length - 1
-            while (j >= 0 && out.length < needs(f)) { out += t(j); j -= 1 }
-            // the walk continues past i only if i is single-group
-            open = sameGroup(firstGroups(i), g)
-          } else open = false
+    // stitch along each edge-group chain ([[EdgeChains]]; empty tasks
+    // pass through, a multi-group task ends the chain): per partition,
+    // each function's missing predecessor values (newest-first over the
+    // chain's earlier LAST-group tails) and successor values
+    // (oldest-first over its later FIRST-group heads)
+    val preVals = Array.fill(nParts, nFuncs)(Array.empty[UnsafeRow])
+    val sucVals = Array.fill(nParts, nFuncs)(Array.empty[UnsafeRow])
+    for (chain <- EdgeChains(stats.map(_._1), stats.map(_._2));
+         i <- chain.indices; f <- 0 until nFuncs) {
+      val s = chain(i)
+      if (s.isFirst) {
+        val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
+        var j = i - 1
+        while (j >= 0 && out.length < needs(f)) {
+          val t = stats(chain(j).p)._4(f)
+          var k = t.length - 1
+          while (k >= 0 && out.length < needs(f)) { out += t(k); k -= 1 }
+          j -= 1
         }
-        i -= 1
+        preVals(s.p)(f) = out.reverse.toArray // oldest-to-newest
       }
-      out.reverse.toArray // oldest-to-newest
-    }
-    def successorVals(p: Int, f: Int): Array[UnsafeRow] = {
-      val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-      val g = lastGroups(p)
-      if (g == null && keyGuard) return Array.empty
-      var i = p + 1
-      var open = true
-      while (i < nParts && out.length < needs(f) && open) {
-        if (firstGroups(i) != null) {
-          if (sameGroup(firstGroups(i), g)) {
-            val h = stats(i)._3(f)
-            var j = 0
-            while (j < h.length && out.length < needs(f)) { out += h(j); j += 1 }
-            open = sameGroup(lastGroups(i), g)
-          } else open = false
+      if (s.isLast) {
+        val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
+        var j = i + 1
+        while (j < chain.length && out.length < needs(f)) {
+          val h = stats(chain(j).p)._3(f)
+          var k = 0
+          while (k < h.length && out.length < needs(f)) { out += h(k); k += 1 }
+          j += 1
         }
-        i += 1
+        sucVals(s.p)(f) = out.toArray
       }
-      out.toArray
     }
-    val preVals = Array.tabulate(nParts, nFuncs)(predecessorVals)
-    val sucVals = Array.tabulate(nParts, nFuncs)(successorVals)
 
     // each task ships only its own edge value windows ([[PerPartition.stitch]])
     PerPartition.stitch(rdd, (0 until nParts).map(p =>
@@ -382,7 +340,4 @@ case class GlobalOffsetIgnoreNullsExec(
       }
     }
   }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
 }

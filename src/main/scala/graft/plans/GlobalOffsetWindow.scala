@@ -2,12 +2,9 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Expression, FrameLessOffsetWindowFunction, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Alias, Expression, FrameLessOffsetWindowFunction, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, UnsafeProjection, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Scale-safe planning for naive lag()/lead().
   *
@@ -47,7 +44,7 @@ import org.apache.spark.sql.internal.SQLConf
   * Opt-out: shares `spark.graft.globalRowNumber.enabled` with the
   * ranking rescue — one switch restores every built-in global window.
   */
-object GlobalOffsetWindowStrategy extends SparkStrategy {
+object GlobalOffsetWindowStrategy extends WindowFamily {
 
   private def funcOf(e: NamedExpression): Option[(Expression, Int, Expression)] =
     e match {
@@ -60,23 +57,14 @@ object GlobalOffsetWindowStrategy extends SparkStrategy {
       case _ => None
     }
 
-  /** Per-expression categorizer for [[GlobalWindowSplit]]. */
-  private[plans] def rescuable(e: NamedExpression): Boolean = funcOf(e).isDefined
+  override def claims(e: NamedExpression): Boolean = funcOf(e).isDefined
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case w: logical.Window
-        if w.partitionSpec.forall(_.deterministic) && w.orderSpec.nonEmpty &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(funcOf(_).isDefined) &&
-          (w.partitionSpec.isEmpty || GlobalWindowGate.perKeyWorthwhile(w)) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean =>
-      val funcs = w.windowExpressions.map { e =>
-        val (input, off, dflt) = funcOf(e).get
-        GlobalOffsetWindowExec.OffsetFunc(input, off, dflt, e.toAttribute)
-      }
-      GlobalOffsetWindowExec(w.partitionSpec, w.orderSpec, funcs,
-        planLater(w.child)) :: Nil
-    case _ => Nil
+  override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] = {
+    val funcs = w.windowExpressions.map { e =>
+      val (input, off, dflt) = funcOf(e).get
+      GlobalOffsetWindowExec.OffsetFunc(input, off, dflt, e.toAttribute)
+    }
+    Some(GlobalOffsetWindowExec(w.partitionSpec, w.orderSpec, funcs, child))
   }
 }
 
@@ -90,15 +78,12 @@ object GlobalOffsetWindowExec {
 }
 
 /** Physical distributed lag/lead: range-shuffled sorted input + one
-  * boundary job. The boundary job collects, per partition, its first
-  * maxLead and last maxLag rows (copies of full child rows — offset
-  * functions may reference any column); the driver stitches each
-  * partition's missing neighbors from them. The main pass then runs a
-  * sliding window entirely partition-locally: a ring of the trailing
-  * maxLag rows (seeded with the stitched predecessor tail) and a
-  * lookahead queue of the next maxLead rows (extended with the stitched
-  * successor head). Per-partition memory is (maxLag + maxLead + 1)
-  * rows — constant, never data-sized. In partitioned mode the neighbor
+  * boundary job ([[EdgeRows]]: each partition's first maxLead and last
+  * maxLag rows, stitched into each partition's missing neighbors on the
+  * driver). The main pass then runs a sliding window entirely
+  * partition-locally over an [[EdgeRows.Cursor]]: per-partition memory
+  * is (maxLag + maxLead + 1) rows — constant, never data-sized. In
+  * partitioned mode the neighbor
   * additionally must carry the current row's partition key (the sort
   * makes a key's rows contiguous, so the check is one byte-equality);
   * otherwise the function's default applies — WindowExec's
@@ -106,19 +91,9 @@ object GlobalOffsetWindowExec {
 case class GlobalOffsetWindowExec(partition: Seq[Expression],
                                   order: Seq[SortOrder],
                                   funcs: Seq[GlobalOffsetWindowExec.OffsetFunc],
-                                  child: SparkPlan) extends UnaryExecNode {
+                                  child: SparkPlan) extends GlobalWindowExec {
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
-
-  private def partOrders: Seq[SortOrder] =
-    partition.map(e => SortOrder(e, Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(partOrders ++ order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(partOrders ++ order)
-  override def outputOrdering: Seq[SortOrder] = partOrders ++ order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
@@ -130,66 +105,13 @@ case class GlobalOffsetWindowExec(partition: Seq[Expression],
     val maxLead = math.max(0, funcsLocal.map(_.offset).max)
     val rdd = child.execute()
 
-    // pass 1: per-partition (count, first maxLead rows, last maxLag
-    // rows) — copied UnsafeRows, a few per partition. Reads the
-    // materialized shuffle, not upstream lineage.
-    val stats: Array[(Long, Array[UnsafeRow], Array[UnsafeRow])] =
-      rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-        val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
-        var cnt = 0L
-        val head = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-        // ring of the last maxLag rows
-        val tail = new Array[UnsafeRow](math.max(maxLag, 1))
-        while (iter.hasNext) {
-          val u = toUnsafe(iter.next())
-          if (cnt < maxLead) head += u.copy()
-          if (maxLag > 0) tail((cnt % maxLag).toInt) = u.copy()
-          cnt += 1
-        }
-        val tailSeq =
-          if (maxLag == 0 || cnt == 0) Array.empty[UnsafeRow]
-          else {
-            val n = math.min(cnt, maxLag).toInt
-            // oldest-to-newest of the last n rows
-            Array.tabulate(n)(i => tail(((cnt - n + i) % maxLag).toInt))
-          }
-        (cnt, head.toArray, tailSeq)
-      })
-    val counts = stats.map(_._1)
+    // edge rows: a partition with fewer rows than the offset is walked
+    // through. Stitched rows may carry a FOREIGN partition key — the key
+    // guard in pass 2 turns those into defaults.
+    val (counts, preTails, sucHeads) = EdgeRows(rdd, childOutput, maxLag, maxLead)
     val rowOffsets = counts.scanLeft(0L)(_ + _)
     val totalRows = rowOffsets.last
-    val nParts = stats.length
-
-    // stitch each partition's missing neighbors. A partition with fewer
-    // rows than the offset is walked through — but no partition ever
-    // contributes more than its first maxLead / last maxLag rows, which
-    // is exactly what was collected. Stitched rows may carry a FOREIGN
-    // partition key — the key guard in pass 2 turns those into defaults.
-    def predecessorTail(p: Int): Array[UnsafeRow] = {
-      val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-      var i = p - 1
-      while (i >= 0 && out.length < maxLag) {
-        val t = stats(i)._3
-        // prepend newest-missing-first from the end of partition i's tail
-        var j = t.length - 1
-        while (j >= 0 && out.length < maxLag) { out += t(j); j -= 1 }
-        i -= 1
-      }
-      out.reverse.toArray // oldest-to-newest
-    }
-    def successorHead(p: Int): Array[UnsafeRow] = {
-      val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-      var i = p + 1
-      while (i < nParts && out.length < maxLead) {
-        val h = stats(i)._2
-        var j = 0
-        while (j < h.length && out.length < maxLead) { out += h(j); j += 1 }
-        i += 1
-      }
-      out.toArray
-    }
-    val preTails = Array.tabulate(nParts)(predecessorTail)
-    val sucHeads = Array.tabulate(nParts)(successorHead)
+    val nParts = counts.length
 
     // pass 2: sliding window per partition; each task ships only its
     // own offsets and edge rows ([[PerPartition.stitch]])
@@ -212,23 +134,16 @@ case class GlobalOffsetWindowExec(partition: Seq[Expression],
       val rowKeyProj = UnsafeProjection.create(partExprs, childOutput)
       val neighKeyProj = UnsafeProjection.create(partExprs, childOutput)
 
-      // trailing ring seeded with the stitched predecessor rows
-      val lagBuf = new scala.collection.mutable.ArrayDeque[InternalRow]
-      preTail.foreach(lagBuf += _)
-      // lookahead: partition rows then stitched successor rows
-      val source: Iterator[InternalRow] =
-        iter.map(_.copy()) ++ sucHead.iterator
-      val leadBuf = new scala.collection.mutable.ArrayDeque[InternalRow]
+      val rows = new EdgeRows.Cursor(iter, partCount, preTail, sucHead, maxLag, maxLead)
+      val lagBuf = rows.lag
+      val leadBuf = rows.lead
 
       new Iterator[InternalRow] {
-        private var emitted = 0L
-        override def hasNext: Boolean = emitted < partCount
+        override def hasNext: Boolean = rows.hasNext
         override def next(): InternalRow = {
-          while (leadBuf.length < maxLead + 1 && source.hasNext)
-            leadBuf += source.next()
-          val row = leadBuf.head
+          val row = rows.current()
           val rowKey = if (keyGuard) rowKeyProj(row) else null
-          val globalIdx = rowOffset + emitted
+          val globalIdx = rowOffset + rows.emitted
           var i = 0
           while (i < funcsLocal.length) {
             val off = funcsLocal(i).offset
@@ -254,19 +169,10 @@ case class GlobalOffsetWindowExec(partition: Seq[Expression],
             i += 1
           }
           val out = proj(joined(row, valueRow))
-          // slide: current row becomes lag history
-          if (maxLag > 0) {
-            lagBuf += row
-            if (lagBuf.length > maxLag) lagBuf.removeHead()
-          }
-          leadBuf.removeHead()
-          emitted += 1
+          rows.advance()
           out
         }
       }
     }
   }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
 }

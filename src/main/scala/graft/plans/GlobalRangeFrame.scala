@@ -2,12 +2,10 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CurrentRow, Expression, GenericInternalRow, JoinedRow, MutableProjection, NamedExpression, RangeFrame, SortOrder, SpecificInternalRow, SpecifiedWindowFrame, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CurrentRow, Expression, GenericInternalRow, JoinedRow, NamedExpression, RangeFrame, SortOrder, SpecifiedWindowFrame, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ByteType, CalendarIntervalType, DataType, DateType, DayTimeIntervalType, IntegerType, LongType, ShortType, TimestampType, YearMonthIntervalType}
 import org.apache.spark.unsafe.types.CalendarInterval
@@ -96,7 +94,7 @@ import org.apache.spark.unsafe.types.CalendarInterval
   *
   * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
   */
-object GlobalRangeFrameStrategy extends SparkStrategy {
+object GlobalRangeFrameStrategy extends WindowFamily {
   import GlobalRangeFrameExec.RangeAgg
 
   /** Scoped parity conf (default true): set false to decline ONLY
@@ -208,9 +206,10 @@ object GlobalRangeFrameStrategy extends SparkStrategy {
     case _ => None
   }
 
-  /** Per-expression / node-level categorizers for [[GlobalWindowSplit]]. */
-  private[plans] def rescuable(e: NamedExpression): Boolean = funcOf(e).isDefined
-  private[plans] def orderRescuable(w: logical.Window): Boolean =
+  override def claims(e: NamedExpression): Boolean = funcOf(e).isDefined
+
+  /** ONE order key of an integral, timestamp, date or short-decimal type. */
+  override def claimsNode(w: logical.Window): Boolean =
     w.orderSpec.length == 1 &&
       (w.orderSpec.head.child.dataType match {
         case IntegerType | LongType | TimestampType | DateType => true
@@ -219,17 +218,9 @@ object GlobalRangeFrameStrategy extends SparkStrategy {
         case _ => false
       })
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case w: logical.Window
-        if orderRescuable(w) && w.partitionSpec.forall(_.deterministic) &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(funcOf(_).isDefined) &&
-          (w.partitionSpec.isEmpty || GlobalWindowGate.perKeyWorthwhile(w)) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean =>
-      GlobalRangeFrameExec(w.partitionSpec, w.orderSpec,
-        w.windowExpressions.map(funcOf(_).get), planLater(w.child)) :: Nil
-    case _ => Nil
-  }
+  override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] =
+    Some(GlobalRangeFrameExec(w.partitionSpec, w.orderSpec,
+      w.windowExpressions.map(funcOf(_).get), child))
 }
 
 object GlobalRangeFrameExec {
@@ -276,20 +267,10 @@ object GlobalRangeFrameExec {
 case class GlobalRangeFrameExec(partition: Seq[Expression],
                                 order: Seq[SortOrder],
                                 funcs: Seq[GlobalRangeFrameExec.RangeAgg],
-                                child: SparkPlan) extends UnaryExecNode {
+                                child: SparkPlan) extends GlobalWindowExec {
   import GlobalRangeFrameExec.EdgeStats
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
-
-  private def partOrders: Seq[SortOrder] =
-    partition.map(e => SortOrder(e, Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(partOrders ++ order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(partOrders ++ order)
-  override def outputOrdering: Seq[SortOrder] = partOrders ++ order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     import GlobalRangeFrameExec.{satAdd, satSub}
@@ -315,7 +296,7 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
     val anyMonths = funcsLocal.exists(f => f.xm != 0 || f.ym != 0)
     val zoneIdStr = SQLConf.get.sessionLocalTimeZone
     // DateType is physically an int (days since epoch); DECIMAL keys
-    // read as their unscaled Long (precision ≤ 18 per orderRescuable)
+    // read as their unscaled Long (precision ≤ 18 per claimsNode)
     val keyKind = keyExpr.dataType match {
       case IntegerType | DateType => 0
       case _: org.apache.spark.sql.types.DecimalType => 2
@@ -386,35 +367,27 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
           firstKey, lastKey, tail.toArray, head.toArray)
       })
     val nParts = stats.length
-    // stitch (predecessor side): partition p receives every predecessor
-    // row with key ≥ minKey(p) − maxX from predecessors whose LAST
-    // group equals p's FIRST group (a subset of the collected tails,
-    // since minKey(p) ≥ every same-group predecessor maxKey; the sort
-    // guarantees a group occupying both q and p fills everything
-    // between, so the equality filter IS the contiguity filter)
-    val preTails: Array[Array[(Long, UnsafeRow)]] = Array.tabulate(nParts) { p =>
-      (stats(p).firstGroup, stats(p).firstKey) match {
-        case (Some(fg), Some(minKey)) if maxX > 0 =>
-          val cut = satSub(minKey, maxX)
-          (0 until p).iterator
-            .filter(q => stats(q).lastGroup.exists(_.equals(fg)))
-            .flatMap(q => stats(q).tail.iterator)
-            .filter(_._1 >= cut).toArray
-        case _ => Array.empty[(Long, UnsafeRow)]
+    // stitch along each edge-group chain ([[EdgeChains]] — the sort
+    // guarantees a group occupying two tasks fills everything between):
+    // partition p receives every row with key ≥ minKey(p) − maxX from
+    // the chain's tails before its FIRST group (a subset of the
+    // collected tails, since minKey(p) ≥ every same-group predecessor
+    // maxKey), and every row with key ≤ maxKey(p) + maxY from the
+    // chain's heads after its LAST group, in key order
+    val preTails = Array.fill(nParts)(Array.empty[(Long, UnsafeRow)])
+    val postHeads = Array.fill(nParts)(Array.empty[(Long, UnsafeRow)])
+    for (chain <- EdgeChains(stats.map(_.firstGroup.orNull), stats.map(_.lastGroup.orNull));
+         i <- chain.indices) {
+      val s = chain(i)
+      if (s.isFirst && maxX > 0) stats(s.p).firstKey.foreach { minKey =>
+        val cut = satSub(minKey, maxX)
+        preTails(s.p) = chain.take(i).iterator
+          .flatMap(q => stats(q.p).tail.iterator).filter(_._1 >= cut).toArray
       }
-    }
-    // stitch (successor side): partition p receives every successor row
-    // with key ≤ maxKey(p) + maxY from successors whose FIRST group
-    // equals p's LAST group, in key order
-    val postHeads: Array[Array[(Long, UnsafeRow)]] = Array.tabulate(nParts) { p =>
-      (stats(p).lastGroup, stats(p).lastKey) match {
-        case (Some(lg), Some(maxKey)) if maxY > 0 =>
-          val cut = satAdd(maxKey, maxY)
-          (p + 1 until nParts).iterator
-            .filter(q => stats(q).firstGroup.exists(_.equals(lg)))
-            .flatMap(q => stats(q).head.iterator)
-            .filter(_._1 <= cut).toArray
-        case _ => Array.empty[(Long, UnsafeRow)]
+      if (s.isLast && maxY > 0) stats(s.p).lastKey.foreach { maxKey =>
+        val cut = satAdd(maxKey, maxY)
+        postHeads(s.p) = chain.drop(i + 1).iterator
+          .flatMap(q => stats(q.p).head.iterator).filter(_._1 <= cut).toArray
       }
     }
     val firstGroups: Array[UnsafeRow] = stats.map(_.firstGroup.orNull)
@@ -425,20 +398,7 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
     PerPartition.stitch(rdd, (0 until nParts).map(p =>
       (preTails(p), postHeads(p), firstGroups(p), lastGroups(p)))) { (slice, iter) =>
       val (preTail, post, firstGroup, lastGroup) = slice
-      val buffers = funcsLocal.map(f =>
-        new SpecificInternalRow(f.agg.aggBufferAttributes.map(_.dataType)))
-      val inits = funcsLocal.zipWithIndex.map { case (f, i) =>
-        val p = MutableProjection.create(f.agg.initialValues, Nil)
-        p.target(buffers(i)); p
-      }
-      val updates = funcsLocal.zipWithIndex.map { case (f, i) =>
-        val p = MutableProjection.create(f.agg.updateExpressions,
-          f.agg.aggBufferAttributes ++ childOutput)
-        p.target(buffers(i)); p
-      }
-      val evals = funcsLocal.map(f =>
-        UnsafeProjection.create(Seq(f.agg.evaluateExpression),
-          f.agg.aggBufferAttributes))
+      val (buffers, inits, updates, evals) = FrameFolds(funcsLocal.map(_.agg), childOutput)
       val attrTypes = funcsLocal.map(_.attr.dataType)
       val keyProj = UnsafeProjection.create(Seq(keyExpr), childOutput)
       val partProj = UnsafeProjection.create(partExprs, childOutput)
@@ -632,6 +592,4 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
     }
   }
 
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
 }

@@ -2,12 +2,9 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CumeDist, DenseRank, Expression, GenericInternalRow, JoinedRow, Literal, NamedExpression, NTile, PercentRank, Rank, RowNumber, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CumeDist, DenseRank, Expression, GenericInternalRow, JoinedRow, Literal, NamedExpression, NTile, PercentRank, Rank, RowNumber, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.IntegerType
 
 /** Scale-safe planning for naive ranking windows.
@@ -19,13 +16,13 @@ import org.apache.spark.sql.types.IntegerType
   * task — the very anti-pattern the reference's round-robin counter
   * translation avoids with the two-pass global-index plan
   * (keys/Keys.scala RoundRobin, pipeline.Corpus.withGlobalIndex). Users
-  * writing plain SQL don't know that; this strategy makes the naive
+  * writing plain SQL don't know that; this family makes the naive
   * query plan scale anyway.
   *
-  * [[GlobalRowNumberStrategy]] matches a Window node whose expressions
-  * are ALL drawn from the six ranking functions over an empty partition
-  * spec, and plans [[GlobalRowNumberExec]] instead of WindowExec. The
-  * exec requires an [[OrderedDistribution]] — EnsureRequirements
+  * This family claims the six ranking functions, and
+  * [[GlobalWindowStrategy]] plans a node of them as
+  * [[GlobalRowNumberExec]] instead of WindowExec. The exec requires an
+  * ordered distribution — EnsureRequirements
   * inserts the same range exchange a global SORT uses (fully parallel)
   * — and assigns values with the two-pass scheme: one tiny job over the
   * materialized shuffle computes per-partition (row count,
@@ -64,7 +61,7 @@ import org.apache.spark.sql.types.IntegerType
   *   cume_dist    = (rowsBefore + tieRunEnd) / N
   *   ntile(k)     = bucket(rowsBefore + localIdx, N, k)
   * need no boundary key exchange; N = total rows from the stats pass
-  * in global mode, the group total (driver segment merge / local slice
+  * in global mode, the group total (driver chain merge / local slice
   * length) per key.
   * cume_dist is the one function needing LOOKAHEAD (a row's value
   * depends on where its tie run ends), so when present the pass buffers
@@ -75,10 +72,11 @@ import org.apache.spark.sql.types.IntegerType
   * canonicalizes NaN) and via the SQL ordering when a FLOAT/DOUBLE key
   * is present (`-0.0` and `0.0` are peers; see [[KeyRunEquality]]).
   *
-  * Opt-out: set `spark.graft.globalRowNumber.enabled=false` to fall
-  * back to the built-in single-task WindowExec.
+  * Opt-out: set `spark.graft.globalRowNumber.enabled=false` ([[ConfKey]],
+  * read by [[GlobalWindowStrategy]] for every family) to fall back to
+  * the built-in single-task WindowExec.
   */
-object GlobalRowNumberStrategy extends SparkStrategy {
+object GlobalRowNumberStrategy extends WindowFamily {
 
   val ConfKey = "spark.graft.globalRowNumber.enabled"
   import GlobalRowNumberExec._
@@ -95,34 +93,14 @@ object GlobalRowNumberStrategy extends SparkStrategy {
     case _ => None
   }
 
-  /** Per-expression categorizer for [[GlobalWindowSplit]]. */
-  private[plans] def rescuable(e: NamedExpression): Boolean = funcOf(e).isDefined
-
-  /** All six ranking functions are PARTITION BY-rescuable: group
+  /** All six ranking functions are PARTITION BY-rescuable too: group
     * totals for percent_rank/cume_dist/ntile come from the driver's
-    * edge-segment merge (groups span tasks only through edges). */
-  private[plans] def rescuablePartitioned(e: NamedExpression): Boolean =
-    funcOf(e).isDefined
+    * edge-chain merge (groups span tasks only through edges). */
+  override def claims(e: NamedExpression): Boolean = funcOf(e).isDefined
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case w: logical.Window
-        if w.partitionSpec.isEmpty && w.orderSpec.nonEmpty &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(funcOf(_).isDefined) &&
-          SQLConf.get.getConfString(ConfKey, "true").toBoolean =>
-      val funcs = w.windowExpressions.map(e => (funcOf(e).get, e.toAttribute))
-      GlobalRowNumberExec(Nil, w.orderSpec, funcs, planLater(w.child)) :: Nil
-    case w: logical.Window
-        if w.partitionSpec.nonEmpty && w.partitionSpec.forall(_.deterministic) &&
-          w.orderSpec.nonEmpty && w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(rescuablePartitioned) &&
-          GlobalWindowGate.perKeyWorthwhile(w) &&
-          SQLConf.get.getConfString(ConfKey, "true").toBoolean =>
-      val funcs = w.windowExpressions.map(e => (funcOf(e).get, e.toAttribute))
-      GlobalRowNumberExec(w.partitionSpec, w.orderSpec, funcs,
-        planLater(w.child)) :: Nil
-    case _ => Nil
-  }
+  override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] =
+    Some(GlobalRowNumberExec(w.partitionSpec, w.orderSpec,
+      w.windowExpressions.map(e => (funcOf(e).get, e.toAttribute)), child))
 }
 
 object GlobalRowNumberExec {
@@ -136,7 +114,7 @@ object GlobalRowNumberExec {
 
   /** Per-task edge summary for the group chain: first/last partition-key
     * groups, the FIRST group's row count (for the driver's group-total
-    * segment merge) and the LAST group's (row count, tie-run count).
+    * chain merge) and the LAST group's (row count, tie-run count).
     * With no partition spec every task is one group and the chain walk
     * degenerates to the classic prefix sums. */
   private[plans] case class RankEdge(
@@ -157,20 +135,10 @@ object GlobalRowNumberExec {
 case class GlobalRowNumberExec(partition: Seq[Expression],
                                order: Seq[SortOrder],
                                funcs: Seq[(GlobalRowNumberExec.RankFunc, Attribute)],
-                               child: SparkPlan) extends UnaryExecNode {
+                               child: SparkPlan) extends GlobalWindowExec {
   import GlobalRowNumberExec._
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_._2)
-
-  private def partOrders: Seq[SortOrder] =
-    partition.map(e => SortOrder(e, Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(partOrders ++ order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(partOrders ++ order)
-  override def outputOrdering: Seq[SortOrder] = partOrders ++ order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
@@ -224,88 +192,36 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
       })
     val nParts = stats.length
 
-    // driver chain walk: task p's seed counters are the carried totals
-    // of its first group exactly when that group CONTINUES the chain
-    // (group contiguity under the sort makes edge equality the only
-    // test); empty tasks carry through. Global mode = one group
-    // everywhere = the classic prefix sums.
+    // driver chain walk: task p's seed counters are the counts of the
+    // chain slices before its first group (a group continues across
+    // tasks only through their edges); a chain's summed slices are its
+    // group's total, the N of the per-key group-total functions — the
+    // whole table in global mode, where every task is one group. Driver
+    // state is a few longs per task, independent of data size.
     val seedRows = new Array[Long](nParts)
     val seedRuns = new Array[Long](nParts)
-    locally {
-      var chainG: UnsafeRow = null
-      var carryRows = 0L
-      var carryRuns = 0L
-      var p = 0
-      while (p < nParts) {
-        val e = stats(p)
-        val continues = chainG != null && e.firstGroup.exists(_.equals(chainG))
-        seedRows(p) = if (continues) carryRows else 0L
-        seedRuns(p) = if (continues) carryRuns else 0L
-        e.firstGroup match {
-          case Some(fg) =>
-            val singleGroup = e.lastGroup.exists(_.equals(fg))
-            if (continues && singleGroup) {
-              carryRows += e.cntLast; carryRuns += e.distLast
-            } else {
-              carryRows = e.cntLast; carryRuns = e.distLast
-            }
-            chainG = e.lastGroup.orNull
-          case None => () // empty task: the chain passes through
+    val firstTotal = new Array[Long](nParts)
+    val lastTotal = new Array[Long](nParts)
+    EdgeChains(stats.map(_.firstGroup.orNull), stats.map(_.lastGroup.orNull)).foreach {
+      chain =>
+        var rows = 0L
+        var runs = 0L
+        chain.foreach { s =>
+          if (s.isFirst) { seedRows(s.p) = rows; seedRuns(s.p) = runs }
+          val e = stats(s.p)
+          if (s.isLast) { rows += e.cntLast; runs += e.distLast }
+          else rows += e.cntFirst
         }
-        p += 1
-      }
+        chain.foreach { s =>
+          if (s.isFirst) firstTotal(s.p) = rows
+          if (s.isLast) lastTotal(s.p) = rows
+        }
     }
     val firstGroups: Array[UnsafeRow] = stats.map(_.firstGroup.orNull)
-    // N for percent_rank/cume_dist/ntile — the whole table in global
-    // mode (each task is one group, cntLast is its full count)
     val totalRows = stats.map(_.cntLast).sum
-
-    // group totals for the per-key group-total functions: a group spans
-    // tasks only through task EDGES (groups are contiguous under the
-    // sort), so merging ADJACENT edge slices with equal keys yields the
-    // full total of every task-crossing group; interior groups never
-    // appear here — pass 2 measures them locally. Driver state is two
-    // longs per task, independent of data size.
     val needTotals = keyGuard && modes.exists {
       case PercentRankF | CumeDistF | _: NTileF => true
       case _ => false
-    }
-    val firstTotal = new Array[Long](nParts)
-    val lastTotal = new Array[Long](nParts)
-    if (needTotals) {
-      // flatten each task's edge groups into ordered segments
-      case class Seg(p: Int, isFirst: Boolean, isLast: Boolean,
-                     g: UnsafeRow, cnt: Long)
-      val segs = new scala.collection.mutable.ArrayBuffer[Seg]
-      var p = 0
-      while (p < nParts) {
-        val e = stats(p)
-        e.firstGroup.foreach { fg =>
-          if (e.lastGroup.exists(_.equals(fg)))
-            segs += Seg(p, isFirst = true, isLast = true, fg, e.cntLast)
-          else {
-            segs += Seg(p, isFirst = true, isLast = false, fg, e.cntFirst)
-            segs += Seg(p, isFirst = false, isLast = true,
-              e.lastGroup.get, e.cntLast)
-          }
-        }
-        p += 1
-      }
-      var i = 0
-      while (i < segs.length) {
-        var j = i + 1
-        var total = segs(i).cnt
-        while (j < segs.length && segs(j).g.equals(segs(i).g)) {
-          total += segs(j).cnt; j += 1
-        }
-        var k = i
-        while (k < j) {
-          if (segs(k).isFirst) firstTotal(segs(k).p) = total
-          if (segs(k).isLast) lastTotal(segs(k).p) = total
-          k += 1
-        }
-        i = j
-      }
     }
 
     // int-typed ranks (row_number/rank/dense_rank/ntile are IntegerType,
@@ -313,7 +229,7 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
     // silently wraps; for GLOBAL ranks the stats pass already knows N —
     // refuse HERE, at the driver, before any output work starts. Per-key
     // ranks are bounded by the largest group: task-crossing groups are
-    // checked here via the segment totals; interior groups rely on the
+    // checked here via the chain totals; interior groups rely on the
     // per-row toIntExact, which still fails loudly, mid-task.
     val intRanked = modes.exists {
       case RowNumF | RankF | DenseRankF | _: NTileF => true
@@ -406,41 +322,26 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
         // possibly mixed with the counter functions): buffer ONE GROUP
         // at a time — the granularity WindowExec buffers at, but per
         // range-slice of the key instead of per whole hash partition.
-        // The first group's total comes from the driver's segment
-        // merge (it may continue a chain from the left/right); the
-        // last group's likewise; interior groups are whole by
-        // contiguity, so their total is the slice length.
+        // The first and last groups' totals come from the driver's
+        // chain merge (they may continue into neighbouring tasks);
+        // interior groups are whole by contiguity, so their total is
+        // the slice length.
+        val groups = new Runs(iter, groupProj)
         new Iterator[InternalRow] {
-          private val buf = new scala.collection.mutable.ArrayBuffer[InternalRow]
           private var starts: Array[Int] = Array.emptyIntArray
           private var ends: Array[Int] = Array.emptyIntArray
           private var denses: Array[Long] = Array.emptyLongArray
-          private var bufPos = 0
-          private var offset = 0L    // group-relative index of buf(0)
+          private var offset = 0L // group-relative index of the group's first row
           private var groupN = 0L
-          private var pendingNext: InternalRow = _
-          private var firstGroupOfTask = true
 
           private def fillGroup(): Unit = {
-            buf.clear(); bufPos = 0
-            if (pendingNext != null) { buf += pendingNext; pendingNext = null }
-            else if (iter.hasNext) buf += iter.next().copy()
-            else return
-            val g = groupProj(buf.head).copy()
-            var done = false
-            while (!done && iter.hasNext) {
-              val r = iter.next().copy()
-              if (groupProj(r).equals(g)) buf += r
-              else { pendingNext = r; done = true }
-            }
-            val isFirst = firstGroupOfTask
-            firstGroupOfTask = false
-            val isLast = pendingNext == null && !iter.hasNext
-            offset = if (isFirst) seedRow else 0L
-            val denseBase = if (isFirst) seedRun else 0L
+            groups.fill()
+            val buf = groups.rows
+            offset = if (groups.isFirst) seedRow else 0L
+            val denseBase = if (groups.isFirst) seedRun else 0L
             groupN =
-              if (isFirst) firstTotalP
-              else if (isLast) lastTotalP
+              if (groups.isFirst) firstTotalP
+              else if (groups.isLast) lastTotalP
               else buf.length.toLong
             if (needKeys) {
               // one forward walk marks run starts + dense counters, one
@@ -474,19 +375,16 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
             }
           }
 
-          override def hasNext: Boolean =
-            bufPos < buf.length || pendingNext != null || iter.hasNext
+          override def hasNext: Boolean = groups.hasNext
 
           override def next(): InternalRow = {
-            if (bufPos >= buf.length) fillGroup()
-            val i = bufPos
-            val out =
-              if (needKeys)
-                emit(buf(i), offset + i, offset + starts(i),
-                  offset + ends(i), denses(i), groupN)
-              else emit(buf(i), offset + i, offset + i, offset + i, 0L, groupN)
-            bufPos += 1
-            out
+            if (groups.exhausted) fillGroup()
+            val i = groups.pos
+            val row = groups.next()
+            if (needKeys)
+              emit(row, offset + i, offset + starts(i),
+                offset + ends(i), denses(i), groupN)
+            else emit(row, offset + i, offset + i, offset + i, 0L, groupN)
           }
         }
       } else if (!needKeys && !keyGuard) {
@@ -512,40 +410,16 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
         }
       } else {
         // cume_dist (global only) needs the run END: buffer one tie run
-        // at a time (rows must be copied — the scan iterator reuses its
-        // row). Memory is bounded by the largest tie class, the same
-        // granularity WindowExec buffers at, but per-partition.
+        // at a time; memory is bounded by the largest tie class
+        val runs = new Runs(iter, keyProj, sameRun)
+        var runStart = 0L
         new Iterator[InternalRow] {
-          private val buf = new scala.collection.mutable.ArrayBuffer[InternalRow]
-          private var bufPos = 0
-          private var runStart = 0L
-
-          private def fillRun(): Unit = {
-            buf.clear(); bufPos = 0
-            if (pendingNext != null) { buf += pendingNext; pendingNext = null }
-            else if (iter.hasNext) buf += iter.next().copy()
-            else return
-            runStart = cnt
-            dense += 1
-            val runKey = keyProj(buf.head).copy()
-            var done = false
-            while (!done && iter.hasNext) {
-              val r = iter.next().copy()
-              if (sameRun(keyProj(r), runKey)) buf += r
-              else { pendingNext = r; done = true }
-            }
-          }
-          private var pendingNext: InternalRow = _
-
-          override def hasNext: Boolean =
-            bufPos < buf.length || pendingNext != null || iter.hasNext
+          override def hasNext: Boolean = runs.hasNext
 
           override def next(): InternalRow = {
-            if (bufPos >= buf.length) fillRun()
-            val row = buf(bufPos)
-            val out = emit(row, cnt, runStart, runStart + buf.length - 1,
-              dense, totalRows)
-            bufPos += 1
+            if (runs.exhausted) { runs.fill(); runStart = cnt; dense += 1 }
+            val out = emit(runs.next(), cnt, runStart,
+              runStart + runs.rows.length - 1, dense, totalRows)
             cnt += 1
             out
           }
@@ -553,7 +427,4 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
       }
     }
   }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
 }

@@ -5,10 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CurrentRow, Descending, Expression, JoinedRow, MutableProjection, NamedExpression, NullsFirst, NullsLast, RangeFrame, SortOrder, SpecificInternalRow, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, DeclarativeAggregate, First, Last}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Scale-safe planning for naive global RUNNING aggregates.
   *
@@ -40,7 +37,7 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * SUFFIX frames — `CURRENT ROW → UNBOUNDED FOLLOWING`, the "remaining
   * total" query — are the mirror image and reuse this exec verbatim:
-  * the strategy flips every sort direction (and its null ordering), so
+  * the [[Suffix]] family flips every sort direction (and its null ordering), so
   * the range exchange enumerates the table in exact reverse order and
   * the same prefix scan computes the suffix. Frame SETS are identical
   * under reversal ([peer-start, end] read backwards is [start,
@@ -60,7 +57,7 @@ import org.apache.spark.sql.internal.SQLConf
   * Opt-out: shares `spark.graft.globalRowNumber.enabled` — one switch
   * restores every built-in global window.
   */
-object GlobalRunningAggStrategy extends SparkStrategy {
+object GlobalRunningAggStrategy {
   import GlobalRunningAggExec.RunningAgg
 
   private def funcOf(e: NamedExpression): Option[RunningAgg] = e match {
@@ -105,38 +102,27 @@ object GlobalRunningAggStrategy extends SparkStrategy {
     case _ => None
   }
 
-  /** Per-expression categorizers for [[GlobalWindowSplit]] — running and
-    * suffix frames need OPPOSITE exchange directions, so they are
-    * distinct split groups. */
-  private[plans] def rescuableRunning(e: NamedExpression): Boolean =
-    funcOf(e).isDefined
-  private[plans] def rescuableSuffix(e: NamedExpression): Boolean =
-    suffixOf(e).isDefined
-
   private def reversed(s: SortOrder): SortOrder = SortOrder(
     s.child,
     if (s.direction == Ascending) Descending else Ascending,
     if (s.nullOrdering == NullsFirst) NullsLast else NullsFirst,
     s.sameOrderExpressions)
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case w: logical.Window
-        if w.partitionSpec.forall(_.deterministic) && w.orderSpec.nonEmpty &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(funcOf(_).isDefined) &&
-          (w.partitionSpec.isEmpty || GlobalWindowGate.perKeyWorthwhile(w)) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean =>
-      GlobalRunningAggExec(w.partitionSpec, w.orderSpec,
-        w.windowExpressions.map(funcOf(_).get), planLater(w.child)) :: Nil
-    case w: logical.Window
-        if w.partitionSpec.forall(_.deterministic) && w.orderSpec.nonEmpty &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(suffixOf(_).isDefined) &&
-          (w.partitionSpec.isEmpty || GlobalWindowGate.perKeyWorthwhile(w)) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean =>
-      GlobalRunningAggExec(w.partitionSpec, w.orderSpec.map(reversed),
-        w.windowExpressions.map(suffixOf(_).get), planLater(w.child)) :: Nil
-    case _ => Nil
+  /** Prefix (running) frames. */
+  private[plans] object Running extends WindowFamily {
+    override def claims(e: NamedExpression): Boolean = funcOf(e).isDefined
+    override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] =
+      Some(GlobalRunningAggExec(w.partitionSpec, w.orderSpec,
+        w.windowExpressions.map(funcOf(_).get), child))
+  }
+
+  /** Suffix frames: the OPPOSITE exchange direction from running
+    * frames, so a family (and a split group) of their own. */
+  private[plans] object Suffix extends WindowFamily {
+    override def claims(e: NamedExpression): Boolean = suffixOf(e).isDefined
+    override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] =
+      Some(GlobalRunningAggExec(w.partitionSpec, w.orderSpec.map(reversed),
+        w.windowExpressions.map(suffixOf(_).get), child))
   }
 }
 
@@ -170,19 +156,9 @@ object GlobalRunningAggExec {
 case class GlobalRunningAggExec(partition: Seq[Expression],
                                 order: Seq[SortOrder],
                                 funcs: Seq[GlobalRunningAggExec.RunningAgg],
-                                child: SparkPlan) extends UnaryExecNode {
+                                child: SparkPlan) extends GlobalWindowExec {
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
-
-  private def partOrders: Seq[SortOrder] =
-    partition.map(e => SortOrder(e, Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(partOrders ++ order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(partOrders ++ order)
-  override def outputOrdering: Seq[SortOrder] = partOrders ++ order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   // concatenated buffer layout across all functions
   private def bufferAttrs = funcs.flatMap(_.agg.aggBufferAttributes)
@@ -243,43 +219,31 @@ case class GlobalRunningAggExec(partition: Seq[Expression],
           UnsafeProjection.create(bufAttrs, bufAttrs)(buf).copy())
       })
 
-    // driver chain-merge: walk the task partials once, carrying the
-    // merged buffer of the current edge group; task p's seed is the
-    // carry exactly when its first group CONTINUES the chain (the sort
-    // guarantees a group spanning tasks fills everything between, so
-    // edge-group equality is the only test needed). Empty tasks carry
-    // through. A few buffer-sized merges, independent of data size —
-    // and with no partition spec this IS the classic prefix merge.
+    // driver chain-merge: task p's seed is the merged partials of the
+    // chain slices before its first group (the sort guarantees a group
+    // spanning tasks fills everything between, so edge-group equality
+    // is the only test needed); other tasks start from the empty
+    // buffer. A few buffer-sized merges, independent of data size — and
+    // with no partition spec this IS the classic prefix merge.
     val nParts = stats.length
-    val seeds = new Array[UnsafeRow](nParts)
+    val toUnsafe = UnsafeProjection.create(bufAttrs, bufAttrs)
+    val initSeed = toUnsafe(newBuffer()).copy()
+    val seeds = Array.fill(nParts)(initSeed)
     locally {
       val carry = newBuffer()
-      val toUnsafe = UnsafeProjection.create(bufAttrs, bufAttrs)
       val merge = MutableProjection.create(mergeExprs, bufAttrs ++ inputBufAttrs)
       merge.target(carry)
       val reinit = MutableProjection.create(initExprs, Nil)
       reinit.target(carry)
       val joinBB = new JoinedRow
-      val initSeed = toUnsafe(newBuffer()).copy()
-      var chainGroup: UnsafeRow = null
-      var p = 0
-      while (p < nParts) {
-        val (firstG, lastG, partial) = stats(p)
-        seeds(p) =
-          if (chainGroup != null && firstG.exists(_.equals(chainGroup)))
-            toUnsafe(carry).copy()
-          else initSeed
-        firstG match {
-          case Some(fg) =>
-            // the task's last group either continues the chain (task is
-            // one group joining it) or starts a new one
-            if (!(chainGroup != null && fg.equals(chainGroup) &&
-                lastG.exists(_.equals(fg)))) reinit(InternalRow.empty)
-            merge(joinBB(carry, partial))
-            chainGroup = lastG.orNull
-          case None => () // empty task: the chain passes through
+      EdgeChains(stats.map(_._1.orNull), stats.map(_._2.orNull)).foreach { chain =>
+        reinit(InternalRow.empty)
+        chain.foreach { s =>
+          if (s.isFirst) seeds(s.p) = toUnsafe(carry).copy()
+          // pass 1 keeps the LAST group's partial only: a first-only
+          // slice ends its chain, so nothing after it reads its rows
+          if (s.isLast) merge(joinBB(carry, stats(s.p)._3))
         }
-        p += 1
       }
     }
     val firstGroups: Array[UnsafeRow] = stats.map(_._1.orNull)
@@ -326,28 +290,16 @@ case class GlobalRunningAggExec(partition: Seq[Expression],
         // emit. Mixed ROWS funcs keep their own per-row snapshots. Runs
         // are keyed on (group ⧺ order key), so a group change always
         // starts a new run — the buffer reset happens between runs.
-        val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-        val sameRun = KeyRunEquality.create(keyExprs.map(_.dataType))
+        val runs = new Runs(iter, UnsafeProjection.create(keyExprs, childOutput),
+          KeyRunEquality.create(keyExprs.map(_.dataType)))
         val attrTypes = funcs.map(_.attr.dataType).toArray
         new Iterator[InternalRow] {
-          private val run = new scala.collection.mutable.ArrayBuffer[InternalRow]
           private val rowSnaps = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
           private var runEnd: UnsafeRow = _
-          private var bufPos = 0
-          private var pendingNext: InternalRow = _
 
           private def fillRun(): Unit = {
-            run.clear(); rowSnaps.clear(); bufPos = 0
-            if (pendingNext != null) { run += pendingNext; pendingNext = null }
-            else if (iter.hasNext) run += iter.next().copy()
-            else return
-            val runKey = keyProj(run.head).copy()
-            var done = false
-            while (!done && iter.hasNext) {
-              val r = iter.next().copy()
-              if (sameRun(keyProj(r), runKey)) run += r
-              else { pendingNext = r; done = true }
-            }
+            runs.fill(); rowSnaps.clear()
+            val run = runs.rows
             if (hasGroups) {
               val pr = partProj(run.head)
               if (curG == null || !pr.equals(curG)) {
@@ -363,13 +315,12 @@ case class GlobalRunningAggExec(partition: Seq[Expression],
             runEnd = rowSnaps.last
           }
 
-          override def hasNext: Boolean =
-            bufPos < run.length || pendingNext != null || iter.hasNext
+          override def hasNext: Boolean = runs.hasNext
 
           override def next(): InternalRow = {
-            if (bufPos >= run.length) fillRun()
-            val row = run(bufPos)
-            val snap = rowSnaps(bufPos)
+            if (runs.exhausted) fillRun()
+            val snap = rowSnaps(runs.pos)
+            val row = runs.next()
             val vals = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(funcs.length)
             var k = 0
             while (k < attrTypes.length) {
@@ -377,14 +328,10 @@ case class GlobalRunningAggExec(partition: Seq[Expression],
               vals.update(k, src.get(k, attrTypes(k)))
               k += 1
             }
-            bufPos += 1
             outProj(joinOut(row, vals))
           }
         }
       }
     }
   }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
 }

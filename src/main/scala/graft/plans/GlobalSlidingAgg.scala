@@ -2,13 +2,10 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CurrentRow, Expression, GenericInternalRow, JoinedRow, Literal, MutableProjection, NamedExpression, RowFrame, SortOrder, SpecificInternalRow, SpecifiedWindowFrame, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CurrentRow, Expression, GenericInternalRow, JoinedRow, Literal, NamedExpression, RowFrame, SortOrder, SpecifiedWindowFrame, UnsafeProjection, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, DeclarativeAggregate, First, Last}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Scale-safe planning for naive global SLIDING aggregates — the moving
@@ -55,7 +52,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *
   * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
   */
-object GlobalSlidingAggStrategy extends SparkStrategy {
+object GlobalSlidingAggStrategy extends WindowFamily {
   import GlobalSlidingAggExec.SlidingAgg
 
   /** Row-frame boundary as a signed row offset (negative = preceding);
@@ -82,20 +79,11 @@ object GlobalSlidingAggStrategy extends SparkStrategy {
     case _ => None
   }
 
-  /** Per-expression categorizer for [[GlobalWindowSplit]]. */
-  private[plans] def rescuable(e: NamedExpression): Boolean = funcOf(e).isDefined
+  override def claims(e: NamedExpression): Boolean = funcOf(e).isDefined
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case w: logical.Window
-        if w.partitionSpec.forall(_.deterministic) && w.orderSpec.nonEmpty &&
-          w.windowExpressions.nonEmpty &&
-          w.windowExpressions.forall(funcOf(_).isDefined) &&
-          (w.partitionSpec.isEmpty || GlobalWindowGate.perKeyWorthwhile(w)) &&
-          SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean =>
-      GlobalSlidingAggExec(w.partitionSpec, w.orderSpec,
-        w.windowExpressions.map(funcOf(_).get), planLater(w.child)) :: Nil
-    case _ => Nil
-  }
+  override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] =
+    Some(GlobalSlidingAggExec(w.partitionSpec, w.orderSpec,
+      w.windowExpressions.map(funcOf(_).get), child))
 }
 
 object GlobalSlidingAggExec {
@@ -107,24 +95,15 @@ object GlobalSlidingAggExec {
 
 /** Physical distributed sliding-frame aggregation: range-shuffled
   * sorted input + the boundary job of [[GlobalOffsetWindowExec]]
-  * (per-partition heads and tails, driver stitch), then per-row frame
-  * folds over a trailing ring and a lookahead queue. */
+  * ([[EdgeRows]]: per-partition heads and tails, driver stitch), then
+  * per-row frame folds over an [[EdgeRows.Cursor]]'s trailing ring and
+  * lookahead queue. */
 case class GlobalSlidingAggExec(partition: Seq[Expression],
                                 order: Seq[SortOrder],
                                 funcs: Seq[GlobalSlidingAggExec.SlidingAgg],
-                                child: SparkPlan) extends UnaryExecNode {
+                                child: SparkPlan) extends GlobalWindowExec {
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
-
-  private def partOrders: Seq[SortOrder] =
-    partition.map(e => SortOrder(e, Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(partOrders ++ order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(partOrders ++ order)
-  override def outputOrdering: Seq[SortOrder] = partOrders ++ order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
@@ -136,54 +115,8 @@ case class GlobalSlidingAggExec(partition: Seq[Expression],
     val maxJ = funcsLocal.map(_.j).max // deepest lookahead
     val rdd = child.execute()
 
-    // boundary job: each partition's (count, first maxJ rows, last maxK
-    // rows) — full child rows, the frames may reference any column
-    val stats: Array[(Long, Array[UnsafeRow], Array[UnsafeRow])] =
-      rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-        val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
-        var cnt = 0L
-        val head = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-        val tail = new Array[UnsafeRow](math.max(maxK, 1))
-        while (iter.hasNext) {
-          val u = toUnsafe(iter.next())
-          if (cnt < maxJ) head += u.copy()
-          if (maxK > 0) tail((cnt % maxK).toInt) = u.copy()
-          cnt += 1
-        }
-        val tailSeq =
-          if (maxK == 0 || cnt == 0) Array.empty[UnsafeRow]
-          else {
-            val n = math.min(cnt, maxK).toInt
-            Array.tabulate(n)(i => tail(((cnt - n + i) % maxK).toInt))
-          }
-        (cnt, head.toArray, tailSeq)
-      })
-    val nParts = stats.length
-    val counts = stats.map(_._1)
-    def predecessorTail(p: Int): Array[UnsafeRow] = {
-      val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-      var i = p - 1
-      while (i >= 0 && out.length < maxK) {
-        val t = stats(i)._3
-        var j = t.length - 1
-        while (j >= 0 && out.length < maxK) { out += t(j); j -= 1 }
-        i -= 1
-      }
-      out.reverse.toArray // oldest-to-newest
-    }
-    def successorHead(p: Int): Array[UnsafeRow] = {
-      val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-      var i = p + 1
-      while (i < nParts && out.length < maxJ) {
-        val h = stats(i)._2
-        var j = 0
-        while (j < h.length && out.length < maxJ) { out += h(j); j += 1 }
-        i += 1
-      }
-      out.toArray
-    }
-    val preTails = Array.tabulate(nParts)(predecessorTail)
-    val sucHeads = Array.tabulate(nParts)(successorHead)
+    val (counts, preTails, sucHeads) = EdgeRows(rdd, childOutput, maxK, maxJ)
+    val nParts = counts.length
 
     // each task ships only its own edge rows + count ([[PerPartition.stitch]])
     PerPartition.stitch(rdd, (0 until nParts).map(p =>
@@ -191,20 +124,7 @@ case class GlobalSlidingAggExec(partition: Seq[Expression],
       val (preTail, sucHead, partCount) = slice
       // per-function machinery: own buffer + projections, folded over
       // its own slice of the trailing ring and lookahead queue
-      val buffers = funcsLocal.map(f =>
-        new SpecificInternalRow(f.agg.aggBufferAttributes.map(_.dataType)))
-      val inits = funcsLocal.zipWithIndex.map { case (f, i) =>
-        val p = MutableProjection.create(f.agg.initialValues, Nil)
-        p.target(buffers(i)); p
-      }
-      val updates = funcsLocal.zipWithIndex.map { case (f, i) =>
-        val p = MutableProjection.create(f.agg.updateExpressions,
-          f.agg.aggBufferAttributes ++ childOutput)
-        p.target(buffers(i)); p
-      }
-      val evals = funcsLocal.map(f =>
-        UnsafeProjection.create(Seq(f.agg.evaluateExpression),
-          f.agg.aggBufferAttributes))
+      val (buffers, inits, updates, evals) = FrameFolds(funcsLocal.map(_.agg), childOutput)
       val attrTypes = funcsLocal.map(_.attr.dataType)
       val joinBI = new JoinedRow
       val joinOut = new JoinedRow
@@ -217,24 +137,15 @@ case class GlobalSlidingAggExec(partition: Seq[Expression],
       val rowKeyProj = UnsafeProjection.create(partExprs, childOutput)
       val neighKeyProj = UnsafeProjection.create(partExprs, childOutput)
 
-      // trailing ring of up to maxK predecessor rows (stitched + own,
-      // copies — the scan iterator reuses its row); lookahead queue of
-      // the current row + up to maxJ successors, extended past the
-      // partition end with the stitched successor head. Emitted rows are
-      // only this partition's own (counts(pid) of them).
-      val lagBuf = new scala.collection.mutable.ArrayDeque[InternalRow]
-      preTail.foreach(lagBuf += _)
-      val source: Iterator[InternalRow] =
-        iter.map(_.copy()) ++ sucHead.iterator
-      val leadBuf = new scala.collection.mutable.ArrayDeque[InternalRow]
+      // emitted rows are only this partition's own (counts(pid) of them)
+      val rows = new EdgeRows.Cursor(iter, partCount, preTail, sucHead, maxK, maxJ)
+      val lagBuf = rows.lag
+      val leadBuf = rows.lead
 
       new Iterator[InternalRow] {
-        private var emitted = 0L
-        override def hasNext: Boolean = emitted < partCount
+        override def hasNext: Boolean = rows.hasNext
         override def next(): InternalRow = {
-          while (leadBuf.length < maxJ + 1 && source.hasNext)
-            leadBuf += source.next()
-          val row = leadBuf.head
+          val row = rows.current()
           val rowKey = if (keyGuard) rowKeyProj(row) else null
           // per-key clip: a key's rows are contiguous, so same-key rows
           // form a SUFFIX of the trailing ring and a PREFIX of the
@@ -272,19 +183,10 @@ case class GlobalSlidingAggExec(partition: Seq[Expression],
             i += 1
           }
           val out = outProj(joinOut(row, valueRow))
-          // slide: current row becomes lag history
-          if (maxK > 0) {
-            lagBuf += row
-            if (lagBuf.length > maxK) lagBuf.removeHead()
-          }
-          leadBuf.removeHead()
-          emitted += 1
+          rows.advance()
           out
         }
       }
     }
   }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.window.WindowExec
 
 /** Make the silent single-task fallback LOUD.
   *
-  * Every Global*Strategy declines shapes it cannot prove correct
+  * Every window family declines shapes it cannot prove correct
   * (order-sensitive collectors like collect_list, imperative
   * aggregates outside the sketch whitelist, ...), and stock Spark
   * then plans the global Window as a
@@ -50,7 +50,7 @@ object GlobalWindowFallback extends Rule[SparkPlan] {
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
 
   override def apply(plan: SparkPlan): SparkPlan = {
-    if (conf.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean) {
+    if (GlobalWindowStrategy.enabled) {
       plan.foreach {
         case w: WindowExec if w.partitionSpec.isEmpty =>
           fallbacks.incrementAndGet()
@@ -62,9 +62,9 @@ object GlobalWindowFallback extends Rule[SparkPlan] {
             logWarning(
               s"global window [$shape] planned as a SinglePartition " +
                 "WindowExec: every row funnels through ONE task, which will " +
-                "not finish at scale. No graft rescue strategy claimed this " +
-                "shape — rewrite the frame (see graft.plans.Global*Strategy " +
-                "docs for the supported families) or expect a single-task " +
+                "not finish at scale. No graft window family claimed this " +
+                "shape — rewrite the frame (see graft.plans.GlobalWindowStrategy " +
+                "for the supported families) or expect a single-task " +
                 "stage.")
           }
         case _ => ()

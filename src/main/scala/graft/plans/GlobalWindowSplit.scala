@@ -1,108 +1,57 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.NamedExpression
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Split MIXED-category global Window nodes so every rescuable frame
-  * family reaches its strategy.
+/** Split MIXED-family Window nodes so every rescuable frame family
+  * reaches its exec.
   *
   * The analyzer groups window expressions by (partitionSpec, orderSpec)
   * — NOT by frame — so one `SELECT` mixing a running total, a remaining
   * total and a rank over the same ORDER BY lands in a SINGLE Window
-  * node. Each Global*Strategy matches only when EVERY expression in the
-  * node belongs to its family, so a mixed node would fall back to the
-  * single-task built-in even though each family alone is rescuable —
-  * the trap this engine exists to close, reopened by mere adjacency.
+  * node. [[GlobalWindowStrategy]] plans a node as a family's exec only
+  * when that family claims EVERY expression in it, so a mixed node
+  * would fall back to the single-task built-in even though each family
+  * alone is rescuable — the trap this engine exists to close, reopened
+  * by mere adjacency.
   *
-  * This rule rewrites a global (empty partition spec) Window node whose
-  * expressions span ≥2 categories into a STACK of Window nodes, one per
-  * category, wrapped in a Project restoring the original column order.
-  * Window expressions never reference each other inside one node (SQL
-  * forbids nested window functions), so the split is always semantics-
-  * preserving; attribute ids are untouched. Each homogeneous node then
-  * plans through its own strategy — and a category no strategy claims
-  * (e.g. a month-interval RANGE frame) keeps the built-in WindowExec
-  * for JUST that group, never dragging the rescuable ones down with it.
+  * This rule rewrites a Window node whose expressions span ≥2 families
+  * into a STACK of Window nodes, one per family, wrapped in a Project
+  * restoring the original column order. Window expressions never
+  * reference each other inside one node (SQL forbids nested window
+  * functions), so the split is always semantics-preserving; attribute
+  * ids are untouched. Each homogeneous node then plans through its own
+  * family — and an expression no family claims (e.g. collect_list over
+  * a running frame) keeps the built-in WindowExec for JUST that group
+  * of a global node, never dragging the rescuable ones down with it.
   *
-  * Categories mirror the strategies' own per-expression guards
-  * (delegated, not duplicated): ranking functions, lag/lead, lag/lead
-  * IGNORE NULLS, running frames, suffix frames (opposite exchange
-  * direction from running — kept separate), bounded ROWS frames,
-  * whole-table frames, and RANGE-interval frames (node-level order-key
-  * shape included). Cost: stacked Window nodes share one range exchange
-  * when their required distribution matches (the common same-ORDER-BY
-  * case); a suffix group adds the reversed exchange it would need
-  * anyway.
+  * An expression belongs to the first family of
+  * [[GlobalWindowStrategy.families]] that claims it — the order the
+  * planner tries them in — so running and suffix frames (opposite
+  * exchange directions) are separate groups. Cost: stacked Window nodes
+  * share one range exchange when their required distribution matches
+  * (the common same-ORDER-BY case); a suffix group adds the reversed
+  * exchange it would need anyway.
+  *
+  * A PARTITION BY node passes the same guard and size gate as the
+  * planner, and is split ONLY when every expression belongs to a
+  * family: a partial split would trade the single hash exchange for a
+  * hash AND a range exchange with the hot-key wall still standing in
+  * the unclaimed group — worse than either extreme.
   *
   * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
   */
 object GlobalWindowSplit extends Rule[LogicalPlan] {
 
-  /** Ordered category tests; a window expression belongs to the first
-    * that claims it. Families are mutually exclusive by construction
-    * (frame shape / function class), so order is cosmetic. */
-  private def categoryOf(w: logical.Window, e: NamedExpression): Int = {
-    val ordered = w.orderSpec.nonEmpty
-    val tests: Seq[Boolean] = Seq(
-      ordered && GlobalRowNumberStrategy.rescuable(e),
-      ordered && GlobalOffsetWindowStrategy.rescuable(e),
-      ordered && GlobalOffsetIgnoreNullsStrategy.rescuable(e),
-      ordered && GlobalRunningAggStrategy.rescuableRunning(e),
-      ordered && GlobalRunningAggStrategy.rescuableSuffix(e),
-      ordered && GlobalSlidingAggStrategy.rescuable(e),
-      ordered && GlobalNthValueStrategy.rescuable(e),
-      GlobalConstantAggStrategy.rescuable(e),
-      GlobalRangeFrameStrategy.orderRescuable(w) && GlobalRangeFrameStrategy.rescuable(e))
-    tests.indexWhere(identity) // -1 = no strategy claims it
-  }
-
-  /** Categories that rescue PARTITIONED nodes too (ranking, lag/lead ±
-    * IGNORE NULLS, running, suffix, sliding, RANGE-interval — the
-    * families whose strategies claim PARTITION BY via the group-aware
-    * range exchange). A partitioned mixed node is split ONLY when every
-    * expression belongs to one of these: a partial split would trade
-    * the single hash exchange for a hash AND a range exchange with the
-    * hot-key wall still standing in the unclaimed group — worse than
-    * either extreme. */
-  private def partitionedCategoryOf(w: logical.Window, e: NamedExpression): Int = {
-    val ordered = w.orderSpec.nonEmpty
-    val tests: Seq[Boolean] = Seq(
-      ordered && GlobalRowNumberStrategy.rescuablePartitioned(e),
-      ordered && GlobalOffsetWindowStrategy.rescuable(e),
-      ordered && GlobalOffsetIgnoreNullsStrategy.rescuable(e),
-      ordered && GlobalRunningAggStrategy.rescuableRunning(e),
-      ordered && GlobalRunningAggStrategy.rescuableSuffix(e),
-      ordered && GlobalSlidingAggStrategy.rescuable(e),
-      ordered && GlobalNthValueStrategy.rescuablePartitioned(e),
-      GlobalConstantAggStrategy.rescuable(e),
-      GlobalRangeFrameStrategy.orderRescuable(w) && GlobalRangeFrameStrategy.rescuable(e))
-    tests.indexWhere(identity)
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case w: logical.Window
-        if w.partitionSpec.isEmpty && w.windowExpressions.length > 1 &&
-          conf.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean => {
-      val groups = w.windowExpressions.groupBy(categoryOf(w, _))
-      if (groups.size < 2 || groups.keysIterator.forall(_ < 0)) w
+        if w.windowExpressions.length > 1 &&
+          GlobalWindowStrategy.open(w) && GlobalWindowStrategy.gated(w) => {
+      val groups = w.windowExpressions.groupBy(GlobalWindowStrategy.familyOf(w, _))
+      if (groups.size < 2 || (w.partitionSpec.nonEmpty && groups.contains(-1))) w
       else {
         // deterministic stack order; -1 (unclaimed) group goes outermost
-        val stacked = groups.toSeq.sortBy(-_._1).foldLeft(w.child) {
-          case (c, (_, es)) => w.copy(windowExpressions = es, child = c)
-        }
-        Project(w.output, stacked)
-      }
-    }
-    case w: logical.Window
-        if w.partitionSpec.nonEmpty && w.partitionSpec.forall(_.deterministic) &&
-          w.windowExpressions.length > 1 &&
-          GlobalWindowGate.perKeyWorthwhile(w) &&
-          conf.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean => {
-      val groups = w.windowExpressions.groupBy(partitionedCategoryOf(w, _))
-      if (groups.size < 2 || groups.keysIterator.exists(_ < 0)) w
-      else {
         val stacked = groups.toSeq.sortBy(-_._1).foldLeft(w.child) {
           case (c, (_, es)) => w.copy(windowExpressions = es, child = c)
         }
