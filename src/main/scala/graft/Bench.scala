@@ -71,23 +71,16 @@ object Bench {
     // a failed query must SURFACE, not read as a near-zero "speedup":
     // record the error text per query and fail the whole run at the end
     val errors = scala.collection.mutable.Map[String, String]()
-    val gateKey = graft.plans.GlobalWindowGate.MinBytesKey
     val samples = (1 to runs).map { _ =>
       names.map { case (name, fn) =>
-        // skew demos pin the per-key gate open (SparkEntry.pinsRescueGate):
-        // their cost IS the rescue's price, reported as such
-        val pin = SparkEntry.pinsRescueGate(name)
-        val prev = spark.conf.getOption(gateKey)
-        if (pin) spark.conf.set(gateKey, "0")
+        // skew demos pin the per-key gate open: their cost IS the
+        // rescue's price, reported as such
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
+        try SparkEntry.withRescueGate(spark, name)(fn(spark, sfDir).count())
         catch {
           case e: Throwable =>
             errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
               .linesIterator.take(1).mkString.take(200)
-        } finally if (pin) prev match {
-          case Some(v) => spark.conf.set(gateKey, v)
-          case None => spark.conf.unset(gateKey)
         }
         name -> (System.nanoTime() - t0) / 1e9
       }.toMap

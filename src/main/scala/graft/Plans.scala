@@ -92,7 +92,6 @@ object Plans {
     sb ++= "Verify/Bench run them) — their plans are the AT-SCALE shape.\n"
     sb ++= "Organic queries (q_sessionize, q_resample_locf, ...) show the\n"
     sb ++= "test-scale stock shape the gate picks below the threshold.\n"
-    val gateKey = graft.plans.GlobalWindowGate.MinBytesKey
     var failed = 0
     val names = filter match {
       case Some(set) => all.filter(set)
@@ -101,11 +100,11 @@ object Plans {
     if (filter.isDefined) Files.createDirectories(Paths.get(out))
     names.foreach { name =>
       val pin = SparkEntry.pinsRescueGate(name)
-      if (pin) spark.conf.set(gateKey, "0")
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan = SparkEntry.withRescueGate(spark, name) {
+          SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+        }
         if (filter.isDefined)
           Files.writeString(Paths.get(out, s"$name$suffix.txt"), plan)
         else {
@@ -122,7 +121,7 @@ object Plans {
             s"PLANNING FAILED: ${e.getMessage}\n")
         else sb ++= s"\n## $name\n\nPLANNING FAILED: ${e.getMessage}\n"
         System.err.println(s"[plans] $name failed: ${e.getMessage}")
-      } finally if (pin) spark.conf.unset(gateKey)
+      }
     }
     if (filter.isEmpty) Files.writeString(Paths.get(out), sb.toString)
     println(s"[plans] wrote $out (${names.size} queries, $failed failed)")

@@ -842,12 +842,16 @@ object Scaling {
     // untimed warm-up on tiny data: JIT/codegen/committer first-touch
     // cost lands here, not on the first measured tier. Tier label 1 so
     // every family's tier-scaled layout sizing stays valid; the real
-    // tier-1 pass overwrites the same paths right after.
-    warming = true
-    runTier(1, 1000L, 400L, 10000L)
-    warming = false
-    for (r <- 0 until repeats; tier <- tiers)
-      runTier(tier, DocsBase * tier, VecsBase * tier, WindowBase * tier)
+    // tier-1 pass overwrites the same paths right after. The generated
+    // inputs are deleted on exit (releaseCaches runs between families,
+    // so they cannot live in the query Workspace).
+    try {
+      warming = true
+      runTier(1, 1000L, 400L, 10000L)
+      warming = false
+      for (r <- 0 until repeats; tier <- tiers)
+        runTier(tier, DocsBase * tier, VecsBase * tier, WindowBase * tier)
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmp))
     val calibPost = Calib.bracketAll(cpus.toInt)
     val calib = Calib.json(cpus, calibPre, calibPost)
     val md = renderMd(tiers, calib)

@@ -26,4 +26,18 @@ object SparkEntry {
     * `spark.graft.perKeyWindow.minChildBytes`, the rescue above it. */
   def pinsRescueGate(name: String): Boolean =
     name.startsWith("q_skew_") || name == "q_collect_window"
+  /** Run `body` with the size gate pinned open when query `name` needs
+    * it ([[pinsRescueGate]]), then restore the session's previous value.
+    * The pin must span the action, not just the build: planning is lazy. */
+  def withRescueGate[T](spark: SparkSession, name: String)(body: => T): T =
+    if (!pinsRescueGate(name)) body
+    else {
+      val key = graft.plans.GlobalWindowGate.MinBytesKey
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "0")
+      try body finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
 }

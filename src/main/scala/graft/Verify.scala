@@ -30,23 +30,15 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val gateKey = graft.plans.GlobalWindowGate.MinBytesKey
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only(name)) {
-        // skew demos pin the per-key gate open (SparkEntry.pinsRescueGate);
-        // conf must span the WRITE — planning is lazy
-        val pin = SparkEntry.pinsRescueGate(name)
-        val prev = spark.conf.getOption(gateKey)
-        if (pin) spark.conf.set(gateKey, "0")
         nRun += 1
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        // skew demos pin the per-key gate open around the WRITE
+        try SparkEntry.withRescueGate(spark, name) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        } catch { case e: Throwable =>
           nFailed += 1
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        } finally if (pin) prev match {
-          case Some(v) => spark.conf.set(gateKey, v)
-          case None => spark.conf.unset(gateKey)
         }
       }
     }

@@ -292,7 +292,7 @@ case class GlobalConstantAggExec(partition: Seq[Expression],
     val evalExprs = declAggs.map(_.evaluateExpression)
     val impOps: Array[ImpOps] = iIdx.map(i => opsFor(funcs(i).agg, childOutput))
     val attrTypes = funcs.map(_.attr.dataType).toArray
-    val rdd = child.execute()
+    val rdd = input()
 
     def newBuffer(): SpecificInternalRow = {
       val buf = new SpecificInternalRow(bufTypes)

@@ -230,7 +230,7 @@ case class GlobalNthValueExec(partition: Seq[Expression],
     val keyExprs = order.map(_.child)
     val anyRange = funcsLocal.exists(_.isRange)
     val anyFull = funcsLocal.exists(_.isFull)
-    val rdd = child.execute()
+    val rdd = input()
 
     // edge stats: per function ≤ n candidates of each edge group — the
     // only slices neighbors can see
@@ -535,7 +535,7 @@ case class GlobalNthValueExec(partition: Seq[Expression],
     val nF = funcsLocal.length
     val keyExprs = order.map(_.child)
     val anyRange = funcsLocal.exists(_.isRange)
-    val rdd = child.execute()
+    val rdd = input()
 
     // pass 1: per partition (one group) — total rows, and per function
     // its non-null count plus the first ≤ min(n, cap) candidate values

@@ -105,7 +105,7 @@ case class GlobalOffsetIgnoreNullsExec(
     val nFuncs = funcsLocal.length
     val needs = funcsLocal.map(f => math.abs(f.offset)) // values per direction
     val isLead = funcsLocal.map(_.offset > 0)
-    val rdd = child.execute()
+    val rdd = input()
 
     // boundary job: per partition and per function, the first n_f
     // non-null input values of the FIRST key group and the last n_f of

@@ -103,7 +103,7 @@ case class GlobalOffsetWindowExec(partition: Seq[Expression],
     val keyGuard = partExprs.nonEmpty
     val maxLag = math.max(0, -funcsLocal.map(_.offset).min)
     val maxLead = math.max(0, funcsLocal.map(_.offset).max)
-    val rdd = child.execute()
+    val rdd = input()
 
     // edge rows: a partition with fewer rows than the offset is walked
     // through. Stitched rows may carry a FOREIGN partition key — the key

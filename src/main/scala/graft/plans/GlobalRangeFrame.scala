@@ -310,7 +310,7 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
     // Long.MinValue would wrap silently — fail loudly instead)
     val negate = order.head.direction != Ascending
     val partExprs = partition
-    val rdd = child.execute()
+    val rdd = input()
 
     // boundary job: per partition, the edge summary (first/last
     // partition-key group, their first/last non-null keys, the trailing

@@ -153,7 +153,7 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
       case _ => true
     }
     val needLookahead = modes.contains(CumeDistF)
-    val rdd = child.execute()
+    val rdd = input()
 
     // pass 1: per-partition edge summary — the LAST group's (rows,
     // distinct sort keys) plus the first/last group keys. The child is

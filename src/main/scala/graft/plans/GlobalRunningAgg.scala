@@ -181,7 +181,7 @@ case class GlobalRunningAggExec(partition: Seq[Expression],
     val updateExprs = aggsLocal.flatMap(_.updateExpressions)
     val mergeExprs = aggsLocal.flatMap(_.mergeExpressions)
     val evalExprs = funcs.map(_.agg.evaluateExpression)
-    val rdd = child.execute()
+    val rdd = input()
 
     def newBuffer(): SpecificInternalRow = {
       val buf = new SpecificInternalRow(bufTypes)

@@ -113,7 +113,7 @@ case class GlobalSlidingAggExec(partition: Seq[Expression],
     val funcsLocal = funcs.toArray
     val maxK = funcsLocal.map(_.k).max // deepest lookbehind
     val maxJ = funcsLocal.map(_.j).max // deepest lookahead
-    val rdd = child.execute()
+    val rdd = input()
 
     val (counts, preTails, sucHeads) = EdgeRows(rdd, childOutput, maxK, maxJ)
     val nParts = counts.length

@@ -6,8 +6,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, MutableProjection, SortOrder, SpecificInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Physical shape shared by the window rescue execs: the child is range
   * exchanged and sorted on (partition keys ⧺ `order`), so each key's
@@ -26,6 +27,20 @@ abstract class GlobalWindowExec extends UnaryExecNode {
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(partOrders ++ order)
   override def outputOrdering: Seq[SortOrder] = partOrders ++ order
   override def outputPartitioning: Partitioning = child.outputPartitioning
+
+  /** The child's rows, every tie run of the required ordering in one
+    * task. Spark's OrderedDistribution is also met by a range
+    * partitioning on a LONGER ordering — a rescue over (k) stacked on
+    * one over (k, id), or a window over a global sort on (k, id) — which
+    * splits ties across tasks; such rows are range-exchanged again here
+    * on the required ordering. */
+  protected def input(): RDD[InternalRow] =
+    (requiredChildDistribution.head, child.outputPartitioning) match {
+      case (OrderedDistribution(req), RangePartitioning(o, n)) if o.length > req.length =>
+        SortExec(req, global = false,
+          ShuffleExchangeExec(RangePartitioning(req, n), child)).execute()
+      case _ => child.execute()
+    }
 
   override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
     makeCopy(mapProductIterator {

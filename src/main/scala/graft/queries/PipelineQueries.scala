@@ -30,8 +30,9 @@ object PipelineQueries {
   // ---- shared corpus builders (Spark + generated DuckDB twins) ----------
 
   /** documents ∪ verbatim copy (ids +100000): exact-dup corpus. */
-  /** Queries probing a persisted on-disk index that ensure() builds once
-    * per process (vector index, text index). Bench warms these untimed:
+  /** Queries that build a persisted store or index in the session's
+    * [[Workspace]] (vector index, text index, ...); WorkspaceSpec checks
+    * that no unlisted query creates a root. Bench warms these untimed:
     * the one-off build otherwise lands inside whichever timed pass hits
     * them first, and 3–4× "regressions" on identical code (round 6's
     * q_knn_cosine_ivf* swings) were exactly this amortization leaking
@@ -39,7 +40,7 @@ object PipelineQueries {
     * metric than probe cost — Bench reports it as its own field. */
   val indexBacked: Seq[String] = Seq(
     "q_knn_cosine_ivf_indexed", "q_knn_cosine_ivf_indexed_multiprobe",
-    "q_knn_cosine_ivf_indexed_deep",
+    "q_knn_cosine_ivf_indexed_deep", "q_knn_recall",
     "q_hard_negatives_indexed", "q_hard_negatives_recall",
     "q_semdedup_incremental",
     "q_dedup_incremental_indexed",
@@ -49,7 +50,7 @@ object PipelineQueries {
     "q_text_search", "q_text_search_ranked", "q_text_boolean",
     "q_text_boolean_ranked", "q_text_bm25", "q_text_bm25_live",
     "q_text_more_like_this",
-    "q_text_phrase", "q_text_proximity", "q_text_stream_ingest",
+    "q_text_phrase", "q_text_prefix", "q_text_proximity", "q_text_stream_ingest",
     "q_text_delete", "q_text_merge",
     "q_cdc_snapshot", "q_cdc_asof",
     "q_index_lookup", "q_index_range", "q_salt_advisor_verify",
@@ -128,9 +129,13 @@ object PipelineQueries {
     }
   }
 
-  /** Release every cached frame the query registry is holding — the
-    * explicit hook a long-lived session calls between corpora. */
-  def releaseCaches(): Unit = Persisted.releaseAll()
+  /** Release every cached frame the query registry is holding, then the
+    * on-disk [[Workspace]] read by some of them — the explicit hook a
+    * long-lived session calls between corpora. */
+  def releaseCaches(): Unit = {
+    Persisted.releaseAll()
+    Workspace.clear()
+  }
 
   /** Label every job an eager block spawns (guide §1.5: the composed
     * pipelines run dozens of checkpoint/collect/probe jobs per
@@ -755,14 +760,12 @@ object PipelineQueries {
     duckHardNegIndexedAt(IvfProbeDeep)
 
   /** The persisted-index IVF query at probe width `nProbe`: write the
-    * cell-partitioned index once (per process), then probe the query set
+    * cell-partitioned index once (per session), then probe the query set
     * through VectorIndex.probeSet — a broadcast equi-join on the cell
     * partition column, dynamic-partition-pruning eligible. */
-  /** The process-shared persisted IVF index over this sfDir's corpus
+  /** The session-shared persisted IVF index over this sfDir's corpus
     * (vec_id >= 5): returns (corpus view v, centroids, index path).
-    * pid-suffixed: two concurrent JVMs on the same sfDir (bench +
-    * verify) must not overwrite the index the other is probing.
-    * ensure(), not write(): within a process the index for this
+    * ensure(), not write(): within a session the index for this
     * (dir, codebook) is built once and every later run — bench medians,
     * the recall report, the multi-probe twin, the incremental-semdedup
     * probe — reads the existing layout, which is the real production
@@ -773,8 +776,7 @@ object PipelineQueries {
     val cents: IndexedSeq[Seq[Double]] = v
       .filter(col("vec_id").between(5, 4 + IvfC)).orderBy("vec_id")
       .collect().map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_vindex_" +
-      s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
+    val path = Workspace.root(s, dir, "vindex")
     // label rides into the index as a plain payload column: knn probes
     // never read it (parquet prunes it), while predicate probes —
     // q_hard_negatives_indexed's label filter — evaluate it INSIDE the
@@ -785,6 +787,30 @@ object PipelineQueries {
         .filter(col("vec_id") >= 5),
       col("v"), cents, path)
     (v, cents, path)
+  }
+
+  /** The session-shared 64-shard text index over this sfDir's documents
+    * — the nine q_text_* probes'. Deliberately NON-default shard count:
+    * probes learn it from the manifest, proving the count is a stored
+    * layout parameter (at 100 TB you'd size this to keep shards at a
+    * few hundred GB). */
+  private def textIndex(s: SparkSession, dir: String): String = {
+    val path = Workspace.root(s, dir, "tindex")
+    TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
+    path
+  }
+
+  /** (doc_id, x) shingle-hash sets — the gram index's input rows. */
+  private def gramSets(docs: DataFrame): DataFrame =
+    shingleRows(docs).withColumn("x", baseHash32(col("s"))).select("doc_id", "x").distinct()
+
+  /** The session-shared gram index over this sfDir's documents, built
+    * once and probed by both containment queries. */
+  private def gramIndex(s: SparkSession, dir: String): String = {
+    val path = Workspace.root(s, dir, "gramindex")
+    Workspace.once(s, path)(graft.store.GramIndex.write(
+      gramSets(documents(s, dir).select(col("doc_id"), col("text"))), path))
+    path
   }
 
   private def ivfIndexedKnn(s: SparkSession, dir: String, nProbe: Int): DataFrame = {
@@ -1308,9 +1334,7 @@ object PipelineQueries {
     // 3. containment screen (persisted gram index)
     val contDrop = labeled(s, "refresh: containment screen") {
       val s1Sets = Persisted.persistSwap1("refresh_screens_s1sets", dirKey,
-        shingleRows(s1.select("doc_id", "text"))
-          .withColumn("x", baseHash32(col("s")))
-          .select("doc_id", "x").distinct())
+        gramSets(s1.select("doc_id", "text")))
       val contRaw = graft.store.GramIndex.probeContainment(s, gramPath, s1Sets)
       histScreen.select(col("doc_id").as("b"))
         .join(broadcast(contRaw.select("a", "b")), Seq("b"))
@@ -1427,7 +1451,7 @@ object PipelineQueries {
     * index content EQUALS the snapshot (base − superseded + new
     * versions + inserts), so gen-2 probes need no target filter at all.
     *
-    * Store side effects are marker-gated once per process (the
+    * Store side effects are built once per session (the
     * amortized write path, like every index-backed query here); probe
     * results are identical on every re-run by the live-target rule.
     * Output: the refresh MANIFEST — every increment row's fate, plus
@@ -1494,28 +1518,19 @@ object PipelineQueries {
         "collide; re-key the corpus or raise the offsets together")
     val delKeys = histKeyed
       .filter(pmod(col("doc_id"), lit(10L)) === 9L).select("doc_id")
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_refresh_" +
-      s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
+    val root = Workspace.root(s, dir, "refresh")
     val (gramPath, bandPath, cdcPath) = (s"$root/gram", s"$root/band", s"$root/cdc")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    def setsOf(df: DataFrame) = shingleRows(df.select("doc_id", "text"))
-      .withColumn("x", baseHash32(col("s"))).select("doc_id", "x").distinct()
-    val mBase = new org.apache.hadoop.fs.Path(root, "_BASE_READY")
+    def setsOf(df: DataFrame) = gramSets(df.select("doc_id", "text"))
     // gen-1 screens; store builds ride the superseded-ids callback so
     // tombstones are folded (delete → compact re-opens the keys for
-    // their appended new versions) before the first probe constructs
+    // their appended new versions) before the first probe constructs.
+    // A store rebuild empties the root, so the history bloom of the
+    // previous corpus GENERATION (possibly a SUBSET of the new history,
+    // the stale-filter case) and the refresh step's marker go with it.
     val v = refreshScreens(s, histKeyed, crawl, delKeys, gramPath, bandPath,
       dir, bloomPath = Some(s"$root/history_bloom"),
       bloomGeneration = Some(bloomGen),
-      ensureStores = supIds => if (!fs.exists(mBase)) {
-        // a store rebuild means the previous corpus GENERATION is gone:
-        // a history bloom surviving it could be a SUBSET of the new
-        // history (the stale-filter case) — drop it with the stores.
-        // The generation tag above would catch a different corpus
-        // anyway; this keeps the two lifecycle keys (mBase marker,
-        // bloom file) from ever diverging in the first place.
-        fs.delete(new org.apache.hadoop.fs.Path(root, "history_bloom"), false)
+      ensureStores = supIds => Workspace.once(s, root) {
         graft.store.GramIndex.write(setsOf(docs), gramPath)
         graft.store.BandIndex.write(
           Dedup.docSketch(docs.select("doc_id", "text")), bandPath)
@@ -1525,36 +1540,35 @@ object PipelineQueries {
         graft.store.GramIndex.compact(s, gramPath)
         graft.store.BandIndex.delete(s, bandPath, supIds)
         graft.store.BandIndex.compact(s, bandPath)
-        fs.create(mBase, true).close()
       })
-    // apply the refresh (once per process): index appends + the CDC
+    // apply the refresh (once per base build): index appends + the CDC
     // U/I/D delta as generation 0
-    val mDone = new org.apache.hadoop.fs.Path(root, "_REFRESHED")
-    if (!fs.exists(mDone)) labeled(s, "refresh: apply (index+cdc appends)") {
-      val appendDocs = v.updates.unionByName(v.inserted)
-      graft.store.GramIndex.append(setsOf(appendDocs), gramPath)
-      graft.store.BandIndex.append(
-        Dedup.docSketch(appendDocs.select("doc_id", "text")), bandPath)
-      val full = (df: DataFrame, op: String) => df
-        .withColumn("n_chars", length(col("text")).cast("bigint"))
-        .withColumn("op", lit(op))
-        .select("doc_id", "text", "lang", "source", "n_chars", "op")
-      val delta = full(v.updates, "U")
-        .unionByName(full(v.inserted, "I"))
-        // a tombstone feed carries keys only; the payload of a delete
-        // row is never read (last-writer-wins drops the whole key)
-        .unionByName(delKeys.withColumn("text", lit(""))
-          .withColumn("lang", lit("")).withColumn("source", lit(""))
-          .withColumn("n_chars", lit(0L)).withColumn("op", lit("D"))
-          .select("doc_id", "text", "lang", "source", "n_chars", "op"))
-      graft.store.CdcStore.append(delta, 0L, cdcPath)
-      // fold the increment's content keys into the PERSISTED history
-      // filter (driver-side, increment-bounded) — the write-path half
-      // of the amortized-bloom contract: the next refresh screens
-      // against base + this increment without re-folding the corpus
-      Dedup.appendHistoryBloom(s, s"$root/history_bloom",
-        appendDocs.select(md5(col("text"))).collect().map(_.getString(0)).toSeq)
-      fs.create(mDone, true).close()
+    Workspace.once(s, s"$root/refreshed") {
+      labeled(s, "refresh: apply (index+cdc appends)") {
+        val appendDocs = v.updates.unionByName(v.inserted)
+        graft.store.GramIndex.append(setsOf(appendDocs), gramPath)
+        graft.store.BandIndex.append(
+          Dedup.docSketch(appendDocs.select("doc_id", "text")), bandPath)
+        val full = (df: DataFrame, op: String) => df
+          .withColumn("n_chars", length(col("text")).cast("bigint"))
+          .withColumn("op", lit(op))
+          .select("doc_id", "text", "lang", "source", "n_chars", "op")
+        val delta = full(v.updates, "U")
+          .unionByName(full(v.inserted, "I"))
+          // a tombstone feed carries keys only; the payload of a delete
+          // row is never read (last-writer-wins drops the whole key)
+          .unionByName(delKeys.withColumn("text", lit(""))
+            .withColumn("lang", lit("")).withColumn("source", lit(""))
+            .withColumn("n_chars", lit(0L)).withColumn("op", lit("D"))
+            .select("doc_id", "text", "lang", "source", "n_chars", "op"))
+        graft.store.CdcStore.append(delta, 0L, cdcPath)
+        // fold the increment's content keys into the PERSISTED history
+        // filter (driver-side, increment-bounded) — the write-path half
+        // of the amortized-bloom contract: the next refresh screens
+        // against base + this increment without re-folding the corpus
+        Dedup.appendHistoryBloom(s, s"$root/history_bloom",
+          appendDocs.select(md5(col("text"))).collect().map(_.getString(0)).toSeq)
+      }
     }
     // the refreshed corpus, through the real merge-on-read path
     val snap = Persisted.persistSwap1("refresh_gen2_snap", dir,
@@ -1848,10 +1862,7 @@ object PipelineQueries {
       // persisted: the (doc, x) set rows feed the df agg, the prefix
       // cut AND the full-set verify sides — unpinned, the whole
       // shingle+distinct pipeline would run three times
-      val sets = Persisted.persistSwap1("simjoin_sets", dir,
-        shingleRows(corpus)
-          .withColumn("x", baseHash32(col("s")))
-          .select("doc_id", "x").distinct())
+      val sets = Persisted.persistSwap1("simjoin_sets", dir, gramSets(corpus))
       simjoinPrefixCore(sets, dir)
     }),
 
@@ -1884,10 +1895,7 @@ object PipelineQueries {
       val corpus = fuzzyCorpus(documents(s, dir))
       // persisted: feeds the df agg, the rank window AND both verify
       // sides — unpinned, the shingle+distinct pipeline runs three times
-      val sets = Persisted.persistSwap1("containment_sets", dir,
-        shingleRows(corpus)
-          .withColumn("x", baseHash32(col("s")))
-          .select("doc_id", "x").distinct())
+      val sets = Persisted.persistSwap1("containment_sets", dir, gramSets(corpus))
       containmentJoinCore(sets, dir)
     }),
 
@@ -1906,17 +1914,9 @@ object PipelineQueries {
     // df-ordered prefix probe drops no true pair.
     "q_containment_incremental" -> ((s, dir) => {
       val base = documents(s, dir).select(col("doc_id"), col("text"))
-      // pid-suffixed ensure: built once per process, probed by every run
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_gramindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      if (graft.store.GramIndex.storedShards(s, path).isEmpty)
-        graft.store.GramIndex.write(
-          shingleRows(base).withColumn("x", baseHash32(col("s")))
-            .select("doc_id", "x").distinct(), path)
+      val path = gramIndex(s, dir)
       val batchSets = Persisted.persistSwap1("containment_incr_sets", dir,
-        shingleRows(containmentBatch(base))
-          .withColumn("x", baseHash32(col("s")))
-          .select("doc_id", "x").distinct())
+        gramSets(containmentBatch(base)))
       graft.store.GramIndex.probeContainment(s, path, batchSets)
         .orderBy("a", "b")
     }),
@@ -1935,17 +1935,9 @@ object PipelineQueries {
     // length-dependent, novel docs untouched.
     "q_containment_screen" -> ((s, dir) => {
       val base = documents(s, dir).select(col("doc_id"), col("text"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_gramindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      if (graft.store.GramIndex.storedShards(s, path).isEmpty)
-        graft.store.GramIndex.write(
-          shingleRows(base).withColumn("x", baseHash32(col("s")))
-            .select("doc_id", "x").distinct(), path)
+      val path = gramIndex(s, dir)
       val batch = containmentBatch(base)
-      val sets = Persisted.persistSwap1("containment_screen_sets", dir,
-        shingleRows(batch)
-          .withColumn("x", baseHash32(col("s")))
-          .select("doc_id", "x").distinct())
+      val sets = Persisted.persistSwap1("containment_screen_sets", dir, gramSets(batch))
       // within-batch half rides the SAME prefix-cut core as the batch
       // self-join (bare shared-token pairing was batch² on a
       // boilerplate-heavy batch — the r14 judge's one cheap fix);
@@ -1982,24 +1974,15 @@ object PipelineQueries {
     // every posting, df and profile.
     "q_gram_reshard_migration" -> ((s, dir) => {
       val base = documents(s, dir).select(col("doc_id"), col("text"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_greshard_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val marker = new org.apache.hadoop.fs.Path(path, "_RESHARDED")
-      val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) {
-        graft.store.GramIndex.write(
-          shingleRows(base).withColumn("x", baseHash32(col("s")))
-            .select("doc_id", "x").distinct(), path, nShards = 4)
+      val path = Workspace.root(s, dir, "greshard")
+      Workspace.once(s, path) {
+        graft.store.GramIndex.write(gramSets(base), path, nShards = 4)
         graft.store.GramIndex.reshard(s, path, 9)
-        fs.create(marker, true).close()
       }
       val w = base.withColumn("w", tokens(col("text"))).filter(size(col("w")) >= 8)
       val truncated = w.select((col("doc_id") + 200000L).as("doc_id"),
         array_join(slice(col("w"), lit(1), size(col("w")) - 2), " ").as("text"))
-      val batchSets = Persisted.persistSwap1("gram_reshard_sets", dir,
-        shingleRows(truncated)
-          .withColumn("x", baseHash32(col("s")))
-          .select("doc_id", "x").distinct())
+      val batchSets = Persisted.persistSwap1("gram_reshard_sets", dir, gramSets(truncated))
       graft.store.GramIndex.probeContainment(s, path, batchSets)
         .orderBy("a", "b")
     }),
@@ -2018,10 +2001,7 @@ object PipelineQueries {
     // doc" with no count_distinct anywhere.
     "q_ngram_novelty" -> ((s, dir) => {
       val corpus = fuzzyCorpus(documents(s, dir))
-      val sets = Persisted.persistSwap1("novelty_sets", dir,
-        shingleRows(corpus)
-          .withColumn("x", baseHash32(col("s")))
-          .select("doc_id", "x").distinct())
+      val sets = Persisted.persistSwap1("novelty_sets", dir, gramSets(corpus))
       val dfreq = sets.groupBy("x").agg(count(lit(1)).as("df"))
       sets.join(dfreq, "x")
         .groupBy("doc_id")
@@ -2050,9 +2030,7 @@ object PipelineQueries {
       // corpus's, so no cross-query share exists to lean on; A/B in
       // OPTIMIZATION_r20.md)
       val sets = Persisted.persistSwap1("novelty_by_source_sets", dir,
-        shingleRows(docs.select("doc_id", "text"))
-          .withColumn("x", baseHash32(col("s")))
-          .select("doc_id", "x").distinct())
+        gramSets(docs.select("doc_id", "text")))
       val dfreq = sets.groupBy("x").agg(count(lit(1)).as("df"))
       val perDoc = sets.join(dfreq, "x").groupBy("doc_id")
         .agg(count(lit(1)).as("nd"),
@@ -2295,17 +2273,12 @@ object PipelineQueries {
         .filter(col("vec_id").between(5, 4 + IvfC)).orderBy("vec_id")
         .collect().map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq
       val coarse = allCents.take(4)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val path = s"$tmp/graft_reclstore_$tag"
-      // migration is one-off maintenance: marker-guard it so repeated
+      val path = Workspace.root(s, dir, "reclstore")
+      // migration is one-off maintenance: build it once so repeated
       // invocations time the read of the migrated index, not a rebuild
-      val marker = new org.apache.hadoop.fs.Path(path, "_RECLUSTERED")
-      val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) {
+      Workspace.once(s, path) {
         VectorIndex.write(v.filter(col("vec_id") >= 5), col("v"), coarse, path)
         VectorIndex.recluster(s, path, "vec_id", "v", allCents)
-        fs.create(marker, true).close()
       }
       VectorIndex.read(s, path)
         .groupBy(col("cell").cast("bigint").as("cell"))
@@ -2616,17 +2589,12 @@ object PipelineQueries {
       val cents: IndexedSeq[Seq[Double]] = v
         .filter(col("vec_id").between(5, 4 + IvfC)).orderBy("vec_id")
         .collect().map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_vindexdel_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val done = new org.apache.hadoop.fs.Path(path, "_graft_del_done")
-      val fs = done.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(done)) { // idempotent across bench passes
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+      val path = Workspace.root(s, dir, "vindexdel")
+      Workspace.once(s, path) {
         VectorIndex.write(v.filter(col("vec_id") >= 5), col("v"), cents, path)
         VectorIndex.deleteIds(s, path,
           v.filter(col("vec_id") >= 5 && col("vec_id") % 7 === 0).select("vec_id"))
         VectorIndex.compact(s, path, "vec_id")
-        fs.create(done, true).close()
       }
       val q = v.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -3929,13 +3897,7 @@ object PipelineQueries {
     // same relation directly from documents — the index is lossless, so
     // results match exactly.
     "q_text_search" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      // deliberately NON-default shard count: the probe learns it from
-      // the manifest, proving the count is a stored layout parameter
-      // (at 100 TB you'd size this to keep shards at a few hundred GB)
-      TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
-      TextIndex.searchAll(s, path, Seq("batch", "small", "scan"))
+      TextIndex.searchAll(s, textIndex(s, dir), Seq("batch", "small", "scan"))
         .orderBy(col("total_tf").desc, col("doc_id"))
         .limit(20)
     }),
@@ -3948,17 +3910,13 @@ object PipelineQueries {
     // stored layout parameter, provably semantics-free across the
     // migration — a posting lost, duplicated, or left in an
     // old-generation shard breaks the hash match. The whole
-    // build→migrate sequence is one-off behind a marker (ensure() at
-    // the OLD count would otherwise rebuild over the migrated layout).
+    // build→migrate sequence is one-off (ensure() at the OLD count
+    // would otherwise rebuild over the migrated layout).
     "q_reshard_migration" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_treshard_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val marker = new org.apache.hadoop.fs.Path(path, "_RESHARDED")
-      val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) {
-        TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 4)
+      val path = Workspace.root(s, dir, "treshard")
+      Workspace.once(s, path) {
+        TextIndex.write(documents(s, dir).select("doc_id", "text"), path, shards = 4)
         TextIndex.reshard(s, path, 9)
-        fs.create(marker, true).close()
       }
       TextIndex.searchAll(s, path, Seq("batch", "small", "scan"))
         .orderBy(col("total_tf").desc, col("doc_id"))
@@ -3971,10 +3929,7 @@ object PipelineQueries {
     // |mustNot postings| rows read via shard pruning, where the naive
     // `NOT contains(text, w)` spelling rescans the whole corpus.
     "q_text_boolean" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
-      TextIndex.searchBoolean(s, path,
+      TextIndex.searchBoolean(s, textIndex(s, dir),
           must = Seq("batch", "small", "scan"), mustNot = Seq("dup", "key"))
         .orderBy(col("total_tf").desc, col("doc_id"))
         .limit(20)
@@ -3987,10 +3942,7 @@ object PipelineQueries {
     // pruned shards. Same bit-exact BM25-lite arithmetic as q_text_bm25
     // (b = 0.75 length norm), so the oracle replays scores exactly.
     "q_text_boolean_ranked" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
-      TextIndex.searchBooleanRanked(s, path,
+      TextIndex.searchBooleanRanked(s, textIndex(s, dir),
           must = Seq("batch", "small", "scan"), mustNot = Seq("dup", "key"),
           b = 0.75)
         .orderBy(col("score").desc, col("doc_id"))
@@ -4005,9 +3957,7 @@ object PipelineQueries {
     // q_text_bm25 — the corpus is never scanned, only the five terms'
     // postings.
     "q_text_more_like_this" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
+      val path = textIndex(s, dir)
       val src = documents(s, dir).filter(col("doc_id") === 42L)
         .select(explode(array_distinct(tokens(col("text")))).as("t"))
         .collect().map(_.getString(0)).toSeq
@@ -4025,10 +3975,7 @@ object PipelineQueries {
     // manifest; per-doc sums are fixed-point quantized so partition
     // order can't flip ulps.
     "q_text_search_ranked" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
-      TextIndex.searchRanked(s, path, Seq("batch", "small", "scan"))
+      TextIndex.searchRanked(s, textIndex(s, dir), Seq("batch", "small", "scan"))
         .orderBy(col("score").desc, col("doc_id"))
         .limit(20)
     }),
@@ -4039,10 +3986,7 @@ object PipelineQueries {
     // groups outside the prefix range are skipped in every shard, so
     // read cost tracks matching postings, not index size.
     "q_text_prefix" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
-      TextIndex.searchPrefix(s, path, "s")
+      TextIndex.searchPrefix(s, textIndex(s, dir), "s")
         .orderBy(col("df").desc, col("t"))
     }),
 
@@ -4055,8 +3999,7 @@ object PipelineQueries {
     // green row proves the grown-then-compacted layout is lossless —
     // the continuous-ingest consistency claim, checked end to end.
     "q_text_stream_ingest" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tstream_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
+      val path = Workspace.root(s, dir, "tstream")
       val docs = documents(s, dir).select("doc_id", "text")
       (0 until 3).foreach { b =>
         graft.streaming.StreamingIngest.writeTextBatchIdempotent(
@@ -4079,21 +4022,15 @@ object PipelineQueries {
     // The merged index must answer conjunctive search exactly like an
     // index of the full corpus — same oracle as q_text_search.
     "q_text_merge" -> ((s, dir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_tmerge_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val (destPath, srcPath) = (s"${base}_dest", s"${base}_src")
-      val done = new org.apache.hadoop.fs.Path(destPath, "_graft_merge_done")
-      val fs = done.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(done)) { // idempotent across bench passes
-        fs.delete(new org.apache.hadoop.fs.Path(destPath), true)
-        fs.delete(new org.apache.hadoop.fs.Path(srcPath), true)
+      val base = Workspace.root(s, dir, "tmerge")
+      val (destPath, srcPath) = (s"$base/dest", s"$base/src")
+      Workspace.once(s, base) {
         val docs = documents(s, dir).select("doc_id", "text")
         TextIndex.write(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
           destPath, shards = 8)
         TextIndex.write(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
           srcPath, shards = 16)
         TextIndex.merge(s, destPath, srcPath)
-        fs.create(done, true).close()
       }
       TextIndex.searchAll(s, destPath, Seq("batch", "small", "scan"))
         .orderBy(col("total_tf").desc, col("doc_id"))
@@ -4108,10 +4045,7 @@ object PipelineQueries {
     // manifest's (tokens, docs) totals. Same fixed-point quantization
     // and rational idf as q_text_search_ranked.
     "q_text_bm25" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
-      TextIndex.searchRanked(s, path, Seq("batch", "small", "scan"), b = 0.75)
+      TextIndex.searchRanked(s, textIndex(s, dir), Seq("batch", "small", "scan"), b = 0.75)
         .orderBy(col("score").desc, col("doc_id"))
         .limit(20)
     }),
@@ -4126,9 +4060,8 @@ object PipelineQueries {
     // over the surviving docs only; matching scores prove both the
     // candidate anti-join AND the stats subtraction.
     "q_text_bm25_live" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_live_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      if (TextIndex.storedShards(s, path).isEmpty) {
+      val path = Workspace.root(s, dir, "tindex_live")
+      Workspace.once(s, path) {
         TextIndex.write(documents(s, dir).select("doc_id", "text"), path, shards = 8)
         TextIndex.delete(s, path, TextDeleteIds)
         // deliberately NO compact: tombstones stay pending
@@ -4145,10 +4078,7 @@ object PipelineQueries {
     // terms); the oracle recomputes occurrences from documents with a
     // positional self-join — the index stays lossless.
     "q_text_phrase" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
-      TextIndex.searchPhrase(s, path, Seq("scan", "query"))
+      TextIndex.searchPhrase(s, textIndex(s, dir), Seq("scan", "query"))
         .orderBy(col("n_occurrences").desc, col("doc_id"))
     }),
 
@@ -4162,10 +4092,7 @@ object PipelineQueries {
     // documents with positional EXISTS subqueries — the index stays
     // lossless, position arithmetic bit-exact (integer distances).
     "q_text_proximity" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      TextIndex.ensure(documents(s, dir).select("doc_id", "text"), path, shards = 64)
-      TextIndex.searchProximity(s, path, Seq("scan", "batch", "query"), slop = 6)
+      TextIndex.searchProximity(s, textIndex(s, dir), Seq("scan", "batch", "query"), slop = 6)
         .orderBy(col("n_prox").desc, col("doc_id"))
     }),
 
@@ -4180,9 +4107,8 @@ object PipelineQueries {
     // a corpus refresh costs a tombstone append + one index compaction,
     // never a corpus re-tokenize.
     "q_text_delete" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_tindex_del_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      if (TextIndex.storedShards(s, path).isEmpty) {
+      val path = Workspace.root(s, dir, "tindex_del")
+      Workspace.once(s, path) {
         TextIndex.write(documents(s, dir).select("doc_id", "text"), path, shards = 8)
         TextIndex.delete(s, path, TextDeleteIds)
         TextIndex.compact(s, path)
@@ -5064,12 +4990,9 @@ object PipelineQueries {
     "q_dedup_incremental_indexed" -> ((s, dir) => {
       val base = documents(s, dir).select(col("doc_id"), col("text"))
       val batch = incrementalBatch(documents(s, dir))
-      // pid-suffixed ensure, same discipline as the vector index: built
-      // once per process, probed by every later run
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_bandindex_" +
-        s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      if (graft.store.BandIndex.storedShards(s, path).isEmpty)
-        graft.store.BandIndex.write(Dedup.docSketch(base), path)
+      // built once per session, probed by every later run
+      val path = Workspace.root(s, dir, "bandindex")
+      Workspace.once(s, path)(graft.store.BandIndex.write(Dedup.docSketch(base), path))
       val probeSketch = Persisted.persistSwap1("incr_dedup_indexed", dir,
         Dedup.docSketch(batch))
       // candidates COLLECTED once (batch-bounded by the probe contract):
@@ -5136,7 +5059,7 @@ object PipelineQueries {
     // base generation plus two delta generations (update/delete, then
     // re-insert/delete — including a key that is deleted in gen 0 and
     // re-inserted in gen 1, the resolution-order acid test), resolved
-    // last-writer-wins at read. The store builds ONCE per process
+    // last-writer-wins at read. The store builds ONCE per session
     // (indexBacked: the build is the amortized write path; the query
     // times the READ) — snapshot is one groupBy(key).max_by(payload,
     // seq) hash agg: map-side partial, single exchange, no per-version
@@ -5665,15 +5588,12 @@ object PipelineQueries {
     })
   )
 
-  /** Build the per-process CDC demo store once (base + 2 delta
+  /** Build the session's CDC demo store once (base + 2 delta
     * generations derived from documents) and read a snapshot at
     * `asOf` — shared by q_cdc_snapshot / q_cdc_asof. */
   private def cdcSnapshotQuery(s: SparkSession, dir: String, asOf: Long): DataFrame = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_cdcstore_" +
-      s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-    val done = new org.apache.hadoop.fs.Path(path, "_built")
-    val fs = done.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(done)) {
+    val path = Workspace.root(s, dir, "cdcstore")
+    Workspace.once(s, path) {
       val base = documents(s, dir)
       graft.store.CdcStore.writeBase(
         base, col("doc_id"), graft.keys.HashPrefix(16), path)
@@ -5687,7 +5607,6 @@ object PipelineQueries {
         .unionByName(base.filter(pmod(col("doc_id"), lit(10L)) === 4L)
           .withColumn("op", lit("D")))
       graft.store.CdcStore.append(d1, 1L, path)
-      fs.create(done, true).close()
     }
     graft.store.CdcStore.snapshot(s, path, "doc_id", asOf = asOf)
       .select(col("doc_id"), md5(col("text")).as("h"),

@@ -257,9 +257,7 @@ object RefQueries {
       val rec = adv.filter(col("recommended"))
         .select("n", "under_ppm", "over_ppm", "within_tol").head()
       val n = rec.getLong(0).toInt
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val path = s"$tmp/graft_advstore_${tag}_n$n"
+      val path = Workspace.root(s, dir, s"advstore_n$n")
       SaltedStore.ensure(events(s, dir).select(col("event_id"), col("user_id")),
         col("user_id"), HashPrefix(n), path)
       val full = s.range(n).select(col("id").as("bucket"))
@@ -296,14 +294,12 @@ object RefQueries {
     // dynamically; recovered keys re-bucket under the BASE distributor
     // and broadcast-join the base on (bucket, key) — base partitions
     // prune the same way. Neither store is scanned beyond its probed
-    // buckets. Stores are built once per process (ensure, pid-suffixed
-    // path — same amortization idiom as the vector index).
+    // buckets. Stores are built once per session (ensure, in the
+    // Workspace — same amortization idiom as the vector index).
     "q_index_lookup" -> ((s, dir) => {
       import graft.store.{SaltedStore, SecondaryIndex}
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val basePath = s"$tmp/graft_sidx_base_$tag"
-      val idxPath = s"$tmp/graft_sidx_idx_$tag"
+      val basePath = Workspace.root(s, dir, "sidx_base")
+      val idxPath = Workspace.root(s, dir, "sidx_idx")
       val e = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
       SaltedStore.ensure(e, col("event_id"), dist, basePath)
       SecondaryIndex.ensure(e, col("user_id"), col("event_id"), 8, idxPath)
@@ -328,10 +324,8 @@ object RefQueries {
     // is non-empty at every SF (sf0.001 tops out at user_id 14).
     "q_index_range" -> ((s, dir) => {
       import graft.store.{RangeIndex, SaltedStore}
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val basePath = s"$tmp/graft_sidx_base_$tag"   // shared with q_index_lookup
-      val idxPath = s"$tmp/graft_ridx_idx_$tag"
+      val basePath = Workspace.root(s, dir, "sidx_base") // shared with q_index_lookup
+      val idxPath = Workspace.root(s, dir, "ridx_idx")
       val e = events(s, dir).select(col("event_id"), col("user_id"), col("value"))
       SaltedStore.ensure(e, col("event_id"), dist, basePath)
       RangeIndex.ensure(e, col("user_id"), col("event_id"), width = 8L, idxPath)
@@ -351,22 +345,17 @@ object RefQueries {
     // in half at every SF, so both branches carry real rows.
     "q_store_retention" -> ((s, dir) => {
       import graft.store.SaltedStore
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val path = s"$tmp/graft_retstore_$tag"
+      val path = Workspace.root(s, dir, "retstore")
       val cutoffUs = 1705276800000000L // 2024-01-15T00:00:00Z, micros
-      SaltedStore.ensure(
-        events(s, dir).select(col("event_id"), col("user_id"), col("ts_us")),
-        col("event_id"), dist, path)
-      // retention is periodic maintenance, not per-query work: marker-
-      // guard it so repeated invocations (bench runs the query 3×) time
-      // the READ of the retained store, not a re-rewrite of it
-      val marker = new org.apache.hadoop.fs.Path(path, "_RETAINED")
-      val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) {
+      // retention is periodic maintenance, not per-query work: build the
+      // retained store once so repeated invocations (bench runs the
+      // query 3×) time its READ, not a re-rewrite of it
+      Workspace.once(s, path) {
+        SaltedStore.write(
+          events(s, dir).select(col("event_id"), col("user_id"), col("ts_us")),
+          col("event_id"), dist, path)
         SaltedStore.compactRetain(s, path, col("event_id"),
           col("ts_us") >= cutoffUs)
-        fs.create(marker, true).close()
       }
       SaltedStore.read(s, path)
         .select("event_id", "user_id", "ts_us")
@@ -386,19 +375,14 @@ object RefQueries {
     // lost or duplicated by the swap — breaks the hash match.
     "q_resalt_migration" -> ((s, dir) => {
       import graft.store.SaltedStore
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
-      val path = s"$tmp/graft_resaltstore_$tag"
-      SaltedStore.ensure(
-        events(s, dir).select(col("event_id"), col("user_id"), col("ts_us")),
-        col("event_id"), HashPrefix(4), path)
-      // migration is one-off maintenance: marker-guard it so repeated
+      val path = Workspace.root(s, dir, "resaltstore")
+      // migration is one-off maintenance: build it once so repeated
       // invocations time the read of the migrated store, not a rewrite
-      val marker = new org.apache.hadoop.fs.Path(path, "_RESALTED")
-      val fs = marker.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) {
+      Workspace.once(s, path) {
+        SaltedStore.write(
+          events(s, dir).select(col("event_id"), col("user_id"), col("ts_us")),
+          col("event_id"), HashPrefix(4), path)
         SaltedStore.resalt(s, path, col("event_id"), HashPrefix(16))
-        fs.create(marker, true).close()
       }
       SaltedStore.read(s, path)
         .groupBy(col("bucket").cast("bigint").as("bucket"))

@@ -29,8 +29,7 @@ object ProfProbe {
     SparkEntry.queries(name)(s, dir).count() // warm: index build + persists
     import graft.queries.PipelineQueries
     val base = graft.queries.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_gramindex_" +
-      s"${Integer.toHexString(dir.hashCode)}_p${ProcessHandle.current().pid()}"
+    val path = graft.queries.Workspace.root(s, dir, "gramindex")
     val batchSets = graft.pipeline.TextAnalysis
       .shingleRows(PipelineQueries.containmentBatch(base))
       .withColumn("x", graft.pipeline.Dedup.baseHash32(col("s")))

@@ -72,10 +72,8 @@ object ProfStages {
     if (SparkEntry.indexBackedQueries.contains(qname))
       try SparkEntry.queries(qname)(s, dir).count() catch { case _: Throwable => () }
 
-    val gateKey = graft.plans.GlobalWindowGate.MinBytesKey
-    if (SparkEntry.pinsRescueGate(qname)) s.conf.set(gateKey, "0")
     val fn = SparkEntry.queries(qname)
-    for (r <- 1 to reps) {
+    SparkEntry.withRescueGate(s, qname)(for (r <- 1 to reps) {
       jobs.clear(); stageJob.clear(); stages.clear()
       s.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
@@ -105,7 +103,7 @@ object ProfStages {
       byStage.take(topN).foreach { case (n, ts, nt, ns, srd, swr) =>
         println(f"  stages $ns%3d  task $ts%8.1f s  tasks $nt%5d  shufR ${srd}%7.1f MB  shufW ${swr}%7.1f MB  $n")
       }
-    }
+    })
     s.stop()
   }
 }

@@ -22,8 +22,7 @@ object RecallProbe {
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
     val cents = v.filter(col("vec_id").between(5, 4 + Similarity.IvfC)).orderBy("vec_id")
       .collect().map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_vindex_probe_" +
-      Integer.toHexString(dir.hashCode)
+    val path = graft.queries.Workspace.root(s, dir, "vindex_probe")
     VectorIndex.ensure(v.filter(col("vec_id") >= 5), col("v"), cents, path)
     val q = v.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))

@@ -132,17 +132,34 @@ class GlobalWindowFuzzSpec extends SparkSuite {
     test(s"fuzz round $round: random frames match the built-in bit-for-bit") {
       val df = randomDf()
       val cols = (0 until 2 + rnd.nextInt(3)).map(randomColumn)
-      val out = cols.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
-      val p = out.queryExecution.executedPlan.toString
-      assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
-        s"round $round: a frame escaped the rescue:\n$p")
+      // uncoalesced range partitions, from one task to more tasks than
+      // most key groups span: edge chains and stitched rows get reached
+      val parts = Seq(1, 4, 16, 61)(rnd.nextInt(4))
+      // a fresh frame per side: a Dataset keeps its first executed plan,
+      // so re-collecting one frame under the opt-out reruns the rescue
+      def out = cols.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
       def snap(d: DataFrame) = d.collect()
         .map(r => (0 until r.length).map(j =>
           Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
         .sorted.toSeq
-      val got = snap(out)
-      val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-      assert(got == expected, s"round $round diverged from the built-in")
+      withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+        withConf("spark.sql.shuffle.partitions", parts.toString) {
+          def builtIn(d: DataFrame) = d.queryExecution.executedPlan.toString
+            .linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window ["))
+          val rescued = out
+          assert(!builtIn(rescued), s"round $round: a frame escaped the rescue:\n" +
+            rescued.queryExecution.executedPlan)
+          val got = snap(rescued)
+          val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+            val stock = out
+            assert(builtIn(stock), s"round $round: the opt-out still plans a rescue")
+            snap(stock)
+          }
+          assert(got == expected, s"round $round diverged from the built-in at " +
+            s"$parts range partitions over ${cols.map(_._2).mkString(", ")}; rescued " +
+            s"${got.diff(expected).take(3)}, built-in ${expected.diff(got).take(3)}")
+        }
+      }
     }
   }
 }
