@@ -25,7 +25,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    running, suffix, sliding ROWS, whole-table, RANGE-interval and
   *    nth_value frames);
   *  - [[graft.plans.GlobalWindowFallback]] (post-planner): warns about
-  *    and counts every global window left on a single-task WindowExec.
+  *    and counts every global window left on a single-task WindowExec;
+  *  - [[graft.plans.MergeScanStrategy]] (planner): an ascending global
+  *    sort on a salted store's key plans as the k-way merge of its
+  *    key-sorted files, with no sample, exchange or sort.
   *
   * Activate with
   *   .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -62,6 +65,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the one-task-stage-at-100TB failure mode is visible in the logs
     // before it hangs a cluster
     ext.injectQueryPostPlannerStrategyRule(_ => graft.plans.GlobalWindowFallback)
+    // the paper's ordered scan: merge the store's sorted files in place
+    // of a range exchange and sort
+    ext.injectPlannerStrategy(_ => graft.plans.MergeScanStrategy)
   }
 }
 

@@ -195,10 +195,7 @@ object VectorIndex {
 
   private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
     val (fs, root) = fsOf(spark, path)
-    val p = deletesPath(root)
-    if (fs.exists(p))
-      Some(spark.read.parquet(p.toString).select("__del_id").distinct())
-    else None
+    graft.store.FileManifest.readTombstones(spark, fs, deletesPath(root), "__del_id")
   }
 
   /** Whether deletions are pending (tombstones not yet folded). */

@@ -11,10 +11,16 @@ import org.apache.spark.sql.functions._
   * sorted streams back into global original-key order
   * (wd/DistributedScanner.java:106-139). On Spark the same semantics are
   * one declarative plan: `filter(key ∈ [start, stop)) → orderBy(key)`.
-  * Catalyst pushes the range predicate into every bucket partition (the
-  * interval fan-out), `FileSourceScanExec` plans one task per bucket file
-  * (the N scanners), and the range-partitioned SortExec is the k-way
-  * merge — spillable and pipelined, never materialized on the driver.
+  * On a store `SaltedStore.read` serves off its file manifest, that plan
+  * is the k-way merge itself: `graft.plans.MergeScanExec` opens each
+  * key-sorted file whose recorded key range meets [start, stop) (the
+  * per-bucket scanners, the range pushed to the row groups) and merges
+  * their streams through a priority queue — no sample, no exchange, no
+  * sort, one task per key-range split of about the advisory partition
+  * size. Any other input (a store read by listing, another format, a
+  * derived or descending sort key) keeps Spark's range-partitioned
+  * SortExec, which restores the same order with a sample job and an
+  * exchange. Neither materializes the result on the driver.
   */
 object DistributedScan {
 
@@ -33,11 +39,12 @@ object DistributedScan {
   /** Streaming-iterator consumption of the ordered scan — the reference's
     * pull-based ResultScanner contract (wd/DistributedScanner.java:61-86:
     * batched `next(nbRows)`, nothing materialized ahead of the consumer).
-    * `toLocalIterator` on the range-partitioned sort pulls ONE sorted
-    * partition at a time to the driver: the executors hold the sorted
-    * runs (the per-bucket scanners), the driver consumes them in range
-    * order (the k-way merge's output order), and peak driver memory is
-    * one partition, not the result set (SURVEY.md §7.5). */
+    * `toLocalIterator` pulls ONE sorted partition at a time to the
+    * driver, one job per partition, in key order: a merge scan's
+    * key-range split (a scan below the advisory partition size is one
+    * split, so one job) or a range-partitioned sort's partition. Peak
+    * driver memory is one partition, not the result set (SURVEY.md
+    * §7.5). */
   def orderedIterator(table: DataFrame, key: Column, start: Long,
                       stop: Long): Iterator[org.apache.spark.sql.Row] = {
     import scala.jdk.CollectionConverters._

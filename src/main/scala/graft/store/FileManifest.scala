@@ -1,11 +1,20 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, BinaryComparison, BoundReference, Expression, In, InSet, Literal, Or, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** LISTING-FREE shard reads off a persisted FILE MANIFEST — the last
   * O(corpus) term in the index probes' cost model, removed.
@@ -26,28 +35,65 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * reshard — appends land in delta segments, tombstones in `_deletes`),
   * so the owner records it once, at rest, in `_graft_files.json`
   * inside the layout dir: relative path + length + mtime per file,
-  * keyed by partition value, plus the data schema DDL. A probe then
-  * builds its scan from the manifest alone — a custom [[FileIndex]]
-  * handing Spark pre-built `FileStatus`es — with ZERO exists/list
-  * calls at any shard count. Readers fall back to the listing path
-  * when no manifest exists ([[readPartitions]] returns None), and the
-  * OWNER's discipline keeps the manifest trustworthy: it is deleted
-  * BEFORE any operation that mutates the file set and rewritten only
-  * after the new state is at rest, so a crash mid-maintenance leaves
-  * probes on the slow-but-correct listing path, never on stale paths.
+  * keyed by partition value, each partition dir's mtime, plus the data
+  * schema DDL. A probe then builds its scan from the manifest alone — a
+  * custom [[FileIndex]] handing Spark pre-built `FileStatus`es — with
+  * ZERO exists/list calls at any shard count. Readers fall back to the
+  * listing path when no manifest exists ([[readPartitions]] returns
+  * None), and the OWNER's discipline keeps the manifest trustworthy: it
+  * is deleted BEFORE any operation that mutates the file set and
+  * rewritten only after the new state is at rest, so a crash
+  * mid-maintenance leaves probes on the slow-but-correct listing path,
+  * never on stale paths.
+  *
+  * A manifest written with a KEY column also records each file's
+  * [min, max] of that key, taken from the parquet footer's row-group
+  * statistics. The file index prunes files whose key range cannot meet
+  * a scan's data filters (a salted store's point get opens the one file
+  * holding its key), and the merge scan (`graft.plans.MergeScanExec`)
+  * plans ordered range scans from the same ranges. Writing a manifest
+  * starts no Spark job: the schema and the key ranges come from
+  * footers read on the driver, and a republish reads only the footers
+  * of files that are new since the manifest it replaces.
   */
 object FileManifest {
   val ManifestFile = "_graft_files.json"
+
+  /** One recorded data file: path relative to the layout root, length,
+    * mtime, and the key column's [min, max] when the manifest has a key
+    * and the file's footer carries complete statistics for it. */
+  private[graft] final case class Entry(rel: String, len: Long, mtime: Long,
+                                        keyRange: Option[(Long, Long)])
+
+  /** A parsed manifest. `dirs`: every partition dir's name → mtime when
+    * the manifest was written (empty in a manifest that predates it). */
+  private[graft] final case class Manifest(parts: Seq[(Int, Seq[Entry])],
+                                           dirs: Map[String, Long],
+                                           key: Option[String],
+                                           nfiles: Option[Long],
+                                           schema: String) {
+    def entries: Seq[Entry] = parts.flatMap(_._2)
+  }
 
   private def fsOf(spark: SparkSession, path: String) = {
     val root = new Path(path)
     (root.getFileSystem(spark.sessionState.newHadoopConf()), root)
   }
 
+  private def partitionDirs(fs: FileSystem, root: Path, prefix: String): Seq[FileStatus] =
+    fs.listStatus(root)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$prefix="))
+      .toSeq
+
+  private[graft] def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).filter(f => f.isFile &&
+      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")).toSeq
+
   /** Record the CURRENT file set of a `prefix=N`-partitioned layout.
     * One recursive driver listing (the same cost one probe's listing
-    * pays, paid once per maintenance cadence instead). Call only with
-    * the layout at rest — after write/compact/reshard commit.
+    * pays, paid once per maintenance cadence instead) and one parquet
+    * footer read for the schema; no Spark job. Call only with the layout
+    * at rest — after write/compact/reshard commit.
     *
     * Every recorded name is VALIDATED here, not trusted at read time:
     * the manifest's hand-built JSON is parsed by regex, so a partition
@@ -60,23 +106,27 @@ object FileManifest {
     * fail-at-write contract as the schema-DDL guard below) rather than
     * corrupt probes later. */
   def write(spark: SparkSession, layoutPath: String,
-            partitionPrefix: String = "shard"): Unit = {
+            partitionPrefix: String = "shard"): Unit =
+    publish(spark, layoutPath, partitionPrefix, None, None)
+
+  /** [[write]] with per-file ranges of the integral column `key`: the
+    * footers of files `prior` already records (same path, length and
+    * mtime) are not read again. */
+  private[graft] def publish(spark: SparkSession, layoutPath: String,
+                             partitionPrefix: String, key: Option[String],
+                             prior: Option[Manifest]): Unit = {
     val (fs, root) = fsOf(spark, layoutPath)
-    val parts = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partitionPrefix="))
-    val sb = new StringBuilder
-    var firstFile: Option[Path] = None
-    var nFiles = 0L
-    sb ++= "{\"parts\":{"
-    var firstPart = true
-    parts.foreach { p =>
+    val conf = spark.sessionState.newHadoopConf()
+    val dirs = partitionDirs(fs, root, partitionPrefix).map { p =>
       val v = p.getPath.getName.stripPrefix(s"$partitionPrefix=")
       require(v.nonEmpty && v.forall(_.isDigit),
         s"file-manifest: partition dir '${p.getPath.getName}' does not carry " +
           s"a plain non-negative integer value — the regex-parsed manifest " +
           "would silently drop it from every probe; fix the layout")
-      val files = fs.listStatus(p.getPath).filter(f => f.isFile &&
-        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      (v.toInt, p)
+    }.sortBy(_._1)
+    val listed = dirs.map { case (v, p) =>
+      val files = dataFiles(fs, p.getPath)
       files.foreach { f =>
         val n = f.getPath.getName
         require(!n.exists(c => c == '"' || c == '\\' || c == ']'),
@@ -84,33 +134,81 @@ object FileManifest {
             "JSON/regex metacharacter (\", \\ or ]) — it would be silently " +
             "dropped from the probe file set; rename the foreign file")
       }
-      if (files.nonEmpty) {
-        if (firstFile.isEmpty) firstFile = Some(files.head.getPath)
-        if (!firstPart) sb += ','
-        firstPart = false
-        nFiles += files.length
-        sb ++= s""""$v":["""
-        sb ++= files.map(f =>
-          s"""["${p.getPath.getName}/${f.getPath.getName}",${f.getLen},${f.getModificationTime}]""")
-          .mkString(",")
-        sb ++= "]"
-      }
+      (v, p, files)
     }
-    sb ++= s"},\"nfiles\":$nFiles,\"schema\":\""
-    val schema = firstFile match {
-      case Some(f) => spark.read.parquet(f.toString).schema.toDDL
-      case None => ""
+    val first = listed.iterator.flatMap(_._3).nextOption()
+    val firstFooter = first.map(footer(conf, _))
+    val schema = firstFooter.map(sparkSchema(first.get.getPath, _))
+    val statsKey = key.filter(k => schema.exists(_.fields.exists(f =>
+      f.name == k && (f.dataType == LongType || f.dataType == IntegerType))))
+    statsKey.foreach(k => require(!k.exists(c => c == '"' || c == '\\'),
+      s"file-manifest key column name needs JSON escaping (unsupported): $k"))
+    val known = prior.filter(_.key == statsKey).map(_.entries.map(e => e.rel -> e).toMap)
+      .getOrElse(Map.empty)
+    def entry(dir: FileStatus, f: FileStatus): Entry = {
+      val rel = s"${dir.getPath.getName}/${f.getPath.getName}"
+      known.get(rel).filter(e => e.len == f.getLen && e.mtime == f.getModificationTime)
+        .getOrElse(Entry(rel, f.getLen, f.getModificationTime, statsKey.flatMap { k =>
+          val ft = if (first.contains(f)) firstFooter.get else footer(conf, f)
+          keyRange(ft, k)
+        }))
     }
-    require(!schema.contains('"') && !schema.contains('\\'),
-      s"file-manifest schema DDL needs JSON escaping (unsupported): $schema")
-    sb ++= schema
-    sb ++= "\"}"
+    val ddl = schema.map(_.toDDL).getOrElse("")
+    require(!ddl.contains('"') && !ddl.contains('\\'),
+      s"file-manifest schema DDL needs JSON escaping (unsupported): $ddl")
+    val sb = new StringBuilder
+    sb ++= "{\"parts\":{"
+    sb ++= listed.filter(_._3.nonEmpty).map { case (v, p, files) =>
+      files.map(entry(p, _)).map { e =>
+        s"""["${e.rel}",${e.len},${e.mtime}""" +
+          e.keyRange.map { case (lo, hi) => s",$lo,$hi" }.getOrElse("") + "]"
+      }.mkString(s""""$v":[""", ",", "]")
+    }.mkString(",")
+    sb ++= "},\"dirs\":{"
+    sb ++= dirs.map { case (_, p) => s""""${p.getPath.getName}":${p.getModificationTime}""" }
+      .mkString(",")
+    sb ++= "}"
+    statsKey.foreach(k => sb ++= s""","key":"$k"""")
+    sb ++= s""","nfiles":${listed.map(_._3.length).sum},"schema":"$ddl"}"""
     val tmp = new Path(root, ManifestFile + ".tmp")
     val dst = new Path(root, ManifestFile)
     val out = fs.create(tmp, true)
     try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
     if (fs.exists(dst)) fs.delete(dst, false)
     require(fs.rename(tmp, dst), s"file-manifest rename failed: $tmp -> $dst")
+  }
+
+  private def footer(conf: Configuration, f: FileStatus): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+      ParquetMetadataConverter.NO_FILTER)
+
+  /** The data schema Spark's own inference takes from a footer (the
+    * Spark schema the writer stored, else the converted parquet one),
+    * nullable as every file-source read reports it. */
+  private def sparkSchema(path: Path, ft: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, ft),
+      new ParquetToSparkSchemaConverter(SQLConf.get)).toNullable
+
+  /** The schema of a Spark-written parquet file, from its footer alone. */
+  private[graft] def fileSchema(spark: SparkSession, f: FileStatus): StructType =
+    sparkSchema(f.getPath, footer(spark.sessionState.newHadoopConf(), f))
+
+  /** [min, max] of column `key` over every non-empty row group; None
+    * unless every such group records both and no nulls. */
+  private def keyRange(ft: ParquetMetadata, key: String): Option[(Long, Long)] = {
+    val ranges = ft.getBlocks.asScala.filter(_.getRowCount > 0).map { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == key).flatMap { c =>
+        val s = c.getStatistics
+        if (s == null || s.isEmpty || !s.hasNonNullValue || s.getNumNulls != 0) None
+        else (s.genericGetMin, s.genericGetMax) match {
+          case (a: java.lang.Long, z: java.lang.Long) => Some((a.longValue, z.longValue))
+          case (a: java.lang.Integer, z: java.lang.Integer) => Some((a.longValue, z.longValue))
+          case _ => None
+        }
+      }
+    }
+    if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
+    else Some((ranges.map(_.get._1).min, ranges.map(_.get._2).max))
   }
 
   /** Drop the manifest — the FIRST step of any maintenance op that will
@@ -125,6 +223,76 @@ object FileManifest {
   def exists(spark: SparkSession, layoutPath: String): Boolean = {
     val (fs, root) = fsOf(spark, layoutPath)
     fs.exists(new Path(root, ManifestFile))
+  }
+
+  private val PartRe = """"(\d+)":\[((?:\[[^\]]*\],?)*)\]""".r
+  private val FileRe = """\["([^"]+)",(\d+),(\d+)(?:,(-?\d+),(-?\d+))?\]""".r
+  private val DirsRe = """"dirs":\{([^}]*)\}""".r
+  private val DirRe = """"([^"]+)":(\d+)""".r
+
+  /** The parsed manifest at `layoutPath`, if one stands. */
+  private[graft] def load(spark: SparkSession, layoutPath: String): Option[Manifest] = {
+    val (fs, root) = fsOf(spark, layoutPath)
+    load(fs, root)
+  }
+
+  private def load(fs: FileSystem, root: Path): Option[Manifest] = {
+    val mf = new Path(root, ManifestFile)
+    val txt = try {
+      val in = fs.open(mf)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    } catch { case _: java.io.FileNotFoundException => return None }
+    val schema = """"schema":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
+      .getOrElse(return None)
+    val parts = PartRe.findAllMatchIn(txt).map { m =>
+      (m.group(1).toInt, FileRe.findAllMatchIn(m.group(2)).map { f =>
+        Entry(f.group(1), f.group(2).toLong, f.group(3).toLong,
+          Option(f.group(4)).map(lo => (lo.toLong, f.group(5).toLong)))
+      }.toSeq)
+    }.toSeq
+    val dirs = DirsRe.findFirstMatchIn(txt).map(m =>
+      DirRe.findAllMatchIn(m.group(1)).map(d => d.group(1) -> d.group(2).toLong).toMap)
+      .getOrElse(Map.empty[String, Long])
+    Some(Manifest(parts, dirs,
+      """"key":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1)),
+      """"nfiles":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong),
+      schema))
+  }
+
+  /** The manifest, if one stands that a read may trust: no compaction
+    * marker, and every entry the regex parsed (a torn or foreign-edited
+    * manifest whose entries it skipped must not shrink a read's file
+    * set). With `verifyDirs` the partition dirs must also be exactly
+    * the recorded ones with the recorded mtimes — one `listStatus` of
+    * the root, which catches a file added or removed outside the
+    * owner's lifecycle (a plain-Spark append, a writer that died after
+    * its commit and before republishing). */
+  private def standing(fs: FileSystem, root: Path, layoutPath: String,
+                       partitionPrefix: String, verifyDirs: Boolean): Option[Manifest] = {
+    // belt-and-braces: the owner deletes the manifest before compacting,
+    // so a standing compact marker implies no manifest — but a foreign
+    // compactor (SaltedStore.compact called directly) wouldn't know
+    if (fs.exists(new Path(root, SaltedStore.CompactingMarker))) return None
+    val m = load(fs, root).getOrElse(return None)
+    val parsed = m.entries.size.toLong
+    if (m.nfiles.exists(_ != parsed)) {
+      System.err.println(s"[graft] FileManifest at $layoutPath parsed " +
+        s"$parsed file entries but records nfiles=${m.nfiles.get} — " +
+        "corrupted/foreign-edited manifest; falling back to the listing read")
+      return None
+    }
+    if (verifyDirs && partitionDirs(fs, root, partitionPrefix)
+        .map(d => d.getPath.getName -> d.getModificationTime).toMap != m.dirs) return None
+    Some(m)
+  }
+
+  /** The manifest a read may trust, partition dirs verified against a
+    * listing of the root (see [[standing]]); None means the caller takes
+    * its listing path. */
+  private[graft] def current(spark: SparkSession, layoutPath: String,
+                             partitionPrefix: String): Option[Manifest] = {
+    val (fs, root) = fsOf(spark, layoutPath)
+    standing(fs, root, layoutPath, partitionPrefix, verifyDirs = true)
   }
 
   /** The manifest-backed pruned read: a DataFrame over exactly the
@@ -147,125 +315,198 @@ object FileManifest {
     * covers the library's own ops; this catches the foreign hand. */
   def readPartitions(spark: SparkSession, layoutPath: String, values: Seq[Long],
                      partitionPrefix: String = "shard"): Option[DataFrame] =
-    readImpl(spark, layoutPath, Some(values.map(_.toString).toSet), partitionPrefix)
+    readImpl(spark, layoutPath, Some(values.toSet), partitionPrefix, verifyDirs = false)
 
   /** [[readPartitions]] over EVERY recorded partition — the whole-layout
     * read (prefix probes, audits) without the O(partitions) dir listing. */
   def readAllPartitions(spark: SparkSession, layoutPath: String,
                         partitionPrefix: String = "shard"): Option[DataFrame] =
-    readImpl(spark, layoutPath, None, partitionPrefix)
+    readImpl(spark, layoutPath, None, partitionPrefix, verifyDirs = false)
+
+  /** The salted store's read: [[readPartitions]] (all partitions when
+    * `values` is None) behind the partition-dir check of [[current]],
+    * so it never returns fewer rows than the listing read would. */
+  private[graft] def readVerified(spark: SparkSession, layoutPath: String,
+                                  values: Option[Seq[Long]],
+                                  partitionPrefix: String): Option[DataFrame] =
+    readImpl(spark, layoutPath, values.map(_.toSet), partitionPrefix, verifyDirs = true)
 
   private def readImpl(spark: SparkSession, layoutPath: String,
-                       wanted: Option[Set[String]],
-                       partitionPrefix: String): Option[DataFrame] = {
+                       wanted: Option[Set[Long]], partitionPrefix: String,
+                       verifyDirs: Boolean): Option[DataFrame] = {
     val (fs, root) = fsOf(spark, layoutPath)
-    val mf = new Path(root, ManifestFile)
-    // belt-and-braces: the owner deletes the manifest before compacting,
-    // so a standing compact marker implies no manifest — but a foreign
-    // compactor (SaltedStore.compact called directly) wouldn't know
-    if (fs.exists(new Path(root, SaltedStore.CompactingMarker))) return None
-    if (!fs.exists(mf)) return None
-    val in = fs.open(mf)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val schemaDdl = """"schema":"([^"]*)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse(return None)
-    if (schemaDdl.isEmpty) return None // empty layout: let the caller's fallback decide
-    val dataSchema = StructType.fromDDL(schemaDdl)
-    val partSchema = StructType(Seq(StructField(partitionPrefix, IntegerType)))
-    val partRe = """"(\d+)":\[((?:\[[^\]]*\],?)*)\]""".r
-    val fileRe = """\["([^"]+)",(\d+),(\d+)\]""".r
-    var parsedFiles = 0L
-    val dirs: Seq[(Int, Seq[FileStatusWithMetadata])] =
-      partRe.findAllMatchIn(txt).flatMap { m =>
-        val files = fileRe.findAllMatchIn(m.group(2)).map { f =>
-          FileStatusWithMetadata(new FileStatus(
-            f.group(2).toLong, false, 1, 128L * 1024 * 1024,
-            f.group(3).toLong, new Path(root, f.group(1))),
-            Map.empty)
-        }.toSeq
-        parsedFiles += files.size
-        if (wanted.exists(!_.contains(m.group(1)))) None
-        else Some((m.group(1).toInt, files))
-      }.toSeq
-    // (a) stored-total cross-check: entries the regex skipped (a torn
-    // write, foreign edits) must not silently shrink the probe file set
-    val stored = """"nfiles":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    if (stored.exists(_ != parsedFiles)) {
-      System.err.println(s"[graft] FileManifest at $layoutPath parsed " +
-        s"$parsedFiles file entries but records nfiles=${stored.get} — " +
-        "corrupted/foreign-edited manifest; falling back to the listing read")
-      return None
+    val m = standing(fs, root, layoutPath, partitionPrefix, verifyDirs).getOrElse(return None)
+    if (m.schema.isEmpty) return None // empty layout: let the caller's fallback decide
+    val dirs = m.parts.filter(p => wanted.forall(_.contains(p._1.toLong))).map { case (v, es) =>
+      (InternalRow(v), es.map(e => KeyedFile(FileStatusWithMetadata(new FileStatus(
+        e.len, false, 1, 128L * 1024 * 1024, e.mtime, new Path(root, e.rel))), e.keyRange)))
     }
-    // (b) spot-check one recorded file still exists (foreign deletion)
+    // spot-check one recorded file still exists (foreign deletion)
     val gone = dirs.iterator.flatMap(_._2.headOption).nextOption()
-      .filter(f => !fs.exists(f.getPath))
+      .filter(f => !fs.exists(f.status.getPath))
     if (gone.isDefined) {
       System.err.println(s"[graft] FileManifest at $layoutPath lists " +
-        s"${gone.get.getPath}, which no longer exists — the file set was " +
+        s"${gone.get.status.getPath}, which no longer exists — the file set was " +
         "mutated outside the owner's lifecycle; falling back to the listing read")
       return None
     }
-    val idx = new ManifestFileIndex(root, partSchema, dirs)
-    val rel = HadoopFsRelation(idx, partSchema, dataSchema, None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-      Map.empty)(spark)
-    Some(spark.baseRelationToDataFrame(rel))
+    val partSchema = StructType(Seq(StructField(partitionPrefix, IntegerType)))
+    Some(frame(spark, new ManifestFileIndex(root, partSchema, dirs, m.key),
+      StructType.fromDDL(m.schema)))
+  }
+
+  private def frame(spark: SparkSession, idx: ManifestFileIndex,
+                    dataSchema: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(idx, idx.partitionSchema, dataSchema,
+      None, new ParquetFileFormat(), Map.empty)(spark))
+
+  /** A parquet read of exactly `files` with a known data schema: no
+    * schema inference, no listing, and no root path for `DataSource` to
+    * judge hidden (the tombstone and delta-segment reads). */
+  private[graft] def readFiles(spark: SparkSession, root: Path, files: Seq[FileStatus],
+                               schema: StructType): DataFrame =
+    frame(spark, new ManifestFileIndex(root, new StructType(),
+      Seq((InternalRow.empty, files.map(f => KeyedFile(FileStatusWithMetadata(f), None)))),
+      None), schema)
+
+  /** The distinct ids of a tombstone dir of parquet files holding one
+    * BIGINT column `idCol`; None when the dir holds no data file. The
+    * schema is known, so building the read starts no job. */
+  private[graft] def readTombstones(spark: SparkSession, fs: FileSystem, dir: Path,
+                                    idCol: String): Option[DataFrame] = {
+    val files = if (fs.exists(dir)) dataFiles(fs, dir) else Seq.empty
+    if (files.isEmpty) None
+    else Some(readFiles(spark, dir, files, StructType(Seq(StructField(idCol, LongType))))
+      .select(idCol).distinct())
   }
 
   /** The largest recorded per-partition file count, manifest-only —
     * the `SaltedStore.needsCompaction` signal WITHOUT its O(partitions)
     * per-dir listing (which itself grows with a ∝-corpus shard count).
     * None when no manifest stands (callers take the listing check). */
-  def maxFilesPerPartition(spark: SparkSession, layoutPath: String): Option[Int] = {
-    val (fs, root) = fsOf(spark, layoutPath)
-    val mf = new Path(root, ManifestFile)
-    if (!fs.exists(mf)) return None
-    val in = fs.open(mf)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val partRe = """"(\d+)":\[((?:\[[^\]]*\],?)*)\]""".r
-    val fileRe = """\["([^"]+)",(\d+),(\d+)\]""".r
-    val counts = partRe.findAllMatchIn(txt)
-      .map(m => fileRe.findAllMatchIn(m.group(2)).size).toSeq
-    Some(if (counts.isEmpty) 0 else counts.max)
-  }
+  def maxFilesPerPartition(spark: SparkSession, layoutPath: String): Option[Int] =
+    load(spark, layoutPath).map(maxFiles)
+
+  private[graft] def maxFiles(m: Manifest): Int =
+    if (m.parts.isEmpty) 0 else m.parts.map(_._2.size).max
 }
+
+/** A manifest file with its recorded key range, if any. */
+private[graft] final case class KeyedFile(status: FileStatusWithMetadata,
+                                          keyRange: Option[(Long, Long)])
 
 /** A [[FileIndex]] whose file set comes from a manifest instead of a
   * filesystem listing — `listFiles` serves pre-built statuses and
   * honors partition filters by interpreting them against the partition
-  * rows (the `PartitioningAwareFileIndex.prunePartitions` contract). */
+  * rows (the `PartitioningAwareFileIndex.prunePartitions` contract).
+  * With a `key`, data filters on it also prune every file whose
+  * recorded key range they cannot meet. */
 private[graft] class ManifestFileIndex(
     root: Path,
     override val partitionSchema: StructType,
-    dirs: Seq[(Int, Seq[FileStatusWithMetadata])]) extends FileIndex {
+    dirs: Seq[(InternalRow, Seq[KeyedFile])],
+    val key: Option[String]) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(root)
 
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val all = dirs.map { case (v, files) =>
-      PartitionDirectory(InternalRow(v), files)
-    }
-    if (partitionFilters.isEmpty) all
-    else {
-      val partAttrs: Seq[Attribute] =
-        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(partitionSchema)
-      val bound = Predicate.createInterpreted(
-        partitionFilters.reduce(org.apache.spark.sql.catalyst.expressions.And)
-          .transform { case a: AttributeReference =>
-            val i = partAttrs.indexWhere(_.name == a.name)
-            BoundReference(i, partAttrs(i).dataType, nullable = true)
-          })
-      all.filter(p => bound.eval(p.values))
+  /** The partition dirs and files a scan under these filters must read. */
+  def selected(partitionFilters: Seq[Expression],
+               dataFilters: Seq[Expression]): Seq[(InternalRow, Seq[KeyedFile])] = {
+    val parts =
+      if (partitionFilters.isEmpty) dirs
+      else {
+        val partAttrs: Seq[Attribute] =
+          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(partitionSchema)
+        val bound = Predicate.createInterpreted(
+          partitionFilters.reduce(And)
+            .transform { case a: AttributeReference =>
+              val i = partAttrs.indexWhere(_.name == a.name)
+              BoundReference(i, partAttrs(i).dataType, nullable = true)
+            })
+        dirs.filter(p => bound.eval(p._1))
+      }
+    key match {
+      case Some(k) if dataFilters.nonEmpty =>
+        parts.map { case (v, files) =>
+          (v, files.filter(_.keyRange.forall { case (lo, hi) =>
+            dataFilters.forall(KeyBounds.admits(_, k, lo, hi)) }))
+        }.filter(_._2.nonEmpty)
+      case _ => parts
     }
   }
 
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    selected(partitionFilters, dataFilters).map { case (v, files) =>
+      PartitionDirectory(v, files.map(_.status))
+    }
+
   override def inputFiles: Array[String] =
-    dirs.flatMap(_._2.map(_.getPath.toString)).toArray
+    dirs.flatMap(_._2.map(_.status.getPath.toString)).toArray
 
   override def refresh(): Unit = ()
 
-  override def sizeInBytes: Long = dirs.flatMap(_._2.map(_.getLen)).sum
+  override def sizeInBytes: Long = dirs.flatMap(_._2.map(_.status.getLen)).sum
+}
+
+/** Key-range reasoning over filter expressions on one integral column. */
+private[graft] object KeyBounds {
+  private def lit(e: Expression): Option[Long] = e match {
+    case Literal(v: Long, LongType) => Some(v)
+    case Literal(v: Int, IntegerType) => Some(v.toLong)
+    case _ => None
+  }
+
+  private def isKey(e: Expression, key: String): Boolean = e match {
+    case a: Attribute => a.name == key
+    case _ => false
+  }
+
+  /** `key <op> v` with the key moved to the left; op is one of =, <=>,
+    * <, <=, >, >=. */
+  private def comparison(e: Expression, key: String): Option[(String, Long)] = e match {
+    case b: BinaryComparison if isKey(b.left, key) => lit(b.right).map((b.symbol, _))
+    case b: BinaryComparison if isKey(b.right, key) =>
+      val flipped = b.symbol match {
+        case "<" => ">"
+        case "<=" => ">="
+        case ">" => "<"
+        case ">=" => "<="
+        case s => s
+      }
+      lit(b.left).map((flipped, _))
+    case _ => None
+  }
+
+  /** Whether a row with a key in [lo, hi] may satisfy `e` (true when
+    * `e` says nothing about the key). */
+  def admits(e: Expression, key: String, lo: Long, hi: Long): Boolean = e match {
+    case And(a, b) => admits(a, key, lo, hi) && admits(b, key, lo, hi)
+    case Or(a, b) => admits(a, key, lo, hi) || admits(b, key, lo, hi)
+    case In(k, list) if isKey(k, key) && list.forall(lit(_).isDefined) =>
+      list.flatMap(lit).exists(v => lo <= v && v <= hi)
+    case InSet(k, set) if isKey(k, key) && set.forall(v => v.isInstanceOf[Long] || v.isInstanceOf[Int]) =>
+      set.exists { v => val x = v.asInstanceOf[Number].longValue; lo <= x && x <= hi }
+    case _ => comparison(e, key) match {
+      case Some(("=" | "<=>", v)) => lo <= v && v <= hi
+      case Some(("<", v)) => lo < v
+      case Some(("<=", v)) => lo <= v
+      case Some((">", v)) => hi > v
+      case Some((">=", v)) => hi >= v
+      case _ => true
+    }
+  }
+
+  /** The inclusive [lo, hi] of keys that the conjunction of `filters`
+    * allows (lo > hi when it allows none). */
+  def of(filters: Seq[Expression], key: String): (Long, Long) =
+    filters.flatMap(f => comparison(f, key)).foldLeft((Long.MinValue, Long.MaxValue)) {
+      case ((lo, hi), (op, v)) => op match {
+        case "=" | "<=>" => (math.max(lo, v), math.min(hi, v))
+        case "<" => if (v == Long.MinValue) (1L, 0L) else (lo, math.min(hi, v - 1))
+        case "<=" => (lo, math.min(hi, v))
+        case ">" => if (v == Long.MaxValue) (1L, 0L) else (math.max(lo, v + 1), hi)
+        case ">=" => (math.max(lo, v), hi)
+      }
+    }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * analog is a bucketed, sorted parquet layout:
   *
   *   df → withColumn(bucket, salt) → repartition(bucket)   (the one shuffle
-  *        = the node boundary) → sortWithinPartitions(key) →
+  *        = the node boundary) → sortWithinPartitions(bucket, key) →
   *        write.partitionBy(bucket)
   *
   * Each `bucket=i/` directory is the analog of the region(s) owning
@@ -20,6 +20,16 @@ import org.apache.spark.sql.functions._
   * (the entire point of the reference), and each bucket's files are
   * sorted by key so range scans get parquet min/max row-group skipping —
   * the analog of HBase start/stop-row seeks.
+  *
+  * A parquet store keeps a [[FileManifest]] in its root: every file with
+  * its key range (from the footers) and every bucket dir's mtime. Reads
+  * build their scan from it (no listing, no schema-inference job), point
+  * gets open only the files whose key range holds the key, and an
+  * ordered range scan plans as the per-file k-way merge of
+  * `graft.plans.MergeScanExec` — the reference's DistributedScanner.
+  * Every op that changes the file set drops the manifest first and
+  * republishes it at rest; a read that finds none, or finds the bucket
+  * dirs changed since it was written, takes the listing read.
   *
   * At 100 TB: one narrow stage + one hash shuffle on a small int key;
   * no driver-side work; bucket count chosen to match write parallelism.
@@ -37,10 +47,19 @@ object SaltedStore {
   def write(df: DataFrame, keyCol: Column, dist: Distributor, path: String,
             mode: String = "overwrite", format: String = "parquet",
             options: Map[String, String] = Map.empty): Unit = {
+    val spark = df.sparkSession
+    // the file manifest dies before the file set changes and is
+    // republished after the commit; its footer stats carry over for
+    // every file the write left in place
+    val prior = FileManifest.load(spark, path)
+    FileManifest.delete(spark, path)
     dist
       .withBucket(df, keyCol)
       .repartition(col("bucket"))
-      .sortWithinPartitions(keyCol)
+      // the partitioned writer requires (bucket) order: sorting on
+      // (bucket, key) meets it, so each file's key order comes from this
+      // plan and not from how an added sort treats ties
+      .sortWithinPartitions(col("bucket"), keyCol)
       .write
       .partitionBy("bucket")
       .mode(mode)
@@ -50,7 +69,19 @@ object SaltedStore {
       // and scan-IO delta is a real cost lever)
       .options(options)
       .save(path)
+    if (format == "parquet")
+      FileManifest.publish(spark, path, "bucket", storedColumn(df, keyCol), prior)
   }
+
+  /** The name `c` is stored under when it is a plain column of `df`
+    * (None for a derived key, which the files do not hold). */
+  private def storedColumn(df: DataFrame, c: Column): Option[String] =
+    df.select(c).queryExecution.analyzed match {
+      case org.apache.spark.sql.catalyst.plans.logical.Project(
+          Seq(a: org.apache.spark.sql.catalyst.expressions.AttributeReference), child)
+          if child.output.exists(_.exprId == a.exprId) => Some(a.name)
+      case _ => None
+    }
 
   /** Idempotent [[write]] (parquet only): skip when a completed write —
     * parquet's `_SUCCESS` commit marker — already sits at `path`. Same
@@ -76,6 +107,10 @@ object SaltedStore {
   /** Read a salted bucketed table back. The `bucket` partition column
     * comes back as a partition-pruning-capable column. For schemaless
     * formats (csv) pass the schema via `schemaDDL` to avoid inference.
+    *
+    * A parquet store with a current file manifest is read off it and
+    * starts no job; otherwise the listing read below runs, with its
+    * marker discipline.
     *
     * Mid-compaction discipline — the marker is checked BEFORE listing
     * (listing first would capture a file index missing the in-swap
@@ -108,8 +143,33 @@ object SaltedStore {
     * of writers). */
   def read(spark: SparkSession, path: String, format: String = "parquet",
            schemaDDL: Option[String] = None,
-           partitionPrefix: String = "bucket"): DataFrame =
-    readAttempt(spark, path, format, schemaDDL, partitionPrefix, retries = 2)
+           partitionPrefix: String = "bucket"): DataFrame = {
+    requireNoResalt(spark, path)
+    manifestRead(spark, path, None, format, schemaDDL, partitionPrefix)
+      .getOrElse(readAttempt(spark, path, format, schemaDDL, partitionPrefix, retries = 2))
+  }
+
+  /** The read off the store's file manifest, when one stands and its
+    * partition dirs are the ones it records ([[FileManifest.current]]):
+    * no listing, no schema inference, no Spark job. None sends the
+    * caller to its listing read. */
+  private def manifestRead(spark: SparkSession, path: String, values: Option[Seq[Long]],
+                           format: String, schemaDDL: Option[String],
+                           partitionPrefix: String): Option[DataFrame] =
+    if (format != "parquet" || schemaDDL.nonEmpty) None
+    else FileManifest.readVerified(spark, path, values, partitionPrefix)
+
+  private def requireNoResalt(spark: SparkSession, path: String): Unit = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    // a bucket-count migration changes the SET of bucket dirs — no
+    // consistent union exists mid-swap, so fail loudly instead of
+    // returning a mix of generations (resalt is an offline operation;
+    // a standing marker is a crashed migration: resume it via resalt)
+    require(!fs.exists(new org.apache.hadoop.fs.Path(root, ResaltMarker)),
+      s"read: $path has an in-flight bucket migration ($ResaltMarker) — " +
+        "re-invoke SaltedStore.resalt with the original arguments to finish it")
+  }
 
   /** Read ONLY the named partition values — the point-probe read whose
     * LISTING cost is O(probed values), not O(partitions). A full
@@ -138,10 +198,12 @@ object SaltedStore {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    require(!fs.exists(new Path(root, ResaltMarker)),
-      s"read: $path has an in-flight bucket migration ($ResaltMarker) — " +
-        "re-invoke SaltedStore.resalt with the original arguments to finish it")
+    requireNoResalt(spark, path)
     val vs = values.distinct
+    manifestRead(spark, path, Some(vs), format, schemaDDL, partitionPrefix) match {
+      case Some(df) => return df
+      case None =>
+    }
     def slowPath: DataFrame =
       read(spark, path, format, schemaDDL, partitionPrefix)
         .filter(org.apache.spark.sql.functions.col(partitionPrefix).isin(vs: _*))
@@ -167,13 +229,7 @@ object SaltedStore {
     }
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // a bucket-count migration changes the SET of bucket dirs — no
-    // consistent union exists mid-swap, so fail loudly instead of
-    // returning a mix of generations (resalt is an offline operation;
-    // a standing marker is a crashed migration: resume it via resalt)
-    require(!fs.exists(new Path(root, ResaltMarker)),
-      s"read: $path has an in-flight bucket migration ($ResaltMarker) — " +
-        "re-invoke SaltedStore.resalt with the original arguments to finish it")
+    requireNoResalt(spark, path)
     val marker = new Path(root, CompactingMarker)
     if (!fs.exists(marker)) {
       val df = load(path) // eager file listing happens here
@@ -328,20 +384,29 @@ object SaltedStore {
     import spark.implicits._
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val visible = fs.listStatus(root)
+    def visible = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
       .map(b => (b.getPath, b.getPath.getName.stripPrefix("bucket=").toLong)).toSeq
     // mid-swap fallback, same contract as read(): a bucket parked at
     // .old_bucket=N with no visible bucket=N still counts
-    val parked =
+    def parked =
       if (fs.exists(new Path(root, CompactingMarker))) strandedOldBuckets(fs, root)
       else Seq.empty
-    val files = (visible ++ parked)
-      .map { case (dir, n) =>
-        val fsz = fs.listStatus(dir)
-          .filterNot(_.getPath.getName.startsWith("_")).map(_.getLen)
-        (n, fsz.length.toLong, fsz.sum)
-      }.toDF("bucket", "n_files", "bytes")
+    val files = (FileManifest.current(spark, path, "bucket") match {
+      // a standing manifest records every bucket's files and lengths
+      case Some(m) =>
+        val recorded = m.parts.map { case (v, es) => v.toLong -> es }.toMap
+        m.dirs.keys.map(_.stripPrefix("bucket=").toLong).toSeq.sorted.map { n =>
+          val es = recorded.getOrElse(n, Seq.empty)
+          (n, es.length.toLong, es.map(_.len).sum)
+        }
+      case None => (visible ++ parked)
+        .map { case (dir, n) =>
+          val fsz = fs.listStatus(dir)
+            .filterNot(_.getPath.getName.startsWith("_")).map(_.getLen)
+          (n, fsz.length.toLong, fsz.sum)
+        }
+    }).toDF("bucket", "n_files", "bytes")
     val rows = read(spark, path, format, schemaDDL)
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_rows"),
@@ -352,23 +417,26 @@ object SaltedStore {
   /** Whether any partition directory has accumulated more than
     * `maxFiles` data files — the flush-accumulation signal a maintenance
     * loop keys compaction on (the HBase compaction-selection check).
-    * Pure filesystem listing, no Spark job: one listStatus per partition
-    * dir, the same listing [[compact]] itself starts with — so calling
-    * this every maintenance tick is free compared to one needless
-    * full-store rewrite. */
+    * No Spark job: the counts come from the file manifest when one
+    * stands ([[FileManifest.current]]), else from one listStatus per
+    * partition dir, the same listing [[compact]] itself starts with — so
+    * calling this every maintenance tick is free compared to one
+    * needless full-store rewrite. */
   def needsCompaction(spark: SparkSession, path: String, maxFiles: Int = 4,
                       partitionPrefix: String = "bucket"): Boolean = {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(root) && fs.listStatus(root)
+    FileManifest.current(spark, path, partitionPrefix)
+      .map(FileManifest.maxFiles(_) > maxFiles)
+      .getOrElse(fs.exists(root) && fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partitionPrefix="))
       .exists { b =>
         fs.listStatus(b.getPath).count { f =>
           f.isFile && !f.getPath.getName.startsWith("_") &&
             !f.getPath.getName.startsWith(".")
         } > maxFiles
-      }
+      })
   }
 
   /** Compact a salted bucketed layout in place — the minor-compaction
@@ -497,6 +565,13 @@ object SaltedStore {
             "running on this path; concurrent compacts are forbidden")
       }
     }
+    // The manifest dies before the file set changes. It is republished
+    // at the end only if one stood here: an owner that dropped its own
+    // manifests first (ShardedLayout's major compaction) publishes them
+    // itself once ITS protocol is at rest — a manifest published in the
+    // middle of that protocol would let a fold double-count rows.
+    val prior = FileManifest.load(spark, path)
+    FileManifest.delete(spark, path)
     // Recover a crashed PREDECESSOR before doing anything else: a parked
     // `.old_<prefix>=N` whose visible dir is missing is a swap that died
     // between its two renames. Readers recover it only WHILE the marker
@@ -563,6 +638,7 @@ object SaltedStore {
       fs.delete(marker, false)
       fs.delete(old, true)
     }
+    prior.foreach(m => FileManifest.publish(spark, path, partitionPrefix, m.key, None))
   }
 
   /** Marker for an in-flight bucket-count migration (see [[resalt]]).
@@ -608,7 +684,11 @@ object SaltedStore {
     *     mid-migration. */
   def resalt(spark: SparkSession, path: String, keyCol: Column,
              newDist: graft.keys.Distributor, format: String = "parquet",
-             partitionPrefix: String = "bucket"): Unit =
+             partitionPrefix: String = "bucket"): Unit = {
+    // same manifest discipline as compact: dropped first, republished
+    // at rest only if one stood when this call started
+    val prior = FileManifest.load(spark, path)
+    FileManifest.delete(spark, path)
     StagedSwap.migrate(spark, path, ResaltMarker,
       ".resalt_new", ".resalt_old",
       opName = "resalt", what = "distributor",
@@ -622,8 +702,10 @@ object SaltedStore {
           .drop(partitionPrefix)
         newDist.withBucket(df, keyCol)
           .repartition(col("bucket"))
-          .sortWithinPartitions(keyCol)
+          .sortWithinPartitions(col("bucket"), keyCol)
           .write.partitionBy("bucket").mode("overwrite").format(format)
           .save(staging)
       })
+    prior.foreach(m => FileManifest.publish(spark, path, partitionPrefix, m.key, None))
+  }
 }

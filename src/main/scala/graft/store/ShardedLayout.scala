@@ -201,10 +201,17 @@ abstract class ShardedLayout(
     DeltaSegments.liveSegs(fs, new Path(root, deltaDir))
   }
 
+  /** The layer's rows in `segs`: a read of the segments' data files
+    * under the layer's data schema (one footer), so building it starts
+    * no schema-inference job. */
   private def segRows(spark: SparkSession, segs: Seq[Path],
                       l: ShardedLayer): Option[DataFrame] =
-    if (segs.isEmpty) None
-    else Some(spark.read.parquet(segs.map(s => layerPath(s.toString, l)): _*))
+    segs.headOption.flatMap { seg0 =>
+      val (fs, _) = fsOf(spark, seg0.toString)
+      val files = segs.flatMap(s => FileManifest.dataFiles(fs, new Path(layerPath(s.toString, l))))
+      files.headOption.map(f => FileManifest.readFiles(spark, seg0.getParent, files,
+        FileManifest.fileSchema(spark, f)))
+    }
 
   /** `proj` over `base` ∪ the layer's unfolded delta rows — the union
     * every probe and rewrite reads (folded, unreclaimed segments are
@@ -258,8 +265,7 @@ abstract class ShardedLayout(
   /** The pending tombstone set, if any. */
   def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
     val (fs, root) = fsOf(spark, path)
-    if (!fs.exists(new Path(root, DeletesDir))) None
-    else Some(spark.read.parquet(s"$path/$DeletesDir").select("doc_id").distinct())
+    FileManifest.readTombstones(spark, fs, new Path(root, DeletesDir), "doc_id")
   }
 
   /** `df` without its tombstoned rows (`idCol` holds the doc id). */

@@ -1,57 +1,21 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import graft.SparkSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{JobCounting, SparkSuite}
 
 /** Job-count pin for the window rescues: one global and one PARTITION
   * BY shape of every family, each on the same fixed small input, must
   * plan its rescue exec and start exactly the committed number of Spark
-  * jobs per `collect`. A listener counts job starts per job group; each
-  * collect runs in its own group, and a one-task sentinel job in a
-  * second group marks the end of the collect's events on the listener
-  * bus (the bus delivers events in posting order). The counts include
+  * jobs per `collect` ([[graft.JobCounting]] counts them). The counts include
   * the input's and the exchanges' own jobs (map stages, the range
   * partitioner's sampling), so any extra or missing boundary, fetch or
   * stats job in an exec shows up as a changed number. */
-class WindowJobCountSpec extends SparkSuite {
-
-  /** `SparkContext.SPARK_JOB_GROUP_ID` (private to Spark). */
-  private val JobGroupKey = "spark.jobGroup.id"
-  private val starts = new ConcurrentHashMap[String, AtomicInteger]()
-  private lazy val listener = {
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p =>
-          Option(p.getProperty(JobGroupKey))).foreach { g =>
-          starts.computeIfAbsent(g, _ => new AtomicInteger).incrementAndGet()
-        }
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  private def inGroup[T](group: String)(body: => T): T = {
-    spark.sparkContext.setJobGroup(group, group)
-    try body finally spark.sparkContext.clearJobGroup()
-  }
+class WindowJobCountSpec extends SparkSuite with JobCounting {
 
   /** Jobs started by one `collect` of `sql`, and its executed plan. */
   private def jobsOf(sql: String): (Int, String) = {
-    listener
-    val group = s"jobcount-${java.util.UUID.randomUUID()}"
     val df = spark.sql(sql)
-    inGroup(group)(df.collect())
-    val sentinel = s"$group-end"
-    inGroup(sentinel)(spark.sparkContext.parallelize(Seq(1), 1).count())
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (!starts.containsKey(sentinel) && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    assert(starts.containsKey(sentinel), "listener bus did not deliver the sentinel job")
-    (Option(starts.get(group)).map(_.get).getOrElse(0),
-      df.queryExecution.executedPlan.toString)
+    val (_, n) = countingJobs(df.collect())
+    (n, df.queryExecution.executedPlan.toString)
   }
 
   private def withConf[T](key: String, value: String)(body: => T): T = {
