@@ -27,8 +27,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - [[graft.plans.GlobalWindowFallback]] (post-planner): warns about
   *    and counts every global window left on a single-task WindowExec;
   *  - [[graft.plans.MergeScanStrategy]] (planner): an ascending global
-  *    sort on a salted store's key plans as the k-way merge of its
-  *    key-sorted files, with no sample, exchange or sort.
+  *    sort on a salted store's key, over a range that fits one task,
+  *    plans as the k-way merge of its key-sorted files, with no sample,
+  *    exchange or sort.
   *
   * Activate with
   *   .config("spark.sql.extensions", "graft.GraftExtensions")

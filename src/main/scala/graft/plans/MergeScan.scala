@@ -1,8 +1,8 @@
 package graft.plans
 
-import scala.collection.mutable.ArrayBuffer
-
-import graft.store.{KeyBounds, ManifestFileIndex}
+import graft.store.{FileManifest, KeyBounds, ManifestFileIndex}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.graft.InputRecords
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, Att
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{FilterExec, LeafExecNode, ProjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionedFile}
@@ -28,11 +28,17 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   *
   * Fires on `Sort(key ASC, global)` over `Filter`s and `Project`s over a
   * parquet relation whose [[ManifestFileIndex]] records per-file ranges
-  * of that same key (a store written by `SaltedStore.write`). The key
-  * must be the stored column itself. Every other input keeps Spark's
-  * plan (range exchange + sort): other formats, a relation read by
-  * listing or without key ranges, a derived sort column, a descending
-  * or multi-column sort.
+  * of that same key (a store written by `SaltedStore.write`), when the
+  * range's estimated bytes fit one task at
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. The key must be
+  * the stored column itself. Every other input keeps Spark's plan (range
+  * exchange + sort): other formats, a relation read by listing or with a
+  * file that has no key range, a derived sort column, a descending or
+  * multi-column sort, and a range too large for one task. The last is
+  * the salted layout's own shape: every bucket's files span the whole
+  * key range, so cutting the merge into key-range tasks would make each
+  * task read every file up to its cut, where the range sort reads each
+  * byte once.
   */
 object MergeScanStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -65,19 +71,20 @@ object MergeScanStrategy extends SparkStrategy {
       AttributeSet(dataFilters.flatMap(_.references)) + k
     val out = rel.output.filter(required.contains)
     val dataOut = out.filterNot(partAttrs.contains)
-    val files = idx.selected(partFilters, dataFilters).flatMap { case (pv, fl) =>
-      fl.map(f => (pv, f))
+    val (lo, hi) = KeyBounds.of(dataFilters, k.name)
+    val files = idx.selected(partFilters, dataFilters).flatMap { case (pv, es) =>
+      es.map(e => (pv, e))
     }
-    // metadata columns, subquery filters (dynamic pruning) and files
-    // without a recorded key range: decline
+    // metadata columns, subquery filters (dynamic pruning), files
+    // without a recorded key range, and a range too large for one task:
+    // decline
     if (!dataOut.forall(a => fs.dataSchema.fieldNames.contains(a.name)) ||
         filters.exists(SubqueryExpression.hasSubquery) ||
         files.exists(_._2.keyRange.isEmpty)) return Nil
-    val (lo, hi) = KeyBounds.of(dataFilters, k.name)
-    val splits = MergeScanExec.splits(files.map { case (pv, f) =>
-      MergeFile(f.status.getPath.toString, f.status.getLen, f.status.getModificationTime,
-        f.keyRange.get._1, f.keyRange.get._2, pv)
-    }, lo, hi, SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val live = if (lo > hi) Nil
+      else files.filter { case (_, e) => e.keyRange.exists(r => r._1 <= hi && r._2 >= lo) }
+    if (MergeScanExec.estimatedBytes(live.map(_._2), lo, hi) >
+        SQLConf.get.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) return Nil
     // the key range goes down to the row groups; FilterExec applies every filter
     val (min, max) = if (k.dataType == IntegerType) (Int.MinValue.toLong, Int.MaxValue.toLong)
       else (Long.MinValue, Long.MaxValue)
@@ -85,57 +92,41 @@ object MergeScanStrategy extends SparkStrategy {
     val pushed = (if (lo > min && lo <= max) Seq(GreaterThanOrEqual(k.name, value(lo))) else Nil) ++
       (if (hi < max && hi >= min) Seq(LessThanOrEqual(k.name, value(hi))) else Nil)
     val scan = MergeScanExec(fs, out, k, StructType(dataOut.map(a => fs.dataSchema(a.name))),
-      pushed, splits)
+      pushed, idx.root.toString, live, lo, hi)
     val filtered = dataFilters.reduceOption(And).fold[SparkPlan](scan)(FilterExec(_, scan))
     Seq(if (projects.map(_.toAttribute) == filtered.output) filtered
       else ProjectExec(projects, filtered))
   }
 }
 
-/** One file of a merge split: where it is, its recorded key range and
-  * its partition values. */
-final case class MergeFile(path: String, len: Long, mtime: Long, min: Long, max: Long,
-                           partitionValues: InternalRow)
-
-/** One output partition of a merge scan: the keys in [lo, hi] of every
-  * file whose range overlaps them. */
-final case class MergeSplit(lo: Long, hi: Long, files: Seq[MergeFile])
-
-/** The k-way merge scan. Each task opens every file of its split with
-  * the parquet reader (range filter pushed down to the row groups),
-  * skips the keys below its split, stops each stream at the first key
-  * above it, and merges the streams through a priority queue on the
-  * key. Splits cover disjoint, ascending key ranges, so the output is a
-  * range partitioning on the key (a single partition for one split)
-  * and sorted within each partition: an ordered consumer — the window
-  * rescues' [[GlobalWindowExec]], `toLocalIterator` — needs no
+/** The k-way merge scan, one task. It opens every file of `files` with
+  * the parquet reader (the range [lo, hi] pushed down to the row
+  * groups), skips the keys below `lo`, stops each stream at the first
+  * key above `hi`, and merges the streams through a priority queue on
+  * the key. Its one partition is sorted, so an ordered consumer — the
+  * window rescues' [[GlobalWindowExec]], `toLocalIterator` — needs no
   * exchange.
   *
   * A stream whose key goes down is a file not sorted by the key: the
   * task fails and names the file, and never emits rows out of order.
-  * A file that spans several splits is read from its start in each of
-  * them (the split bounds are row filters, not row-group seeks); a
-  * compacted store's files cover disjoint ranges, so each split reads
-  * at most about one file beyond its own rows.
   */
 final case class MergeScanExec(@transient relation: HadoopFsRelation, output: Seq[Attribute],
                                key: Attribute, requiredSchema: StructType,
-                               pushedFilters: Seq[Filter], splits: Seq[MergeSplit])
+                               pushedFilters: Seq[Filter], root: String,
+                               files: Seq[(InternalRow, FileManifest.Entry)],
+                               lo: Long, hi: Long)
     extends LeafExecNode {
 
   override def outputOrdering: Seq[SortOrder] = Seq(SortOrder(key, Ascending))
 
-  override def outputPartitioning: Partitioning =
-    if (splits.length == 1) SinglePartition
-    else RangePartitioning(outputOrdering, splits.length)
+  override def outputPartitioning: Partitioning = SinglePartition
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "numFiles" -> SQLMetrics.createMetric(sparkContext, "number of files opened"))
 
   override def simpleString(maxFields: Int): String =
-    s"MergeScan [${key.name}] ${splits.length} split(s), " +
-      s"${splits.flatMap(_.files.map(_.path)).distinct.size} file(s), " +
+    s"MergeScan [${key.name}] ${files.size} file(s), " +
       s"PushedFilters: ${pushedFilters.mkString("[", ", ", "]")}"
 
   protected override def doExecute(): RDD[InternalRow] = {
@@ -154,9 +145,10 @@ final case class MergeScanExec(@transient relation: HadoopFsRelation, output: Se
       key.dataType == IntegerType, key.name)
     val numOut = longMetric("numOutputRows")
     val opened = longMetric("numFiles")
-    sparkContext.parallelize(splits, splits.length).mapPartitions { it =>
+    val (root, files, lo, hi) = (this.root, this.files, this.lo, this.hi)
+    sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
       val toUnsafe = UnsafeProjection.create(project)
-      it.flatMap(MergeScanExec.merge(_, read, keyed, opened)).map { r =>
+      MergeScanExec.merge(root, files, lo, hi, read, keyed, opened).map { r =>
         numOut += 1
         toUnsafe(r)
       }
@@ -169,7 +161,7 @@ object MergeScanExec {
   final case class Key(ordinal: Int, isInt: Boolean, name: String)
 
   /** One file's rows with keys in [lo, hi], positioned on its current row. */
-  private final class Stream(f: MergeFile, rows: Iterator[InternalRow], k: Key,
+  private final class Stream(path: String, rows: Iterator[InternalRow], k: Key,
                              lo: Long, hi: Long, count: Long => Unit) {
     var row: InternalRow = _
     var key: Long = Long.MinValue
@@ -181,40 +173,56 @@ object MergeScanExec {
         val r = rows.next()
         count(1)
         if (r.isNullAt(k.ordinal)) throw new IllegalStateException(
-          s"merge scan: ${f.path} holds a null ${k.name}, which its file manifest " +
+          s"merge scan: $path holds a null ${k.name}, which its file manifest " +
             "does not record; rewrite the store with SaltedStore.compact")
         val v = if (k.isInt) r.getInt(k.ordinal).toLong else r.getLong(k.ordinal)
         if (v < prev) throw new IllegalStateException(
-          s"merge scan: ${k.name} goes down in ${f.path} ($prev, then $v) — the file " +
+          s"merge scan: ${k.name} goes down in $path ($prev, then $v) — the file " +
             s"is not sorted by ${k.name}, and merging it would emit rows out of order; " +
             "rewrite the store with SaltedStore.compact")
         prev = v
-        if (v > hi) return false
+        if (v > hi) {
+          close()
+          return false
+        }
         if (v >= lo) {
           row = r
           key = v
           return true
         }
       }
+      close()
       false
+    }
+
+    /** Releases the file's reader (its stream and batch buffers): the
+      * parquet reader closes itself only when read to its end. */
+    def close(): Unit = rows match {
+      case c: java.io.Closeable => c.close()
+      case _ =>
     }
   }
 
-  /** The rows of split `s` in key order: a priority queue over one
-    * stream per file. A stream's current row stays valid until that
-    * stream advances, which happens only after its row was returned. */
-  private[plans] def merge(s: MergeSplit, read: PartitionedFile => Iterator[InternalRow],
+  /** The rows of `files` with keys in [lo, hi], in key order: a priority
+    * queue over one stream per file. A stream's current row stays valid
+    * until that stream advances, which happens only after its row was
+    * returned. */
+  private[graft] def merge(root: String, files: Seq[(InternalRow, FileManifest.Entry)],
+                           lo: Long, hi: Long, read: PartitionedFile => Iterator[InternalRow],
                            k: Key, opened: SQLMetric): Iterator[InternalRow] = {
     val count = InputRecords.counter()
-    val heap = new java.util.PriorityQueue[Stream](math.max(1, s.files.size),
+    val heap = new java.util.PriorityQueue[Stream](math.max(1, files.size),
       (a: Stream, b: Stream) => java.lang.Long.compare(a.key, b.key))
-    s.files.foreach { f =>
+    val base = new Path(root)
+    val streams = files.map { case (pv, e) =>
       opened += 1
-      val st = new Stream(f, read(PartitionedFile(f.partitionValues,
-        SparkPath.fromPathString(f.path), 0, f.len, Array.empty[String], f.mtime, f.len)),
-        k, s.lo, s.hi, count)
-      if (st.advance()) heap.add(st)
+      val path = new Path(base, e.rel)
+      new Stream(path.toString, read(PartitionedFile(pv, SparkPath.fromPath(path),
+        0, e.len, Array.empty[String], e.mtime, e.len)), k, lo, hi, count)
     }
+    // a task that fails or is not read to its end closes every reader
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => streams.foreach(_.close())))
+    streams.foreach(st => if (st.advance()) heap.add(st))
     new Iterator[InternalRow] {
       private var last: Stream = null
       override def hasNext: Boolean = {
@@ -232,53 +240,12 @@ object MergeScanExec {
     }
   }
 
-  /** Estimated bytes of `f` holding keys in [a, b], its bytes taken as
-    * spread evenly over its key range. */
-  private def bytesIn(f: MergeFile, a: Long, b: Long): Double = {
-    val x = math.max(a, f.min)
-    val y = math.min(b, f.max)
-    if (x > y) 0.0 else f.len * ((y.toDouble - x + 1) / (f.max.toDouble - f.min + 1))
-  }
-
-  /** The output splits for keys in [lo, hi] over `files`: as many as
-    * the estimated bytes need at `targetBytes` each (at least one, so an
-    * empty range is one empty split), cut where the estimate's running
-    * total reaches each share. Equal keys never straddle a cut. */
-  private[graft] def splits(files: Seq[MergeFile], lo0: Long, hi0: Long,
-                            targetBytes: Long): Seq[MergeSplit] = {
-    val live = files.filter(f => f.min <= hi0 && f.max >= lo0)
-    if (live.isEmpty || lo0 > hi0) return Seq(MergeSplit(lo0, hi0, Seq.empty))
-    val lo = math.max(lo0, live.map(_.min).min)
-    val hi = math.min(hi0, live.map(_.max).max)
-    val total = live.map(bytesIn(_, lo, hi)).sum
-    val n = math.min(math.ceil(total / math.max(1L, targetBytes)),
-      hi.toDouble - lo + 1).toLong
-    if (n <= 1 || hi == Long.MaxValue) return Seq(MergeSplit(lo, hi, live))
-    // the estimate's density is piecewise constant, changing where a
-    // file's range starts or ends: walk those points once
-    val points = live.flatMap { f =>
-      val d = f.len / (f.max.toDouble - f.min + 1)
-      Seq((math.max(f.min, lo), d), (math.min(f.max, hi) + 1, -d))
-    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
-    val cuts = ArrayBuffer[Long]()
-    var i = 0
-    var at = lo
-    var density = 0.0
-    var cum = 0.0 // estimated bytes of keys in [lo, at)
-    for (j <- 1L until n) {
-      val share = total * j / n
-      while (i < points.length && cum + density * (points(i)._1.toDouble - at) < share) {
-        cum += density * (points(i)._1.toDouble - at)
-        at = points(i)._1
-        density += points(i)._2
-        i += 1
-      }
-      val c = if (density <= 0) at else at + math.ceil((share - cum) / density).toLong
-      if (c > cuts.lastOption.getOrElse(lo) && c <= hi) cuts += c
-    }
-    val bounds = (lo +: cuts.toSeq) :+ (hi + 1)
-    bounds.zip(bounds.tail).map { case (a, b) =>
-      MergeSplit(a, b - 1, live.filter(f => f.min < b && f.max >= a))
-    }
-  }
+  /** Estimated bytes of the keys in [lo, hi] over `files`, each file's
+    * bytes taken as spread evenly over its recorded key range. */
+  private[graft] def estimatedBytes(files: Seq[FileManifest.Entry], lo: Long, hi: Long): Double =
+    files.flatMap(e => e.keyRange.map { case (min, max) =>
+      val x = math.max(lo, min)
+      val y = math.min(hi, max)
+      if (x > y) 0.0 else e.len * ((y.toDouble - x + 1) / (max.toDouble - min + 1))
+    }).sum
 }

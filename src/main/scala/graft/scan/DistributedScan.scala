@@ -16,11 +16,13 @@ import org.apache.spark.sql.functions._
   * key-sorted file whose recorded key range meets [start, stop) (the
   * per-bucket scanners, the range pushed to the row groups) and merges
   * their streams through a priority queue — no sample, no exchange, no
-  * sort, one task per key-range split of about the advisory partition
-  * size. Any other input (a store read by listing, another format, a
-  * derived or descending sort key) keeps Spark's range-partitioned
-  * SortExec, which restores the same order with a sample job and an
-  * exchange. Neither materializes the result on the driver.
+  * sort, one task — when the range's estimated bytes fit the advisory
+  * partition size. Any other input (a larger range, a store read by
+  * listing or holding a file with no recorded key range, another
+  * format, a derived or descending sort key) keeps Spark's
+  * range-partitioned SortExec, which restores the same order with a
+  * sample job and an exchange and spreads a large range over many
+  * tasks. Neither materializes the result on the driver.
   */
 object DistributedScan {
 
@@ -40,11 +42,10 @@ object DistributedScan {
     * pull-based ResultScanner contract (wd/DistributedScanner.java:61-86:
     * batched `next(nbRows)`, nothing materialized ahead of the consumer).
     * `toLocalIterator` pulls ONE sorted partition at a time to the
-    * driver, one job per partition, in key order: a merge scan's
-    * key-range split (a scan below the advisory partition size is one
-    * split, so one job) or a range-partitioned sort's partition. Peak
-    * driver memory is one partition, not the result set (SURVEY.md
-    * §7.5). */
+    * driver, one job per partition, in key order: a merge scan's one
+    * partition (one job, at most the advisory partition size) or a
+    * range-partitioned sort's partitions. Peak driver memory is one
+    * partition, not the result set (SURVEY.md §7.5). */
   def orderedIterator(table: DataFrame, key: Column, start: Long,
                       stop: Long): Iterator[org.apache.spark.sql.Row] = {
     import scala.jdk.CollectionConverters._

@@ -1,5 +1,7 @@
 package graft.store
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -59,9 +61,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 object FileManifest {
   val ManifestFile = "_graft_files.json"
 
-  /** One recorded data file: path relative to the layout root, length,
-    * mtime, and the key column's [min, max] when the manifest has a key
-    * and the file's footer carries complete statistics for it. */
+  /** One recorded data file: path relative to the layout root (an
+    * absolute path stands for itself), length, mtime, and the key
+    * column's [min, max] when the manifest has a key and the file's
+    * footer carries complete statistics for it. */
   private[graft] final case class Entry(rel: String, len: Long, mtime: Long,
                                         keyRange: Option[(Long, Long)])
 
@@ -107,14 +110,19 @@ object FileManifest {
     * corrupt probes later. */
   def write(spark: SparkSession, layoutPath: String,
             partitionPrefix: String = "shard"): Unit =
-    publish(spark, layoutPath, partitionPrefix, None, None)
+    publish(spark, layoutPath, partitionPrefix, None, Map.empty)
 
-  /** [[write]] with per-file ranges of the integral column `key`: the
-    * footers of files `prior` already records (same path, length and
-    * mtime) are not read again. */
+  /** [[write]] with per-file ranges of the integral column `key`, for a
+    * layout whose every file is sorted by it. `known` holds the files
+    * that stood before the op that calls this (see [[atRest]]): a file
+    * it records with the same length and mtime keeps its entry — and
+    * its key range or lack of one — unread. Every other file is new, was
+    * written sorted by the op, and gets its range from its footer; those
+    * footers are read concurrently on the driver (at most
+    * [[FooterThreads]] at once). */
   private[graft] def publish(spark: SparkSession, layoutPath: String,
                              partitionPrefix: String, key: Option[String],
-                             prior: Option[Manifest]): Unit = {
+                             known: Map[String, Entry]): Unit = {
     val (fs, root) = fsOf(spark, layoutPath)
     val conf = spark.sessionState.newHadoopConf()
     val dirs = partitionDirs(fs, root, partitionPrefix).map { p =>
@@ -126,40 +134,43 @@ object FileManifest {
       (v.toInt, p)
     }.sortBy(_._1)
     val listed = dirs.map { case (v, p) =>
-      val files = dataFiles(fs, p.getPath)
-      files.foreach { f =>
+      val files = dataFiles(fs, p.getPath).map { f =>
         val n = f.getPath.getName
         require(!n.exists(c => c == '"' || c == '\\' || c == ']'),
           s"file-manifest: data file name '$n' in ${p.getPath} contains a " +
             "JSON/regex metacharacter (\", \\ or ]) — it would be silently " +
             "dropped from the probe file set; rename the foreign file")
+        (s"${p.getPath.getName}/$n", f)
       }
-      (v, p, files)
+      (v, files)
     }
-    val first = listed.iterator.flatMap(_._3).nextOption()
-    val firstFooter = first.map(footer(conf, _))
-    val schema = firstFooter.map(sparkSchema(first.get.getPath, _))
+    val all = listed.flatMap(_._2)
+    val carried = all.flatMap { case (rel, f) =>
+      known.get(rel).filter(e => e.len == f.getLen && e.mtime == f.getModificationTime)
+    }.map(e => e.rel -> e).toMap
+    val fresh = all.filterNot(f => carried.contains(f._1))
+    // new files' footers give their key ranges, and the first of them
+    // the schema (else one standing file's footer does)
+    val freshFooters = if (key.isDefined) footers(conf, fresh.map(_._2)) else Nil
+    val schema = fresh.headOption.orElse(all.headOption).map { case (_, f) =>
+      sparkSchema(f.getPath, freshFooters.headOption.getOrElse(footer(conf, f)))
+    }
     val statsKey = key.filter(k => schema.exists(_.fields.exists(f =>
       f.name == k && (f.dataType == LongType || f.dataType == IntegerType))))
     statsKey.foreach(k => require(!k.exists(c => c == '"' || c == '\\'),
       s"file-manifest key column name needs JSON escaping (unsupported): $k"))
-    val known = prior.filter(_.key == statsKey).map(_.entries.map(e => e.rel -> e).toMap)
-      .getOrElse(Map.empty)
-    def entry(dir: FileStatus, f: FileStatus): Entry = {
-      val rel = s"${dir.getPath.getName}/${f.getPath.getName}"
-      known.get(rel).filter(e => e.len == f.getLen && e.mtime == f.getModificationTime)
-        .getOrElse(Entry(rel, f.getLen, f.getModificationTime, statsKey.flatMap { k =>
-          val ft = if (first.contains(f)) firstFooter.get else footer(conf, f)
-          keyRange(ft, k)
-        }))
+    val ranges = statsKey.fold(Map.empty[String, Option[(Long, Long)]]) { k =>
+      fresh.map(_._1).zip(freshFooters.map(keyRange(_, k))).toMap
     }
+    def entry(rel: String, f: FileStatus): Entry = carried.getOrElse(rel,
+      Entry(rel, f.getLen, f.getModificationTime, ranges.getOrElse(rel, None)))
     val ddl = schema.map(_.toDDL).getOrElse("")
     require(!ddl.contains('"') && !ddl.contains('\\'),
       s"file-manifest schema DDL needs JSON escaping (unsupported): $ddl")
     val sb = new StringBuilder
     sb ++= "{\"parts\":{"
-    sb ++= listed.filter(_._3.nonEmpty).map { case (v, p, files) =>
-      files.map(entry(p, _)).map { e =>
+    sb ++= listed.filter(_._2.nonEmpty).map { case (v, files) =>
+      files.map { case (rel, f) => entry(rel, f) }.map { e =>
         s"""["${e.rel}",${e.len},${e.mtime}""" +
           e.keyRange.map { case (lo, hi) => s",$lo,$hi" }.getOrElse("") + "]"
       }.mkString(s""""$v":[""", ",", "]")
@@ -169,7 +180,7 @@ object FileManifest {
       .mkString(",")
     sb ++= "}"
     statsKey.foreach(k => sb ++= s""","key":"$k"""")
-    sb ++= s""","nfiles":${listed.map(_._3.length).sum},"schema":"$ddl"}"""
+    sb ++= s""","nfiles":${all.length},"schema":"$ddl"}"""
     val tmp = new Path(root, ManifestFile + ".tmp")
     val dst = new Path(root, ManifestFile)
     val out = fs.create(tmp, true)
@@ -178,9 +189,55 @@ object FileManifest {
     require(fs.rename(tmp, dst), s"file-manifest rename failed: $tmp -> $dst")
   }
 
+  /** The files of a layout as it stands, for the [[publish]] after a
+    * write into it (the files the write adds are the ones not here): a
+    * current manifest's entries — their key ranges kept only when it records
+    * ranges of `key` — else a listing of the partition dirs with no key
+    * ranges at all, because a file the manifest does not record was
+    * written by something not known to sort it. Empty for a layout that
+    * does not exist yet. */
+  private[graft] def atRest(spark: SparkSession, layoutPath: String,
+                            partitionPrefix: String, key: Option[String]): Map[String, Entry] = {
+    val (fs, root) = fsOf(spark, layoutPath)
+    val entries =
+      if (!fs.exists(root)) Nil
+      else standing(fs, root, layoutPath, partitionPrefix, verifyDirs = true) match {
+        case Some(m) if m.key == key => m.entries
+        case Some(m) => m.entries.map(_.copy(keyRange = None))
+        case None => partitionDirs(fs, root, partitionPrefix).flatMap { d =>
+          dataFiles(fs, d.getPath).map(f => Entry(s"${d.getPath.getName}/${f.getPath.getName}",
+            f.getLen, f.getModificationTime, None))
+        }
+      }
+    entries.map(e => e.rel -> e).toMap
+  }
+
+  /** The most footers [[publish]] reads at once. */
+  private val FooterThreads = 8
+
   private def footer(conf: Configuration, f: FileStatus): ParquetMetadata =
     ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
       ParquetMetadataConverter.NO_FILTER)
+
+  /** The footers of `files`, in order, read by at most [[FooterThreads]]
+    * driver threads: a publish after a write of many files costs about
+    * one footer read per thread, not one per file. */
+  private def footers(conf: Configuration, files: Seq[FileStatus]): Seq[ParquetMetadata] =
+    if (files.size <= 1) files.map(footer(conf, _))
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(files.size, FooterThreads), (r: Runnable) => {
+        val t = new Thread(r, "graft-manifest-footer")
+        t.setDaemon(true)
+        t
+      })
+      try {
+        files.map(f => pool.submit(new Callable[ParquetMetadata] {
+          override def call(): ParquetMetadata = footer(conf, f)
+        })).map { fu =>
+          try fu.get() catch { case e: ExecutionException => throw e.getCause }
+        }
+      } finally pool.shutdownNow()
+    }
 
   /** The data schema Spark's own inference takes from a footer (the
     * Spark schema the writer stored, else the converted parquet one),
@@ -266,7 +323,7 @@ object FileManifest {
     * the recorded ones with the recorded mtimes — one `listStatus` of
     * the root, which catches a file added or removed outside the
     * owner's lifecycle (a plain-Spark append, a writer that died after
-    * its commit and before republishing). */
+    * its commit and before republishing); see [[dirsUnchanged]]. */
   private def standing(fs: FileSystem, root: Path, layoutPath: String,
                        partitionPrefix: String, verifyDirs: Boolean): Option[Manifest] = {
     // belt-and-braces: the owner deletes the manifest before compacting,
@@ -281,10 +338,18 @@ object FileManifest {
         "corrupted/foreign-edited manifest; falling back to the listing read")
       return None
     }
-    if (verifyDirs && partitionDirs(fs, root, partitionPrefix)
-        .map(d => d.getPath.getName -> d.getModificationTime).toMap != m.dirs) return None
+    if (verifyDirs && !dirsUnchanged(m.dirs, partitionDirs(fs, root, partitionPrefix)
+        .map(d => d.getPath.getName -> d.getModificationTime).toMap)) return None
     Some(m)
   }
+
+  /** Whether the partition dirs listed now are the recorded ones with
+    * the recorded mtimes. A dir mtime of 0 — object stores such as S3A
+    * report no directory mtime, so adding a file changes nothing there —
+    * cannot show a change and fails the check: on such a filesystem
+    * every read takes the listing path. */
+  private[graft] def dirsUnchanged(recorded: Map[String, Long], listed: Map[String, Long]): Boolean =
+    listed == recorded && !listed.values.exists(_ <= 0L)
 
   /** The manifest a read may trust, partition dirs verified against a
     * listing of the root (see [[standing]]); None means the caller takes
@@ -338,15 +403,14 @@ object FileManifest {
     val m = standing(fs, root, layoutPath, partitionPrefix, verifyDirs).getOrElse(return None)
     if (m.schema.isEmpty) return None // empty layout: let the caller's fallback decide
     val dirs = m.parts.filter(p => wanted.forall(_.contains(p._1.toLong))).map { case (v, es) =>
-      (InternalRow(v), es.map(e => KeyedFile(FileStatusWithMetadata(new FileStatus(
-        e.len, false, 1, 128L * 1024 * 1024, e.mtime, new Path(root, e.rel))), e.keyRange)))
+      (InternalRow(v), es)
     }
     // spot-check one recorded file still exists (foreign deletion)
     val gone = dirs.iterator.flatMap(_._2.headOption).nextOption()
-      .filter(f => !fs.exists(f.status.getPath))
+      .map(e => new Path(root, e.rel)).filter(!fs.exists(_))
     if (gone.isDefined) {
       System.err.println(s"[graft] FileManifest at $layoutPath lists " +
-        s"${gone.get.status.getPath}, which no longer exists — the file set was " +
+        s"${gone.get}, which no longer exists — the file set was " +
         "mutated outside the owner's lifecycle; falling back to the listing read")
       return None
     }
@@ -366,8 +430,8 @@ object FileManifest {
   private[graft] def readFiles(spark: SparkSession, root: Path, files: Seq[FileStatus],
                                schema: StructType): DataFrame =
     frame(spark, new ManifestFileIndex(root, new StructType(),
-      Seq((InternalRow.empty, files.map(f => KeyedFile(FileStatusWithMetadata(f), None)))),
-      None), schema)
+      Seq((InternalRow.empty, files.map(f =>
+        Entry(f.getPath.toString, f.getLen, f.getModificationTime, None)))), None), schema)
 
   /** The distinct ids of a tombstone dir of parquet files holding one
     * BIGINT column `idCol`; None when the dir holds no data file. The
@@ -391,10 +455,6 @@ object FileManifest {
     if (m.parts.isEmpty) 0 else m.parts.map(_._2.size).max
 }
 
-/** A manifest file with its recorded key range, if any. */
-private[graft] final case class KeyedFile(status: FileStatusWithMetadata,
-                                          keyRange: Option[(Long, Long)])
-
 /** A [[FileIndex]] whose file set comes from a manifest instead of a
   * filesystem listing — `listFiles` serves pre-built statuses and
   * honors partition filters by interpreting them against the partition
@@ -402,16 +462,19 @@ private[graft] final case class KeyedFile(status: FileStatusWithMetadata,
   * With a `key`, data filters on it also prune every file whose
   * recorded key range they cannot meet. */
 private[graft] class ManifestFileIndex(
-    root: Path,
+    val root: Path,
     override val partitionSchema: StructType,
-    dirs: Seq[(InternalRow, Seq[KeyedFile])],
+    dirs: Seq[(InternalRow, Seq[FileManifest.Entry])],
     val key: Option[String]) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(root)
 
+  /** Where entry `e` lives. */
+  def path(e: FileManifest.Entry): Path = new Path(root, e.rel)
+
   /** The partition dirs and files a scan under these filters must read. */
   def selected(partitionFilters: Seq[Expression],
-               dataFilters: Seq[Expression]): Seq[(InternalRow, Seq[KeyedFile])] = {
+               dataFilters: Seq[Expression]): Seq[(InternalRow, Seq[FileManifest.Entry])] = {
     val parts =
       if (partitionFilters.isEmpty) dirs
       else {
@@ -438,15 +501,15 @@ private[graft] class ManifestFileIndex(
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
     selected(partitionFilters, dataFilters).map { case (v, files) =>
-      PartitionDirectory(v, files.map(_.status))
+      PartitionDirectory(v, files.map(e => FileStatusWithMetadata(
+        new FileStatus(e.len, false, 1, 128L * 1024 * 1024, e.mtime, path(e)))))
     }
 
-  override def inputFiles: Array[String] =
-    dirs.flatMap(_._2.map(_.status.getPath.toString)).toArray
+  override def inputFiles: Array[String] = dirs.flatMap(_._2.map(path(_).toString)).toArray
 
   override def refresh(): Unit = ()
 
-  override def sizeInBytes: Long = dirs.flatMap(_._2.map(_.status.getLen)).sum
+  override def sizeInBytes: Long = dirs.flatMap(_._2.map(_.len)).sum
 }
 
 /** Key-range reasoning over filter expressions on one integral column. */

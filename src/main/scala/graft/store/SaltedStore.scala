@@ -29,7 +29,13 @@ import org.apache.spark.sql.functions._
   * `graft.plans.MergeScanExec` — the reference's DistributedScanner.
   * Every op that changes the file set drops the manifest first and
   * republishes it at rest; a read that finds none, or finds the bucket
-  * dirs changed since it was written, takes the listing read.
+  * dirs changed since it was written, takes the listing read. Key
+  * ranges are recorded only for files these ops wrote sorted: files
+  * that stood in a store no manifest described get none until the next
+  * [[compact]], and an ordered scan over them keeps Spark's sort. The
+  * manifest read needs a filesystem whose directory mtime moves when a
+  * file is added (local, HDFS); on an object store (S3A reports mtime 0
+  * for directories) every read takes the listing path.
   *
   * At 100 TB: one narrow stage + one hash shuffle on a small int key;
   * no driver-side work; bucket count chosen to match write parallelism.
@@ -48,10 +54,13 @@ object SaltedStore {
             mode: String = "overwrite", format: String = "parquet",
             options: Map[String, String] = Map.empty): Unit = {
     val spark = df.sparkSession
+    val key = if (format == "parquet") storedColumn(df, keyCol) else None
     // the file manifest dies before the file set changes and is
-    // republished after the commit; its footer stats carry over for
-    // every file the write left in place
-    val prior = FileManifest.load(spark, path)
+    // republished after the commit. Files that stood before keep their
+    // recorded key range, or lack of one (a file no manifest recorded is
+    // not known to be sorted); the files this write adds get theirs.
+    val known = if (format == "parquet") FileManifest.atRest(spark, path, "bucket", key)
+      else Map.empty[String, FileManifest.Entry]
     FileManifest.delete(spark, path)
     dist
       .withBucket(df, keyCol)
@@ -69,8 +78,7 @@ object SaltedStore {
       // and scan-IO delta is a real cost lever)
       .options(options)
       .save(path)
-    if (format == "parquet")
-      FileManifest.publish(spark, path, "bucket", storedColumn(df, keyCol), prior)
+    if (format == "parquet") FileManifest.publish(spark, path, "bucket", key, known)
   }
 
   /** The name `c` is stored under when it is a plain column of `df`
@@ -82,6 +90,19 @@ object SaltedStore {
           if child.output.exists(_.exprId == a.exprId) => Some(a.name)
       case _ => None
     }
+
+  /** The manifest to publish after an op that rewrote every file of a
+    * store sorted by `keyCol` (compact, resalt), given the manifest that
+    * stood when it started: ranges of `keyCol` when it is a stored
+    * column of the store's recorded schema. */
+  private def republish(spark: SparkSession, path: String, partitionPrefix: String,
+                        prior: FileManifest.Manifest, keyCol: Column): Unit = {
+    val key = Option(prior.schema).filter(_.nonEmpty).flatMap { ddl =>
+      storedColumn(spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL(ddl)), keyCol)
+    }
+    FileManifest.publish(spark, path, partitionPrefix, key, Map.empty)
+  }
 
   /** Idempotent [[write]] (parquet only): skip when a completed write —
     * parquet's `_SUCCESS` commit marker — already sits at `path`. Same
@@ -638,7 +659,7 @@ object SaltedStore {
       fs.delete(marker, false)
       fs.delete(old, true)
     }
-    prior.foreach(m => FileManifest.publish(spark, path, partitionPrefix, m.key, None))
+    prior.foreach(republish(spark, path, partitionPrefix, _, keyCol))
   }
 
   /** Marker for an in-flight bucket-count migration (see [[resalt]]).
@@ -706,6 +727,6 @@ object SaltedStore {
           .write.partitionBy("bucket").mode("overwrite").format(format)
           .save(staging)
       })
-    prior.foreach(m => FileManifest.publish(spark, path, partitionPrefix, m.key, None))
+    prior.foreach(republish(spark, path, partitionPrefix, _, keyCol))
   }
 }

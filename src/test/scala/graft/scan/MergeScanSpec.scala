@@ -2,12 +2,15 @@ package graft.scan
 
 import graft.SparkSuite
 import graft.keys.HashPrefix
-import graft.plans.{MergeFile, MergeScanExec}
+import graft.plans.MergeScanExec
 import graft.store.{FileManifest, ManifestFileIndex, SaltedStore}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,8 +19,9 @@ import org.apache.spark.sql.functions._
   * plan) and again, every manifest dropped, through a fresh listing read
   * (Spark's range exchange and sort); the two must return the same rows,
   * keys ascending. Also: the staleness guard, the unsorted-file guard,
-  * the inputs the strategy must leave alone, multi-split merges, and
-  * per-file key order after every store op. */
+  * the inputs the strategy must leave alone (a range too large for one
+  * task among them), key ranges after an append to a store no manifest
+  * described, and per-file key order after every store op. */
 class MergeScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -70,7 +74,7 @@ class MergeScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         got
       }
       merged.zip(listed)
-    } finally FileManifest.publish(spark, dir, "bucket", prior.flatMap(_.key), None)
+    } finally FileManifest.publish(spark, dir, "bucket", prior.flatMap(_.key), Map.empty)
   }
 
   private def keysAscending(rs: Seq[Row]) =
@@ -114,36 +118,54 @@ class MergeScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("many splits: range partitioned, ordered, and the running sum needs no exchange") {
+  test("a range above the advisory size keeps Spark's range sort; a small one still merges") {
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     spark.conf.set(key, "4096")
     try {
-      val df = scan(store, 1234L, Some(61234L))
-      val m = mergeNodes(df)
-      assert(m.size == 1 && m.head.splits.size > 4, m.map(_.splits.size))
-      val got = df.collect().map(_.getLong(0)).toSeq
-      assert(got === ((1240L until 61234L by 10L)))
-      val ranges = m.head.splits.map(s => (s.lo, s.hi))
-      assert(ranges.zip(ranges.tail).forall { case ((_, h), (l, _)) => l == h + 1 })
-      def run = scan(store, 1234L, Some(61234L))
+      // every bucket's files span the whole key range: cut into tasks,
+      // the merge would read each file once per task, so it declines
+      val big = scan(store, 1234L, Some(61234L))
+      val got = big.collect().map(_.getLong(0)).toSeq
+      assert(mergeNodes(big).isEmpty)
+      assert(big.queryExecution.executedPlan.toString.contains("rangepartitioning"))
+      assert(got === (1240L until 61234L by 10L))
+      val run = scan(store, 1234L, Some(61234L))
         .withColumn("run", sum(col("v")).over(Window.orderBy(col("k"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val plan = run.queryExecution.executedPlan.toString
-      assert(plan.contains("GlobalRunningAgg") && !plan.contains("rangepartitioning"), plan)
       val runs = run.orderBy("k").collect().map(_.getLong(2))
       assert(runs.toSeq === got.map(k => (k / 10) * 7 % 1000).scanLeft(0L)(_ + _).tail)
+      val small = scan(store, 20000L, Some(20100L))
+      assert(small.collect().map(_.getLong(0)).toSeq === (20000L until 20100L by 10L))
+      assert(mergeNodes(small).nonEmpty)
     } finally spark.conf.unset(key)
   }
 
-  test("splits cut where the estimated bytes reach each share, never between equal keys") {
-    def f(min: Long, max: Long, len: Long) = MergeFile(s"f$min", len, 0L, min, max, InternalRow.empty)
-    val files = Seq(f(0, 999, 1000), f(0, 999, 1000), f(1000, 1999, 4000))
-    val s = MergeScanExec.splits(files, Long.MinValue, Long.MaxValue, 1500)
-    assert(s.head.lo == 0 && s.last.hi == 1999 && s.size == 4)
-    assert(s.zip(s.tail).forall { case (a, b) => b.lo == a.hi + 1 })
-    assert(s.head.files.size == 2 && s.last.files.map(_.path) === Seq("f1000"))
-    assert(MergeScanExec.splits(files, 5000, 6000, 1500).map(_.files) === Seq(Seq.empty))
-    assert(MergeScanExec.splits(files, 10, 20, 1500).map(s => (s.lo, s.hi)) === Seq((10L, 20L)))
+  test("the size estimate spreads each file's bytes over its key range") {
+    def e(min: Long, max: Long, len: Long) = FileManifest.Entry(s"f$min", len, 0L, Some((min, max)))
+    val files = Seq(e(0, 999, 1000), e(0, 999, 1000), e(1000, 1999, 4000))
+    assert(MergeScanExec.estimatedBytes(files, Long.MinValue, Long.MaxValue) === 6000.0)
+    assert(MergeScanExec.estimatedBytes(files, 500, 1499) === 1000.0 + 2000.0)
+    assert(MergeScanExec.estimatedBytes(files, 5000, 6000) === 0.0)
+  }
+
+  test("the merge closes each file's reader once its stream passes the range") {
+    final class Rows(keys: Seq[Long]) extends Iterator[InternalRow] with java.io.Closeable {
+      private val it = keys.iterator
+      var closed = false
+      override def hasNext: Boolean = it.hasNext
+      override def next(): InternalRow = InternalRow(it.next())
+      override def close(): Unit = closed = true
+    }
+    // none of these readers closes itself at its end, as a parquet
+    // reader stopped before its end does not
+    val readers = Seq(new Rows(Seq(1, 5, 9, 20, 30)), new Rows(Seq(2, 3, 40)), new Rows(Seq(50, 60)))
+    val files = readers.indices.map(i =>
+      (InternalRow.empty, FileManifest.Entry(s"f$i", 1L, 0L, Some((0L, 60L)))))
+    val out = MergeScanExec.merge("/r", files, 2L, 25L,
+      (f: PartitionedFile) => readers(f.toPath.getName.drop(1).toInt),
+      MergeScanExec.Key(0, isInt = false, "k"), SQLMetrics.createMetric(spark.sparkContext, "n"))
+    assert(out.map(_.getLong(0)).toList === List(2L, 3L, 5L, 9L, 20L))
+    assert(readers.map(_.closed) === Seq(true, true, true))
   }
 
   test("the strategy leaves other inputs on Spark's plan") {
@@ -167,7 +189,7 @@ class MergeScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     // a foreign, unsorted file in bucket=3, then a republished manifest
     rows(400, 800).orderBy(col("k").desc).coalesce(1).write.mode("append")
       .parquet(s"$dir/bucket=3")
-    FileManifest.publish(spark, dir, "bucket", Some("k"), None)
+    FileManifest.publish(spark, dir, "bucket", Some("k"), Map.empty)
     val df = DistributedScan.rangeScan(SaltedStore.read(spark, dir), col("k"), 0L, 10000L)
     assert(mergeNodes(df).nonEmpty)
     val e = intercept[Exception](df.collect())
@@ -197,6 +219,53 @@ class MergeScanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(t.count() === 1200L)
     val scans = fileScans(t)
     assert(scans.nonEmpty && scans.forall(!_.relation.location.isInstanceOf[ManifestFileIndex]))
+  }
+
+  test("an append to a store with no manifest records key ranges only for the files it wrote") {
+    val dir = tmp("merge_legacy")
+    // a store no manifest describes, one file of bucket=3 out of key order
+    dist.withBucket(rows(0, 400), col("k")).write.partitionBy("bucket").parquet(dir)
+    rows(400, 800).orderBy(col("k").desc).coalesce(1).write.mode("append")
+      .parquet(s"$dir/bucket=3")
+    assert(!FileManifest.exists(spark, dir))
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val old = fs.listStatus(new Path(dir)).filter(_.isDirectory).flatMap { d =>
+      FileManifest.dataFiles(fs, d.getPath).map(f => s"${d.getPath.getName}/${f.getPath.getName}")
+    }.toSet
+    SaltedStore.write(rows(800, 1000), col("k"), dist, dir, mode = "append")
+    val (ranged, unranged) = FileManifest.load(spark, dir).get.entries.partition(_.keyRange.isDefined)
+    assert(unranged.map(_.rel).toSet === old)
+    assert(ranged.nonEmpty && ranged.forall(e => !old.contains(e.rel)))
+    def keys = DistributedScan.rangeScan(SaltedStore.read(spark, dir), col("k"), 0L, 100000L)
+    val before = keys
+    assert(mergeNodes(before).isEmpty)
+    assert(before.select("k").as[Long].collect().toSeq === (0L until 10000L by 10L))
+    // a compaction rewrites every file sorted and records every range
+    SaltedStore.compact(spark, dir, col("k"))
+    assert(FileManifest.load(spark, dir).get.entries.forall(_.keyRange.isDefined))
+    val after = keys
+    assert(mergeNodes(after).nonEmpty)
+    assert(after.select("k").as[Long].collect().toSeq === (0L until 10000L by 10L))
+  }
+
+  test("bucket dirs that report no mtime send every read to the listing path") {
+    val dir = tmp("merge_nomtime")
+    SaltedStore.write(rows(0, 1000), col("k"), dist, dir)
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    // an object store's listing: dirs carry mtime 0, and an added file
+    // leaves it 0
+    def zeroDirMtimes(): Unit = fs.listStatus(new Path(dir)).filter(_.isDirectory)
+      .foreach(d => fs.setTimes(d.getPath, 0L, -1L))
+    zeroDirMtimes()
+    FileManifest.publish(spark, dir, "bucket", Some("k"), Map.empty)
+    assert(FileManifest.load(spark, dir).get.dirs.values.toSet === Set(0L))
+    rows(1000, 1100).write.mode("append").parquet(s"$dir/bucket=3")
+    zeroDirMtimes()
+    val t = SaltedStore.read(spark, dir)
+    assert(t.count() === 1100L)
+    assert(fileScans(t).forall(!_.relation.location.isInstanceOf[ManifestFileIndex]))
+    assert(FileManifest.dirsUnchanged(Map("bucket=0" -> 5L), Map("bucket=0" -> 5L)))
+    assert(!FileManifest.dirsUnchanged(Map("bucket=0" -> 0L), Map("bucket=0" -> 0L)))
   }
 
   test("every file of a written, appended, compacted and resalted store is sorted by key") {
