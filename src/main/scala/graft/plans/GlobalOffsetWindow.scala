@@ -26,9 +26,8 @@ import org.apache.spark.sql.execution.SparkPlan
   * contiguous under that sort, so the per-key n-th neighbor IS the
   * global n-th neighbor exactly when its key matches, and a null-safe
   * byte-equality key guard (partition keys are float-normalized
-  * upstream) turns a cross-key neighbor into the default — the
-  * SkewWindow.offset composition promoted into the planner, so plain
-  * SQL gets it. Stock Spark's hash exchange puts every row of a hot
+  * upstream) turns a cross-key neighbor into the default, in plain
+  * SQL. Stock Spark's hash exchange puts every row of a hot
   * key in ONE task; here the key spans tasks, and a chain of windows
   * over the same (key, order) — lag for the session break, a running
   * sum for the session id — reuses ONE range exchange end to end.

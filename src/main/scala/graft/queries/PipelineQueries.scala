@@ -3408,80 +3408,77 @@ object PipelineQueries {
     }),
 
     // SKEW-SAFE PARTITIONED RUNNING WINDOW — `SUM(v) OVER (PARTITION BY
-    // user ORDER BY ts)` puts every row of a key into ONE task; a hot
-    // user resurrects the reference's hot region server inside the
-    // cluster (AQE re-splits skewed joins, never windows).
-    // operators.SkewWindow composes the rescued global primitives
-    // instead: a global prefix scan over (key, order) — the hot key
-    // SPANS range partitions — plus per-key exclusive offsets from one
-    // hash agg + one #keys-row prefix scan, subtracted back (exact
-    // DECIMAL arithmetic; row_number falls out of the running count).
-    // The oracle replays the plain partitioned window.
+    // user ORDER BY ts)` puts every row of a key into ONE task in stock
+    // Spark; a hot user resurrects the reference's hot region server
+    // inside the cluster (AQE re-splits skewed joins, never windows).
+    // Plain window SQL: GlobalWindowSplit cuts the node into its running
+    // (sum, count) and ranking (row_number, ntile) families, and
+    // GlobalRunningAggStrategy and GlobalRowNumberStrategy plan them over
+    // a range exchange on (user, ts) — the hot key SPANS tasks. Exact
+    // DECIMAL inside, double at the boundary.
     "q_skew_window" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_id"), col("user_id"),
-        col("ts_us"), col("value").cast("decimal(18,2)").as("dv"))
-      val run = graft.operators.SkewWindow.runningExact(
-        ev, Seq("user_id"), Seq("ts_us", "event_id"), col("dv"))
-      graft.operators.SkewWindow.ntileExact(
-          run, Seq("user_id"), Seq("ts_us", "event_id"), buckets = 7,
-          rnCol = Some("run_rn")) // reuse the prefix scan just computed
-        .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-        .select(col("event_id"), col("user_id"),
-          col("run_sum").cast("double").as("run_sum"),
-          col("run_n"), col("run_rn"), col("nt"))
+      events(s, dir).createOrReplaceTempView("events_v")
+      s.sql("""SELECT event_id, user_id,
+                 CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER run AS DOUBLE) AS run_sum,
+                 COUNT(*) OVER run AS run_n,
+                 CAST(row_number() OVER w AS BIGINT) AS run_rn,
+                 ntile(7) OVER w AS nt
+               FROM events_v
+               WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id),
+                 run AS (PARTITION BY user_id ORDER BY ts_us, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               ORDER BY user_id, ts_us, event_id""")
     }),
 
-    // SKEW-SAFE PER-KEY MOVING AVERAGE — `ROWS 6 PRECEDING` per user.
-    // A key's rows are contiguous under the global range sort, so the
-    // global 7-row sliding window IS the per-key window everywhere
-    // except the key's first 6 rows, where the frame clips to the
-    // per-key running prefix — both rescued scans share ONE range
-    // exchange and one when() splices them. avg divides by the
-    // non-null count, like SQL's avg.
+    // SKEW-SAFE PER-KEY MOVING AVERAGE — `ROWS 6 PRECEDING` per user,
+    // plain window SQL: GlobalSlidingAggStrategy clips the global
+    // sliding frame at key boundaries over the (user, ts) range
+    // exchange. The average is the DECIMAL sum as a double over the
+    // non-null count, like SQL's avg without its 6-place DECIMAL
+    // rounding.
     "q_skew_moving" -> ((s, dir) => {
-      val ev = events(s, dir).select(col("event_id"), col("user_id"),
-        col("ts_us"), col("value").cast("decimal(18,2)").as("dv"))
-      graft.operators.SkewWindow.slidingExact(
-          ev, Seq("user_id"), Seq("ts_us", "event_id"), col("dv"), kPreceding = 6)
-        .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-        .select(col("event_id"), col("user_id"),
-          col("mov_sum").cast("double").as("mov_sum"),
-          col("mov_n"), col("mov_avg"))
+      events(s, dir).createOrReplaceTempView("events_v")
+      s.sql("""SELECT event_id, user_id,
+                 CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS mov_sum,
+                 COUNT(*) OVER w AS mov_n,
+                 CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
+                   / COUNT(value) OVER w AS mov_avg
+               FROM events_v
+               WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
+                 ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+               ORDER BY user_id, ts_us, event_id""")
     }),
 
-    // SKEW-SAFE PER-KEY RANK/DENSE_RANK — ranks are peer-run
-    // properties, so the computation collapses to runs first: one hash
-    // agg over (user, value) run sizes, the exact prefix machinery
-    // turns sizes into rank (exclusive prefix + 1) and dense_rank (the
-    // run's per-key row number), one null-safe tuple join fans them
-    // back. No WindowExec, no per-key task, tie semantics identical to
-    // the built-in the oracle replays.
+    // SKEW-SAFE PER-KEY RANK/DENSE_RANK/PERCENT_RANK/CUME_DIST over a
+    // TIES order (value), plain window SQL: GlobalRowNumberStrategy
+    // resets its counters at key boundaries over the (user, value) range
+    // exchange, peers share, and the group totals percent_rank and
+    // cume_dist need come from the driver's edge-segment merge.
     "q_skew_rank" -> ((s, dir) => {
-      val ev = events(s, dir)
-      graft.operators.SkewWindow.rankExact(
-          ev.select(col("event_id"), col("user_id"), col("ts_us"), col("value")),
-          Seq("user_id"), Seq("value"),
-          percentRankName = Some("prk"), cumeDistName = Some("cd"))
-        .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-        .select(col("event_id"), col("user_id"), col("rnk"), col("drnk"),
-          col("prk"), col("cd"))
+      events(s, dir).createOrReplaceTempView("events_v")
+      s.sql("""SELECT event_id, user_id,
+                 CAST(rank() OVER w AS BIGINT) AS rnk,
+                 CAST(dense_rank() OVER w AS BIGINT) AS drnk,
+                 percent_rank() OVER w AS prk,
+                 cume_dist() OVER w AS cd
+               FROM events_v
+               WINDOW w AS (PARTITION BY user_id ORDER BY value)
+               ORDER BY user_id, ts_us, event_id""")
     }),
 
     // SKEW-SAFE PER-KEY LAG/LEAD — sessionization's workhorse, same hot
-    // key problem as q_skew_window. Rows of a key are CONTIGUOUS under
-    // the global (key, order) range sort, so the global n-th neighbor
-    // IS the per-key one exactly when its key matches: one rescued
-    // GlobalOffsetWindow (boundary-row stitch) + a null-safe key guard,
-    // no hash exchange on the key, no per-key task.
+    // key problem as q_skew_window. Plain window SQL:
+    // GlobalOffsetWindowStrategy takes the global n-th neighbor over the
+    // (user, ts) range exchange — a key's rows are contiguous there —
+    // and a key guard turns a cross-key neighbor into the default.
     "q_skew_lag" -> ((s, dir) => {
-      val ev = events(s, dir)
-      graft.operators.SkewWindow.offset(
-          ev, Seq("user_id"), Seq("ts_us", "event_id"), Seq(
-            "prev_value" -> ((col("value"), -1, lit(null).cast("double"))),
-            "next_event" -> ((col("event_id"), 1, lit(-1L)))))
-        .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-        .select(col("event_id"), col("user_id"),
-          col("prev_value"), col("next_event"))
+      events(s, dir).createOrReplaceTempView("events_v")
+      s.sql("""SELECT event_id, user_id,
+                 lag(value, 1) OVER w AS prev_value,
+                 lead(event_id, 1, -1) OVER w AS next_event
+               FROM events_v
+               WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
+               ORDER BY user_id, ts_us, event_id""")
     }),
 
     // SKEW-SAFE PER-KEY RANGE-INTERVAL FRAME — the per-user trailing
@@ -3582,8 +3579,7 @@ object PipelineQueries {
     // boundaries, each task's first key seeded from the driver's
     // edge-group chain, and the group totals percent_rank/cume_dist/
     // ntile need resolved by the driver's edge-segment merge (a group
-    // spans tasks only through task edges). No SkewWindow API call
-    // anywhere: existing SQL gets this.
+    // spans tasks only through task edges). Existing SQL gets this.
     "q_skew_topn" -> ((s, dir) => {
       events(s, dir).createOrReplaceTempView("events_v")
       s.sql("""SELECT event_id, user_id, value, rn, nt, rnk, drnk, prk, cd FROM (

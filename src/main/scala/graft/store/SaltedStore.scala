@@ -423,8 +423,7 @@ object SaltedStore {
         }
       case None => (visible ++ parked)
         .map { case (dir, n) =>
-          val fsz = fs.listStatus(dir)
-            .filterNot(_.getPath.getName.startsWith("_")).map(_.getLen)
+          val fsz = FileManifest.dataFiles(fs, dir).map(_.getLen)
           (n, fsz.length.toLong, fsz.sum)
         }
     }).toDF("bucket", "n_files", "bytes")
@@ -452,12 +451,7 @@ object SaltedStore {
       .map(FileManifest.maxFiles(_) > maxFiles)
       .getOrElse(fs.exists(root) && fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partitionPrefix="))
-      .exists { b =>
-        fs.listStatus(b.getPath).count { f =>
-          f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith(".")
-        } > maxFiles
-      })
+      .exists(b => FileManifest.dataFiles(fs, b.getPath).size > maxFiles))
   }
 
   /** Compact a salted bucketed layout in place — the minor-compaction
@@ -622,9 +616,15 @@ object SaltedStore {
     // layout — the streaming vector index reuses it on `cell=N` dirs
     val buckets = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partitionPrefix="))
-    buckets.foreach { b =>
-      val bytes = fs.listStatus(b.getPath).filterNot(_.getPath.getName.startsWith("_"))
-        .map(_.getLen).sum
+      .map(b => (b, FileManifest.dataFiles(fs, b.getPath)))
+      .filter(_._2.nonEmpty) // no data file, nothing to rewrite
+    // the data schema without an inference job: the prior manifest's, else
+    // one footer's
+    lazy val schema = prior.map(_.schema).filter(_.nonEmpty)
+      .map(org.apache.spark.sql.types.StructType.fromDDL)
+      .getOrElse(FileManifest.fileSchema(spark, buckets.head._2.head))
+    buckets.foreach { case (b, files) =>
+      val bytes = files.map(_.getLen).sum
       val nFiles = math.max(1, (bytes / targetBytes).toInt +
         (if (bytes % targetBytes > 0) 1 else 0))
       val tmp = new Path(b.getPath.getParent, s".compact_${b.getPath.getName}")
@@ -634,7 +634,7 @@ object SaltedStore {
       // fold per-row maintenance into the same rewrite (the text index
       // drops tombstoned docs here) — compaction is the one moment every
       // row is already being rewritten, so folding is free.
-      transform(spark.read.parquet(b.getPath.toString))
+      transform(FileManifest.readFiles(spark, b.getPath, files, schema))
         .repartitionByRange(nFiles, keyCol)
         .sortWithinPartitions(keyCol)
         .write.mode("overwrite").parquet(tmp.toString)

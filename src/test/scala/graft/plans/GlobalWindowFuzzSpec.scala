@@ -11,22 +11,13 @@ import org.apache.spark.sql.functions._
   * edge interactions no hand-written case enumerates (boundary stitch
   * × null runs × tiny partitions × mixed widths). Seed is fixed —
   * failures reproduce. */
-class GlobalWindowFuzzSpec extends SparkSuite {
+class GlobalWindowFuzzSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   // override for deep soaks: -Dgraft.fuzz.seed=… -Dgraft.fuzz.rounds=…
   private val rnd = new scala.util.Random(
     sys.props.getOrElse("graft.fuzz.seed", "20260812").toLong)
   private val rounds = sys.props.getOrElse("graft.fuzz.rounds", "6").toInt
-
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   private def randomDf(): DataFrame = {
     val n = 300 + rnd.nextInt(3000)
@@ -135,30 +126,8 @@ class GlobalWindowFuzzSpec extends SparkSuite {
       // uncoalesced range partitions, from one task to more tasks than
       // most key groups span: edge chains and stitched rows get reached
       val parts = Seq(1, 4, 16, 61)(rnd.nextInt(4))
-      // a fresh frame per side: a Dataset keeps its first executed plan,
-      // so re-collecting one frame under the opt-out reruns the rescue
-      def out = cols.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
-      def snap(d: DataFrame) = d.collect()
-        .map(r => (0 until r.length).map(j =>
-          Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-        .sorted.toSeq
-      withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
-        withConf("spark.sql.shuffle.partitions", parts.toString) {
-          def builtIn(d: DataFrame) = d.queryExecution.executedPlan.toString
-            .linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window ["))
-          val rescued = out
-          assert(!builtIn(rescued), s"round $round: a frame escaped the rescue:\n" +
-            rescued.queryExecution.executedPlan)
-          val got = snap(rescued)
-          val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-            val stock = out
-            assert(builtIn(stock), s"round $round: the opt-out still plans a rescue")
-            snap(stock)
-          }
-          assert(got == expected, s"round $round diverged from the built-in at " +
-            s"$parts range partitions over ${cols.map(_._2).mkString(", ")}; rescued " +
-            s"${got.diff(expected).take(3)}, built-in ${expected.diff(got).take(3)}")
-        }
+      assertMatchesBuiltIn(s"round $round over ${cols.map(_._2).mkString(", ")}", parts) {
+        cols.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
       }
     }
   }

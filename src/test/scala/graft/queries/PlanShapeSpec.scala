@@ -189,10 +189,14 @@ class PlanShapeSpec extends SparkSuite {
 
   test("skew-safe partitioned window: no WindowExec, row data range-partitioned") {
     val p = plan("q_skew_window")
-    assert(!p.contains("Window "),
-      s"no built-in WindowExec may appear — partitioned OR single-task:\n$p")
-    assert("GlobalRunningAgg".r.findAllIn(p).length >= 2,
-      s"row scan AND key-offset scan must both ride the prefix-scan exec:\n$p")
+    assert(p.contains("GlobalRunningAgg") && p.contains("GlobalRowNumber"),
+      s"the running sum/count and the row_number/ntile must both rescue:\n$p")
+    assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
+      s"no built-in WindowExec may appear:\n$p")
+    assert(p.contains("Exchange rangepartitioning(user_id"),
+      s"row data must range-partition over (user_id, order):\n$p")
+    assert(!p.contains("hashpartitioning(user_id"),
+      s"a hash exchange on user_id would pin a hot user to one task:\n$p")
   }
 
   test("skew-safe per-key lag/lead: boundary-stitch exec, no WindowExec") {
@@ -201,14 +205,30 @@ class PlanShapeSpec extends SparkSuite {
       s"per-key lag/lead must ride the boundary-stitch exec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"no built-in WindowExec may appear:\n$p")
+    assert(!p.contains("hashpartitioning(user_id"),
+      s"a hash exchange on user_id would pin a hot user to one task:\n$p")
   }
 
   test("skew-safe per-key moving average: both scans rescued, one exchange") {
     val p = plan("q_skew_moving")
-    assert(p.contains("GlobalSlidingAgg") && p.contains("GlobalRunningAgg"),
-      s"sliding AND running scans must both be rescued:\n$p")
+    assert(p.contains("GlobalSlidingAgg"),
+      s"the moving sum and the average's non-null count must ride the sliding exec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"no built-in WindowExec may appear:\n$p")
+    assert(!p.contains("hashpartitioning(user_id"),
+      s"a hash exchange on user_id would pin a hot user to one task:\n$p")
+    assert("Exchange ".r.findAllIn(p).length == 1,
+      s"the window and the final ORDER BY must share one range exchange:\n$p")
+  }
+
+  test("skew-safe per-key rank family: ranking exec, no WindowExec") {
+    val p = plan("q_skew_rank")
+    assert(p.contains("GlobalRowNumber"),
+      s"per-key rank/dense_rank/percent_rank/cume_dist must ride the ranking exec:\n$p")
+    assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
+      s"no built-in WindowExec may appear:\n$p")
+    assert(!p.contains("hashpartitioning(user_id"),
+      s"a hash exchange on user_id would pin a hot user to one task:\n$p")
   }
 
   test("skew-safe per-key RANGE-interval frame: range exchange, no WindowExec") {

@@ -85,6 +85,23 @@ class StoreJobCountSpec extends SparkSuite with JobCounting with AdaptiveSparkPl
       !plan.contains("rangepartitioning"), plan)
   }
 
+  test("compaction starts two jobs per bucket, none to infer a schema") {
+    val dir = java.nio.file.Files.createTempDirectory("compact_jobs").toString + "/s"
+    SaltedStore.write(rows(0, 4000), col("k"), dist, dir)
+    SaltedStore.write(rows(4000, 6000), col("k"), dist, dir, mode = "append")
+    // the rewrite's own jobs only: the schema comes from the manifest,
+    // else from one footer, with no inference job
+    val (_, jobs) = countingJobs(SaltedStore.compact(spark, dir, col("k")))
+    assert(jobs === 2 * 4)
+    SaltedStore.write(rows(6000, 7000), col("k"), dist, dir, mode = "append")
+    FileManifest.delete(spark, dir)
+    val (_, unrecorded) = countingJobs(SaltedStore.compact(spark, dir, col("k")))
+    assert(unrecorded === 2 * 4)
+    val df = SaltedStore.read(spark, dir)
+    assert(df.count() === 7000L)
+    assert(df.agg(sum(col("v"))).head().getLong(0) === (0L until 7000L).map(_ * 7 % 1000).sum)
+  }
+
   test("building the tombstone and delta-segment reads starts no job") {
     val p = java.nio.file.Files.createTempDirectory("delta_jobs").toString + "/idx"
     def sets(lo: Long, hi: Long) =

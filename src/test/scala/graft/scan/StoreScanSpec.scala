@@ -297,6 +297,31 @@ class StoreScanSpec extends SparkSuite {
     }
   }
 
+  test("describe counts the same files and bytes from the manifest as from a listing") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("describe_listing").toString
+    (0 until 2).foreach { b =>
+      val part = ((b * 1000L + 1) to (b * 1000L + 1000L)).map(i => (i, i * 2.0)).toDF("k", "v")
+      SaltedStore.write(part, col("k"), HashPrefix(4), dir, mode = "append")
+    }
+    // a local write leaves a checksum sidecar next to every part file
+    assert(new java.io.File(s"$dir/bucket=0").listFiles().exists(_.getName.endsWith(".crc")))
+    def facts = SaltedStore.describe(spark, dir, col("k"))
+      .select("bucket", "n_files", "bytes").as[(Long, Long, Long)].collect().toSeq
+    val fromManifest = facts
+    assert(fromManifest.forall(_._2 >= 2), fromManifest)
+    graft.store.FileManifest.delete(spark, dir)
+    // the raw local filesystem lists the sidecars, as an object store
+    // holding a copied tree does (the checksummed one hides them)
+    spark.conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try assert(facts === fromManifest)
+    finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
   test("compact merges small files per bucket, preserving data and order") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("compact_store").toString
