@@ -2,11 +2,12 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, MutableProjection, NamedExpression, SortOrder, SpecifiedWindowFrame, SpecificInternalRow, UnboundedFollowing, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, SpecifiedWindowFrame, SpecificInternalRow, UnboundedFollowing, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Complete, CountMinSketchAgg, DeclarativeAggregate, HyperLogLogPlusPlus, ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.types.DataType
 
 /** Scale-safe planning for naive WHOLE-TABLE window aggregates.
   *
@@ -67,8 +68,7 @@ import org.apache.spark.sql.execution.SparkPlan
   * whose aggregates have no orderable input (e.g. only `COUNT(*)`)
   * has no spread dimension and stays with the built-in.
   *
-  * Opt-out: shares `spark.graft.globalRowNumber.enabled` — one switch
-  * restores every built-in global window.
+  * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalConstantAggStrategy extends WindowFamily {
   import GlobalConstantAggExec.ConstAgg
@@ -172,14 +172,44 @@ object GlobalConstantAggExec {
     * order-independent imperative sketch. */
   case class ConstAgg(agg: AggregateFunction, attr: Attribute)
 
-  /** Per-task edge-group partials for the partitioned path: first/last
-    * key groups, their declarative slice buffers, and their serialized
-    * imperative sketch buffers. Top-level so the serialized task result
-    * carries no $outer. */
-  private[plans] case class AggEdge(firstG: UnsafeRow, lastG: UnsafeRow,
-                                    bufFirst: UnsafeRow, bufLast: UnsafeRow,
-                                    impFirst: Array[Array[Byte]],
-                                    impLast: Array[Array[Byte]])
+  /** One group's partial: the declarative buffer and each sketch's
+    * serialized buffer. */
+  private[plans] final case class Partial(buf: UnsafeRow, sketches: Array[Array[Byte]])
+
+  /** Folds a group's rows into a [[Partial]]: the declaratives (output
+    * slots `dSlots`) through one [[AggBuffer]], each sketch (slot
+    * `iSlots(m)`) through its [[ImpOps]]; `merge` adds another partial
+    * and `constants` evaluates the output values. */
+  private[plans] final class Fold(decl: Seq[DeclarativeAggregate], dSlots: Array[Int],
+                                  ops: Array[ImpOps], iSlots: Array[Int],
+                                  types: Array[DataType], input: Seq[Attribute])
+      extends GroupFold[Partial] {
+    private val agg = new AggBuffer(decl, input)
+    private var sketches: Array[AnyRef] = ops.map(_.newBuf())
+
+    def reset(): Unit = { agg.reset(); sketches = ops.map(_.newBuf()) }
+    def add(row: InternalRow): Unit = {
+      agg.add(row)
+      var j = 0
+      while (j < ops.length) { sketches(j) = ops(j).update(sketches(j), row); j += 1 }
+    }
+    def snapshot(): Partial =
+      Partial(agg.snapshot(), ops.indices.map(j => ops(j).serialize(sketches(j))).toArray)
+    def merge(p: Partial): Unit = {
+      agg.merge(p.buf)
+      var j = 0
+      while (j < ops.length) { sketches(j) = ops(j).mergeBytes(sketches(j), p.sketches(j)); j += 1 }
+    }
+    def constants(): Array[Any] = {
+      val vals = new Array[Any](types.length)
+      val evalRow = agg.eval()
+      dSlots.indices.foreach(m =>
+        vals(dSlots(m)) = InternalRow.copyValue(evalRow.get(m, types(dSlots(m)))))
+      iSlots.indices.foreach(m =>
+        vals(iSlots(m)) = InternalRow.copyValue(ops(m).eval(sketches(m))))
+      vals
+    }
+  }
 
   /** Uniform driver/executor operations over one imperative sketch
     * aggregate: an opaque buffer with update / serialize / merge /
@@ -242,19 +272,23 @@ object GlobalConstantAggExec {
   }
 }
 
-/** Physical whole-table window aggregation: per-partition partial
-  * buffers (one tiny job, no exchange), driver merge + single evaluate,
-  * then a narrow second pass attaching the constant values to every
-  * row. Driver state is #partitions aggregation buffers — independent
-  * of data size. Partitioned mode: per-GROUP constants over a range
-  * exchange — edge groups merged on the driver, interior groups
-  * evaluated locally from a one-group row buffer. */
+/** Physical whole-table window aggregation on the [[BoundaryScan]]: pass
+  * 1 folds each edge group into a partial (declarative buffer plus
+  * serialized sketches), the driver merges each chain's partials left to
+  * right and evaluates once per chain. Unordered whole-table constants
+  * need no exchange: every task is one empty-keyed group, one chain spans
+  * the table, and a narrow pass attaches the constants. The ordered path
+  * — per-key constants over a range exchange, or an order-sensitive
+  * global collector — buffers one group at a time: edge groups take the
+  * driver's constants, interior groups (whole in their task) evaluate
+  * their own rows. Driver state is two partials per task, independent of
+  * data size. */
 case class GlobalConstantAggExec(partition: Seq[Expression],
                                  spread: Seq[SortOrder],
                                  funcs: Seq[GlobalConstantAggExec.ConstAgg],
                                  child: SparkPlan) extends GlobalWindowExec {
 
-  import GlobalConstantAggExec.{AggEdge, ImpOps, opsFor}
+  import GlobalConstantAggExec.{Fold, ImpOps, Partial, opsFor}
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
   override def order: Seq[SortOrder] = spread
@@ -275,86 +309,33 @@ case class GlobalConstantAggExec(partition: Seq[Expression],
     val childOutput = child.output
     val resultAttrs = output
     val partExprs = partition
-    val nF = funcs.length
-    // declarative / imperative split: declaratives ride the projection
-    // machinery, imperatives the [[ImpOps]] object buffers; slot indexes
-    // map each back to its output column
+    // declarative / imperative split: declaratives ride [[AggBuffer]],
+    // imperatives the [[ImpOps]] object buffers; slot indexes map each
+    // back to its output column
     val dIdx = funcs.indices.filter(funcs(_).agg.isInstanceOf[DeclarativeAggregate]).toArray
     val iIdx = funcs.indices.filterNot(dIdx.contains).toArray
-    val declAggs = dIdx.map(i =>
-      funcs(i).agg.asInstanceOf[DeclarativeAggregate]).toSeq
-    val bufAttrs = declAggs.flatMap(_.aggBufferAttributes)
-    val bufTypes = bufAttrs.map(_.dataType)
-    val inputBufAttrs = declAggs.flatMap(_.inputAggBufferAttributes)
-    val initExprs = declAggs.flatMap(_.initialValues)
-    val updateExprs = declAggs.flatMap(_.updateExpressions)
-    val mergeExprs = declAggs.flatMap(_.mergeExpressions)
-    val evalExprs = declAggs.map(_.evaluateExpression)
+    val declAggs = dIdx.map(i => funcs(i).agg.asInstanceOf[DeclarativeAggregate]).toSeq
     val impOps: Array[ImpOps] = iIdx.map(i => opsFor(funcs(i).agg, childOutput))
     val attrTypes = funcs.map(_.attr.dataType).toArray
+    def fold() = new Fold(declAggs, dIdx, impOps, iIdx, attrTypes, childOutput)
     val rdd = input()
 
-    def newBuffer(): SpecificInternalRow = {
-      val buf = new SpecificInternalRow(bufTypes)
-      MutableProjection.create(initExprs, Nil).target(buf)(InternalRow.empty)
-      buf
+    // pass 1 folds each edge group (with no partition keys, each whole
+    // task) into a partial; the driver merges each chain left to right —
+    // partition order, which a sorted collector's append relies on
+    val edges = BoundaryScan.summarize(rdd, partExprs, childOutput)(() => fold())
+    val driver = fold()
+    def merged(ps: Partial*): Fold = {
+      driver.reset(); ps.foreach(driver.merge); driver
     }
-    // one group's output values: declaratives from their evaluated
-    // buffer, sketches from their own buffers
-    def constants(evalRow: InternalRow, impBufs: Array[AnyRef]): Array[Any] = {
-      val vals = new Array[Any](nF)
-      dIdx.zipWithIndex.foreach { case (slot, m) =>
-        vals(slot) = InternalRow.copyValue(evalRow.get(m, attrTypes(slot)))
-      }
-      iIdx.zipWithIndex.foreach { case (slot, m) =>
-        vals(slot) = InternalRow.copyValue(impOps(m).eval(impBufs(m)))
-      }
-      vals
-    }
-    // driver: merge partials (decl buffer + serialized sketches) left to
-    // right and evaluate once — a few buffer-sized rows of work per
-    // merged group, independent of data size
-    val merge = MutableProjection.create(mergeExprs, bufAttrs ++ inputBufAttrs)
-    val driverEval = UnsafeProjection.create(evalExprs, bufAttrs)
-    val joinBB = new JoinedRow
-    def mergeAll(partials: Iterable[(UnsafeRow, Array[Array[Byte]])]): Array[Any] = {
-      val running = newBuffer()
-      merge.target(running)
-      val impBufs = impOps.map(_.newBuf())
-      partials.foreach { case (buf, imp) =>
-        merge(joinBB(running, buf))
-        var m = 0
-        while (m < impOps.length) {
-          impBufs(m) = impOps(m).mergeBytes(impBufs(m), imp(m)); m += 1
-        }
-      }
-      constants(driverEval(running), impBufs)
-    }
+    val zero = driver.snapshot()
+    val walk = BoundaryScan.walk(edges, zero,
+      (c: Partial, s: Partial) => merged(c, s).snapshot())
 
     if (!ordered) {
-      // pass 1: one partial (decl buffer + serialized sketches) per
-      // partition — the map-side partial aggregation a groupBy would
-      // run, without the final exchange
-      val partials: Array[(UnsafeRow, Array[Array[Byte]])] =
-        rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-          val buf = newBuffer()
-          val update = MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
-          update.target(buf)
-          val joinBI = new JoinedRow
-          val impBufs = impOps.map(_.newBuf())
-          while (iter.hasNext) {
-            val row = iter.next()
-            update(joinBI(buf, row))
-            var j = 0
-            while (j < impOps.length) {
-              impBufs(j) = impOps(j).update(impBufs(j), row); j += 1
-            }
-          }
-          (UnsafeProjection.create(bufAttrs, bufAttrs)(buf).copy(),
-            impOps.indices.map(j => impOps(j).serialize(impBufs(j))).toArray)
-        })
-      val constVals = mergeAll(partials)
       // pass 2: narrow attach of the constants — full parallelism, no state
+      val total = edges.indices.find(edges(_).first != null).map(walk.firstTotal).getOrElse(zero)
+      val constVals = merged(total).constants()
       return rdd.mapPartitions { iter =>
         val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
         val join = new JoinedRow
@@ -363,79 +344,14 @@ case class GlobalConstantAggExec(partition: Seq[Expression],
       }
     }
 
-    // per-key pass 1: per task, the first and last key group's partials
-    // (decl buffer + serialized sketches)
-    val stats: Array[AggEdge] = rdd.sparkContext.runJob(rdd,
-      (iter: Iterator[InternalRow]) => {
-        val groupProj = UnsafeProjection.create(partExprs, childOutput)
-        val bufProj = UnsafeProjection.create(bufAttrs, bufAttrs)
-        var buf = newBuffer()
-        val update = MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
-        update.target(buf)
-        val joinBI = new JoinedRow
-        var impBufs = impOps.map(_.newBuf())
-        var firstG: UnsafeRow = null
-        var curG: UnsafeRow = null
-        var bufFirst: UnsafeRow = null
-        var impFirst: Array[Array[Byte]] = null
-        while (iter.hasNext) {
-          val row = iter.next()
-          val g = groupProj(row)
-          if (curG == null) { curG = g.copy(); firstG = curG }
-          else if (!g.equals(curG)) {
-            if (bufFirst == null) {
-              bufFirst = bufProj(buf).copy()
-              impFirst = impOps.indices.map(j =>
-                impOps(j).serialize(impBufs(j))).toArray
-            }
-            curG = g.copy()
-            buf = newBuffer(); update.target(buf)
-            impBufs = impOps.map(_.newBuf())
-          }
-          update(joinBI(buf, row))
-          var j = 0
-          while (j < impOps.length) {
-            impBufs(j) = impOps(j).update(impBufs(j), row); j += 1
-          }
-        }
-        val bufLast = bufProj(buf).copy()
-        val impLast = impOps.indices.map(j =>
-          impOps(j).serialize(impBufs(j))).toArray
-        if (bufFirst == null) { bufFirst = bufLast; impFirst = impLast }
-        AggEdge(firstG, curG, bufFirst, bufLast, impFirst, impLast)
-      })
-    val nParts = stats.length
-
-    // driver chain merge: the slices of one edge-group chain are one
-    // group (contiguity under the sort); merge their partials and
-    // evaluate once per group. Driver work is bounded by two partials
-    // per task.
-    val firstConst = new Array[Array[Any]](nParts)
-    val lastConst = new Array[Array[Any]](nParts)
-    EdgeChains(stats.map(_.firstG), stats.map(_.lastG)).foreach { chain =>
-      val vals = mergeAll(chain.map { s =>
-        val e = stats(s.p)
-        if (s.isLast) (e.bufLast, e.impLast) else (e.bufFirst, e.impFirst)
-      })
-      chain.foreach { s =>
-        if (s.isFirst) firstConst(s.p) = vals
-        if (s.isLast) lastConst(s.p) = vals
-      }
-    }
-
     // pass 2: buffer one group at a time; edge groups take the driver's
-    // constants, interior groups evaluate their own local partials.
-    // Each task receives ONLY its own pair of edge constants
-    // ([[PerPartition.stitch]] — closure capture of the full
-    // firstConst/lastConst arrays would ship O(#partitions) per task).
-    PerPartition.stitch(rdd,
-      (0 until nParts).map(p => (firstConst(p), lastConst(p)))) { (slice, iter) =>
-      val (firstConstP, lastConstP) = slice
+    // constants, interior groups evaluate their own rows
+    finish(rdd, edges, p => (merged(walk.firstTotal(p)).constants(),
+        merged(walk.lastTotal(p)).constants())) { (_, slice, iter) =>
+      val (firstConst, lastConst) = slice
       val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
       val join = new JoinedRow
-      val update = MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
-      val evalProj = UnsafeProjection.create(evalExprs, bufAttrs)
-      val joinBI = new JoinedRow
+      val local = fold()
       val groups = new Runs(iter, UnsafeProjection.create(partExprs, childOutput))
 
       new Iterator[InternalRow] {
@@ -443,24 +359,14 @@ case class GlobalConstantAggExec(partition: Seq[Expression],
 
         private def fillGroup(): Unit = {
           groups.fill()
-          val vals: Array[Any] =
-            if (groups.isFirst) firstConstP
-            else if (groups.isLast) lastConstP
+          constRow = new GenericInternalRow(
+            if (groups.isFirst) firstConst
+            else if (groups.isLast) lastConst
             else {
-              // an interior group is whole in this task
-              val agg = newBuffer()
-              update.target(agg)
-              val impBufs = impOps.map(_.newBuf())
-              groups.rows.foreach { r =>
-                update(joinBI(agg, r))
-                var m = 0
-                while (m < impOps.length) {
-                  impBufs(m) = impOps(m).update(impBufs(m), r); m += 1
-                }
-              }
-              constants(evalProj(agg), impBufs)
-            }
-          constRow = new GenericInternalRow(vals)
+              local.reset()
+              groups.rows.foreach(local.add)
+              local.constants()
+            })
         }
 
         override def hasNext: Boolean = groups.hasNext

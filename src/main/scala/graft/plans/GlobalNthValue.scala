@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.collection.mutable.{ArrayBuffer, ArrayDeque}
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CurrentRow, Expression, GenericInternalRow, IntegerLiteral, JoinedRow, NamedExpression, NthValue, SortOrder, SpecifiedWindowFrame, RangeFrame, UnboundedFollowing, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
@@ -49,7 +51,7 @@ import org.apache.spark.sql.internal.SQLConf
   * frame over a sorted exchange feeds them rows in exactly the sort
   * order — the same argument GlobalRunningAgg makes.
   *
-  * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
+  * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalNthValueStrategy extends WindowFamily {
   import GlobalNthValueExec.NthF
@@ -128,479 +130,264 @@ object GlobalNthValueExec {
                   isRange: Boolean, isFull: Boolean, attr: Attribute,
                   fromEnd: Boolean = false)
 
-  /** Per-task edge-group stats: first/last group keys; per function,
-    * each edge group's slice (rows, non-nulls, first — last for
-    * fromEnd — ≤n counting candidates). With no partition spec the task
-    * is one group. Top-level (not method-local) so the serialized task
-    * result carries no $outer. */
-  private[plans] case class Edge(
-      firstG: UnsafeRow, lastG: UnsafeRow,
-      rowsFirst: Long, nnFirst: Array[Long],
-      candFirst: Array[Array[UnsafeRow]],
-      rowsLast: Long, nnLast: Array[Long],
-      candLast: Array[Array[UnsafeRow]])
+  /** A group (slice) count: rows, per function its non-null inputs and
+    * its first (last, for fromEnd) counting candidates. */
+  private[plans] final case class Counted(rows: Long, nn: Array[Long],
+                                          cand: Array[Array[UnsafeRow]])
+
+  /** Counts a key group's rows: rows, non-null inputs and, per function,
+    * its first ≤ `caps(i)` counting values (the last ones, a ring, for
+    * fromEnd). Pass 1 folds edge groups with it; pass 2 runs it on from
+    * the chain seed, a group's n-th value then being `heads(i)(n - 1)`. */
+  private[plans] final class Counter(funcs: Array[NthF], caps: Array[Int],
+                                     input: Seq[Attribute]) extends GroupFold[Counted] {
+    private val projs = funcs.map(f => UnsafeProjection.create(Seq(f.input), input))
+    var rows = 0L
+    val nn = new Array[Long](funcs.length)
+    val heads: Array[ArrayDeque[UnsafeRow]] = Array.fill(funcs.length)(new ArrayDeque[UnsafeRow])
+
+    def reset(): Unit = { rows = 0L; java.util.Arrays.fill(nn, 0L); heads.foreach(_.clear()) }
+    def load(c: Counted): Unit = {
+      rows = c.rows
+      System.arraycopy(c.nn, 0, nn, 0, nn.length)
+      heads.indices.foreach { i => heads(i).clear(); heads(i) ++= c.cand(i) }
+    }
+    def add(row: InternalRow): Unit = {
+      var i = 0
+      while (i < funcs.length) {
+        val f = funcs(i)
+        val v = projs(i)(row)
+        val isNull = v.isNullAt(0)
+        if (!isNull) nn(i) += 1
+        if (caps(i) > 0 && !(f.ignoreNulls && isNull)) {
+          if (f.fromEnd) {
+            heads(i) += v.copy()
+            if (heads(i).length > caps(i)) heads(i).removeHead()
+          } else if (heads(i).length < caps(i)) heads(i) += v.copy()
+        }
+        i += 1
+      }
+      rows += 1
+    }
+    def snapshot(): Counted = Counted(rows, nn.clone(), heads.map(_.toArray))
+
+    /** Function i's value over a whole group counted here, or null. */
+    def whole(i: Int): UnsafeRow = Counter.whole(funcs(i), rows, nn(i), heads(i).toArray)
+  }
+
+  private[plans] object Counter {
+    /** `f`'s whole-frame value given its group's counts: the n-th
+      * counting candidate from the start (from the end, for fromEnd), or
+      * null when the group has fewer than n. */
+    def whole(f: NthF, rows: Long, nn: Long, cand: Array[UnsafeRow]): UnsafeRow =
+      if ((if (f.ignoreNulls) nn else rows) < f.n) null
+      else if (f.fromEnd) cand(cand.length - f.n)
+      else cand(f.n - 1)
+  }
 }
 
-/** Physical distributed nth_value: stats pass (row/non-null counts +
-  * bounded per-partition heads), driver lookup of the ONE value each
-  * function ever emits, then a narrow eligibility pass. PARTITIONED
-  * (prefix frames only): the n-th value becomes a per-group HEAD,
-  * streamed — each task's first group is seeded with the driver-walked
-  * chain of predecessor edge-slice candidates (bounded by n per
-  * function per task), interior groups collect their own. */
+/** Physical distributed nth_value on the [[BoundaryScan]]: pass 1 counts
+  * each edge group ([[GlobalNthValueExec.Counter]]). Global mode: the
+  * driver prefix-sums the counts, reads each function's ONE value out of
+  * the owning task's capped head, and fetches a value past the cap with
+  * one job over the owning tasks only. Per key (n within the cap): the
+  * driver walks each chain, so a task's first group counts on from the
+  * slices before it and its edge groups' whole-frame values come from the
+  * chain's merged candidates. Pass 2 is one loop for both modes: a row's
+  * value is the n-th one once its reach (group-relative row index,
+  * tie-run end or non-null count) hits n. */
 case class GlobalNthValueExec(partition: Seq[Expression],
                               order: Seq[SortOrder],
                               funcs: Seq[GlobalNthValueExec.NthF],
                               child: SparkPlan) extends GlobalWindowExec {
-  import GlobalNthValueExec.Edge
+  import GlobalNthValueExec.{Counted, Counter}
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
 
-  /** Pass 1 for both paths: per task, its first and last key group's
-    * slice — row and non-null counts, and per function the first (last
-    * for fromEnd, a bounded ring) ≤ `caps(f)` counting candidates. */
-  private def edgeStats(rdd: RDD[InternalRow], caps: Array[Int]): Array[Edge] = {
-    val childOutput = child.output
-    val partExprs = partition
-    val funcsLocal = funcs.toArray
-    val nF = funcsLocal.length
-    rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-      val groupProj = UnsafeProjection.create(partExprs, childOutput)
-      val projs = funcsLocal.map(f =>
-        UnsafeProjection.create(Seq(f.input), childOutput))
-      var firstG: UnsafeRow = null
-      var curG: UnsafeRow = null
-      var rows = 0L
-      var nn = new Array[Long](nF)
-      var cand = Array.fill(nF)(
-        new scala.collection.mutable.ArrayBuffer[UnsafeRow])
-      var rowsFirst = -1L
-      var nnFirst: Array[Long] = null
-      var candFirst: Array[Array[UnsafeRow]] = null
-      while (iter.hasNext) {
-        val row = iter.next()
-        val g = groupProj(row)
-        if (curG == null) { curG = g.copy(); firstG = curG }
-        else if (!g.equals(curG)) {
-          if (rowsFirst < 0) { // the first group just ended
-            rowsFirst = rows; nnFirst = nn; candFirst = cand.map(_.toArray)
-          }
-          curG = g.copy(); rows = 0L; nn = new Array[Long](nF)
-          cand = Array.fill(nF)(
-            new scala.collection.mutable.ArrayBuffer[UnsafeRow])
-        }
-        var i = 0
-        while (i < nF) {
-          val f = funcsLocal(i)
-          val v = projs(i)(row)
-          val isNull = v.isNullAt(0)
-          if (!isNull) nn(i) += 1
-          val counts = if (f.ignoreNulls) !isNull else true
-          if (counts) {
-            if (f.fromEnd) {
-              cand(i) += v.copy()
-              if (cand(i).length > caps(i)) cand(i).remove(0)
-            } else if (cand(i).length < caps(i)) cand(i) += v.copy()
-          }
-          i += 1
-        }
-        rows += 1
-      }
-      val candArr = cand.map(_.toArray)
-      if (rowsFirst < 0) { rowsFirst = rows; nnFirst = nn; candFirst = candArr }
-      Edge(firstG, curG, rowsFirst, nnFirst, candFirst, rows, nn, candArr)
-    })
-  }
-
-  /** Per-key path: one stats job ships each task's edge-group slice
-    * candidates (first ≤ n counting values of the FIRST and LAST key
-    * group, with row/non-null slice counts); the driver walks the task
-    * chain accumulating each first group's seed (candidates + counts);
-    * pass 2 streams — per group, the head fills from the seed then
-    * from local rows, and a row's value is head(n-1) once its reach
-    * (group-relative row index / tie-run end / non-null count) hits n.
-    * RANGE functions buffer one tie run (runs never span tasks OR
-    * groups: the range exchange keys on the FULL (key ⧺ order) tuple). */
-  private def doExecutePartitioned(): RDD[InternalRow] = {
+  override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val resultAttrs = output
-    val partExprs = partition
     val funcsLocal = funcs.toArray
     val nF = funcsLocal.length
-    val keyExprs = order.map(_.child)
+    val perKey = partition.nonEmpty
     val anyRange = funcsLocal.exists(_.isRange)
-    val anyFull = funcsLocal.exists(_.isFull)
+    // per key, whole-group frames buffer one group at a time; otherwise
+    // RANGE frames buffer one tie run (runs never span tasks or groups)
+    val byGroup = perKey && funcsLocal.exists(_.isFull)
+    val unitKeys = if (byGroup) partition else partition ++ order.map(_.child)
+    val keyExprs = order.map(_.child)
     val rdd = input()
 
-    // edge stats: per function ≤ n candidates of each edge group — the
-    // only slices neighbors can see
-    val stats = edgeStats(rdd, funcsLocal.map(_.n))
-    val nParts = stats.length
+    // pass 1: per edge group, its counts and ≤ n candidates per function
+    // — capped globally (a value past the cap is fetched below)
+    val caps = funcsLocal.map(f =>
+      if (perKey) f.n else math.min(f.n, GlobalNthValueStrategy.maxN))
+    val edges = BoundaryScan.summarize(rdd, partition, childOutput)(
+      () => new Counter(funcsLocal, caps, childOutput))
 
-    // driver chain pass: each chain of equal edge groups
-    // ([[EdgeChains]]) is one task-crossing group. One walk yields BOTH
-    // products:
-    //  - prefix seeds (the carry of PRECEDING slices in the chain) for
-    //    the streaming prefix-frame path, and
-    //  - whole-chain merges (total rows/non-nulls + the merged bounded
-    //    candidate list) for the whole-GROUP-frame functions, assigned
-    //    to every member task's first/last slot.
-    // Driver state: ≤ 2 slices × (counts + n values per function)
-    // per task, independent of data size.
-    val seedRows = new Array[Long](nParts)
-    val seedNn = Array.fill(nParts)(new Array[Long](nF))
-    val seedCand: Array[Array[Array[UnsafeRow]]] =
-      Array.fill(nParts)(Array.fill(nF)(Array.empty[UnsafeRow]))
-    val fullRowsFirst = new Array[Long](nParts)
-    val fullRowsLast = new Array[Long](nParts)
-    val fullNnFirst = Array.fill(nParts)(new Array[Long](nF))
-    val fullNnLast = Array.fill(nParts)(new Array[Long](nF))
-    val fullCandFirst: Array[Array[Array[UnsafeRow]]] =
-      Array.fill(nParts)(Array.fill(nF)(Array.empty[UnsafeRow]))
-    val fullCandLast: Array[Array[Array[UnsafeRow]]] =
-      Array.fill(nParts)(Array.fill(nF)(Array.empty[UnsafeRow]))
-    EdgeChains(stats.map(_.firstG), stats.map(_.lastG)).foreach { chain =>
-      val run = chain.map { s =>
-        val e = stats(s.p)
-        if (s.isLast) (s, e.rowsLast, e.nnLast, e.candLast)
-        else (s, e.rowsFirst, e.nnFirst, e.candFirst)
+    // per task: the seed its first group counts on from, each function's
+    // fixed value (global mode; per key it is the group's own n-th), and
+    // the whole-frame values of its first and last group
+    val state: Int => (Counted, Array[UnsafeRow], Array[UnsafeRow], Array[UnsafeRow]) =
+      if (perKey) {
+        val walk = BoundaryScan.walk(edges,
+          Counted(0L, new Array[Long](nF), Array.fill(nF)(Array.empty[UnsafeRow])),
+          (c: Counted, s: Counted) => Counted(c.rows + s.rows,
+            Array.tabulate(nF)(i => c.nn(i) + s.nn(i)),
+            Array.tabulate(nF) { i =>
+              val all = c.cand(i) ++ s.cand(i)
+              if (funcsLocal(i).fromEnd) all.takeRight(caps(i)) else all.take(caps(i))
+            }))
+        def wholes(c: Counted) = Array.tabulate(nF)(i =>
+          if (funcsLocal(i).isFull) Counter.whole(funcsLocal(i), c.rows, c.nn(i), c.cand(i))
+          else null)
+        p => (walk.seed(p), null, wholes(walk.firstTotal(p)), wholes(walk.lastTotal(p)))
+      } else {
+        val rowOffsets = edges.map(_.lastS.rows).scanLeft(0L)(_ + _)
+        val nnOffsets = Array.tabulate(nF)(i => edges.map(_.lastS.nn(i)).scanLeft(0L)(_ + _))
+        val values = globalValues(rdd, edges, rowOffsets, nnOffsets)
+        p => (Counted(rowOffsets(p), Array.tabulate(nF)(i => nnOffsets(i)(p)),
+          Array.fill(nF)(Array.empty[UnsafeRow])), values, values, values)
       }
-      // whole-chain merge
-      val mergedRows = run.map(_._2).sum
-      val mergedNn = Array.tabulate(nF)(f => run.map(_._3(f)).sum)
-      val mergedCand = Array.tabulate(nF) { f =>
-        val all = run.flatMap(_._4(f))
-        if (funcsLocal(f).fromEnd) all.takeRight(funcsLocal(f).n).toArray
-        else all.take(funcsLocal(f).n).toArray
-      }
-      // prefix carries + assignment
-      var accRows = 0L
-      val accNn = new Array[Long](nF)
-      var accCand: Array[Array[UnsafeRow]] = Array.fill(nF)(Array.empty)
-      run.foreach { case (s, rows, nn, cand) =>
-        if (s.isFirst) {
-          seedRows(s.p) = accRows
-          seedNn(s.p) = accNn.clone()
-          seedCand(s.p) = accCand.map(identity)
-          fullRowsFirst(s.p) = mergedRows
-          fullNnFirst(s.p) = mergedNn
-          fullCandFirst(s.p) = mergedCand
-        }
-        if (s.isLast) {
-          fullRowsLast(s.p) = mergedRows
-          fullNnLast(s.p) = mergedNn
-          fullCandLast(s.p) = mergedCand
-        }
-        accRows += rows
-        var f = 0
-        while (f < nF) {
-          accNn(f) += nn(f)
-          if (funcsLocal(f).fromEnd) {
-            // prefix seeds are never read by fromEnd (isFull) funcs
-          } else if (accCand(f).length < funcsLocal(f).n)
-            accCand(f) = (accCand(f) ++ cand(f)).take(funcsLocal(f).n)
-          f += 1
-        }
-      }
-    }
 
-    // pass 2: per group, reach counters seeded for the first group,
-    // head = seed candidates then local rows; value = head(n-1) once
-    // the reach hits n; each task ships only its own seeds/chain
-    // merges ([[PerPartition.stitch]])
-    PerPartition.stitch(rdd, (0 until nParts).map(p =>
-      (seedRows(p), seedNn(p), seedCand(p), fullRowsFirst(p), fullRowsLast(p),
-        fullNnFirst(p), fullNnLast(p), fullCandFirst(p), fullCandLast(p)))) {
-      (slice, iter) =>
-      val (seedRowP, seedNnP, seedCandP, fullRowsFirstP, fullRowsLastP,
-        fullNnFirstP, fullNnLastP, fullCandFirstP, fullCandLastP) = slice
+    // pass 2: a function's frame reaches position `reach` = group row
+    // index (ROWS) / tie-run END index (RANGE, peers share), counted over
+    // non-null inputs for IGNORE NULLS; whole-group frames take their
+    // group's value
+    finish(rdd, edges, state) { (groups, slice, iter) =>
+      val (seed, fixed, firstWhole, lastWhole) = slice
       val attrTypes = funcsLocal.map(_.attr.dataType)
-      val groupProj = UnsafeProjection.create(partExprs, childOutput)
-      val projs = funcsLocal.map(f =>
-        UnsafeProjection.create(Seq(f.input), childOutput))
+      val counter = new Counter(funcsLocal, if (perKey) caps else new Array[Int](nF), childOutput)
+      counter.load(seed)
       val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
       val joinOut = new JoinedRow
-      var curG: UnsafeRow = null
-      var relIdx = seedRowP
-      var nnRel = seedNnP.clone()
-      val heads = Array.tabulate(nF)(i =>
-        scala.collection.mutable.ArrayBuffer[UnsafeRow](seedCandP(i): _*))
+      val vals = new GenericInternalRow(nF)
+      var wholes = firstWhole
 
-      def resetGroup(): Unit = {
-        relIdx = 0L
-        java.util.Arrays.fill(nnRel, 0L)
-        heads.foreach(_.clear())
-      }
-      def groupCheck(row: InternalRow): Unit = {
-        val g = groupProj(row)
-        if (curG == null) curG = g.copy()
-        else if (!g.equals(curG)) { curG = g.copy(); resetGroup() }
-      }
-      // consume one row into the group state (frame includes CURRENT
-      // ROW); fromEnd functions keep the LAST ≤n candidates (ring)
-      def consume(row: InternalRow): Unit = {
+      // output values for a row whose reach is (rows, nn) for ROWS frames
+      // and (endRows, endNn) for RANGE frames, read at offset o / e
+      def emit(row: InternalRow, reach: Array[Long], o: Int, e: Int): InternalRow = {
         var i = 0
         while (i < nF) {
           val f = funcsLocal(i)
-          val v = projs(i)(row)
-          val isNull = v.isNullAt(0)
-          if (!isNull) nnRel(i) += 1
-          val counts = if (f.ignoreNulls) !isNull else true
-          if (counts) {
-            if (f.fromEnd) {
-              heads(i) += v.copy()
-              if (heads(i).length > f.n) heads(i).remove(0)
-            } else if (heads(i).length < f.n) heads(i) += v.copy()
-          }
+          val at = if (f.isRange) e else o
+          val v =
+            if (f.isFull) wholes(i)
+            else if (reach(at + (if (f.ignoreNulls) 1 + i else 0)) < f.n) null
+            else if (fixed != null) fixed(i)
+            else counter.heads(i)(f.n - 1)
+          vals.update(i, if (v == null) null else v.get(0, attrTypes(i)))
           i += 1
         }
-        relIdx += 1
+        outProj(joinOut(row, vals))
       }
-      def mkVals(rowIdx: Long, rowNn: Array[Long],
-                 endIdx: Long, endNn: Array[Long]): GenericInternalRow = {
-        val vals = new GenericInternalRow(nF)
-        var i = 0
-        while (i < nF) {
-          val f = funcsLocal(i)
-          val reach =
-            if (f.isRange) { if (f.ignoreNulls) endNn(i) else endIdx }
-            else { if (f.ignoreNulls) rowNn(i) else rowIdx }
-          vals.update(i,
-            if (reach >= f.n) heads(i)(f.n - 1).get(0, attrTypes(i))
-            else null)
-          i += 1
-        }
-        vals
+      // the counter's reach after each row of a unit: rows, then nn
+      val width = 1 + nF
+      var reach = new Array[Long](width)
+      def record(j: Int): Unit = {
+        if (reach.length < (j + 1) * width)
+          reach = java.util.Arrays.copyOf(reach, 2 * (j + 1) * width)
+        reach(j * width) = counter.rows
+        System.arraycopy(counter.nn, 0, reach, j * width + 1, nF)
       }
 
-      if (anyFull) {
-        // whole-GROUP frames present: buffer one group at a time
-        // (slice-bounded, WindowExec's own buffering granularity).
-        // Edge groups take the driver's whole-chain merge (candidates
-        // + totals); interior groups are whole by contiguity, so their
-        // own slice IS the group. Prefix functions in the same node
-        // ride along: per-row reach snapshots against the final group
-        // head (the n-th counting candidate is position-stable).
-        val keyProj =
-          if (anyRange) UnsafeProjection.create(keyExprs, childOutput) else null
-        val sameRun =
-          if (anyRange) KeyRunEquality.create(keyExprs.map(_.dataType)) else null
-        val groups = new Runs(iter, groupProj)
-        new Iterator[InternalRow] {
-          private val rowIdxs = new scala.collection.mutable.ArrayBuffer[Long]
-          private val rowNns = new scala.collection.mutable.ArrayBuffer[Array[Long]]
-          private var endIdxs: Array[Int] = Array.emptyIntArray
-          // per-group values of the whole-frame functions (one per func)
-          private val fullVals = new Array[Any](nF)
-
-          private def fillGroup(): Unit = {
-            groups.fill(); rowIdxs.clear(); rowNns.clear()
-            val buf = groups.rows
-            val isFirst = groups.isFirst
-            val isLast = groups.isLast
-            // prefix counters/heads: seeded for the task's first group
-            relIdx = if (isFirst) seedRowP else 0L
-            nnRel = if (isFirst) seedNnP.clone() else new Array[Long](nF)
-            heads.indices.foreach { i =>
-              heads(i).clear()
-              if (isFirst) heads(i) ++= seedCandP(i)
-            }
-            var j = 0
-            while (j < buf.length) {
-              consume(buf(j))
-              rowIdxs += relIdx
-              rowNns += nnRel.clone()
-              j += 1
-            }
-            // RANGE prefix functions: map each row to its tie-run END
-            // (runs never span tasks or groups)
-            if (anyRange) {
-              if (endIdxs.length < buf.length)
-                endIdxs = new Array[Int](buf.length)
-              var k = buf.length - 1
-              var runEnd = k
-              var nextKey: UnsafeRow = null
-              while (k >= 0) {
-                val key = keyProj(buf(k)).copy()
-                if (nextKey == null || !sameRun(key, nextKey)) runEnd = k
-                endIdxs(k) = runEnd
-                nextKey = key
-                k -= 1
-              }
-            }
-            // whole-frame values: merged chain for edge groups, the
-            // local slice (complete by contiguity) for interior ones
-            val gRows =
-              if (isFirst) fullRowsFirstP
-              else if (isLast) fullRowsLastP
-              else buf.length.toLong
-            var i = 0
-            while (i < nF) {
-              val f = funcsLocal(i)
-              if (f.isFull) {
-                val gNn =
-                  if (isFirst) fullNnFirstP(i)
-                  else if (isLast) fullNnLastP(i)
-                  else nnRel(i)
-                val cand =
-                  if (isFirst) fullCandFirstP(i)
-                  else if (isLast) fullCandLastP(i)
-                  else heads(i).toArray
-                val reach = if (f.ignoreNulls) gNn else gRows
-                fullVals(i) =
-                  if (reach >= f.n) {
-                    val c = if (f.fromEnd) cand(cand.length - f.n)
-                            else cand(f.n - 1)
-                    c.get(0, attrTypes(i))
-                  } else null
-              }
-              i += 1
-            }
-          }
-
-          override def hasNext: Boolean = groups.hasNext
-
-          override def next(): InternalRow = {
-            if (groups.exhausted) fillGroup()
-            val j = groups.pos
-            val row = groups.next()
-            val endJ = if (anyRange) endIdxs(j) else j
-            val vals = new GenericInternalRow(nF)
-            var i = 0
-            while (i < nF) {
-              val f = funcsLocal(i)
-              if (f.isFull) vals.update(i, fullVals(i))
-              else {
-                val reach =
-                  if (f.isRange) {
-                    if (f.ignoreNulls) rowNns(endJ)(i) else rowIdxs(endJ)
-                  } else {
-                    if (f.ignoreNulls) rowNns(j)(i) else rowIdxs(j)
-                  }
-                vals.update(i,
-                  if (reach >= f.n) heads(i)(f.n - 1).get(0, attrTypes(i))
-                  else null)
-              }
-              i += 1
-            }
-            outProj(joinOut(row, vals))
-          }
-        }
-      } else if (!anyRange) {
+      if (!anyRange && !byGroup) {
         iter.map { row =>
-          groupCheck(row)
-          consume(row)
-          outProj(joinOut(row, mkVals(relIdx, nnRel, relIdx, nnRel)))
+          if (groups.advance(row)) counter.reset()
+          counter.add(row)
+          record(0)
+          emit(row, reach, 0, 0)
         }
       } else {
-        // buffer one tie run at a time; runs are keyed on (group ⧺
-        // order key), so a run never spans a group and the group check
-        // runs on the head
-        val runKeys = partExprs ++ keyExprs
-        val runs = new Runs(iter, UnsafeProjection.create(runKeys, childOutput),
-          KeyRunEquality.create(runKeys.map(_.dataType)))
+        val units = new Runs(iter, UnsafeProjection.create(unitKeys, childOutput),
+          if (byGroup) null else KeyRunEquality.create(unitKeys.map(_.dataType)))
+        val rangeInGroup = byGroup && anyRange
+        val keyProj = if (rangeInGroup) UnsafeProjection.create(keyExprs, childOutput) else null
+        val sameRun = if (rangeInGroup) KeyRunEquality.create(keyExprs.map(_.dataType)) else null
+        var ends = new Array[Int](0)
         new Iterator[InternalRow] {
-          private val rowIdxs = new scala.collection.mutable.ArrayBuffer[Long]
-          private val rowNns = new scala.collection.mutable.ArrayBuffer[Array[Long]]
-
-          private def fillRun(): Unit = {
-            runs.fill(); rowIdxs.clear(); rowNns.clear()
-            groupCheck(runs.rows.head)
+          private def fill(): Unit = {
+            units.fill()
+            val buf = units.rows
+            if (groups.advance(buf.head)) counter.reset()
             var j = 0
-            while (j < runs.rows.length) {
-              consume(runs.rows(j))
-              rowIdxs += relIdx
-              rowNns += nnRel.clone()
-              j += 1
+            while (j < buf.length) { counter.add(buf(j)); record(j); j += 1 }
+            // each row's tie-run end: the unit's end when the unit is a
+            // tie run, else found walking the group backwards
+            if (ends.length < buf.length) ends = new Array[Int](buf.length)
+            j = buf.length - 1
+            var next: UnsafeRow = null
+            while (j >= 0) {
+              if (rangeInGroup) {
+                val k = keyProj(buf(j)).copy()
+                ends(j) = if (next != null && sameRun(k, next)) ends(j + 1) else j
+                next = k
+              } else ends(j) = buf.length - 1
+              j -= 1
             }
+            // whole-group values: the chain's for edge groups, the
+            // group's own (whole in this task) for the others
+            if (byGroup) wholes =
+              if (groups.inFirst) firstWhole
+              else if (groups.inLast) lastWhole
+              else Array.tabulate(nF)(i => if (funcsLocal(i).isFull) counter.whole(i) else null)
           }
 
-          override def hasNext: Boolean = runs.hasNext
+          override def hasNext: Boolean = units.hasNext
 
           override def next(): InternalRow = {
-            if (runs.exhausted) fillRun()
-            val vals = mkVals(rowIdxs(runs.pos), rowNns(runs.pos), relIdx, nnRel)
-            outProj(joinOut(runs.next(), vals))
+            if (units.exhausted) fill()
+            val j = units.pos
+            emit(units.next(), reach, j * width, ends(j) * width)
           }
         }
       }
     }
   }
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    if (partition.nonEmpty) return doExecutePartitioned()
+  /** Global mode's values: V_i, input_i at global (non-null) position
+    * n_i — counted from the table END for fromEnd functions — read out of
+    * the owning task's capped head (tail), or null when the table is too
+    * short. Positions past a capped head are fetched by ONE more job over
+    * only the owning tasks, each scanning forward to its targets and
+    * returning one value per function, so no n inflates a task result. */
+  private def globalValues(rdd: RDD[InternalRow], edges: Array[Edge[Counted]],
+                           rowOffsets: Array[Long], nnOffsets: Array[Array[Long]])
+      : Array[UnsafeRow] = {
     val childOutput = child.output
-    val resultAttrs = output
     val funcsLocal = funcs.toArray
     val nF = funcsLocal.length
-    val keyExprs = order.map(_.child)
-    val anyRange = funcsLocal.exists(_.isRange)
-    val rdd = input()
-
-    // pass 1: per partition (one group) — total rows, and per function
-    // its non-null count plus the first ≤ min(n, cap) candidate values
-    // (single-column rows); for fromEnd functions the LAST ≤ min(n,
-    // cap) candidates instead (a bounded ring — memory identical
-    // either way). The cap bounds task-result and driver memory for
-    // adversarial n; a value beyond a capped head is fetched by the
-    // targeted second job below.
-    val stats = edgeStats(rdd, funcsLocal.map(f =>
-      math.min(f.n.toLong, GlobalNthValueStrategy.maxN.toLong).toInt))
-    val nParts = stats.length
-    val rowOffsets = stats.map(_.rowsLast).scanLeft(0L)(_ + _)
-    val nnOffsets: Array[Array[Long]] = Array.tabulate(nF) { i =>
-      stats.map(_.nnLast(i)).scanLeft(0L)(_ + _)
-    }
-    val totalRows = rowOffsets.last
-
-    // driver: V_i = input_i at global (non-null) position n_i — counted
-    // from the table END for fromEnd functions — read out of the owning
-    // partition's collected head/tail when the capped collection holds
-    // it; absent when the table is too short. Positions beyond a capped
-    // head are recorded in `needs` as (funcIdx, owning pid, 0-based
-    // counting-candidate index within that pid) and fetched by ONE
-    // second job over only the owning partitions — each task scans
-    // forward to its targets and returns exactly one value per needed
-    // function, so no n can inflate a task result past the cap.
-    val values: Array[Option[UnsafeRow]] = new Array(nF)
-    val needs = new scala.collection.mutable.ArrayBuffer[(Int, Int, Long)]
-    locally {
-      var i = 0
-      while (i < nF) {
-        val f = funcsLocal(i)
-        val offs = if (f.ignoreNulls) nnOffsets(i) else rowOffsets
-        values(i) =
-          if (offs.last < f.n) None
-          else if (f.fromEnd) {
-            // 1-based position from the START of the n-th-from-end candidate
-            val pos = offs.last - f.n + 1
-            val p = (0 until nParts).find(q => offs(q + 1) >= pos).get
-            val tail = stats(p).candLast(i)
-            // distance from p's last candidate; < n by construction
-            val fromEndIdx = offs(p + 1) - pos
-            if (fromEndIdx < tail.length)
-              Some(tail(tail.length - 1 - fromEndIdx.toInt))
-            else {
-              // beyond the capped ring: forward candidate index in p
-              needs += ((i, p, offs(p + 1) - offs(p) - 1 - fromEndIdx))
-              None
-            }
-          } else {
-            val p = (0 until nParts).find(q => offs(q + 1) >= f.n).get
-            val local = f.n - offs(p) - 1
-            val head = stats(p).candLast(i)
-            if (local < head.length) Some(head(local.toInt))
-            else { needs += ((i, p, local)); None }
-          }
-        i += 1
+    val nParts = edges.length
+    val values = new Array[UnsafeRow](nF)
+    // (function, owning task, 0-based counting-candidate index in it)
+    val needs = new ArrayBuffer[(Int, Int, Long)]
+    var i = 0
+    while (i < nF) {
+      val f = funcsLocal(i)
+      val offs = if (f.ignoreNulls) nnOffsets(i) else rowOffsets
+      if (offs.last >= f.n) {
+        if (f.fromEnd) {
+          // 1-based position from the START of the n-th-from-end candidate
+          val pos = offs.last - f.n + 1
+          val p = (0 until nParts).find(q => offs(q + 1) >= pos).get
+          val tail = edges(p).lastS.cand(i)
+          // distance from p's last candidate; < n by construction
+          val fromEndIdx = offs(p + 1) - pos
+          if (fromEndIdx < tail.length) values(i) = tail(tail.length - 1 - fromEndIdx.toInt)
+          else needs += ((i, p, offs(p + 1) - offs(p) - 1 - fromEndIdx))
+        } else {
+          val p = (0 until nParts).find(q => offs(q + 1) >= f.n).get
+          val local = f.n - offs(p) - 1
+          val head = edges(p).lastS.cand(i)
+          if (local < head.length) values(i) = head(local.toInt)
+          else needs += ((i, p, local))
+        }
       }
+      i += 1
     }
     if (needs.nonEmpty) {
       val byPart: Map[Int, Array[(Int, Long)]] =
-        needs.groupBy(_._2).map { case (p, ns) =>
-          p -> ns.map(t => (t._1, t._3)).toArray
-        }
-      val pids = byPart.keys.toSeq.sorted
+        needs.groupBy(_._2).map { case (p, ns) => p -> ns.map(t => (t._1, t._3)).toArray }
       val fetched = rdd.sparkContext.runJob(rdd,
         (ctx: org.apache.spark.TaskContext, iter: Iterator[InternalRow]) => {
           val mine = byPart(ctx.partitionId())
@@ -616,10 +403,7 @@ case class GlobalNthValueExec(partition: Seq[Expression],
             while (j < mine.length) {
               if (res(j) == null) {
                 val v = projs(j)(row)
-                val counts =
-                  if (funcsLocal(mine(j)._1).ignoreNulls) !v.isNullAt(0)
-                  else true
-                if (counts) {
+                if (!(funcsLocal(mine(j)._1).ignoreNulls && v.isNullAt(0))) {
                   if (seen(j) == mine(j)._2) { res(j) = v.copy(); found += 1 }
                   seen(j) += 1
                 }
@@ -628,100 +412,17 @@ case class GlobalNthValueExec(partition: Seq[Expression],
             }
           }
           (ctx.partitionId(), res)
-        }, pids)
+        }, byPart.keys.toSeq.sorted)
       fetched.foreach { case (p, res) =>
         val mine = byPart(p)
-        var j = 0
-        while (j < mine.length) {
+        mine.indices.foreach { j =>
           // pass 1 counted enough candidates in p — the target exists
           require(res(j) != null,
             s"nth_value fetch missed candidate ${mine(j)._2} in partition $p")
-          values(mine(j)._1) = Some(res(j))
-          j += 1
+          values(mine(j)._1) = res(j)
         }
       }
     }
-
-    // pass 2: attach V where the frame reaches n. A function's frame
-    // reaches position `reach` = global row index (ROWS) / tie-run END
-    // index (RANGE, peers share) / table end (full frame); for IGNORE
-    // NULLS the same three, counted over non-null inputs.
-    PerPartition.stitch(rdd, (0 until nParts).map(p =>
-      (rowOffsets(p), Array.tabulate(nF)(i => nnOffsets(i)(p))))) { (slice, iter) =>
-      val (rowOffset, nnOffset) = slice
-      val attrTypes = funcsLocal.map(_.attr.dataType)
-      val projs = funcsLocal.map(f =>
-        UnsafeProjection.create(Seq(f.input), childOutput))
-      val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
-      val joinOut = new JoinedRow
-      var gidx = rowOffset
-      val nnSeen = nnOffset.clone()
-
-      // per-row output values given this row's reach and the run-end
-      // reach (equal except inside a RANGE tie run)
-      def mkVals(rowIdx: Long, rowNn: Array[Long],
-                 endIdx: Long, endNn: Array[Long]): GenericInternalRow = {
-        val vals = new GenericInternalRow(nF)
-        var i = 0
-        while (i < nF) {
-          val f = funcsLocal(i)
-          val reach =
-            if (f.isFull) { if (f.ignoreNulls) nnOffsets(i).last else totalRows }
-            else if (f.isRange) { if (f.ignoreNulls) endNn(i) else endIdx }
-            else { if (f.ignoreNulls) rowNn(i) else rowIdx }
-          vals.update(i,
-            if (reach >= f.n) values(i).map(_.get(0, attrTypes(i))).orNull
-            else null)
-          i += 1
-        }
-        vals
-      }
-
-      if (!anyRange) {
-        iter.map { row =>
-          gidx += 1
-          var i = 0
-          while (i < nF) {
-            if (!projs(i)(row).isNullAt(0)) nnSeen(i) += 1
-            i += 1
-          }
-          outProj(joinOut(row, mkVals(gidx, nnSeen, gidx, nnSeen)))
-        }
-      } else {
-        // buffer one tie run at a time (the range exchange co-locates
-        // equal keys); per-row snapshots keep mixed ROWS functions
-        // per-row exact while RANGE functions share the run end
-        val runs = new Runs(iter, UnsafeProjection.create(keyExprs, childOutput),
-          KeyRunEquality.create(keyExprs.map(_.dataType)))
-        new Iterator[InternalRow] {
-          private val rowIdxs = new scala.collection.mutable.ArrayBuffer[Long]
-          private val rowNns = new scala.collection.mutable.ArrayBuffer[Array[Long]]
-
-          private def fillRun(): Unit = {
-            runs.fill(); rowIdxs.clear(); rowNns.clear()
-            var j = 0
-            while (j < runs.rows.length) {
-              gidx += 1
-              var i = 0
-              while (i < nF) {
-                if (!projs(i)(runs.rows(j)).isNullAt(0)) nnSeen(i) += 1
-                i += 1
-              }
-              rowIdxs += gidx
-              rowNns += nnSeen.clone()
-              j += 1
-            }
-          }
-
-          override def hasNext: Boolean = runs.hasNext
-
-          override def next(): InternalRow = {
-            if (runs.exhausted) fillRun()
-            val vals = mkVals(rowIdxs(runs.pos), rowNns(runs.pos), gidx, nnSeen)
-            outProj(joinOut(runs.next(), vals))
-          }
-        }
-      }
-    }
+    values
   }
 }

@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.collection.mutable.{ArrayBuffer, ArrayDeque}
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, FrameLessOffsetWindowFunction, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
@@ -47,7 +49,7 @@ import org.apache.spark.sql.execution.SparkPlan
   * lead rows at every group boundary. Global mode is the degenerate
   * single-group case of the same code path.
   *
-  * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
+  * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalOffsetIgnoreNullsStrategy extends WindowFamily {
 
@@ -80,6 +82,10 @@ object GlobalOffsetIgnoreNullsExec {
     * `default` on the current row when fewer exist. */
   case class NnOffsetFunc(input: Expression, offset: Int, default: Expression,
                           attr: Attribute)
+
+  /** One group's first and last n_f non-null values per function. */
+  private[plans] final case class NnEnds(head: Array[Array[UnsafeRow]],
+                                         tail: Array[Array[UnsafeRow]])
 }
 
 /** Physical distributed IGNORE NULLS lag/lead: range-shuffled sorted
@@ -93,6 +99,7 @@ case class GlobalOffsetIgnoreNullsExec(
     order: Seq[SortOrder],
     funcs: Seq[GlobalOffsetIgnoreNullsExec.NnOffsetFunc],
     child: SparkPlan) extends GlobalWindowExec {
+  import GlobalOffsetIgnoreNullsExec.NnEnds
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
 
@@ -100,95 +107,48 @@ case class GlobalOffsetIgnoreNullsExec(
     val childOutput = child.output
     val resultAttrs = output
     val partExprs = partition
-    val keyGuard = partExprs.nonEmpty
     val funcsLocal = funcs.toArray
     val nFuncs = funcsLocal.length
     val needs = funcsLocal.map(f => math.abs(f.offset)) // values per direction
     val isLead = funcsLocal.map(_.offset > 0)
     val rdd = input()
 
-    // boundary job: per partition and per function, the first n_f
-    // non-null input values of the FIRST key group and the last n_f of
-    // the LAST key group (single-column UnsafeRow copies) — the only
-    // slices a neighboring task can ever stitch from (groups are
-    // contiguous under the sort) — plus the edge group keys themselves.
-    // With no partition spec the task is one group, as before.
-    val stats: Array[(UnsafeRow, UnsafeRow,
-        Array[Array[UnsafeRow]], Array[Array[UnsafeRow]])] =
-      rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-        val groupProj = UnsafeProjection.create(partExprs, childOutput)
-        val inputProjs = funcsLocal.map(f =>
-          UnsafeProjection.create(Seq(f.input), childOutput))
-        val heads = Array.fill(nFuncs)(
-          new scala.collection.mutable.ArrayBuffer[UnsafeRow])
-        val tails = Array.fill(nFuncs)(
-          new scala.collection.mutable.ArrayDeque[UnsafeRow])
-        var firstG: UnsafeRow = null
-        var curG: UnsafeRow = null
-        var inFirst = true
-        while (iter.hasNext) {
-          val row = iter.next()
-          val g = groupProj(row)
-          if (curG == null) { curG = g.copy(); firstG = curG }
-          else if (keyGuard && !g.equals(curG)) {
-            curG = g.copy(); inFirst = false
-            tails.foreach(_.clear()) // tails belong to the LAST group only
-          }
+    // pass 1: per edge group and per function, its first and its last
+    // n_f non-null input values (single-column copies) — all a
+    // neighbouring task can ever stitch from
+    val edges = BoundaryScan.summarize(rdd, partExprs, childOutput) { () =>
+      new GroupFold[NnEnds] {
+        private val projs = funcsLocal.map(f => UnsafeProjection.create(Seq(f.input), childOutput))
+        private val heads = Array.fill(nFuncs)(new ArrayBuffer[UnsafeRow])
+        private val tails = Array.fill(nFuncs)(new ArrayDeque[UnsafeRow])
+        def reset(): Unit = { heads.foreach(_.clear()); tails.foreach(_.clear()) }
+        def add(row: InternalRow): Unit = {
           var i = 0
           while (i < nFuncs) {
-            val v = inputProjs(i)(row)
+            val v = projs(i)(row)
             if (!v.isNullAt(0)) {
               val c = v.copy()
-              if (inFirst && heads(i).length < needs(i)) heads(i) += c
+              if (heads(i).length < needs(i)) heads(i) += c
               tails(i) += c
               if (tails(i).length > needs(i)) tails(i).removeHead()
             }
             i += 1
           }
         }
-        (firstG, curG, heads.map(_.toArray), tails.map(_.toArray))
-      })
-    val nParts = stats.length
-
-    // stitch along each edge-group chain ([[EdgeChains]]; empty tasks
-    // pass through, a multi-group task ends the chain): per partition,
-    // each function's missing predecessor values (newest-first over the
-    // chain's earlier LAST-group tails) and successor values
-    // (oldest-first over its later FIRST-group heads)
-    val preVals = Array.fill(nParts, nFuncs)(Array.empty[UnsafeRow])
-    val sucVals = Array.fill(nParts, nFuncs)(Array.empty[UnsafeRow])
-    for (chain <- EdgeChains(stats.map(_._1), stats.map(_._2));
-         i <- chain.indices; f <- 0 until nFuncs) {
-      val s = chain(i)
-      if (s.isFirst) {
-        val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-        var j = i - 1
-        while (j >= 0 && out.length < needs(f)) {
-          val t = stats(chain(j).p)._4(f)
-          var k = t.length - 1
-          while (k >= 0 && out.length < needs(f)) { out += t(k); k -= 1 }
-          j -= 1
-        }
-        preVals(s.p)(f) = out.reverse.toArray // oldest-to-newest
-      }
-      if (s.isLast) {
-        val out = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
-        var j = i + 1
-        while (j < chain.length && out.length < needs(f)) {
-          val h = stats(chain(j).p)._3(f)
-          var k = 0
-          while (k < h.length && out.length < needs(f)) { out += h(k); k += 1 }
-          j += 1
-        }
-        sucVals(s.p)(f) = out.toArray
+        def snapshot(): NnEnds = NnEnds(heads.map(_.toArray), tails.map(_.toArray))
       }
     }
+    // the chain walk: each task's first group gets the newest n_f values
+    // of the slices before it (lag), its last group the oldest n_f of the
+    // slices after it (lead)
+    val walk = BoundaryScan.walk(edges, Array.fill(nFuncs)(Array.empty[UnsafeRow]),
+      (c: Array[Array[UnsafeRow]], s: NnEnds) =>
+        Array.tabulate(nFuncs)(f => (c(f) ++ s.tail(f)).takeRight(needs(f))),
+      (s: NnEnds, c: Array[Array[UnsafeRow]]) =>
+        Array.tabulate(nFuncs)(f => (s.head(f) ++ c(f)).take(needs(f))))
 
-    // each task ships only its own edge value windows ([[PerPartition.stitch]])
-    PerPartition.stitch(rdd, (0 until nParts).map(p =>
-      (preVals(p), sucVals(p)))) { (slice, iter) =>
+    finish(rdd, edges, p => (walk.seed(p), walk.after(p))) { (groups, slice, iter) =>
       val (preValsP, sucValsP) = slice
-      val groupProj = UnsafeProjection.create(partExprs, childOutput)
       val inputProjs = funcsLocal.map(f =>
         UnsafeProjection.create(Seq(f.input), childOutput))
       val defaultProjs = funcsLocal.map(f =>
@@ -196,22 +156,21 @@ case class GlobalOffsetIgnoreNullsExec(
       val dtypes = funcsLocal.map(_.attr.dataType)
       val joined = new JoinedRow
       val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
-      var curG: UnsafeRow = null
 
       // one pending entry per not-yet-emittable row
       final class Entry(val row: InternalRow) {
         val vals = new Array[Any](nFuncs)
         var remaining = 0 // unresolved lead slots
       }
-      val pending = new scala.collection.mutable.ArrayDeque[Entry]
+      val pending = new ArrayDeque[Entry]
       // per lead function: arrival counter + FIFO of (entry, seq-at-park)
       val arrivals = new Array[Long](nFuncs)
       val waiting = Array.fill(nFuncs)(
-        new scala.collection.mutable.ArrayDeque[(Entry, Long)])
+        new ArrayDeque[(Entry, Long)])
       // per lag function: ring of the last n_f non-null values, seeded
       // with the stitched predecessor values
       val rings = Array.tabulate(nFuncs) { i =>
-        val d = new scala.collection.mutable.ArrayDeque[UnsafeRow]
+        val d = new ArrayDeque[UnsafeRow]
         if (!isLead(i)) preValsP(i).foreach(d += _)
         d
       }
@@ -229,7 +188,7 @@ case class GlobalOffsetIgnoreNullsExec(
         }
       }
 
-      val emitQueue = new scala.collection.mutable.ArrayDeque[InternalRow]
+      val emitQueue = new ArrayDeque[InternalRow]
       def drainReady(): Unit =
         while (pending.nonEmpty && pending.head.remaining == 0) {
           val e = pending.removeHead()
@@ -257,11 +216,7 @@ case class GlobalOffsetIgnoreNullsExec(
 
       def processRow(raw: InternalRow): Unit = {
         val row = raw.copy()
-        if (keyGuard) {
-          val g = groupProj(row)
-          if (curG == null) curG = g.copy()
-          else if (!g.equals(curG)) { curG = g.copy(); groupBoundary() }
-        }
+        if (groups.advance(row)) groupBoundary()
         val e = new Entry(row)
         // lag slots resolve from the rings BEFORE this row's own value
         // enters them (lag excludes the current row)

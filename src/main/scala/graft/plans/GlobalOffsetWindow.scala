@@ -40,8 +40,7 @@ import org.apache.spark.sql.execution.SparkPlan
   * (with ties, neighbor identity is arbitrary in either plan —
   * distributed sorts never promise tie order).
   *
-  * Opt-out: shares `spark.graft.globalRowNumber.enabled` with the
-  * ranking rescue — one switch restores every built-in global window.
+  * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalOffsetWindowStrategy extends WindowFamily {
 

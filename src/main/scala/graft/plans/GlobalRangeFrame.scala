@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.collection.mutable.{ArrayBuffer, ArrayDeque}
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CurrentRow, Expression, GenericInternalRow, JoinedRow, NamedExpression, RangeFrame, SortOrder, SpecifiedWindowFrame, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
@@ -92,7 +94,7 @@ import org.apache.spark.unsafe.types.CalendarInterval
   * machinery applies verbatim. Mixed widths in one node are fine — each
   * function reads its own slice of the shared deque / lookahead.
   *
-  * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
+  * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalRangeFrameStrategy extends WindowFamily {
   import GlobalRangeFrameExec.RangeAgg
@@ -103,7 +105,7 @@ object GlobalRangeFrameStrategy extends WindowFamily {
     * row drops at non-monotone month day-clamp boundaries) for parity
     * testing/migration, while day-time/int/decimal RANGE frames and
     * every other window family stay rescued. The blunt alternative,
-    * `spark.graft.globalRowNumber.enabled=false`, opts out everything. */
+    * [[GlobalWindowStrategy.ConfKey]], opts out everything. */
   val MonthRescueKey = "spark.graft.rangeFrame.monthRescue"
 
   private val MicrosPerDay = 86400000000L
@@ -246,16 +248,36 @@ object GlobalRangeFrameExec {
     else r
   }
 
-  /** Per-task edge summary for the boundary-stitch job. `firstGroup` /
-    * `lastGroup` are the task's first/last partition-key tuples;
-    * `firstKey` / `lastKey` the first/last NON-NULL order keys WITHIN
-    * those groups (the only groups that can continue across the task
-    * edge under the (part ⧺ key) range sort); `tail` / `head` the
-    * last/first group's trailing-x / leading-y value windows. */
-  private[plans] case class EdgeStats(
-      firstGroup: Option[UnsafeRow], lastGroup: Option[UnsafeRow],
-      firstKey: Option[Long], lastKey: Option[Long],
-      tail: Array[(Long, UnsafeRow)], head: Array[(Long, UnsafeRow)])
+  /** An order key as a Long in ascending key space: DateType is
+    * physically an int (days since epoch), DECIMAL keys read as their
+    * unscaled Long (precision ≤ 18 per claimsNode), and descending keys
+    * are negated (negateExact: Long.MinValue would wrap silently — fail
+    * loudly instead). Serializable, so the task closures that read keys
+    * capture it rather than the exec. */
+  private[plans] final class KeyReader(t: DataType, negate: Boolean) extends Serializable {
+    private val kind = t match {
+      case IntegerType | DateType => 0
+      case _: org.apache.spark.sql.types.DecimalType => 2
+      case _ => 1
+    }
+    private val (prec, scale) = t match {
+      case d: org.apache.spark.sql.types.DecimalType => (d.precision, d.scale)
+      case _ => (0, 0)
+    }
+    def apply(kr: UnsafeRow): Long = {
+      val k0 = if (kind == 0) kr.getInt(0).toLong
+        else if (kind == 2) kr.getDecimal(0, prec, scale).toUnscaledLong
+        else kr.getLong(0)
+      if (negate) Math.negateExact(k0) else k0
+    }
+  }
+
+  /** One group's stitch summary: its first and last non-null order
+    * keys (when it has one) and its leading y-window and trailing
+    * x-window rows — the only rows a neighbouring task's frames reach. */
+  private[plans] final case class Span(hasKey: Boolean, firstKey: Long, lastKey: Long,
+                                       head: Array[(Long, UnsafeRow)],
+                                       tail: Array[(Long, UnsafeRow)])
 }
 
 /** Physical distributed RANGE-frame aggregation: range-shuffled sorted
@@ -268,7 +290,7 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
                                 order: Seq[SortOrder],
                                 funcs: Seq[GlobalRangeFrameExec.RangeAgg],
                                 child: SparkPlan) extends GlobalWindowExec {
-  import GlobalRangeFrameExec.EdgeStats
+  import GlobalRangeFrameExec.{KeyReader, Span}
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
 
@@ -295,109 +317,66 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
     val maxY = funcsLocal.map(f => consSpan(f.ym, f.y)).max
     val anyMonths = funcsLocal.exists(f => f.xm != 0 || f.ym != 0)
     val zoneIdStr = SQLConf.get.sessionLocalTimeZone
-    // DateType is physically an int (days since epoch); DECIMAL keys
-    // read as their unscaled Long (precision ≤ 18 per claimsNode)
-    val keyKind = keyExpr.dataType match {
-      case IntegerType | DateType => 0
-      case _: org.apache.spark.sql.types.DecimalType => 2
-      case _ => 1
-    }
-    val (keyPrec, keyScale) = keyExpr.dataType match {
-      case d: org.apache.spark.sql.types.DecimalType => (d.precision, d.scale)
-      case _ => (0, 0)
-    }
-    // descending keys are NEGATED into ascending space (negateExact:
-    // Long.MinValue would wrap silently — fail loudly instead)
+    // descending keys are NEGATED into ascending space
     val negate = order.head.direction != Ascending
+    val keyOf = new KeyReader(keyExpr.dataType, negate)
     val partExprs = partition
     val rdd = input()
 
-    // boundary job: per partition, the edge summary (first/last
-    // partition-key group, their first/last non-null keys, the trailing
-    // x-window of the LAST group = rows with key ≥ maxKey − maxX, and
-    // the leading y-window of the FIRST group = rows with key ≤ minKey
-    // + maxY). Both edge windows are the structures the local pass
-    // keeps anyway — memory bounded by one frame's row span. Interior
-    // partition-key groups start AND end inside the task (the sort puts
-    // a group's rows contiguously) and never need stitching.
-    val stats: Array[EdgeStats] =
-      rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-        val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
-        val keyProj = UnsafeProjection.create(Seq(keyExpr), childOutput)
-        val partProj = UnsafeProjection.create(partExprs, childOutput)
-        var firstGroup: UnsafeRow = null
-        var curGroup: UnsafeRow = null
-        var inFirstGroup = true
-        var firstKey: Option[Long] = None
-        var lastKey: Option[Long] = None
-        val tail = new scala.collection.mutable.ArrayDeque[(Long, UnsafeRow)]
-        val head = new scala.collection.mutable.ArrayBuffer[(Long, UnsafeRow)]
-        while (iter.hasNext) {
-          val row = iter.next()
-          val pr = partProj(row)
-          if (curGroup == null) { curGroup = pr.copy(); firstGroup = curGroup }
-          else if (!pr.equals(curGroup)) {
-            // new partition-key group: the previous group ended inside
-            // this task — its trailing window can never be needed by a
-            // successor of a DIFFERENT group; reset for the new one
-            curGroup = pr.copy()
-            inFirstGroup = false
-            lastKey = None
-            tail.clear()
-          }
+    // pass 1: per edge group, its first/last non-null keys, its trailing
+    // x-window (rows with key ≥ lastKey − maxX) and, for a task's first
+    // group only (no later group's is read), its leading y-window (rows
+    // with key ≤ firstKey + maxY) — memory bounded by one frame's span
+    val edges = BoundaryScan.summarize(rdd, partExprs, childOutput) { () =>
+      new GroupFold[Span] {
+        private val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
+        private val keyProj = UnsafeProjection.create(Seq(keyExpr), childOutput)
+        private var inFirst = true
+        private var hasKey = false
+        private var firstKey = 0L
+        private var lastKey = 0L
+        private val tail = new ArrayDeque[(Long, UnsafeRow)]
+        private val head = new ArrayBuffer[(Long, UnsafeRow)]
+        def reset(): Unit = { inFirst = false; hasKey = false; tail.clear(); head.clear() }
+        def add(row: InternalRow): Unit = {
           val kr = keyProj(row)
           if (!kr.isNullAt(0)) {
-            val k0 = if (keyKind == 0) kr.getInt(0).toLong
-              else if (keyKind == 2) kr.getDecimal(0, keyPrec, keyScale).toUnscaledLong
-              else kr.getLong(0)
-            val k = if (negate) Math.negateExact(k0) else k0
-            if (inFirstGroup && firstKey.isEmpty) firstKey = Some(k)
-            lastKey = Some(k)
+            val k = keyOf(kr)
+            if (!hasKey) { hasKey = true; firstKey = k }
+            lastKey = k
             if (maxX > 0) {
               tail += ((k, toUnsafe(row).copy()))
-              while (tail.head._1 < GlobalRangeFrameExec.satSub(k, maxX))
-                tail.removeHead()
+              while (tail.head._1 < satSub(k, maxX)) tail.removeHead()
             }
-            if (maxY > 0 && inFirstGroup &&
-                k <= GlobalRangeFrameExec.satAdd(firstKey.get, maxY))
+            if (maxY > 0 && inFirst && k <= satAdd(firstKey, maxY))
               head += ((k, toUnsafe(row).copy()))
           }
         }
-        EdgeStats(Option(firstGroup), Option(curGroup),
-          firstKey, lastKey, tail.toArray, head.toArray)
-      })
-    val nParts = stats.length
-    // stitch along each edge-group chain ([[EdgeChains]] — the sort
-    // guarantees a group occupying two tasks fills everything between):
-    // partition p receives every row with key ≥ minKey(p) − maxX from
-    // the chain's tails before its FIRST group (a subset of the
-    // collected tails, since minKey(p) ≥ every same-group predecessor
-    // maxKey), and every row with key ≤ maxKey(p) + maxY from the
-    // chain's heads after its LAST group, in key order
-    val preTails = Array.fill(nParts)(Array.empty[(Long, UnsafeRow)])
-    val postHeads = Array.fill(nParts)(Array.empty[(Long, UnsafeRow)])
-    for (chain <- EdgeChains(stats.map(_.firstGroup.orNull), stats.map(_.lastGroup.orNull));
-         i <- chain.indices) {
-      val s = chain(i)
-      if (s.isFirst && maxX > 0) stats(s.p).firstKey.foreach { minKey =>
-        val cut = satSub(minKey, maxX)
-        preTails(s.p) = chain.take(i).iterator
-          .flatMap(q => stats(q.p).tail.iterator).filter(_._1 >= cut).toArray
-      }
-      if (s.isLast && maxY > 0) stats(s.p).lastKey.foreach { maxKey =>
-        val cut = satAdd(maxKey, maxY)
-        postHeads(s.p) = chain.drop(i + 1).iterator
-          .flatMap(q => stats(q.p).head.iterator).filter(_._1 <= cut).toArray
+        def snapshot(): Span = Span(hasKey, firstKey, lastKey, head.toArray, tail.toArray)
       }
     }
-    val firstGroups: Array[UnsafeRow] = stats.map(_.firstGroup.orNull)
-    val lastGroups: Array[UnsafeRow] = stats.map(_.lastGroup.orNull)
-    // ship partition p ONLY its own edge slice ([[PerPartition.stitch]]
-    // — closure capture of the full preTails/postHeads arrays would
-    // cost O(#partitions × frame span) PER TASK)
-    PerPartition.stitch(rdd, (0 until nParts).map(p =>
-      (preTails(p), postHeads(p), firstGroups(p), lastGroups(p)))) { (slice, iter) =>
-      val (preTail, post, firstGroup, lastGroup) = slice
+    // the chain walk: partition p receives every row with key ≥ its first
+    // key − maxX from the tails before its first group, and every row with
+    // key ≤ its last key + maxY from the heads after its last group, in
+    // key order (a carry keeps only the rows a later slice can reach)
+    val walk = BoundaryScan.walk(edges, Array.empty[(Long, UnsafeRow)],
+      (c: Array[(Long, UnsafeRow)], s: Span) =>
+        (c ++ s.tail).filter(r => !s.hasKey || r._1 >= satSub(s.lastKey, maxX)),
+      (s: Span, c: Array[(Long, UnsafeRow)]) =>
+        (s.head ++ c).filter(r => !s.hasKey || r._1 <= satAdd(s.firstKey, maxY)))
+    def preTail(p: Int): Array[(Long, UnsafeRow)] = {
+      val s = edges(p).firstS
+      if (maxX > 0 && s.hasKey) walk.seed(p).filter(_._1 >= satSub(s.firstKey, maxX))
+      else Array.empty
+    }
+    def postHead(p: Int): Array[(Long, UnsafeRow)] = {
+      val s = edges(p).lastS
+      if (maxY > 0 && s.hasKey) walk.after(p).filter(_._1 <= satAdd(s.lastKey, maxY))
+      else Array.empty
+    }
+
+    finish(rdd, edges, p => (preTail(p), postHead(p))) { (groups, slice, iter) =>
+      val (preTail, post) = slice
       val (buffers, inits, updates, evals) = FrameFolds(funcsLocal.map(_.agg), childOutput)
       val attrTypes = funcsLocal.map(_.attr.dataType)
       val keyProj = UnsafeProjection.create(Seq(keyExpr), childOutput)
@@ -436,19 +415,18 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
       // one tie run: equal (group, key) rows (or one run of null-key
       // rows within a group)
       final class Run(val group: UnsafeRow, val key: Long, val isNull: Boolean) {
-        val rows = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
+        val rows = new ArrayBuffer[UnsafeRow]
       }
 
       // trailing value-window, seeded with the stitched predecessor
-      // edge (rows of this task's FIRST group by construction)
-      val deque = new scala.collection.mutable.ArrayDeque[(Long, UnsafeRow)]
+      // edge (rows of this task's FIRST group by construction) and
+      // cleared at every later group
+      val deque = new ArrayDeque[(Long, UnsafeRow)]
       preTail.foreach(deque += _)
-      // the group the deque's rows belong to; cleared on group change
-      var dequeGroup: UnsafeRow = firstGroup
 
       new Iterator[InternalRow] {
         // runs read from iter but not yet emitted; head = current run
-        private val pending = new scala.collection.mutable.ArrayDeque[Run]
+        private val pending = new ArrayDeque[Run]
         private val runVals = new GenericInternalRow(funcsLocal.length)
         private var cur: Run = _
         private var curPos = 0
@@ -460,10 +438,7 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
           var kr = keyProj(r)
           val pr = partProj(r)
           val isNull = kr.isNullAt(0)
-          val key0 = if (isNull) 0L else if (keyKind == 0) kr.getInt(0).toLong
-              else if (keyKind == 2) kr.getDecimal(0, keyPrec, keyScale).toUnscaledLong
-              else kr.getLong(0)
-          val key = if (negate && !isNull) Math.negateExact(key0) else key0
+          val key = if (isNull) 0L else keyOf(kr)
           // continue the previous run if this row is its peer (same
           // partition-key group AND same order key / both null)
           pending.lastOption match {
@@ -501,10 +476,7 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
           cur = pending.head
           curPos = 0
           // partition-key boundary: the trailing window never crosses it
-          if (dequeGroup == null || !dequeGroup.equals(cur.group)) {
-            deque.clear()
-            dequeGroup = cur.group
-          }
+          if (groups.advance(cur.rows.head)) deque.clear()
           if (cur.isNull) {
             // null peer group: frame = the run itself — complete it first
             while (!readDone && pending.length < 2) readRun()
@@ -524,7 +496,7 @@ case class GlobalRangeFrameExec(partition: Seq[Expression],
             while (deque.nonEmpty && deque.head._1 < satSub(k, maxX))
               deque.removeHead()
             // stitched successors only continue this task's LAST group
-            val stitchPost = lastGroup != null && lastGroup.equals(cur.group)
+            val stitchPost = groups.inLast
             var i = 0
             while (i < funcsLocal.length) {
               val f = funcsLocal(i)

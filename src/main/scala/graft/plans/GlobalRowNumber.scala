@@ -72,13 +72,9 @@ import org.apache.spark.sql.types.IntegerType
   * canonicalizes NaN) and via the SQL ordering when a FLOAT/DOUBLE key
   * is present (`-0.0` and `0.0` are peers; see [[KeyRunEquality]]).
   *
-  * Opt-out: set `spark.graft.globalRowNumber.enabled=false` ([[ConfKey]],
-  * read by [[GlobalWindowStrategy]] for every family) to fall back to
-  * the built-in single-task WindowExec.
+  * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalRowNumberStrategy extends WindowFamily {
-
-  val ConfKey = "spark.graft.globalRowNumber.enabled"
   import GlobalRowNumberExec._
 
   /** Which ranking function a window expression computes, if supported. */
@@ -111,15 +107,6 @@ object GlobalRowNumberExec {
   case object PercentRankF extends RankFunc
   case object CumeDistF extends RankFunc
   case class NTileF(buckets: Int) extends RankFunc
-
-  /** Per-task edge summary for the group chain: first/last partition-key
-    * groups, the FIRST group's row count (for the driver's group-total
-    * chain merge) and the LAST group's (row count, tie-run count).
-    * With no partition spec every task is one group and the chain walk
-    * degenerates to the classic prefix sums. */
-  private[plans] case class RankEdge(
-      firstGroup: Option[UnsafeRow], lastGroup: Option[UnsafeRow],
-      cntFirst: Long, cntLast: Long, distLast: Long)
 }
 
 /** Physical two-pass ranking: range-shuffled, sorted input (demanded
@@ -155,70 +142,35 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
     val needLookahead = modes.contains(CumeDistF)
     val rdd = input()
 
-    // pass 1: per-partition edge summary — the LAST group's (rows,
-    // distinct sort keys) plus the first/last group keys. The child is
-    // the materialized range exchange, so this job reads shuffle files,
-    // not the upstream lineage — the zipWithIndex cost model. With no
-    // partition spec the whole task is one group (classic prefix sums).
-    val stats: Array[RankEdge] = rdd.sparkContext.runJob(rdd,
-      (iter: Iterator[InternalRow]) => {
-        val groupProj = UnsafeProjection.create(partExprs, childOutput)
-        var firstG: UnsafeRow = null
-        var curG: UnsafeRow = null
-        var cnt = 0L
-        var cntFirst = -1L // first group's slice; -1 until its end is seen
-        var dist = 0L
-        val proj =
+    // pass 1: each edge group's (rows, tie runs). The child is the
+    // materialized range exchange, so this job reads shuffle files, not
+    // the upstream lineage — the zipWithIndex cost model.
+    val edges = BoundaryScan.summarize(rdd, partExprs, childOutput) { () =>
+      new GroupFold[Array[Long]] {
+        private val proj =
           if (needKeys) UnsafeProjection.create(keyExprs, childOutput) else null
-        val sameRun =
+        private val sameRun =
           if (needKeys) KeyRunEquality.create(keyExprs.map(_.dataType)) else null
-        var prev: UnsafeRow = null
-        while (iter.hasNext) {
-          val row = iter.next()
-          val g = groupProj(row)
-          if (curG == null) { curG = g.copy(); firstG = curG }
-          else if (keyGuard && !g.equals(curG)) {
-            if (cntFirst < 0) cntFirst = cnt
-            curG = g.copy(); cnt = 0L; dist = 0L; prev = null
-          }
+        private var rows = 0L
+        private var runs = 0L
+        private var prev: UnsafeRow = null
+        def reset(): Unit = { rows = 0L; runs = 0L; prev = null }
+        def add(row: InternalRow): Unit = {
           if (needKeys) {
             val k = proj(row)
-            if (prev == null || !sameRun(k, prev)) { dist += 1; prev = k.copy() }
+            if (prev == null || !sameRun(k, prev)) { runs += 1; prev = k.copy() }
           }
-          cnt += 1
+          rows += 1
         }
-        RankEdge(Option(firstG), Option(curG),
-          if (cntFirst < 0) cnt else cntFirst, cnt, dist)
-      })
-    val nParts = stats.length
-
-    // driver chain walk: task p's seed counters are the counts of the
-    // chain slices before its first group (a group continues across
-    // tasks only through their edges); a chain's summed slices are its
-    // group's total, the N of the per-key group-total functions — the
-    // whole table in global mode, where every task is one group. Driver
-    // state is a few longs per task, independent of data size.
-    val seedRows = new Array[Long](nParts)
-    val seedRuns = new Array[Long](nParts)
-    val firstTotal = new Array[Long](nParts)
-    val lastTotal = new Array[Long](nParts)
-    EdgeChains(stats.map(_.firstGroup.orNull), stats.map(_.lastGroup.orNull)).foreach {
-      chain =>
-        var rows = 0L
-        var runs = 0L
-        chain.foreach { s =>
-          if (s.isFirst) { seedRows(s.p) = rows; seedRuns(s.p) = runs }
-          val e = stats(s.p)
-          if (s.isLast) { rows += e.cntLast; runs += e.distLast }
-          else rows += e.cntFirst
-        }
-        chain.foreach { s =>
-          if (s.isFirst) firstTotal(s.p) = rows
-          if (s.isLast) lastTotal(s.p) = rows
-        }
+        def snapshot(): Array[Long] = Array(rows, runs)
+      }
     }
-    val firstGroups: Array[UnsafeRow] = stats.map(_.firstGroup.orNull)
-    val totalRows = stats.map(_.cntLast).sum
+    // the chain walk: a task's first group counts on from the slices
+    // before it; a chain's sum is its group's total, the N of the
+    // per-key group-total functions
+    val walk = BoundaryScan.walk(edges, Array(0L, 0L),
+      (c: Array[Long], s: Array[Long]) => Array(c(0) + s(0), c(1) + s(1)))
+    val totalRows = edges.map(_.lastS(0)).sum
     val needTotals = keyGuard && modes.exists {
       case PercentRankF | CumeDistF | _: NTileF => true
       case _ => false
@@ -241,23 +193,22 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
           "of row_number/rank/dense_rank/ntile (2^31-1, same type as " +
           "WindowExec, which silently wraps). Pre-aggregate or filter " +
           "before ranking, or window by a partition key.")
-    if (needTotals && intRanked && firstTotal.exists(_ > Int.MaxValue))
+    if (needTotals && intRanked && walk.firstTotal.exists(_(0) > Int.MaxValue))
       throw new org.apache.spark.SparkException(
         "a per-key ranking group exceeds the IntegerType range of " +
           "row_number/rank/dense_rank/ntile (2^31-1). Pre-aggregate or " +
           "filter before ranking.")
 
     // pass 2: assign values partition-locally — counters seeded with the
-    // chain carry, reset at every group boundary; each task ships only
-    // its own seeds/totals ([[PerPartition.stitch]])
-    PerPartition.stitch(rdd, (0 until nParts).map(p =>
-      (seedRows(p), seedRuns(p), firstGroups(p), firstTotal(p), lastTotal(p)))) {
-      (slice, iter) =>
-      val (seedRow, seedRun, firstGroup, firstTotalP, lastTotalP) = slice
+    // chain carry, reset at every later group
+    finish(rdd, edges, p => (walk.seed(p), walk.firstTotal(p)(0), walk.lastTotal(p)(0))) {
+      (groups, slice, iter) =>
+      val (seed, firstTotalP, lastTotalP) = slice
+      val seedRow = seed(0)
+      val seedRun = seed(1)
       val joined = new JoinedRow
       val rankRow = new GenericInternalRow(modes.length)
       val proj = UnsafeProjection.create(resultAttrs, resultAttrs)
-      val groupProj = UnsafeProjection.create(partExprs, childOutput)
       val keyProj =
         if (needKeys) UnsafeProjection.create(keyExprs, childOutput) else null
       val sameRun =
@@ -266,7 +217,6 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
       // far (inclusive), and the current run's start index
       var cnt = seedRow
       var dense = seedRun
-      var curG: UnsafeRow = firstGroup
       var prevRun: UnsafeRow = null
 
       // emits one row given its index, tie-run bounds, run counter and
@@ -309,14 +259,6 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
         proj(joined(row, rankRow))
       }
 
-      // group boundary: reset every per-group counter
-      def groupCheck(row: InternalRow): Unit = if (keyGuard) {
-        val g = groupProj(row)
-        if (curG == null || !g.equals(curG)) {
-          curG = g.copy(); cnt = 0L; dense = 0L; prevRun = null
-        }
-      }
-
       if (needTotals) {
         // per-key group-total functions (percent_rank/cume_dist/ntile,
         // possibly mixed with the counter functions): buffer ONE GROUP
@@ -326,7 +268,7 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
         // chain merge (they may continue into neighbouring tasks);
         // interior groups are whole by contiguity, so their total is
         // the slice length.
-        val groups = new Runs(iter, groupProj)
+        val groupRuns = new Runs(iter, UnsafeProjection.create(partExprs, childOutput))
         new Iterator[InternalRow] {
           private var starts: Array[Int] = Array.emptyIntArray
           private var ends: Array[Int] = Array.emptyIntArray
@@ -335,13 +277,13 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
           private var groupN = 0L
 
           private def fillGroup(): Unit = {
-            groups.fill()
-            val buf = groups.rows
-            offset = if (groups.isFirst) seedRow else 0L
-            val denseBase = if (groups.isFirst) seedRun else 0L
+            groupRuns.fill()
+            val buf = groupRuns.rows
+            offset = if (groupRuns.isFirst) seedRow else 0L
+            val denseBase = if (groupRuns.isFirst) seedRun else 0L
             groupN =
-              if (groups.isFirst) firstTotalP
-              else if (groups.isLast) lastTotalP
+              if (groupRuns.isFirst) firstTotalP
+              else if (groupRuns.isLast) lastTotalP
               else buf.length.toLong
             if (needKeys) {
               // one forward walk marks run starts + dense counters, one
@@ -375,29 +317,23 @@ case class GlobalRowNumberExec(partition: Seq[Expression],
             }
           }
 
-          override def hasNext: Boolean = groups.hasNext
+          override def hasNext: Boolean = groupRuns.hasNext
 
           override def next(): InternalRow = {
-            if (groups.exhausted) fillGroup()
-            val i = groups.pos
-            val row = groups.next()
+            if (groupRuns.exhausted) fillGroup()
+            val i = groupRuns.pos
+            val row = groupRuns.next()
             if (needKeys)
               emit(row, offset + i, offset + starts(i),
                 offset + ends(i), denses(i), groupN)
             else emit(row, offset + i, offset + i, offset + i, 0L, groupN)
           }
         }
-      } else if (!needKeys && !keyGuard) {
-        iter.map { row =>
-          val out = emit(row, cnt, cnt, cnt, dense, totalRows)
-          cnt += 1
-          out
-        }
       } else if (!needLookahead) {
         // streaming: a row's value depends only on its run START
         var runStart = 0L
         iter.map { row =>
-          groupCheck(row)
+          if (groups.advance(row)) { cnt = 0L; dense = 0L; prevRun = null }
           if (needKeys) {
             val k = keyProj(row)
             if (prevRun == null || !sameRun(k, prevRun)) {

@@ -1,8 +1,10 @@
 package graft.plans
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CurrentRow, Descending, Expression, JoinedRow, MutableProjection, NamedExpression, NullsFirst, NullsLast, RangeFrame, SortOrder, SpecificInternalRow, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, CurrentRow, Descending, Expression, GenericInternalRow, JoinedRow, NamedExpression, NullsFirst, NullsLast, RangeFrame, SortOrder, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, DeclarativeAggregate, First, Last}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.execution.SparkPlan
@@ -54,8 +56,7 @@ import org.apache.spark.sql.execution.SparkPlan
   * last-ulp differences, inherent to any parallel float sum (the same
   * caveat as groupBy sums).
   *
-  * Opt-out: shares `spark.graft.globalRowNumber.enabled` — one switch
-  * restores every built-in global window.
+  * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalRunningAggStrategy {
   import GlobalRunningAggExec.RunningAgg
@@ -133,25 +134,19 @@ object GlobalRunningAggExec {
                         attr: Attribute)
 }
 
-/** Physical distributed prefix scan over declarative aggregates.
-  *
-  * With a non-empty `partition` spec this is the PER-KEY running
-  * window (`MIN(x) OVER (PARTITION BY user ORDER BY ts)` and friends)
-  * over a RANGE exchange on (partition keys ⧺ order key) — a hot key
-  * spans many tasks instead of pinning one (stock Spark's hash
-  * exchange puts every row of a key in ONE task; AQE re-splits skewed
-  * joins, never windows). A key's rows are contiguous under that
-  * sort, so per-key state is: reset the aggregation buffers at every
-  * key-group boundary, and seed each task's FIRST group from the
-  * chain of predecessor tasks holding the same group — pass 1 keeps
-  * one partial buffer over each task's LAST group only (reset on
-  * group change, so memory is one buffer regardless of group sizes),
-  * and the driver walks the partials once, carrying a merged buffer
-  * along runs of equal edge groups. The empty-partition (global) case
-  * is the same walk with every task in one group — the classic prefix
-  * merge. Works for ANY deterministic declarative aggregate: min/max
-  * included (no inverse needed — unlike subtraction-based per-key
-  * rewrites), first/last, decimals and all.
+/** Physical distributed prefix scan over declarative aggregates, on the
+  * [[BoundaryScan]]: pass 1 folds each edge group's partial buffer, the
+  * driver merges the partials along each chain into each task's
+  * first-group seed, and pass 2 runs the local running aggregation from
+  * that seed, re-initialized at every later group. Global mode is the
+  * classic prefix merge. With a `partition` spec this is the PER-KEY
+  * running window (`MIN(x) OVER (PARTITION BY user ORDER BY ts)`) over a
+  * range exchange on (partition keys ⧺ order key): a hot key spans tasks
+  * instead of pinning one (stock Spark's hash exchange puts every row of
+  * a key in ONE task; AQE re-splits skewed joins, never windows). Works
+  * for ANY deterministic declarative aggregate: min/max included (no
+  * inverse needed, unlike subtraction-based per-key rewrites),
+  * first/last, decimals and all.
   */
 case class GlobalRunningAggExec(partition: Seq[Expression],
                                 order: Seq[SortOrder],
@@ -160,156 +155,58 @@ case class GlobalRunningAggExec(partition: Seq[Expression],
 
   override def output: Seq[Attribute] = child.output ++ funcs.map(_.attr)
 
-  // concatenated buffer layout across all functions
-  private def bufferAttrs = funcs.flatMap(_.agg.aggBufferAttributes)
-
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val resultAttrs = output
     // tie runs are per (group, order key): group exprs prepended, so a
     // run can never straddle a key-group boundary
     val keyExprs = partition ++ order.map(_.child)
-    val partExprs = partition
-    val hasGroups = partExprs.nonEmpty
-    val aggsLocal = funcs.map(_.agg)
-    val isRangeLocal = funcs.map(_.isRange).toArray
-    val anyRange = isRangeLocal.contains(true)
-    val bufAttrs = bufferAttrs
-    val bufTypes = bufAttrs.map(_.dataType)
-    val inputBufAttrs = funcs.flatMap(_.agg.inputAggBufferAttributes)
-    val initExprs = aggsLocal.flatMap(_.initialValues)
-    val updateExprs = aggsLocal.flatMap(_.updateExpressions)
-    val mergeExprs = aggsLocal.flatMap(_.mergeExpressions)
-    val evalExprs = funcs.map(_.agg.evaluateExpression)
+    val aggs = funcs.map(_.agg)
+    val isRange = funcs.map(_.isRange).toArray
+    val attrTypes = funcs.map(_.attr.dataType).toArray
     val rdd = input()
 
-    def newBuffer(): SpecificInternalRow = {
-      val buf = new SpecificInternalRow(bufTypes)
-      val p = MutableProjection.create(initExprs, Nil)
-      p.target(buf)(InternalRow.empty)
-      buf
-    }
+    val edges = BoundaryScan.summarize(rdd, partition, childOutput)(
+      () => new AggBuffer(aggs, childOutput))
+    val merger = new AggBuffer(aggs, childOutput)
+    val seeds = BoundaryScan.walk(edges, merger.snapshot(), (c: UnsafeRow, s: UnsafeRow) => {
+      merger.load(c); merger.merge(s); merger.snapshot()
+    }).seed
 
-    // pass 1: per task — (first group, last group, partial buffer over
-    // the LAST group's rows only). Reads the materialized shuffle; cost
-    // = one streaming aggregation, no extra exchange; memory = one
-    // buffer (reset at each group change). With no partition spec every
-    // row is one group and the partial covers the whole task.
-    val stats: Array[(Option[UnsafeRow], Option[UnsafeRow], UnsafeRow)] =
-      rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-        val buf = newBuffer()
-        val update = MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
-        update.target(buf)
-        val reinit = MutableProjection.create(initExprs, Nil)
-        reinit.target(buf)
-        val partProj = UnsafeProjection.create(partExprs, childOutput)
-        val joinBI = new JoinedRow
-        var firstG: UnsafeRow = null
-        var curG: UnsafeRow = null
-        while (iter.hasNext) {
-          val row = iter.next()
-          if (hasGroups) {
-            val pr = partProj(row)
-            if (curG == null) { curG = pr.copy(); firstG = curG }
-            else if (!pr.equals(curG)) { curG = pr.copy(); reinit(InternalRow.empty) }
-          } else if (curG == null) { curG = partProj(row).copy(); firstG = curG }
-          update(joinBI(buf, row))
-        }
-        (Option(firstG), Option(curG),
-          UnsafeProjection.create(bufAttrs, bufAttrs)(buf).copy())
-      })
-
-    // driver chain-merge: task p's seed is the merged partials of the
-    // chain slices before its first group (the sort guarantees a group
-    // spanning tasks fills everything between, so edge-group equality
-    // is the only test needed); other tasks start from the empty
-    // buffer. A few buffer-sized merges, independent of data size — and
-    // with no partition spec this IS the classic prefix merge.
-    val nParts = stats.length
-    val toUnsafe = UnsafeProjection.create(bufAttrs, bufAttrs)
-    val initSeed = toUnsafe(newBuffer()).copy()
-    val seeds = Array.fill(nParts)(initSeed)
-    locally {
-      val carry = newBuffer()
-      val merge = MutableProjection.create(mergeExprs, bufAttrs ++ inputBufAttrs)
-      merge.target(carry)
-      val reinit = MutableProjection.create(initExprs, Nil)
-      reinit.target(carry)
-      val joinBB = new JoinedRow
-      EdgeChains(stats.map(_._1.orNull), stats.map(_._2.orNull)).foreach { chain =>
-        reinit(InternalRow.empty)
-        chain.foreach { s =>
-          if (s.isFirst) seeds(s.p) = toUnsafe(carry).copy()
-          // pass 1 keeps the LAST group's partial only: a first-only
-          // slice ends its chain, so nothing after it reads its rows
-          if (s.isLast) merge(joinBB(carry, stats(s.p)._3))
-        }
-      }
-    }
-    val firstGroups: Array[UnsafeRow] = stats.map(_._1.orNull)
-
-    // pass 2: local running aggregation, seeded with the first group's
-    // chain carry, buffers re-initialized at every group boundary; each
-    // task ships only its own seed ([[PerPartition.stitch]])
-    PerPartition.stitch(rdd,
-      (0 until nParts).map(p => (seeds(p), firstGroups(p)))) { (slice, iter) =>
-      val (seed, firstGroup) = slice
-      val buf = new SpecificInternalRow(bufTypes)
-      var i = 0
-      while (i < bufTypes.length) {
-        buf.update(i, seed.get(i, bufTypes(i)))
-        i += 1
-      }
-      val update = MutableProjection.create(updateExprs, bufAttrs ++ childOutput)
-      update.target(buf)
-      val reinit = MutableProjection.create(initExprs, Nil)
-      reinit.target(buf)
-      val partProj = UnsafeProjection.create(partExprs, childOutput)
-      val evalProj = UnsafeProjection.create(evalExprs, bufAttrs)
+    finish(rdd, edges, seeds(_)) { (groups, seed, iter) =>
+      val agg = new AggBuffer(aggs, childOutput)
+      agg.load(seed)
       val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
-      val joinBI = new JoinedRow
       val joinOut = new JoinedRow
-      var curG: UnsafeRow = firstGroup
 
-      if (!anyRange) {
+      if (!isRange.contains(true)) {
         // ROWS frames only: stream — update, then emit after each row
         iter.map { row =>
-          if (hasGroups) {
-            val pr = partProj(row)
-            if (curG == null || !pr.equals(curG)) {
-              curG = pr.copy(); reinit(InternalRow.empty)
-            }
-          }
-          update(joinBI(buf, row))
-          outProj(joinOut(row, evalProj(buf)))
+          if (groups.advance(row)) agg.reset()
+          agg.add(row)
+          outProj(joinOut(row, agg.eval()))
         }
       } else {
         // RANGE (peer) semantics need the run-end value for every row of
-        // a tie run: buffer one run at a time (rows copied — the scan
-        // iterator reuses its row), update through the whole run, then
-        // emit. Mixed ROWS funcs keep their own per-row snapshots. Runs
-        // are keyed on (group ⧺ order key), so a group change always
-        // starts a new run — the buffer reset happens between runs.
+        // a tie run: buffer one run at a time, update through the whole
+        // run, then emit. Mixed ROWS funcs keep their own per-row
+        // snapshots. Runs are keyed on (group ⧺ order key), so a group
+        // change always starts a new run.
         val runs = new Runs(iter, UnsafeProjection.create(keyExprs, childOutput),
           KeyRunEquality.create(keyExprs.map(_.dataType)))
-        val attrTypes = funcs.map(_.attr.dataType).toArray
         new Iterator[InternalRow] {
-          private val rowSnaps = new scala.collection.mutable.ArrayBuffer[UnsafeRow]
+          private val rowSnaps = new ArrayBuffer[UnsafeRow]
+          private val vals = new GenericInternalRow(attrTypes.length)
           private var runEnd: UnsafeRow = _
 
           private def fillRun(): Unit = {
             runs.fill(); rowSnaps.clear()
             val run = runs.rows
-            if (hasGroups) {
-              val pr = partProj(run.head)
-              if (curG == null || !pr.equals(curG)) {
-                curG = pr.copy(); reinit(InternalRow.empty)
-              }
-            }
+            if (groups.advance(run.head)) agg.reset()
             var j = 0
             while (j < run.length) {
-              update(joinBI(buf, run(j)))
-              rowSnaps += evalProj(buf).copy() // per-row value for ROWS funcs
+              agg.add(run(j))
+              rowSnaps += agg.eval().copy() // per-row value for ROWS funcs
               j += 1
             }
             runEnd = rowSnaps.last
@@ -321,11 +218,9 @@ case class GlobalRunningAggExec(partition: Seq[Expression],
             if (runs.exhausted) fillRun()
             val snap = rowSnaps(runs.pos)
             val row = runs.next()
-            val vals = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(funcs.length)
             var k = 0
             while (k < attrTypes.length) {
-              val src = if (isRangeLocal(k)) runEnd else snap
-              vals.update(k, src.get(k, attrTypes(k)))
+              vals.update(k, (if (isRange(k)) runEnd else snap).get(k, attrTypes(k)))
               k += 1
             }
             outProj(joinOut(row, vals))

@@ -50,7 +50,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * spans tasks instead of pinning one; frames containing the current
   * row can still never be empty per key.
   *
-  * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
+  * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalSlidingAggStrategy extends WindowFamily {
   import GlobalSlidingAggExec.SlidingAgg

@@ -25,7 +25,7 @@ import org.apache.spark.sql.execution.window.WindowExec
   * only a problem under key skew, which is a data property no plan-time
   * check can see — and warning on every partitioned window would train
   * operators to ignore the log line that matters. Suppressed entirely
-  * when `spark.graft.globalRowNumber.enabled=false` (the rescues were
+  * when [[GlobalWindowStrategy.ConfKey]] is false (the rescues were
   * opted out; single-task plans are then the user's explicit choice).
   *
   * `fallbacks` is the session-independent counter a test (or a metrics

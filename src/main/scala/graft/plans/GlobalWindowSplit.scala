@@ -40,7 +40,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * hash AND a range exchange with the hot-key wall still standing in
   * the unclaimed group — worse than either extreme.
   *
-  * Opt-out: shares `spark.graft.globalRowNumber.enabled`.
+  * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalWindowSplit extends Rule[LogicalPlan] {
 

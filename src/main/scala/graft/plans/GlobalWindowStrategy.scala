@@ -34,11 +34,14 @@ private[plans] trait WindowFamily {
   * node as the first family that claims all of its expressions;
   * [[GlobalWindowSplit]] cuts mixed nodes along the same table.
   *
-  * Opt-out: `spark.graft.globalRowNumber.enabled=false` restores every
-  * built-in window plan, turns the split off and silences
-  * [[GlobalWindowFallback]].
+  * Opt-out: [[ConfKey]]`=false` restores every built-in window plan,
+  * turns the split off and silences [[GlobalWindowFallback]].
   */
 object GlobalWindowStrategy extends SparkStrategy {
+
+  /** The one switch for every window rescue (default true). The name
+    * keeps the ranking family's, the first rescue. */
+  val ConfKey = "spark.graft.globalRowNumber.enabled"
 
   /** The families in claiming order. Claims overlap — `nth_value(x, 1)`
     * over a prefix frame is both a running first_value and an nth_value
@@ -56,9 +59,8 @@ object GlobalWindowStrategy extends SparkStrategy {
     GlobalRangeFrameStrategy,
     GlobalNthValueStrategy)
 
-  /** `spark.graft.globalRowNumber.enabled` (default true). */
   private[plans] def enabled: Boolean =
-    SQLConf.get.getConfString(GlobalRowNumberStrategy.ConfKey, "true").toBoolean
+    SQLConf.get.getConfString(ConfKey, "true").toBoolean
 
   /** The node guard every family shares, before its claims: rescues
     * enabled and deterministic partition keys. */

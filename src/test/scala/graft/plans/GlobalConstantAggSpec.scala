@@ -7,25 +7,16 @@ import org.apache.spark.sql.functions._
 /** GlobalConstantAggStrategy: naive `SUM(x) OVER ()` (the share-of-total
   * query) must plan as the shuffle-free partial+merge+attach exec and
   * produce values identical to the built-in single-task WindowExec. */
-class GlobalConstantAggSpec extends SparkSuite {
+class GlobalConstantAggSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   private def df = (0 until 10000)
     .map(i => (i.toLong, ((i * 2654435761L) % 1000).toLong))
     .toDF("id", "v").repartition(7)
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("whole-table sum/count/min/max/avg match WindowExec, zero exchanges") {
     val w = Window.partitionBy()
-    val out = df
+    def out = df
       .withColumn("ts", sum("v").over(w))
       .withColumn("tc", count(lit(1)).over(w))
       .withColumn("tmin", min("v").over(w))
@@ -42,13 +33,9 @@ class GlobalConstantAggSpec extends SparkSuite {
       s"the whole-table rescue must not funnel into one task:\n$p")
     assert("Exchange".r.findAllIn(p).length == 1,
       s"the whole-table rescue must not add a shuffle:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("id", "ts", "tc", "tmin", "tmax", "tavg", "share")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getDecimal(5).toString, r.getDouble(6))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    assertMatchesBuiltIn("whole-table constants", 4, Seq("GlobalConstantAgg")) {
+      out.select("id", "ts", "tc", "tmin", "tmax", "tavg", "share")
+    }
   }
 
   test("SQL OVER () — explicit unbounded frame and empty table edge") {
@@ -67,11 +54,16 @@ class GlobalConstantAggSpec extends SparkSuite {
     val empty = df.filter(col("v") < 0)
       .withColumn("t", sum("v").over(Window.partitionBy()))
     assert(empty.count() == 0)
+    // a child with no partitions at all: no task summarizes anything
+    val none = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      df.schema).withColumn("t", sum("v").over(Window.partitionBy()))
+    assert(none.queryExecution.executedPlan.toString.contains("GlobalConstantAgg"))
+    assert(none.collect().isEmpty)
   }
 
   test("ORDER BY with an explicit whole-table frame is still a constant — rescued") {
     df.createOrReplaceTempView("const_agg_ord_v")
-    val out = spark.sql(
+    def out = spark.sql(
       """SELECT id, v,
            SUM(v) OVER (ORDER BY id
              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS total,
@@ -81,12 +73,7 @@ class GlobalConstantAggSpec extends SparkSuite {
     val p = out.queryExecution.executedPlan.toString
     assert(p.contains("GlobalConstantAgg"), s"expected GlobalConstantAggExec:\n$p")
     assert(!p.contains("Exchange SinglePartition"), p)
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    assertMatchesBuiltIn("ordered whole-table frames", 4, Seq("GlobalConstantAgg"))(out)
     // order-SENSITIVE functions must NOT take the orderless constant
     // path: first_value is optimizer-rewritten to the rescued
     // nth_value(x, 1); last_value rides GlobalNthValue's from-end mode
@@ -129,7 +116,7 @@ class GlobalConstantAggSpec extends SparkSuite {
       (k, ((i * 2654435761L) % 1000), i.toLong)
     }.toDF("k", "v", "id").repartition(7)
     // bare OVER (PARTITION BY k): spread = the aggregates' input column v
-    val out = keyed
+    def out = keyed
       .withColumn("t", sum("v").over(Window.partitionBy("k")))
       .withColumn("c", count(lit(1)).over(Window.partitionBy("k")))
       .withColumn("m", max("v").over(Window.partitionBy("k")))
@@ -139,30 +126,21 @@ class GlobalConstantAggSpec extends SparkSuite {
       s"a hash exchange on k would pin the hot key to one task:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"no built-in WindowExec may appear:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (0 until r.length).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected, "per-key group constants must match the built-in")
+    assertMatchesBuiltIn("per-key group constants", 4, Seq("GlobalConstantAgg"))(out)
     // ORDER BY + explicit whole-group frame: spread = the order key
     keyed.createOrReplaceTempView("const_keyed")
-    val ordered = spark.sql(
-      """SELECT k, id, CAST(SUM(v) OVER (PARTITION BY k ORDER BY id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS BIGINT) AS t
-         FROM const_keyed""")
-    assert(ordered.queryExecution.executedPlan.toString.contains("GlobalConstantAgg"))
-    val og = snap(ordered)
-    val oe = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(ordered) }
-    assert(og == oe)
+    assertMatchesBuiltIn("per-key ordered whole-group frames", 4,
+        Seq("GlobalConstantAgg")) {
+      spark.sql(
+        """SELECT k, id, CAST(SUM(v) OVER (PARTITION BY k ORDER BY id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS BIGINT) AS t
+           FROM const_keyed""")
+    }
     // COUNT(*) alone: no agg input, but any other child column spreads
-    val countOnly = keyed.withColumn("c", count(lit(1)).over(Window.partitionBy("k")))
-    assert(countOnly.queryExecution.executedPlan.toString.contains("GlobalConstantAgg"),
-      "count(*) spreads on any orderable child column")
-    val cGot = snap(countOnly)
-    val cExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(countOnly) }
-    assert(cGot == cExp)
+    // (count(*) spreads on any orderable child column)
+    assertMatchesBuiltIn("per-key count(*)", 4, Seq("GlobalConstantAgg")) {
+      keyed.withColumn("c", count(lit(1)).over(Window.partitionBy("k")))
+    }
     // a table with NOTHING but the partition column has no spread
     // dimension at all: left to the built-in
     val only = keyed.select("k")
@@ -193,15 +171,7 @@ class GlobalConstantAggSpec extends SparkSuite {
       s"no built-in WindowExec may appear:\n$p")
     assert(!p.contains("hashpartitioning(k"),
       s"a hash exchange on k would pin the hot key to one task:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (0 until r.length).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    assert(got == expected, "sketch windows must match the built-in bit-for-bit")
+    assertMatchesBuiltIn("sketch windows", 4, Seq("GlobalConstantAgg"))(spark.sql(q))
     // approx_percentile claims too: the merged QuantileSummaries is a
     // valid ε-summary of the union (the same merge stock's partial+
     // final groupBy performs), so the assertion is the sketch's OWN
@@ -245,12 +215,9 @@ class GlobalConstantAggSpec extends SparkSuite {
     assert(p.contains("GlobalConstantAgg"), s"sorted collect must rescue:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"no built-in WindowExec expected:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("id", "pk", "gl").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
-    val got = snap(q)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(q) }
-    assert(got == expected, "sorted collect_list must match the built-in exactly")
+    assertMatchesBuiltIn("sorted collect_list", 4, Seq("GlobalConstantAgg")) {
+      q.select("id", "pk", "gl")
+    }
   }
 
   test("unordered collect_list stays declined (its value IS the order)") {
@@ -271,7 +238,7 @@ class GlobalConstantAggSpec extends SparkSuite {
 
   test("opt-out restores the built-in plan") {
     val out = df.withColumn("t", sum("v").over(Window.partitionBy()))
-    withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    withConf(GlobalWindowStrategy.ConfKey, "false") {
       val p = out.queryExecution.executedPlan.toString
       assert(!p.contains("GlobalConstantAgg"))
       assert(p.contains("Window"), s"built-in WindowExec expected:\n$p")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * the constant-lookup + eligibility exec and match the single-task
   * built-in — ROWS and RANGE prefixes, whole-table frames, IGNORE
   * NULLS, ties, short tables. */
-class GlobalNthValueSpec extends SparkSuite {
+class GlobalNthValueSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   // tie runs on k (~103 deep); v null every 5th row; vk is a function
@@ -18,20 +18,6 @@ class GlobalNthValueSpec extends SparkSuite {
     val v: java.lang.Long = if (i % 5 == 0) null else ((i * 2654435761L) % 1000)
     ((i % 97).toLong, v, (i % 97).toLong * 31, i.toLong)
   }.toDF("k", "v", "vk", "id").repartition(7)
-
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private def snap(d: org.apache.spark.sql.DataFrame) = d.collect()
-    .map(r => (0 until r.length).map(j =>
-      Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-    .sorted.toSeq
 
   test("prefix frames: ROWS per-row, RANGE through the tie-run end, IGNORE NULLS") {
     tied.createOrReplaceTempView("nth_t")
@@ -47,11 +33,7 @@ class GlobalNthValueSpec extends SparkSuite {
     assert(p.contains("GlobalNthValue"), s"expected GlobalNthValueExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"single-task WindowExec must not survive for nth_value:\n$p")
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    assert(got == expected)
+    assertMatchesBuiltIn("prefix nth_value", 4, Seq("GlobalNthValue"))(spark.sql(q))
   }
 
   test("whole-table frame: one constant everywhere, null when too short") {
@@ -64,11 +46,7 @@ class GlobalNthValueSpec extends SparkSuite {
       FROM nth_t2"""
     val out = spark.sql(q)
     assert(out.queryExecution.executedPlan.toString.contains("GlobalNthValue"))
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    assert(got == expected)
+    assertMatchesBuiltIn("whole-table nth_value", 4, Seq("GlobalNthValue"))(spark.sql(q))
     // beyond the table: null everywhere
     assert(out.select("beyond").distinct().collect().map(_.isNullAt(0)).toSeq == Seq(true))
   }
@@ -80,15 +58,11 @@ class GlobalNthValueSpec extends SparkSuite {
         nth_value(k, 1) OVER (ORDER BY id) AS first_k,
         nth_value(k, 5) OVER (ORDER BY id) AS missing
       FROM nth_t3"""
-    val got = snap(spark.sql(q))
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    assert(got == expected)
+    assertMatchesBuiltIn("short table", 4, Seq("GlobalNthValue"))(spark.sql(q))
     // mixed with a running aggregate over the same spec: the split rule
     // sends each family to its own exec
     tied.createOrReplaceTempView("nth_t4")
-    val mixed = spark.sql("""SELECT id,
+    def mixed = spark.sql("""SELECT id,
         nth_value(v, 3) OVER (ORDER BY k, id
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n3,
         SUM(v) OVER (ORDER BY k, id
@@ -97,9 +71,8 @@ class GlobalNthValueSpec extends SparkSuite {
     val mp = mixed.queryExecution.executedPlan.toString
     assert(mp.contains("GlobalNthValue") && mp.contains("GlobalRunningAgg"),
       s"mixed node must split into both rescue execs:\n$mp")
-    val gotM = snap(mixed)
-    val expM = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(mixed) }
-    assert(gotM == expM)
+    assertMatchesBuiltIn("nth_value beside a running sum", 4,
+      Seq("GlobalNthValue", "GlobalRunningAgg"))(mixed)
   }
 
   test("ordered first/last_value over whole-table frames: nth from either end") {
@@ -123,11 +96,7 @@ class GlobalNthValueSpec extends SparkSuite {
       s"ordered first/last over full frames must ride the nth exec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"single-task WindowExec must not survive:\n$p")
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    assert(got == expected)
+    assertMatchesBuiltIn("ordered first/last_value", 4, Seq("GlobalNthValue"))(spark.sql(q))
     // all-null column: IGNORE NULLS has no candidate anywhere → NULL out
     val allNull = (0 until 100).map(i => (i.toLong, null: java.lang.Long))
       .toDF("id", "x").repartition(4)
@@ -166,11 +135,7 @@ class GlobalNthValueSpec extends SparkSuite {
     // r4's input is a function of the ORDER key, so which run global
     // position 4 lands in — and hence the value — is deterministic
     // even though intra-run order is not
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    assert(got == expected, "per-key prefix nth_value must match the built-in")
+    assertMatchesBuiltIn("per-key prefix nth_value", 4, Seq("GlobalNthValue"))(spark.sql(q))
     // whole-GROUP frames per key: driver-merged chain candidates for
     // edge groups, local slices for interior ones — first/last/nth
     val fullQ = """SELECT k, id, v,
@@ -189,11 +154,9 @@ class GlobalNthValueSpec extends SparkSuite {
       s"per-key whole-group first/last/nth must rescue:\n$fp")
     assert(!fp.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"no built-in WindowExec may appear:\n$fp")
-    val fGot = snap(full)
-    val fExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(fullQ))
+    assertMatchesBuiltIn("per-key whole-group frames", 4, Seq("GlobalNthValue")) {
+      spark.sql(fullQ)
     }
-    assert(fGot == fExp, "per-key whole-group frames must match the built-in")
   }
 
   test("n beyond the head cap: global fetches the one value; per-key falls back") {
@@ -213,18 +176,13 @@ class GlobalNthValueSpec extends SparkSuite {
         nth_value(v, 13) IGNORE NULLS OVER (ORDER BY k, id
           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS full13
       FROM nth_cap"""
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
     // cap 0: pass 1 collects NO candidates — every present value must
-    // come from the targeted second job, for all four families
+    // come from the targeted second job, for all four families; the
+    // global path has no n cap, so it must still claim
     withConf(GlobalNthValueStrategy.MaxNKey, "0") {
-      val out = spark.sql(q)
-      val p = out.queryExecution.executedPlan.toString
-      assert(p.contains("GlobalNthValue"),
-        s"the global path has no n cap — must still claim:\n$p")
-      assert(snap(out) == expected,
-        "fetched values must match the built-in")
+      assertMatchesBuiltIn("values fetched past the cap", 4, Seq("GlobalNthValue")) {
+        spark.sql(q)
+      }
       // per-key: the cap IS a claiming bound (per-group heads are
       // executor-resident) — past it the built-in must survive
       val pk = spark.sql("""SELECT id, nth_value(v, 3) OVER (PARTITION BY k

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** GlobalOffsetIgnoreNullsStrategy: naive global lag/lead IGNORE NULLS
   * must plan as the value-stitch exec and match the built-in single-task
   * WindowExec exactly, including long null runs spanning partitions. */
-class GlobalOffsetIgnoreNullsSpec extends SparkSuite {
+class GlobalOffsetIgnoreNullsSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   // ~70% nulls with long runs: i in a run of 37 keeps only multiples of 3
@@ -17,15 +17,6 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite {
       (i.toLong, v)
     }
     .toDF("id", "v").repartition(7)
-
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   test("lag/lead IGNORE NULLS with mixed offsets match WindowExec") {
     df.createOrReplaceTempView("ign_t")
@@ -41,18 +32,9 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite {
       s"expected GlobalOffsetIgnoreNullsExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (0 until r.length).map(i =>
-        if (r.isNullAt(i)) null else r.get(i)).toList)
-      .sortBy(_.head.asInstanceOf[Long])
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
+    assertMatchesBuiltIn("IGNORE NULLS offsets", 4, Seq("GlobalOffsetIgnoreNulls")) {
+      spark.sql(q)
     }
-    val diffs = got.zip(expected).filter(p => p._1 != p._2).take(5)
-    assert(diffs.isEmpty,
-      s"IGNORE NULLS offsets must match the built-in; first diffs (got vs exp):\n" +
-        diffs.map(p => s"  ${p._1}  vs  ${p._2}").mkString("\n"))
   }
 
   test("null runs longer than a partition stitch values across partitions") {
@@ -104,18 +86,8 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite {
       s"no built-in WindowExec may appear:\n$p")
     assert(!p.contains("hashpartitioning(k"),
       s"a hash exchange on k would pin the hot key to one task:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (0 until r.length).map(i =>
-        if (r.isNullAt(i)) null else r.get(i)).toList)
-      .sortBy(l => (l(0).asInstanceOf[Long], l(1).asInstanceOf[Long]))
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    val diffs = got.zip(expected).filter(p => p._1 != p._2).take(5)
-    assert(diffs.isEmpty,
-      s"per-key IGNORE NULLS offsets must match the built-in; first diffs:\n" +
-        diffs.map(p => s"  ${p._1}  vs  ${p._2}").mkString("\n"))
+    assertMatchesBuiltIn("per-key IGNORE NULLS offsets", 4,
+      Seq("GlobalOffsetIgnoreNulls"))(spark.sql(q))
   }
 
   test("respect-nulls expressions are untouched; mixed nodes split per family") {
@@ -127,18 +99,14 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite {
     // mixed IGNORE/RESPECT in one OVER spec: GlobalWindowSplit separates
     // the two families so BOTH rescue execs plan, and values still match
     // the built-in
-    val mixed = spark.sql(
+    def mixed = spark.sql(
       """SELECT id, lag(v, 1) OVER (ORDER BY id) AS a,
            lag(v, 1) IGNORE NULLS OVER (ORDER BY id) AS b
          FROM ign_t2""")
     val mp = mixed.queryExecution.executedPlan.toString
     assert(mp.contains("GlobalOffsetWindow") && mp.contains("GlobalOffsetIgnoreNulls"),
       s"mixed node must split into both rescue execs:\n$mp")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2))))
-      .sortBy(_._1).toSeq
-    val got = snap(mixed)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(mixed) }
-    assert(got == expected)
+    assertMatchesBuiltIn("mixed IGNORE/RESPECT NULLS", 4,
+      Seq("GlobalOffsetWindow", "GlobalOffsetIgnoreNulls"))(mixed)
   }
 }

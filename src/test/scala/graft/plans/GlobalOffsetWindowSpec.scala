@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** GlobalOffsetWindowStrategy: naive `lag()/lead() OVER (ORDER BY ...)`
   * must plan as the range-shuffle + boundary-stitch exec and produce
   * values identical to the built-in single-task WindowExec. */
-class GlobalOffsetWindowSpec extends SparkSuite {
+class GlobalOffsetWindowSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   // unique total order, scattered across 7 input partitions so every
@@ -15,15 +15,9 @@ class GlobalOffsetWindowSpec extends SparkSuite {
   private def df = (0 until 10000).map(i => ((i * 2654435761L) % 100000, i.toLong))
     .toDF("k", "id").repartition(7)
 
-  private def collected(d: org.apache.spark.sql.DataFrame) =
-    d.collect().map(r => (r.getLong(0), r.getLong(1),
-      if (r.isNullAt(2)) Long.MinValue else r.getLong(2),
-      if (r.isNullAt(3)) Long.MinValue else r.getLong(3),
-      r.getLong(4))).sorted.toSeq
-
   test("lag/lead plan the offset exec and match WindowExec across boundaries") {
     val w = Window.orderBy("k", "id")
-    val out = df
+    def out = df
       .withColumn("lg", lag("id", 1).over(w))
       .withColumn("ld", lead("id", 3).over(w))
       .withColumn("lgd", lag("id", 5, -1L).over(w))
@@ -33,11 +27,7 @@ class GlobalOffsetWindowSpec extends SparkSuite {
     // ends in ...OffsetWindow, so match on the word boundary)
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    val got = collected(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      collected(out)
-    }
-    assert(got == expected)
+    assertMatchesBuiltIn("lag/lead across task edges", 4, Seq("GlobalOffsetWindow"))(out)
     // spot-check semantics: defaults at the table edges
     val byK = out.orderBy("k", "id")
       .select("id", "lg", "ld", "lgd").collect()
@@ -72,7 +62,7 @@ class GlobalOffsetWindowSpec extends SparkSuite {
     assert(!ign.queryExecution.executedPlan.toString.contains("GlobalOffsetWindow "))
     // per-key lag/lead now rides the same boundary-stitch exec over a
     // (key, order) range exchange, cross-key neighbors defaulted
-    val part = df.withColumn("lg",
+    def part = df.withColumn("lg",
         lag("id", 1, -7L).over(Window.partitionBy(col("k") % 10).orderBy("id")))
       .withColumn("ld",
         lead("id", 2).over(Window.partitionBy(col("k") % 10).orderBy("id")))
@@ -80,13 +70,7 @@ class GlobalOffsetWindowSpec extends SparkSuite {
     assert(pp.contains("GlobalOffsetWindow"), s"per-key lag must rescue:\n$pp")
     assert(pp.contains("rangepartitioning") && !pp.contains("hashpartitioning"),
       s"the exchange must be a range exchange, not a hash on the key:\n$pp")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (0 until r.length).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val got = snap(part)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(part) }
-    assert(got == expected, "per-key lag/lead must match the built-in")
+    assertMatchesBuiltIn("per-key lag/lead", 4, Seq("GlobalOffsetWindow"))(part)
   }
 
   test("empty input and expression-valued lag inputs work") {
@@ -94,22 +78,8 @@ class GlobalOffsetWindowSpec extends SparkSuite {
     val empty = df.filter(col("id") < 0)
       .withColumn("lg", lag("id", 1).over(w))
     assert(empty.count() == 0)
-    val expr = df.withColumn("lg", lag(col("id") * 2 + col("k"), 2).over(w))
-    val got = expr.collect().map(r =>
-      (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) Long.MinValue else r.getLong(2))).sorted
-    val exp = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      expr.collect().map(r =>
-        (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) Long.MinValue else r.getLong(2))).sorted
-    }
-    assert(got.toSeq == exp.toSeq)
-  }
-
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    assertMatchesBuiltIn("expression-valued lag", 4, Seq("GlobalOffsetWindow")) {
+      df.withColumn("lg", lag(col("id") * 2 + col("k"), 2).over(w))
     }
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * CURRENT ROW` must plan as the value-window stitch exec and match the
   * built-in single-task WindowExec exactly — including tie-peer
   * inclusion and null-key peer groups. */
-class GlobalRangeFrameSpec extends SparkSuite {
+class GlobalRangeFrameSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   // clustered keys with deliberate ties and gaps; v exercises sums
@@ -16,18 +16,9 @@ class GlobalRangeFrameSpec extends SparkSuite {
     .map(i => (((i * 2654435761L) % 3000) * 7, ((i * 48271) % 1000).toLong, i.toLong))
     .toDF("k", "v", "id").repartition(7)
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("trailing value windows of mixed widths match WindowExec") {
     val w = Window.orderBy("k")
-    val out = df
+    def out = df
       .withColumn("rs", sum("v").over(w.rangeBetween(-100, Window.currentRow)))
       .withColumn("rc", count(lit(1)).over(w.rangeBetween(-1000, Window.currentRow)))
       .withColumn("rmax", max("v").over(w.rangeBetween(-50, Window.currentRow)))
@@ -35,13 +26,9 @@ class GlobalRangeFrameSpec extends SparkSuite {
     assert(p.contains("GlobalRangeFrame"), s"expected GlobalRangeFrameExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "rs", "rc", "rmax")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected, "range frames must match the built-in exactly")
+    assertMatchesBuiltIn("trailing range frames", 4, Seq("GlobalRangeFrame")) {
+      out.select("k", "id", "rs", "rc", "rmax")
+    }
   }
 
   test("windows wider than a partition stitch through multiple predecessors") {
@@ -61,15 +48,12 @@ class GlobalRangeFrameSpec extends SparkSuite {
     val d = (0 until 1000).map { i =>
       (if (i % 17 == 0) None else Some((i % 300).toLong), i.toLong)
     }.toDF("k", "id").repartition(5)
-    val out = d.withColumn("rc",
+    def out = d.withColumn("rc",
       count(lit(1)).over(Window.orderBy("k").rangeBetween(-10, Window.currentRow)))
     assert(out.queryExecution.executedPlan.toString.contains("GlobalRangeFrame"))
-    def snap(x: org.apache.spark.sql.DataFrame) = x.select("k", "id", "rc")
-      .collect().map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
-        r.getLong(1), r.getLong(2))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    assertMatchesBuiltIn("null order keys", 4, Seq("GlobalRangeFrame")) {
+      out.select("k", "id", "rc")
+    }
   }
 
   test("SQL INTERVAL frame over a timestamp key rewrites and matches") {
@@ -85,18 +69,12 @@ class GlobalRangeFrameSpec extends SparkSuite {
     val out = spark.sql(q)
     val p = out.queryExecution.executedPlan.toString
     assert(p.contains("GlobalRangeFrame"), s"INTERVAL frame must rewrite:\n$p")
-    def snap(x: org.apache.spark.sql.DataFrame) = x
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    assert(got == expected)
+    assertMatchesBuiltIn("INTERVAL frame", 4, Seq("GlobalRangeFrame"))(spark.sql(q))
   }
 
   test("centered and lookahead value windows of mixed widths match WindowExec") {
     val w = Window.orderBy("k")
-    val out = df
+    def out = df
       .withColumn("cs", sum("v").over(w.rangeBetween(-100, 100)))
       .withColumn("cc", count(lit(1)).over(w.rangeBetween(-300, 700)))
       .withColumn("la", max("v").over(w.rangeBetween(Window.currentRow, 200)))
@@ -105,13 +83,9 @@ class GlobalRangeFrameSpec extends SparkSuite {
     assert(p.contains("GlobalRangeFrame"), s"expected GlobalRangeFrameExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "cs", "cc", "la", "tr")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected, "centered range frames must match the built-in exactly")
+    assertMatchesBuiltIn("centered range frames", 4, Seq("GlobalRangeFrame")) {
+      out.select("k", "id", "cs", "cc", "la", "tr")
+    }
   }
 
   test("lookahead windows wider than a partition stitch through successors") {
@@ -131,15 +105,12 @@ class GlobalRangeFrameSpec extends SparkSuite {
     val d = (0 until 1000).map { i =>
       (if (i % 17 == 0) None else Some((i % 300).toLong), i.toLong)
     }.toDF("k", "id").repartition(5)
-    val out = d.withColumn("rc",
+    def out = d.withColumn("rc",
       count(lit(1)).over(Window.orderBy("k").rangeBetween(-10, 10)))
     assert(out.queryExecution.executedPlan.toString.contains("GlobalRangeFrame"))
-    def snap(x: org.apache.spark.sql.DataFrame) = x.select("k", "id", "rc")
-      .collect().map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
-        r.getLong(1), r.getLong(2))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    assertMatchesBuiltIn("null order keys", 4, Seq("GlobalRangeFrame")) {
+      out.select("k", "id", "rc")
+    }
   }
 
   test("PARTITION BY + RANGE frames plan the range exchange and match WindowExec") {
@@ -156,7 +127,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
       (g, k, ((i * 16807) % 900).toLong, i.toLong)
     }.toDF("g", "k", "v", "id").repartition(9)
     val w = Window.partitionBy("g").orderBy("k")
-    val out = d
+    def out = d
       .withColumn("rs", sum("v").over(w.rangeBetween(-100, Window.currentRow)))
       .withColumn("cc", count(lit(1)).over(w.rangeBetween(-60, 60)))
       .withColumn("la", max("v").over(w.rangeBetween(Window.currentRow, 200)))
@@ -167,14 +138,9 @@ class GlobalRangeFrameSpec extends SparkSuite {
     assert(p.contains("rangepartitioning") && !p.contains("hashpartitioning(g"),
       s"the exchange must be a RANGE exchange over (g, k) — a hash exchange " +
         s"on g would pin the hot key to one task:\n$p")
-    def snap(x: org.apache.spark.sql.DataFrame) = x
-      .select("g", "k", "id", "rs", "cc", "la")
-      .collect().map(r => (0 until 6).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected, "per-key range frames must match the built-in exactly")
+    assertMatchesBuiltIn("per-key range frames", 4, Seq("GlobalRangeFrame")) {
+      out.select("g", "k", "id", "rs", "cc", "la")
+    }
   }
 
   test("partitioned frames wider than a partition stitch across tasks per key") {
@@ -183,16 +149,13 @@ class GlobalRangeFrameSpec extends SparkSuite {
     val tiny = (0 until 24).map(i => (i % 2, (i / 2).toLong * 10, i.toLong))
       .toDF("g", "k", "id").repartition(8)
     val w = Window.partitionBy("g").orderBy("k")
-    val out = tiny
+    def out = tiny
       .withColumn("rs", sum("id").over(w.rangeBetween(-50, Window.currentRow)))
       .withColumn("fs", sum("id").over(w.rangeBetween(Window.currentRow, 50)))
     assert(out.queryExecution.executedPlan.toString.contains("GlobalRangeFrame"))
-    def snap(x: org.apache.spark.sql.DataFrame) = x.select("g", "k", "id", "rs", "fs")
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    assertMatchesBuiltIn("per-key frames wider than a task", 8, Seq("GlobalRangeFrame")) {
+      out.select("g", "k", "id", "rs", "fs")
+    }
   }
 
   test("SQL per-user INTERVAL frame over a timestamp key rewrites and matches") {
@@ -208,13 +171,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
     val out = spark.sql(q)
     val p = out.queryExecution.executedPlan.toString
     assert(p.contains("GlobalRangeFrame"), s"per-user INTERVAL frame must rewrite:\n$p")
-    def snap(x: org.apache.spark.sql.DataFrame) = x
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    assert(got == expected)
+    assertMatchesBuiltIn("per-user INTERVAL frame", 4, Seq("GlobalRangeFrame"))(spark.sql(q))
   }
 
   test("DESCENDING order keys rescue via key negation and match WindowExec") {
@@ -222,37 +179,29 @@ class GlobalRangeFrameSpec extends SparkSuite {
     // ORDER BY k DESC, `x PRECEDING` means keys in [K, K+x] — negated
     // key space turns it back into the ascending frame
     val w = Window.orderBy(col("k").desc)
-    val out = df
+    def out = df
       .withColumn("rs", sum("v").over(w.rangeBetween(-100, Window.currentRow)))
       .withColumn("cc", count(lit(1)).over(w.rangeBetween(-300, 700)))
     val p = out.queryExecution.executedPlan.toString
     assert(p.contains("GlobalRangeFrame"), s"DESC keys must rescue:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "rs", "cc")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected, "DESC range frames must match the built-in exactly")
+    assertMatchesBuiltIn("DESC range frames", 4, Seq("GlobalRangeFrame")) {
+      out.select("k", "id", "rs", "cc")
+    }
 
     val d2 = (0 until 2000).map { i =>
       val g: java.lang.Long = if (i % 19 == 0) null else (i % 7).toLong
       val k: java.lang.Long = if (i % 13 == 0) null else ((i * 48271L) % 400) * 3
       (g, k, i.toLong)
     }.toDF("g", "k", "id").repartition(6)
-    val out2 = d2.withColumn("rc", count(lit(1)).over(
+    def out2 = d2.withColumn("rc", count(lit(1)).over(
       Window.partitionBy("g").orderBy(col("k").desc)
         .rangeBetween(-50, Window.currentRow)))
     assert(out2.queryExecution.executedPlan.toString.contains("GlobalRangeFrame"))
-    def snap2(x: org.apache.spark.sql.DataFrame) = x.select("g", "k", "id", "rc")
-      .collect().map(r => (0 until 4).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val got2 = snap2(out2)
-    val expected2 = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap2(out2) }
-    assert(got2 == expected2, "per-key DESC range frames must match the built-in")
+    assertMatchesBuiltIn("per-key DESC range frames", 4, Seq("GlobalRangeFrame")) {
+      out2.select("g", "k", "id", "rc")
+    }
   }
 
   test("DATE order keys rescue with int-literal (days) bounds and match") {
@@ -270,13 +219,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
     val out = spark.sql(q)
     val p = out.queryExecution.executedPlan.toString
     assert(p.contains("GlobalRangeFrame"), s"date keys must rescue:\n$p")
-    def snap(x: org.apache.spark.sql.DataFrame) = x.select("days", "id", "rc")
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snap(spark.sql(q))
-    }
-    assert(got == expected, "date range frames must match the built-in exactly")
+    assertMatchesBuiltIn("date range frames", 4, Seq("GlobalRangeFrame"))(spark.sql(q))
   }
 
   test("month intervals resolve per row; peers-only rescue; DESC months fall back") {
@@ -346,16 +289,10 @@ class GlobalRangeFrameSpec extends SparkSuite {
       dBad.map(k => s"id=$k got=${dGot(k)} truth=${dTruth(k)}").mkString("; "))
     // peers-only RANGE CURRENT ROW..CURRENT ROW: the frame is the tie
     // run itself — run-local, rescued with zero stitching
-    val peers = df.withColumn("rs", sum("v").over(
+    def peers = df.withColumn("rs", sum("v").over(
       Window.orderBy("k").rangeBetween(Window.currentRow, Window.currentRow)))
     assert(peers.queryExecution.executedPlan.toString.contains("GlobalRangeFrame"))
-    def snapP(x: org.apache.spark.sql.DataFrame) = x
-      .collect().map(r => (0 until r.length).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val pGot = snapP(peers)
-    val pExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snapP(peers) }
-    assert(pGot == pExp, "peers-only frames must match the built-in")
+    assertMatchesBuiltIn("peers-only frames", 4, Seq("GlobalRangeFrame"))(peers)
   }
 
   test("month intervals over DATE keys resolve in DAY space and match the truth") {
@@ -442,25 +379,20 @@ class GlobalRangeFrameSpec extends SparkSuite {
     val q = """SELECT id, COUNT(*) OVER (ORDER BY ts
                  RANGE BETWEEN INTERVAL 1 MONTH PRECEDING AND CURRENT ROW) AS c
                FROM grf_month_parity"""
-    def counts(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    def counts(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
     // default: the rescue computes the declarative frame
     val rescued = spark.sql(q)
     assert(rescued.queryExecution.executedPlan.toString.contains("GlobalRangeFrame"))
-    val rGot = counts(rescued)
-    // scoped conf off: ONLY the month node falls back to stock WindowExec
-    val (sPlan, sGot) =
-      withConf(GlobalRangeFrameStrategy.MonthRescueKey, "false") {
-        val d = spark.sql(q)
-        (d.queryExecution.executedPlan.toString, counts(d))
-      }
-    assert(!sPlan.contains("GlobalRangeFrame"),
-      s"month frames must fall back under the parity conf:\n$sPlan")
-    // ...bit-for-bit what the full kill switch produces
-    val stock = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      counts(spark.sql(q))
+    val rGot = counts(rescued.collect())
+    // scoped conf off: ONLY the month node falls back to stock WindowExec,
+    // bit-for-bit what the full kill switch produces
+    val sGot = withConf(GlobalRangeFrameStrategy.MonthRescueKey, "false") {
+      val sPlan = spark.sql(q).queryExecution.executedPlan.toString
+      assert(!sPlan.contains("GlobalRangeFrame"),
+        s"month frames must fall back under the parity conf:\n$sPlan")
+      counts(assertMatchesBuiltIn("the month parity conf", 4, whole = false)(spark.sql(q)))
     }
-    assert(sGot == stock, "parity conf must restore stock results exactly")
     // the documented deliberate divergence is REAL on this data: stock
     // drops the 05:30 row from the Mar 29 and Mar 31 frames
     assert(rGot(4) == sGot(4) + 1 && rGot(5) == sGot(5) + 1,
@@ -502,15 +434,7 @@ class GlobalRangeFrameSpec extends SparkSuite {
       s"decimal-key RANGE frames must rescue:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"no built-in WindowExec may appear:\n$p")
-    def snapD(x: org.apache.spark.sql.DataFrame) = x
-      .collect().map(r => (0 until r.length).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val got = snapD(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snapD(spark.sql(q))
-    }
-    assert(got == expected, "decimal-key range frames must match the built-in")
+    assertMatchesBuiltIn("decimal-key range frames", 4, Seq("GlobalRangeFrame"))(spark.sql(q))
     // a bound finer than the key's scale: the ANALYZER casts it to the
     // key's type (0.005 → 0.01 at scale 2) before either plan sees it,
     // so the rescue reads the same rounded width the built-in uses
@@ -518,10 +442,8 @@ class GlobalRangeFrameSpec extends SparkSuite {
         RANGE BETWEEN 0.005 PRECEDING AND CURRENT ROW) AS s FROM grf_dec"""
     val fine = spark.sql(fineQ)
     assert(fine.queryExecution.executedPlan.toString.contains("GlobalRangeFrame"))
-    val fGot = snapD(fine)
-    val fExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      snapD(spark.sql(fineQ))
+    assertMatchesBuiltIn("coerced sub-scale bounds", 4, Seq("GlobalRangeFrame")) {
+      spark.sql(fineQ)
     }
-    assert(fGot == fExp, "coerced sub-scale bounds must match the built-in")
   }
 }

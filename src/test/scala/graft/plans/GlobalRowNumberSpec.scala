@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * must plan as the two-pass GlobalRowNumberExec (range shuffle +
   * zipWithIndex) and produce numbers identical to the built-in
   * single-task WindowExec on any unique total order. */
-class GlobalRowNumberSpec extends SparkSuite {
+class GlobalRowNumberSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   private def df = (0 until 10000).map(i => ((i * 2654435761L) % 100000, i.toLong))
@@ -22,17 +22,13 @@ class GlobalRowNumberSpec extends SparkSuite {
   }
 
   test("numbers match the built-in WindowExec on a unique order") {
-    val naive = df.withColumn("rn", row_number().over(Window.orderBy("k", "id")))
-    val got = naive.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      val p = naive.queryExecution.executedPlan.toString
-      naive.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
+    assertMatchesBuiltIn("row_number over (k, id)", 4, Seq("GlobalRowNumber")) {
+      df.withColumn("rn", row_number().over(Window.orderBy("k", "id")))
     }
-    assert(got.toSeq == expected.toSeq)
   }
 
   test("falls back to WindowExec when disabled, and for partitioned/other windows") {
-    withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    withConf(GlobalWindowStrategy.ConfKey, "false") {
       val p = df.withColumn("rn", row_number().over(Window.orderBy("k", "id")))
         .queryExecution.executedPlan.toString
       assert(p.contains("Window "), s"disabled flag must restore WindowExec:\n$p")
@@ -40,23 +36,17 @@ class GlobalRowNumberSpec extends SparkSuite {
     // per-key ranking (ALL six functions) rides the group-chain exec
     // over a (key, order) range exchange; group totals for
     // percent_rank/cume_dist/ntile come from the driver segment merge
-    val partitioned = df.withColumn("rn",
+    def partitioned = df.withColumn("rn",
         row_number().over(Window.partitionBy(col("k") % 10).orderBy("id")))
       .withColumn("rk", // ties on id % 7: peers must share their rank
         rank().over(Window.partitionBy(col("k") % 10).orderBy(col("id") % 7)))
     val pp = partitioned.queryExecution.executedPlan.toString
     assert(pp.contains("GlobalRowNumber"), s"per-key ranks must rescue:\n$pp")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (0 until r.length).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    // row_number ties: restrict the compare to the deterministic rank
-    val cmp = partitioned.select("k", "id", "rk")
-    val got = snap(cmp)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(cmp) }
-    assert(got == expected, "per-key ranks must match the built-in")
+    assertMatchesBuiltIn("per-key rank", 4, Seq("GlobalRowNumber")) {
+      partitioned.select("k", "id", "rk")
+    }
     // group-total functions per key: buffered-group path + segment merge
-    val ntilePart = df.withColumn("nt",
+    def ntilePart = df.withColumn("nt",
         ntile(3).over(Window.partitionBy(col("k") % 10).orderBy("id")))
       .withColumn("pr", // ties: deterministic, safe to compare
         percent_rank().over(Window.partitionBy(col("k") % 10).orderBy(col("id") % 7)))
@@ -65,10 +55,9 @@ class GlobalRowNumberSpec extends SparkSuite {
     val np = ntilePart.queryExecution.executedPlan.toString
     assert(np.contains("GlobalRowNumber"),
       s"per-key ntile/percent_rank/cume_dist must rescue:\n$np")
-    val ntCmp = ntilePart.select("k", "id", "nt", "pr", "cd")
-    val ntGot = snap(ntCmp)
-    val ntExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(ntCmp) }
-    assert(ntGot == ntExp, "per-key group-total ranks must match the built-in")
+    assertMatchesBuiltIn("per-key group-total ranks", 4, Seq("GlobalRowNumber")) {
+      ntilePart.select("k", "id", "nt", "pr", "cd")
+    }
     // a mixed rank+lag node no longer opts the node out: GlobalWindowSplit
     // separates the families so each plans its own rescue exec
     val mixed = df.withColumn("r", rank().over(Window.orderBy("k")))
@@ -83,7 +72,7 @@ class GlobalRowNumberSpec extends SparkSuite {
     // the regression this guards (range partitioner must co-locate them)
     val tied = (0 until 10000).map(i => ((i % 97).toLong, i.toLong))
       .toDF("k", "id").repartition(7)
-    val out = tied
+    def out = tied
       .withColumn("rk", rank().over(Window.orderBy("k")))
       .withColumn("drk", dense_rank().over(Window.orderBy("k")))
       .withColumn("rn", row_number().over(Window.orderBy("k")))
@@ -91,13 +80,9 @@ class GlobalRowNumberSpec extends SparkSuite {
     assert(p.contains("GlobalRowNumber"), s"expected GlobalRowNumberExec:\n$p")
     assert(!p.contains("Window "), s"built-in WindowExec should be replaced:\n$p")
     // rank/dense_rank are deterministic under ties; compare those exactly
-    val got = out.select("k", "id", "rk", "drk")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).sorted
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    assertMatchesBuiltIn("rank/dense_rank over tied k", 4, Seq("GlobalRowNumber")) {
       out.select("k", "id", "rk", "drk")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).sorted
     }
-    assert(got.toSeq == expected.toSeq)
     // row_number stays a permutation within each tie class
     assert(out.select("rn").as[Int].collect().sorted.toSeq == (1 to 10000))
   }
@@ -105,22 +90,14 @@ class GlobalRowNumberSpec extends SparkSuite {
   test("percent_rank, cume_dist and ntile match WindowExec, incl. ties") {
     val tied = (0 until 10000).map(i => ((i % 97).toLong, i.toLong))
       .toDF("k", "id").repartition(7)
-    val out = tied
+    def out = tied
       .withColumn("pr", percent_rank().over(Window.orderBy("k")))
       .withColumn("cd", cume_dist().over(Window.orderBy("k")))
       .withColumn("nt", ntile(7).over(Window.orderBy("k", "id")))
     val p = out.queryExecution.executedPlan.toString
     assert(p.contains("GlobalRowNumber"), s"expected GlobalRowNumberExec:\n$p")
     assert(!p.contains("Window "), s"built-in WindowExec should be replaced:\n$p")
-    val got = out.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getInt(4)))
-      .sorted
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") {
-      out.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getInt(4)))
-        .sorted
-    }
-    assert(got.toSeq == expected.toSeq)
+    assertMatchesBuiltIn("percent_rank/cume_dist/ntile", 4, Seq("GlobalRowNumber"))(out)
     // uneven ntile: 100 rows into 7 buckets — first 2 buckets get 15
     val small = (0 until 100).map(i => (i.toLong, i.toLong)).toDF("k", "id")
       .withColumn("nt", ntile(7).over(Window.orderBy("k")))
@@ -146,14 +123,5 @@ class GlobalRowNumberSpec extends SparkSuite {
     assert(out.queryExecution.executedPlan.toString.contains("GlobalRowNumber"))
     val got = out.orderBy("rn").select("rn").as[Int].collect()
     assert(got.toSeq == (1 to 100))
-  }
-
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 }

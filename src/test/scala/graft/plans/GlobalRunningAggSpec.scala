@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** GlobalRunningAggStrategy: naive `SUM(x) OVER (ORDER BY ...)` and
   * friends must plan as the distributed prefix scan and produce values
   * identical to the built-in single-task WindowExec on exact types. */
-class GlobalRunningAggSpec extends SparkSuite {
+class GlobalRunningAggSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   // k = i % 97 gives ~103-deep tie runs; v exercises sums and extrema
@@ -15,19 +15,10 @@ class GlobalRunningAggSpec extends SparkSuite {
     .map(i => ((i % 97).toLong, ((i * 2654435761L) % 1000).toLong, i.toLong))
     .toDF("k", "v", "id").repartition(7)
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("running sum/count/min/max/avg match WindowExec incl. RANGE tie peers") {
     // bare ORDER BY = RANGE frame: tied rows share the run-end value
     val w = Window.orderBy("k")
-    val out = tied
+    def out = tied
       .withColumn("rs", sum("v").over(w))
       .withColumn("rc", count(lit(1)).over(w))
       .withColumn("rmin", min("v").over(w))
@@ -37,57 +28,45 @@ class GlobalRunningAggSpec extends SparkSuite {
     assert(p.contains("GlobalRunningAgg"), s"expected GlobalRunningAggExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "rs", "rc", "rmin", "rmax", "ravg")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getDecimal(6).toString)).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    assertMatchesBuiltIn("running aggregates over tied k", 4, Seq("GlobalRunningAgg")) {
+      out.select("k", "id", "rs", "rc", "rmin", "rmax", "ravg")
+    }
   }
 
   test("explicit ROWS frame: strict per-row prefix, mixed with RANGE in one query") {
     val rows = Window.orderBy("k", "id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val range = Window.orderBy("k", "id")
-    val out = tied
+    def out = tied
       .withColumn("rows_sum", sum("v").over(rows))
       .withColumn("range_sum", sum("v").over(range))
     assert(out.queryExecution.executedPlan.toString.contains("GlobalRunningAgg"))
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "rows_sum", "range_sum")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    val got = assertMatchesBuiltIn("ROWS and RANGE prefixes", 4, Seq("GlobalRunningAgg")) {
+      out.select("k", "id", "rows_sum", "range_sum")
+    }
     // (k, id) is a unique order, so here ROWS == RANGE row-for-row
-    assert(got.forall(t => t._3 == t._4))
+    assert(got.forall(r => r.getLong(2) == r.getLong(3)))
   }
 
   test("first_value/last_value run distributed and match WindowExec") {
     val w = Window.orderBy("k", "id")
-    val out = tied
+    def out = tied
       .withColumn("fv", first("v").over(w))
       .withColumn("lv", last("v").over(w))
     assert(out.queryExecution.executedPlan.toString.contains("GlobalRunningAgg"))
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "fv", "lv")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    val got = assertMatchesBuiltIn("first_value/last_value", 4, Seq("GlobalRunningAgg")) {
+      out.select("k", "id", "fv", "lv")
+    }
     // first_value over the default frame is the globally-first value
-    val firstV = got.minBy(t => (t._1, t._2))._3
-    assert(got.forall(_._3 == firstV))
+    val firstV = got.minBy(r => (r.getLong(0), r.getLong(1))).getLong(2)
+    assert(got.forall(_.getLong(2) == firstV))
   }
 
   test("falls back for unsupported shapes; partitioned windows rescue") {
     // partitioned running windows now RIDE the group-aware prefix scan
     // over a RANGE exchange — a hot key spans tasks instead of pinning
     // one (min/max included: resets at key boundaries need no inverse)
-    val part = tied.withColumn("rs",
+    def part = tied.withColumn("rs",
         sum("v").over(Window.partitionBy(col("k") % 10).orderBy("id")))
       .withColumn("rmin",
         min("v").over(Window.partitionBy(col("k") % 10).orderBy("id")))
@@ -95,14 +74,9 @@ class GlobalRunningAggSpec extends SparkSuite {
     assert(pp.contains("GlobalRunningAgg"), s"per-key running must rescue:\n$pp")
     assert(pp.contains("rangepartitioning") && !pp.contains("hashpartitioning"),
       s"the exchange must be a range exchange, not a hash on the key:\n$pp")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "rs", "rmin")
-      .collect().map(r => (0 until 4).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val got = snap(part)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(part) }
-    assert(got == expected, "per-key running aggs must match the built-in")
+    assertMatchesBuiltIn("per-key running aggregates", 4, Seq("GlobalRunningAgg")) {
+      part.select("k", "id", "rs", "rmin")
+    }
     // sliding frames are not a prefix scan
     val sliding = tied.withColumn("rs", sum("v").over(
       Window.orderBy("k", "id").rowsBetween(-3, Window.currentRow)))
@@ -117,7 +91,7 @@ class GlobalRunningAggSpec extends SparkSuite {
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val range = Window.orderBy("k")
       .rangeBetween(Window.currentRow, Window.unboundedFollowing)
-    val out = tied
+    def out = tied
       .withColumn("rem_sum", sum("v").over(rows))
       .withColumn("rem_n", count(lit(1)).over(rows))
       .withColumn("rem_min", min("v").over(rows))
@@ -126,16 +100,12 @@ class GlobalRunningAggSpec extends SparkSuite {
     assert(p.contains("GlobalRunningAgg"), s"expected GlobalRunningAggExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "rem_sum", "rem_n", "rem_min", "ge_n")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    val got = assertMatchesBuiltIn("suffix frames", 4, Seq("GlobalRunningAgg")) {
+      out.select("k", "id", "rem_sum", "rem_n", "rem_min", "ge_n")
+    }
     // last row's remaining set is just itself
-    val lastRow = got.maxBy(t => (t._1, t._2))
-    assert(lastRow._4 == 1L)
+    val lastRow = got.maxBy(r => (r.getLong(0), r.getLong(1)))
+    assert(lastRow.getLong(3) == 1L)
   }
 
   test("suffix first_value/last_value swap correctly, incl. ignoreNulls") {
@@ -144,43 +114,33 @@ class GlobalRunningAggSpec extends SparkSuite {
     // null out ~1/3 of v so ignoreNulls has gaps to skip
     val withNulls = tied.withColumn("vn",
       when(col("id") % 3 === 0, lit(null).cast("long")).otherwise(col("v")))
-    val out = withNulls
+    def out = withNulls
       .withColumn("fv", first("vn").over(rows))
       .withColumn("lv", last("vn").over(rows))
       .withColumn("fvi", first("vn", ignoreNulls = true).over(rows))
       .withColumn("lvi", last("vn", ignoreNulls = true).over(rows))
     assert(out.queryExecution.executedPlan.toString.contains("GlobalRunningAgg"))
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "fv", "lv", "fvi", "lvi")
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        Option(r.get(2)), Option(r.get(3)), Option(r.get(4)), Option(r.get(5))))
-      .sorted(Ordering.by((t: (Long, Long, Option[Any], Option[Any], Option[Any],
-        Option[Any])) => (t._1, t._2))).toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    val got = assertMatchesBuiltIn("suffix first/last_value", 4, Seq("GlobalRunningAgg")) {
+      out.select("k", "id", "fv", "lv", "fvi", "lvi")
+    }
     // first_value of [current, end) is the current row's own value
     val byId = withNulls.select("k", "id", "vn").collect()
       .map(r => ((r.getLong(0), r.getLong(1)), Option(r.get(2)))).toMap
-    assert(got.forall(t => t._3 == byId((t._1, t._2))))
+    assert(got.forall(r => Option(r.get(2)) == byId((r.getLong(0), r.getLong(1)))))
   }
 
   test("descending order: running and suffix frames both rescue and match") {
     val w = Window.orderBy(col("k").desc, col("id").desc)
-    val out = tied
+    def out = tied
       .withColumn("rs", sum("v").over(w))
       .withColumn("rem", sum("v").over(
         w.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
     val p = out.queryExecution.executedPlan.toString
     assert("GlobalRunningAgg".r.findAllIn(p).length >= 2,
       s"DESC running and suffix must both rescue:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "rs", "rem")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    assertMatchesBuiltIn("DESC running and suffix", 4, Seq("GlobalRunningAgg")) {
+      out.select("k", "id", "rs", "rem")
+    }
   }
 
   test("empty input and single rows") {

@@ -9,25 +9,16 @@ import org.apache.spark.sql.functions._
   * boundary-stitch + frame-fold exec and match the built-in
   * single-task WindowExec exactly — including double sums, since each
   * value is the same sequential fold WindowExec performs. */
-class GlobalSlidingAggSpec extends SparkSuite {
+class GlobalSlidingAggSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   private def df = (0 until 10000)
     .map(i => ((i * 2654435761L) % 100000, ((i * 48271) % 1000).toDouble, i.toLong))
     .toDF("k", "v", "id").repartition(7)
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("moving sum/avg/min over mixed widths match WindowExec bit-for-bit") {
     val w = Window.orderBy("k", "id")
-    val out = df
+    def out = df
       .withColumn("ms", sum("v").over(w.rowsBetween(-6, Window.currentRow)))
       .withColumn("ma", avg("v").over(w.rowsBetween(-3, Window.currentRow)))
       .withColumn("mm", min("id").over(w.rowsBetween(-9, Window.currentRow)))
@@ -35,13 +26,9 @@ class GlobalSlidingAggSpec extends SparkSuite {
     assert(p.contains("GlobalSlidingAgg"), s"expected GlobalSlidingAggExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "ms", "ma", "mm")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        r.getDouble(3), r.getLong(4))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected, "moving aggregates must match the built-in exactly")
+    assertMatchesBuiltIn("moving aggregates", 4, Seq("GlobalSlidingAgg")) {
+      out.select("k", "id", "ms", "ma", "mm")
+    }
   }
 
   test("frames wider than a partition stitch through multiple predecessors") {
@@ -69,7 +56,7 @@ class GlobalSlidingAggSpec extends SparkSuite {
 
   test("centered and lookahead frames match WindowExec bit-for-bit") {
     val w = Window.orderBy("k", "id")
-    val out = df
+    def out = df
       .withColumn("ctr", sum("v").over(w.rowsBetween(-3, 3)))
       .withColumn("ahead", max("id").over(w.rowsBetween(Window.currentRow, 5)))
       .withColumn("trail", sum("v").over(w.rowsBetween(-6, Window.currentRow)))
@@ -77,13 +64,9 @@ class GlobalSlidingAggSpec extends SparkSuite {
     assert(p.contains("GlobalSlidingAgg"), s"expected GlobalSlidingAggExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .select("k", "id", "ctr", "ahead", "trail")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        r.getLong(3), r.getDouble(4))).sorted.toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected, "centered/lookahead frames must match the built-in exactly")
+    assertMatchesBuiltIn("centered and lookahead frames", 4, Seq("GlobalSlidingAgg")) {
+      out.select("k", "id", "ctr", "ahead", "trail")
+    }
   }
 
   test("lookahead frames wider than a partition stitch through successors") {
@@ -107,19 +90,13 @@ class GlobalSlidingAggSpec extends SparkSuite {
     assert(!excl.queryExecution.executedPlan.toString.contains("GlobalSlidingAgg"))
     // per-key sliding frames now rescue: the global frame clipped at
     // the key boundary over a (key, order) range exchange
-    val part = df.withColumn("ms", sum("v").over(
+    def part = df.withColumn("ms", sum("v").over(
         Window.partitionBy(col("k") % 10).orderBy("id")
           .rowsBetween(-2, Window.currentRow)))
       .withColumn("mm", min("v").over(
         Window.partitionBy(col("k") % 10).orderBy("id").rowsBetween(-3, 1)))
     val pp = part.queryExecution.executedPlan.toString
     assert(pp.contains("GlobalSlidingAgg"), s"per-key sliding must rescue:\n$pp")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (0 until r.length).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val got = snap(part)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(part) }
-    assert(got == expected, "per-key sliding frames must match the built-in")
+    assertMatchesBuiltIn("per-key sliding frames", 4, Seq("GlobalSlidingAgg"))(part)
   }
 }

@@ -71,7 +71,7 @@ class GlobalWindowFallbackSpec extends SparkSuite {
 
   test("opt-out sessions are not warned: single-task plans are then chosen") {
     df.createOrReplaceTempView("gwf_t2")
-    withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    withConf(GlobalWindowStrategy.ConfKey, "false") {
       val before = GlobalWindowFallback.fallbacks.get()
       val out = spark.sql("SELECT id, SUM(id) OVER (ORDER BY id) AS rs FROM gwf_t2")
       out.queryExecution.executedPlan // force planning

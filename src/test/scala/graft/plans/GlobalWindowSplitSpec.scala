@@ -6,26 +6,17 @@ import org.apache.spark.sql.functions._
 /** GlobalWindowSplit: a single Window node mixing frame families over
   * one ORDER BY must split so every family plans its rescue exec —
   * values identical to the unsplit built-in. */
-class GlobalWindowSplitSpec extends SparkSuite {
+class GlobalWindowSplitSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   private def tied = (0 until 10000)
     .map(i => ((i % 97).toLong, ((i * 2654435761L) % 1000).toLong, i.toLong))
     .toDF("k", "v", "id").repartition(7)
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("running + suffix + rank + lag over ONE order spec: all four rescued") {
     tied.createOrReplaceTempView("gws_t")
     // identical (empty, ORDER BY k, id) spec → ONE analyzed Window node
-    val out = spark.sql(
+    def out = spark.sql(
       """SELECT id,
            SUM(v) OVER (ORDER BY k, id) AS run_sum,
            SUM(v) OVER (ORDER BY k, id
@@ -40,12 +31,7 @@ class GlobalWindowSplitSpec extends SparkSuite {
     assert(p.contains("GlobalOffsetWindow"), s"expected GlobalOffsetWindowExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"no single-task WindowExec may survive the split:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3),
-        Option(r.get(4)))).sortBy(_._1).toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    assertMatchesBuiltIn("running + suffix + rank + lag", 4)(out)
   }
 
   test("unclaimed family splits out alone and keeps the built-in, others rescue") {
@@ -55,7 +41,7 @@ class GlobalWindowSplitSpec extends SparkSuite {
     // built-in path while the running sum rescues. (nth_value past the
     // head cap — this test's previous unclaimed example — now fetches
     // its value with a targeted second job instead of falling back.)
-    val out = spark.sql(
+    def out = spark.sql(
       """SELECT id,
            SUM(v) OVER (ORDER BY k, id) AS run_sum,
            collect_list(v) OVER (ORDER BY k, id
@@ -65,12 +51,8 @@ class GlobalWindowSplitSpec extends SparkSuite {
     assert(p.contains("GlobalRunningAgg"), s"running sum must still rescue:\n$p")
     assert(p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"collect_list keeps WindowExec:\n$p")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        Option(r.get(2)).map(_.toString).getOrElse("null"))).sortBy(_._1).toSeq
-    val got = snap(out)
-    val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(out) }
-    assert(got == expected)
+    assertMatchesBuiltIn("running sum beside an unclaimed collect_list", 4,
+      Seq("GlobalRunningAgg"), whole = false)(out)
   }
 
   test("homogeneous nodes and partitioned windows are left untouched") {
@@ -82,31 +64,23 @@ class GlobalWindowSplitSpec extends SparkSuite {
     }.length == 1)
     // partitioned mixed node where EVERY family is partition-capable:
     // split, so each group reaches its rescue over ONE shared exchange
-    val part = tied.selectExpr("id",
+    def part = tied.selectExpr("id",
       "SUM(v) OVER (PARTITION BY k ORDER BY id) AS s",
       "rank() OVER (PARTITION BY k ORDER BY id) AS r")
     val pp = part.queryExecution.executedPlan.toString
     assert(pp.contains("GlobalRunningAgg") && pp.contains("GlobalRowNumber"),
       s"partition-capable mixed node must split into both rescues:\n$pp")
-    def snap(d: org.apache.spark.sql.DataFrame) = d
-      .collect().map(r => (0 until r.length).map(j =>
-        Option(r.get(j)).map(_.toString).getOrElse("null")).mkString("|"))
-      .sorted.toSeq
-    val gotP = snap(part)
-    val expP = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(part) }
-    assert(gotP == expP)
+    assertMatchesBuiltIn("per-key running sum + rank", 4)(part)
     // per-key whole-group last_value is now nth-rescuable: a mixed
     // running + whole-group node splits and BOTH rescue
-    val lastPart = tied.selectExpr("id",
+    def lastPart = tied.selectExpr("id",
       "SUM(v) OVER (PARTITION BY k ORDER BY id) AS s",
       """last_value(v) OVER (PARTITION BY k ORDER BY id
            ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS lv""")
     val lp = lastPart.queryExecution.executedPlan.toString
     assert(lp.contains("GlobalRunningAgg") && lp.contains("GlobalNthValue"),
       s"running + per-key whole-group last_value must both rescue:\n$lp")
-    val lGot = snap(lastPart)
-    val lExp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(lastPart) }
-    assert(lGot == lExp)
+    assertMatchesBuiltIn("per-key running sum + whole-group last_value", 4)(lastPart)
     // partitioned mixed node with a NON-capable family (nth_value past
     // the driver-head cap has no rescue): left whole — a partial split
     // would pay two exchanges and still keep the hot-key wall
@@ -131,25 +105,19 @@ class GlobalWindowSplitSpec extends SparkSuite {
       val pa = alone.queryExecution.executedPlan.toString
       assert(pa.contains("GlobalRunningAgg ") && !pa.contains("GlobalNthValue ") &&
         !pa.linesIterator.exists(isWindowExec), s"alone, OVER ($over):\n$pa")
-      // a def: the opt-out comparison below must plan afresh
       def mixed = spark.sql(s"""SELECT id, nth_value(v, 1) OVER ($over) AS f,
           rank() OVER ($over) AS r FROM gws_t4""")
       val pm = mixed.queryExecution.executedPlan.toString
       assert(pm.contains("GlobalRunningAgg ") && pm.contains("GlobalRowNumber ") &&
         !pm.contains("GlobalNthValue ") && !pm.linesIterator.exists(isWindowExec),
         s"beside rank(), OVER ($over):\n$pm")
-      def snap(d: org.apache.spark.sql.DataFrame) = d.collect().map(r =>
-        (0 until r.length).map(j => Option(r.get(j)).map(_.toString).getOrElse("null"))
-          .mkString("|")).sorted.toSeq
-      val got = snap(mixed)
-      val expected = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(mixed) }
-      assert(got == expected)
+      assertMatchesBuiltIn(s"nth_value(v, 1) beside rank(), OVER ($over)", 4)(mixed)
     }
   }
 
   test("opt-out leaves mixed nodes unsplit") {
     tied.createOrReplaceTempView("gws_t3")
-    withConf(GlobalRowNumberStrategy.ConfKey, "false") {
+    withConf(GlobalWindowStrategy.ConfKey, "false") {
       val out = spark.sql(
         """SELECT SUM(v) OVER (ORDER BY k, id) AS a,
              rank() OVER (ORDER BY k, id) AS b FROM gws_t3""")

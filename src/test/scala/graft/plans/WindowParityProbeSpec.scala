@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * correct plan, just not scale-safe) — a probe failing on a declined
   * shape means the decline predicate and the exec disagree about who
   * owns it. */
-class WindowParityProbeSpec extends SparkSuite {
+class WindowParityProbeSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
   private lazy val df = (0 until 4000).map { i =>
@@ -25,25 +25,10 @@ class WindowParityProbeSpec extends SparkSuite {
     .withColumn("ts", expr("timestamp_seconds(id * 7919)"))
     .withColumn("dec20", expr("CAST(v AS DECIMAL(20,2))"))
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private def snap(q: String) = spark.sql(q).collect()
-    .map(r => (0 until r.length).map(j => String.valueOf(r.get(j))).mkString("|"))
-    .sorted.toSeq
-
+  /** Declined shapes keep a WindowExec on the rescued side too. */
   private def checkParity(shapes: Seq[(String, String)]): Unit =
     shapes.foreach { case (name, q) =>
-      val got = snap(q)
-      val exp = withConf(GlobalRowNumberStrategy.ConfKey, "false") { snap(q) }
-      assert(got == exp, s"$name diverged from the built-in:\n  $q\n" +
-        s"  got-only=${got.diff(exp).take(3)}\n  exp-only=${exp.diff(got).take(3)}")
+      assertMatchesBuiltIn(s"$name ($q)", 4, whole = false)(spark.sql(q))
     }
 
   test("non-default null orderings match the built-in across every family") {
