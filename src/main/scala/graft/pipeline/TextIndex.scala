@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.store.{SaltedStore, ShardedLayer, ShardedLayout}
+import graft.store.{FileManifest, SaltedStore, ShardedLayer, ShardedLayout}
 
 /** [EXT] Persisted inverted text index — the reference's salted bucketed
   * store applied to term lookup, the third instance of the same layout
@@ -94,11 +94,21 @@ object TextIndex {
         _.select(PostingsCols.map(col): _*)).distinct(), spark, path, "doc_id"))
 
     /** The (docs, tokens) totals recounted from the postings at rest at
-      * `root` — tombstones folded, so the pending counters are zero. */
+      * `root` — tombstones folded, so the pending counters are zero. The
+      * shard dirs' data files are read with their footer's schema: no
+      * schema-inference job, and no root path for `DataSource` to judge
+      * hidden (a reshard stages under `.reshard_new`). */
     override def writeMeta(spark: SparkSession, root: String, nShards: Int): Unit = {
-      val r = spark.read.parquet(root)
-        .agg(count_distinct(col("doc_id")), coalesce(sum("tf"), lit(0L))).head()
-      writeManifest(spark, root, nShards, r.getLong(0), r.getLong(1))
+      val (fs, dir) = fsOf(spark, root)
+      val files = fs.listStatus(dir).toSeq
+        .filter(d => d.isDirectory && d.getPath.getName.startsWith("shard="))
+        .flatMap(d => FileManifest.dataFiles(fs, d.getPath))
+      val (docs, tokens) = files.headOption.fold((0L, 0L)) { f =>
+        val r = FileManifest.readFiles(spark, dir, files, FileManifest.fileSchema(spark, f))
+          .agg(count_distinct(col("doc_id")), coalesce(sum("tf"), lit(0L))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      writeManifest(spark, root, nShards, docs, tokens)
     }
 
     /** Folded tombstones make the totals exact again: recount them. */

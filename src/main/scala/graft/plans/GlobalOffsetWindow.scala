@@ -1,91 +1,95 @@
 package graft.plans
 
+import scala.collection.mutable.ArrayDeque
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Alias, Expression, FrameLessOffsetWindowFunction, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, UnsafeProjection, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, FrameLessOffsetWindowFunction, GenericInternalRow, JoinedRow, NamedExpression, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.execution.SparkPlan
 
-/** Scale-safe planning for naive lag()/lead().
+/** Scale-safe planning for naive lag()/lead(), in both null modes.
   *
   * `lag(x) OVER (ORDER BY ...)` / `lead(x) OVER (ORDER BY ...)` with no
   * PARTITION BY are frameless OFFSET window functions: like the global
   * ranking family ([[GlobalRowNumberStrategy]]) Spark's WindowExec
   * demands SinglePartition for them, funneling the whole table through
-  * one task. But an offset function needs only a CONSTANT number of
-  * neighbor rows, so the distributed plan is natural: range-shuffle
-  * (the same fully-parallel exchange a global sort uses), then give
-  * each partition the few boundary rows it's missing — the max-lag
-  * tail of its predecessors and the max-lead head of its successors,
-  * collected in one tiny job and shipped driver-side (bounded by
-  * offset × partitions rows, independent of data size).
+  * one task. But `lag(x, n)` needs only the n-th VALUE before the row:
+  * with RESPECT NULLS every row's `x` is a value, with IGNORE NULLS only
+  * the non-null ones — the gap-filling query of sparse time series
+  * ("previous non-null reading"), whose lookbehind is unbounded in rows
+  * but still n values. So the boundary scan ([[GlobalWindowExec]])
+  * collects, per edge key group and per function, the first and last n
+  * values ([[Ends]]), and the driver's chain walk gives each task the n
+  * values before its first group and after its last (bounded by
+  * Σ offsets × partitions single-column values, independent of data
+  * size and of null-run lengths).
+  *
+  * Locally, lag is a streaming ring of the last n values. Lead needs
+  * lookahead: rows park in a pending FIFO and each arriving value
+  * resolves exactly the row whose n-th successor it is (arrival-counter
+  * matching — O(1) per value); rows left unresolved when the stitched
+  * successor values run out take their default. The pending buffer spans
+  * only the distance from a row to its n-th successor value: n rows with
+  * RESPECT NULLS, the data-inherent minimum with IGNORE NULLS (the
+  * built-in buffers the whole partition). An offset of 0 is the current
+  * row's input.
   *
   * PARTITIONED lag/lead — `lag(x) OVER (PARTITION BY user ORDER BY
-  * ts)`, sessionization's workhorse — ride the SAME machinery over a
-  * range exchange on (partition keys ⧺ order key): a key's rows are
-  * contiguous under that sort, so the per-key n-th neighbor IS the
-  * global n-th neighbor exactly when its key matches, and a null-safe
-  * byte-equality key guard (partition keys are float-normalized
-  * upstream) turns a cross-key neighbor into the default, in plain
-  * SQL. Stock Spark's hash exchange puts every row of a hot
-  * key in ONE task; here the key spans tasks, and a chain of windows
-  * over the same (key, order) — lag for the session break, a running
-  * sum for the session id — reuses ONE range exchange end to end.
+  * ts)`, sessionization's workhorse, and the per-sensor gap fill — ride
+  * the same code over a range exchange on (partition keys ⧺ order key):
+  * a key's rows are contiguous under that sort, the walk chains only
+  * equal key groups, and pass 2 clears the lag rings and defaults the
+  * parked lead rows at every group boundary. Stock Spark's hash exchange
+  * puts every row of a hot key in ONE task; here the key spans tasks,
+  * and a chain of windows over the same (key, order) — lag for the
+  * session break, a running sum for the session id — reuses ONE range
+  * exchange end to end.
   *
   * Matches a Window node whose expressions are ALL
-  * [[FrameLessOffsetWindowFunction]]s (lag/lead, mixed offsets fine)
-  * with foldable offsets and ignoreNulls = false. Defaults are
-  * evaluated against the CURRENT row, exactly as WindowExec's offset
-  * frame does. Values match WindowExec on any tie-free total order
-  * (with ties, neighbor identity is arbitrary in either plan —
-  * distributed sorts never promise tie order).
+  * [[FrameLessOffsetWindowFunction]]s (lag/lead, mixed offsets and null
+  * modes fine) with foldable offsets. Defaults are evaluated against the
+  * CURRENT row, exactly as WindowExec's offset frame does. Values match
+  * WindowExec on any tie-free total order (with ties, neighbor identity
+  * is arbitrary in either plan — distributed sorts never promise tie
+  * order).
   *
   * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
 object GlobalOffsetWindowStrategy extends WindowFamily {
+  import GlobalOffsetWindowExec.OffsetFunc
 
-  private def funcOf(e: NamedExpression): Option[(Expression, Int, Expression)] =
-    e match {
-      case Alias(WindowExpression(f: FrameLessOffsetWindowFunction, _), _)
-          if !f.ignoreNulls && f.offset.foldable =>
-        f.offset.eval() match {
-          case o: Integer => Some((f.input, o.intValue(), f.default))
-          case _ => None
-        }
-      case _ => None
-    }
+  private def funcOf(e: NamedExpression): Option[OffsetFunc] = e match {
+    case Alias(WindowExpression(f: FrameLessOffsetWindowFunction, _), _) if f.offset.foldable =>
+      f.offset.eval() match {
+        case o: Integer =>
+          Some(OffsetFunc(f.input, o.intValue(), f.default, f.ignoreNulls, e.toAttribute))
+        case _ => None
+      }
+    case _ => None
+  }
 
   override def claims(e: NamedExpression): Boolean = funcOf(e).isDefined
 
-  override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] = {
-    val funcs = w.windowExpressions.map { e =>
-      val (input, off, dflt) = funcOf(e).get
-      GlobalOffsetWindowExec.OffsetFunc(input, off, dflt, e.toAttribute)
-    }
-    Some(GlobalOffsetWindowExec(w.partitionSpec, w.orderSpec, funcs, child))
-  }
+  override def exec(w: logical.Window, child: SparkPlan): Option[SparkPlan] =
+    Some(GlobalOffsetWindowExec(w.partitionSpec, w.orderSpec,
+      w.windowExpressions.map(funcOf(_).get), child))
 }
 
 object GlobalOffsetWindowExec {
-  /** One lag/lead column: evaluate `input` on the row `offset` positions
-    * away (negative = earlier), `default` on the current row when the
-    * target falls outside the table (or outside the current partition
-    * key's run, in partitioned mode). */
+  /** One lag/lead column: `input` on the |offset|-th row (with
+    * `ignoreNulls`, the |offset|-th row where `input` is not null) before
+    * (offset < 0) or after (offset > 0) the current row in its partition;
+    * `default` on the current row when none exists. */
   case class OffsetFunc(input: Expression, offset: Int, default: Expression,
-                        attr: Attribute)
+                        ignoreNulls: Boolean, attr: Attribute)
 }
 
-/** Physical distributed lag/lead: range-shuffled sorted input + one
-  * boundary job ([[EdgeRows]]: each partition's first maxLead and last
-  * maxLag rows, stitched into each partition's missing neighbors on the
-  * driver). The main pass then runs a sliding window entirely
-  * partition-locally over an [[EdgeRows.Cursor]]: per-partition memory
-  * is (maxLag + maxLead + 1) rows — constant, never data-sized. In
-  * partitioned mode the neighbor
-  * additionally must carry the current row's partition key (the sort
-  * makes a key's rows contiguous, so the check is one byte-equality);
-  * otherwise the function's default applies — WindowExec's
-  * out-of-partition semantics. */
+/** Physical distributed lag/lead: range-shuffled sorted input, the
+  * boundary scan's one job over each edge group's first and last n
+  * values per function, then a value ring per lag function and a
+  * pending-FIFO resolution per lead function, reset at key-group
+  * boundaries. Global mode = one group everywhere. */
 case class GlobalOffsetWindowExec(partition: Seq[Expression],
                                   order: Seq[SortOrder],
                                   funcs: Seq[GlobalOffsetWindowExec.OffsetFunc],
@@ -97,78 +101,126 @@ case class GlobalOffsetWindowExec(partition: Seq[Expression],
     val childOutput = child.output
     val resultAttrs = output
     val funcsLocal = funcs.toArray
-    val partExprs = partition
-    val keyGuard = partExprs.nonEmpty
-    val maxLag = math.max(0, -funcsLocal.map(_.offset).min)
-    val maxLead = math.max(0, funcsLocal.map(_.offset).max)
+    val nFuncs = funcsLocal.length
+    val ignore = funcsLocal.map(_.ignoreNulls)
+    val ahead = funcsLocal.map(f => math.max(f.offset, 0))
+    val behind = funcsLocal.map(f => math.max(-f.offset, 0))
     val rdd = input()
 
-    // edge rows: a partition with fewer rows than the offset is walked
-    // through. Stitched rows may carry a FOREIGN partition key — the key
-    // guard in pass 2 turns those into defaults.
-    val (counts, preTails, sucHeads) = EdgeRows(rdd, childOutput, maxLag, maxLead)
-    val rowOffsets = counts.scanLeft(0L)(_ + _)
-    val totalRows = rowOffsets.last
-    val nParts = counts.length
+    val edges = BoundaryScan.summarize(rdd, partition, childOutput)(() =>
+      new Ends.Fold(funcsLocal.map(f => Seq(f.input)), childOutput, ignore, ahead, behind))
+    val walk = Ends.walk(edges, ahead, behind)
 
-    // pass 2: sliding window per partition; each task ships only its
-    // own offsets and edge rows ([[PerPartition.stitch]])
-    PerPartition.stitch(rdd, (0 until nParts).map(p =>
-      (rowOffsets(p), counts(p), preTails(p), sucHeads(p)))) { (slice, iter) =>
-      val (rowOffset, partCount, preTail, sucHead) = slice
-      val joined = new JoinedRow
-      val valueRow = new GenericInternalRow(funcsLocal.length)
-      val proj = UnsafeProjection.create(resultAttrs, resultAttrs)
-      // one projection per func: input on the target row, default on the
-      // current row (each instance's buffer survives until ITS next call,
-      // so all values stay valid through the final projection)
-      val inputProjs = funcsLocal.map(f =>
-        UnsafeProjection.create(Seq(f.input), childOutput))
+    finish(rdd, edges, p => (walk.seed(p), walk.after(p))) { (groups, carry, iter) =>
+      val (before, after) = carry
+      val inputProjs = funcsLocal.map(f => UnsafeProjection.create(Seq(f.input), childOutput))
       val defaultProjs = funcsLocal.map(f =>
         UnsafeProjection.create(Seq(f.default), childOutput))
       val dtypes = funcsLocal.map(_.attr.dataType)
-      // TWO projection instances (separate buffers) so the current row's
-      // key and a neighbor's key can be compared without copying
-      val rowKeyProj = UnsafeProjection.create(partExprs, childOutput)
-      val neighKeyProj = UnsafeProjection.create(partExprs, childOutput)
+      val joined = new JoinedRow
+      val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
+      def default(f: Int, row: InternalRow): Any =
+        InternalRow.copyValue(defaultProjs(f)(row).get(0, dtypes(f)))
 
-      val rows = new EdgeRows.Cursor(iter, partCount, preTail, sucHead, maxLag, maxLead)
-      val lagBuf = rows.lag
-      val leadBuf = rows.lead
+      // one entry per row not yet emitted, in row order
+      final class Entry(val row: InternalRow) {
+        val vals = new Array[Any](nFuncs)
+        var remaining = 0 // unresolved lead slots
+      }
+      val pending = new ArrayDeque[Entry]
+      // per lead function: arrival counter + FIFO of (entry, count at park)
+      val arrivals = new Array[Long](nFuncs)
+      val waiting = Array.fill(nFuncs)(new ArrayDeque[(Entry, Long)])
+      // per lag function: the last n values, seeded with the carry
+      val rings = Array.tabulate(nFuncs)(f => ArrayDeque.from[UnsafeRow](before(f)))
+
+      def arrive(f: Int, v: UnsafeRow): Unit = {
+        arrivals(f) += 1
+        val w = waiting(f)
+        // rows separated only by skipped nulls park with the SAME count
+        // and share their n-th successor value: resolve the whole
+        // matching prefix, not just one entry
+        while (w.nonEmpty && w.head._2 + ahead(f) == arrivals(f)) {
+          val e = w.removeHead()._1
+          e.vals(f) = v.get(0, dtypes(f))
+          e.remaining -= 1
+        }
+      }
+
+      // rows still parked have no n-th successor value in their group
+      def defaultWaiting(f: Int): Unit = {
+        val w = waiting(f)
+        while (w.nonEmpty) {
+          val e = w.removeHead()._1
+          e.vals(f) = default(f, e.row)
+          e.remaining -= 1
+        }
+      }
+
+      def processRow(raw: InternalRow): Unit = {
+        val row = raw.copy()
+        if (groups.advance(row)) {
+          // a new group has no history, and ends the old group's leads
+          var f = 0
+          while (f < nFuncs) { defaultWaiting(f); rings(f).clear(); f += 1 }
+        }
+        val e = new Entry(row)
+        var f = 0
+        while (f < nFuncs) {
+          val v = inputProjs(f)(row)
+          val n = ahead(f) + behind(f)
+          // lag reads the ring BEFORE this row's value enters it (lag
+          // excludes the current row)
+          if (ahead(f) == 0) e.vals(f) =
+            if (n == 0) InternalRow.copyValue(v.get(0, dtypes(f)))
+            else if (rings(f).length == n) rings(f).head.get(0, dtypes(f))
+            else default(f, row)
+          // this row's value resolves earlier parked rows or joins the
+          // lag history
+          if (n > 0 && !(ignore(f) && v.isNullAt(0))) {
+            val c = v.copy()
+            if (ahead(f) > 0) arrive(f, c)
+            else {
+              rings(f) += c
+              if (rings(f).length > n) rings(f).removeHead()
+            }
+          }
+          // lead parks AFTER its own value's arrival (lead excludes the
+          // current row): the entry needs n further arrivals
+          if (ahead(f) > 0) {
+            e.remaining += 1
+            waiting(f) += ((e, arrivals(f)))
+          }
+          f += 1
+        }
+        pending += e
+      }
+
+      // the task's end: the last group's leads take the carried values
+      // after it, then their defaults
+      def finishTask(): Unit = {
+        var f = 0
+        while (f < nFuncs) {
+          var i = 0
+          while (i < after(f).length) { arrive(f, after(f)(i)); i += 1 }
+          defaultWaiting(f)
+          f += 1
+        }
+      }
 
       new Iterator[InternalRow] {
-        override def hasNext: Boolean = rows.hasNext
-        override def next(): InternalRow = {
-          val row = rows.current()
-          val rowKey = if (keyGuard) rowKeyProj(row) else null
-          val globalIdx = rowOffset + rows.emitted
-          var i = 0
-          while (i < funcsLocal.length) {
-            val off = funcsLocal(i).offset
-            val target = globalIdx + off
-            val neighbor: InternalRow =
-              if (target < 0 || target >= totalRows) null
-              else if (off < 0) {
-                // lagBuf holds the last maxLag rows before `row`,
-                // oldest first; wanted is |off| back from the end
-                lagBuf(lagBuf.length + off)
-              } else if (off > 0) leadBuf(off)
-              else row
-            // per-key window: a neighbor of a DIFFERENT key is outside
-            // the frame — default, exactly as WindowExec at a partition
-            // edge (byte equality is exact: window partition keys are
-            // float-normalized by the optimizer)
-            val inFrame = neighbor != null &&
-              (!keyGuard || neighKeyProj(neighbor).equals(rowKey))
-            val value: Any =
-              if (inFrame) inputProjs(i)(neighbor).get(0, dtypes(i))
-              else defaultProjs(i)(row).get(0, dtypes(i))
-            valueRow.update(i, value)
-            i += 1
+        private var done = false
+        override def hasNext: Boolean = {
+          while (!done && (pending.isEmpty || pending.head.remaining > 0)) {
+            if (iter.hasNext) processRow(iter.next())
+            else { finishTask(); done = true }
           }
-          val out = proj(joined(row, valueRow))
-          rows.advance()
-          out
+          pending.nonEmpty
+        }
+        override def next(): InternalRow = {
+          if (!hasNext) throw new NoSuchElementException
+          val e = pending.removeHead()
+          outProj(joined(e.row, new GenericInternalRow(e.vals)))
         }
       }
     }

@@ -1,8 +1,10 @@
 package graft.plans
 
+import scala.collection.mutable.ArrayDeque
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CurrentRow, Expression, GenericInternalRow, JoinedRow, Literal, NamedExpression, RowFrame, SortOrder, SpecifiedWindowFrame, UnsafeProjection, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CurrentRow, Expression, GenericInternalRow, JoinedRow, Literal, NamedExpression, RowFrame, SortOrder, SpecifiedWindowFrame, UnsafeProjection, UnsafeRow, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, DeclarativeAggregate, First, Last}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.execution.SparkPlan
@@ -19,13 +21,14 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Spark funnels through one task.
   *
   * A (k PRECEDING, j FOLLOWING) frame needs exactly k predecessor and j
-  * successor rows — the lag/lead problem, solved the same way:
-  * range-shuffle, then one tiny job collects each partition's first
-  * max-j and last max-k rows and the driver stitches each partition's
-  * missing neighbors (bounded by (k + j) × partitions rows). Locally
-  * every row re-aggregates its frame from a trailing ring plus a
-  * lookahead queue — O(k + j) updates per row, the same work WindowExec
-  * does for non-invertible frames, but spread over every core instead
+  * successor rows of its partition: range-shuffle, then the boundary
+  * scan ([[GlobalWindowExec]]) keeps each edge key group's first j and
+  * last k rows ([[Ends]]) and the driver's chain walk gives each task
+  * the k rows before its first group and the j after its last (bounded
+  * by (k + j) × partitions rows). Locally every row re-aggregates its
+  * frame from a trailing ring plus a lookahead queue ([[RowWindow]]) —
+  * O(k + j) updates per row, the same work WindowExec does for
+  * non-invertible frames, but spread over every core instead
   * of one. Aggregates are generic [[DeclarativeAggregate]]s (sum,
   * count, min, max, avg, first/last), each driven through its own
   * init/update/evaluate projections; mixed frame shapes in one node are
@@ -42,13 +45,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *
   * PARTITIONED sliding frames — the per-key moving average, `AVG(x)
   * OVER (PARTITION BY user ORDER BY ts ROWS k PRECEDING)` — ride the
-  * same machinery over a range exchange on (partition keys ⧺ order
-  * key): a key's rows are contiguous under that sort, so the per-key
-  * frame is the global frame CLIPPED at the key boundary, and the clip
-  * is one byte-equality per fold row (trailing rows of a foreign key
-  * are skipped, lookahead stops at the first foreign key). A hot key
-  * spans tasks instead of pinning one; frames containing the current
-  * row can still never be empty per key.
+  * same code over a range exchange on (partition keys ⧺ order key): a
+  * key's rows are contiguous under that sort, the walk chains only equal
+  * key groups, and pass 2 clears the trailing ring at each new group and
+  * stops the lookahead at the group's end. A hot key spans tasks instead
+  * of pinning one; frames containing the current row can still never be
+  * empty per key.
   *
   * Opt-out: [[GlobalWindowStrategy.ConfKey]].
   */
@@ -94,10 +96,9 @@ object GlobalSlidingAggExec {
 }
 
 /** Physical distributed sliding-frame aggregation: range-shuffled
-  * sorted input + the boundary job of [[GlobalOffsetWindowExec]]
-  * ([[EdgeRows]]: per-partition heads and tails, driver stitch), then
-  * per-row frame folds over an [[EdgeRows.Cursor]]'s trailing ring and
-  * lookahead queue. */
+  * sorted input + the boundary scan's one job over each edge group's
+  * first max-j and last max-k rows, then per-row frame folds over a
+  * [[RowWindow]]'s trailing ring and lookahead queue. */
 case class GlobalSlidingAggExec(partition: Seq[Expression],
                                 order: Seq[SortOrder],
                                 funcs: Seq[GlobalSlidingAggExec.SlidingAgg],
@@ -108,20 +109,18 @@ case class GlobalSlidingAggExec(partition: Seq[Expression],
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val resultAttrs = output
-    val partExprs = partition
-    val keyGuard = partExprs.nonEmpty
     val funcsLocal = funcs.toArray
-    val maxK = funcsLocal.map(_.k).max // deepest lookbehind
-    val maxJ = funcsLocal.map(_.j).max // deepest lookahead
+    val maxK = Array(funcsLocal.map(_.k).max) // deepest lookbehind
+    val maxJ = Array(funcsLocal.map(_.j).max) // deepest lookahead
     val rdd = input()
 
-    val (counts, preTails, sucHeads) = EdgeRows(rdd, childOutput, maxK, maxJ)
-    val nParts = counts.length
+    // one channel: whole child rows, since a frame may read any column
+    val edges = BoundaryScan.summarize(rdd, partition, childOutput)(() =>
+      new Ends.Fold(Array(childOutput), childOutput, Array(false), maxJ, maxK))
+    val walk = Ends.walk(edges, maxJ, maxK)
 
-    // each task ships only its own edge rows + count ([[PerPartition.stitch]])
-    PerPartition.stitch(rdd, (0 until nParts).map(p =>
-      (preTails(p), sucHeads(p), counts(p)))) { (slice, iter) =>
-      val (preTail, sucHead, partCount) = slice
+    finish(rdd, edges, p => (walk.seed(p)(0), walk.after(p)(0))) { (groups, carry, iter) =>
+      val (before, after) = carry
       // per-function machinery: own buffer + projections, folded over
       // its own slice of the trailing ring and lookahead queue
       val (buffers, inits, updates, evals) = FrameFolds(funcsLocal.map(_.agg), childOutput)
@@ -130,15 +129,7 @@ case class GlobalSlidingAggExec(partition: Seq[Expression],
       val joinOut = new JoinedRow
       val valueRow = new GenericInternalRow(funcsLocal.length)
       val outProj = UnsafeProjection.create(resultAttrs, resultAttrs)
-      // TWO projection instances (separate buffers) so the current row's
-      // key and a fold candidate's key compare without copying; window
-      // partition keys are float-normalized upstream, byte equality is
-      // exact
-      val rowKeyProj = UnsafeProjection.create(partExprs, childOutput)
-      val neighKeyProj = UnsafeProjection.create(partExprs, childOutput)
-
-      // emitted rows are only this partition's own (counts(pid) of them)
-      val rows = new EdgeRows.Cursor(iter, partCount, preTail, sucHead, maxK, maxJ)
+      val rows = new RowWindow(iter, groups, before, after, maxK(0), maxJ(0))
       val lagBuf = rows.lag
       val leadBuf = rows.lead
 
@@ -146,35 +137,20 @@ case class GlobalSlidingAggExec(partition: Seq[Expression],
         override def hasNext: Boolean = rows.hasNext
         override def next(): InternalRow = {
           val row = rows.current()
-          val rowKey = if (keyGuard) rowKeyProj(row) else null
-          // per-key clip: a key's rows are contiguous, so same-key rows
-          // form a SUFFIX of the trailing ring and a PREFIX of the
-          // lookahead queue — the first same-key trailing index and the
-          // first foreign lookahead index bound every function's fold
-          var clipStart = 0
-          var clipEnd = leadBuf.length
-          if (keyGuard) {
-            clipStart = lagBuf.length
-            while (clipStart > 0 &&
-              neighKeyProj(lagBuf(clipStart - 1)).equals(rowKey)) clipStart -= 1
-            var e = 1 // leadBuf(0) is the current row
-            while (e < leadBuf.length &&
-              neighKeyProj(leadBuf(e)).equals(rowKey)) e += 1
-            clipEnd = e
-          }
+          val reach = rows.reach
           var i = 0
           while (i < funcsLocal.length) {
             inits(i)(InternalRow.empty)
             // left-to-right fold over the last k_i trailing rows, the
-            // current row, then the next j_i lookahead rows — the same
-            // association WindowExec uses — clipped at the key boundary
-            var p = math.max(clipStart, lagBuf.length - funcsLocal(i).k)
+            // current row, then the next j_i lookahead rows of its group —
+            // the same association WindowExec uses
+            var p = math.max(0, lagBuf.length - funcsLocal(i).k)
             while (p < lagBuf.length) {
               updates(i)(joinBI(buffers(i), lagBuf(p)))
               p += 1
             }
             var q = 0
-            val qEnd = math.min(clipEnd, funcsLocal(i).j + 1)
+            val qEnd = math.min(reach, funcsLocal(i).j + 1)
             while (q < qEnd) {
               updates(i)(joinBI(buffers(i), leadBuf(q)))
               q += 1
@@ -188,5 +164,54 @@ case class GlobalSlidingAggExec(partition: Seq[Expression],
         }
       }
     }
+  }
+}
+
+/** Pass 2's row window over one task's rows: `lag` holds up to `behind`
+  * rows of the current row's key group before it (oldest first; in the
+  * task's first group, seeded with the carry `before`), `lead` the
+  * current row and up to `ahead` rows after it (past the task's last row,
+  * the carry `after`, which continues its last group), of which the
+  * first [[reach]] are in the current row's group. Memory is
+  * (behind + ahead + 1) rows; only the task's own rows are emitted. */
+private[plans] final class RowWindow(iter: Iterator[InternalRow], groups: GroupCursor,
+                                     before: Array[UnsafeRow], after: Array[UnsafeRow],
+                                     behind: Int, ahead: Int) {
+  val lag = ArrayDeque.from[InternalRow](before)
+  val lead = new ArrayDeque[InternalRow]
+  private var taken = 0L   // own rows taken into `lead`
+  private var emitted = 0L // own rows emitted
+  private var afterPos = 0
+  // task positions of the group starts taken but not yet current
+  private val starts = new ArrayDeque[Long]
+
+  def hasNext: Boolean = emitted < taken || iter.hasNext
+
+  private def take(): Boolean =
+    if (iter.hasNext) {
+      val r = iter.next().copy() // the scan iterator reuses its row
+      if (groups.advance(r)) starts += taken
+      lead += r; taken += 1; true
+    } else afterPos < after.length && { lead += after(afterPos); afterPos += 1; true }
+
+  /** Fills the lookahead and returns the current row, `lead.head`. */
+  def current(): InternalRow = {
+    while (lead.length <= ahead && take()) {}
+    // the current row starts a group: the history is another group's
+    if (starts.nonEmpty && starts.head == emitted) { starts.removeHead(); lag.clear() }
+    lead.head
+  }
+
+  /** Rows of `lead` in the current row's group, the current one included. */
+  def reach: Int = if (starts.isEmpty) lead.length else (starts.head - emitted).toInt
+
+  /** Moves on: the current row becomes lag history. */
+  def advance(): Unit = {
+    if (behind > 0) {
+      lag += lead.head
+      if (lag.length > behind) lag.removeHead()
+    }
+    lead.removeHead()
+    emitted += 1
   }
 }

@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * rows are contiguous, a hot key spans tasks, and equal full sort keys
   * share a partition — a tie run never crosses a task edge.
   *
-  * The edge-chain families (ranking, running and suffix, group
-  * constants, lag/lead IGNORE NULLS, RANGE frames, nth_value) share one
+  * Every family (ranking, lag/lead, running and suffix, sliding ROWS
+  * frames, group constants, RANGE frames, nth_value) shares one
   * boundary protocol, written once in [[BoundaryScan]], [[GroupCursor]]
   * and [[finish]]. Under that sort a key group that spans tasks does so
   * only through task edges — the last group of the task where it
@@ -29,16 +29,14 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *  - walk: the driver chains equal adjacent edge groups and folds each
   *    chain left to right — each task's first-group seed is the carry
   *    of the slices before it, each edge slot gets the whole chain's
-  *    total — and, for the families that read ahead (lag/lead IGNORE
-  *    NULLS, RANGE frames), right to left. At most two slices per task: driver work
-  *    is independent of data size;
+  *    total — and, for the families that read ahead (lead, sliding and
+  *    RANGE frames), right to left. At most two slices per task: driver
+  *    work is independent of data size;
   *  - cursor: pass 2 starts each task in its first group, which takes
   *    the seed, and the family resets its state at every later group,
   *    which is whole in the task.
   * With no partition keys every task is one empty-keyed group and one
-  * chain spans the table: the walk is the classic prefix scan. The
-  * fixed-reach families (lag/lead, sliding ROWS frames) stitch rows
-  * instead ([[EdgeRows]]). */
+  * chain spans the table: the walk is the classic prefix scan. */
 abstract class GlobalWindowExec extends UnaryExecNode {
   def partition: Seq[Expression]
   /** The sort after the partition keys: the window's ORDER BY (reversed
@@ -216,102 +214,54 @@ private[plans] final class GroupCursor(keys: Seq[Expression], input: Seq[Attribu
   def inLast: Boolean = groupOf == null || cur.equals(last)
 }
 
-/** Boundary rows for frames that reach a fixed number of rows back and
-  * ahead (lag/lead, sliding ROWS frames). */
-private[plans] object EdgeRows {
-  /** One job collects each partition's row count, first `ahead` and last
-    * `behind` rows (full child rows: the frame may read any column); the
-    * driver then gives partition p the `behind` rows before it and the
-    * `ahead` rows after it, walking through partitions shorter than the
-    * reach. Shipped rows are bounded by (behind + ahead) × partitions
-    * and may belong to another partition key: callers clip at keys.
-    * Returns (counts, predecessor tails oldest first, successor heads). */
-  def apply(rdd: RDD[InternalRow], output: Seq[Attribute], behind: Int, ahead: Int)
-      : (Array[Long], Array[Array[UnsafeRow]], Array[Array[UnsafeRow]]) = {
-    val stats: Array[(Long, Array[UnsafeRow], Array[UnsafeRow])] =
-      rdd.sparkContext.runJob(rdd, (iter: Iterator[InternalRow]) => {
-        val toUnsafe = UnsafeProjection.create(output, output)
-        var cnt = 0L
-        val head = new ArrayBuffer[UnsafeRow]
-        // ring of the last `behind` rows
-        val tail = new Array[UnsafeRow](math.max(behind, 1))
-        while (iter.hasNext) {
-          val u = toUnsafe(iter.next())
-          if (cnt < ahead) head += u.copy()
-          if (behind > 0) tail((cnt % behind).toInt) = u.copy()
-          cnt += 1
-        }
-        val tailSeq =
-          if (behind == 0 || cnt == 0) Array.empty[UnsafeRow]
-          else {
-            val n = math.min(cnt, behind).toInt
-            // oldest-to-newest of the last n rows
-            Array.tabulate(n)(i => tail(((cnt - n + i) % behind).toInt))
+/** A key group's first and last rows per channel, projected: what the
+  * fixed-reach families (lag/lead, sliding ROWS frames) need of a task's
+  * edge groups. */
+private[plans] final case class Ends(head: Array[Array[UnsafeRow]],
+                                     tail: Array[Array[UnsafeRow]])
+
+private[plans] object Ends {
+  /** Pass 1's fold: channel c keeps copies of `exprs(c)` over the group's
+    * first `ahead(c)` and last `behind(c)` rows, skipping the rows where
+    * it is null when `skipNulls(c)`. Build it in the task. */
+  final class Fold(exprs: Array[Seq[Expression]], input: Seq[Attribute],
+                   skipNulls: Array[Boolean], ahead: Array[Int], behind: Array[Int])
+      extends GroupFold[Ends] {
+    private val projs = exprs.map(UnsafeProjection.create(_, input))
+    private val heads = Array.fill(exprs.length)(new ArrayBuffer[UnsafeRow])
+    private val tails = Array.fill(exprs.length)(new ArrayDeque[UnsafeRow])
+    def reset(): Unit = { heads.foreach(_.clear()); tails.foreach(_.clear()) }
+    def add(row: InternalRow): Unit = {
+      var c = 0
+      while (c < projs.length) {
+        val v = projs(c)(row)
+        val inHead = heads(c).length < ahead(c)
+        if ((inHead || behind(c) > 0) && !(skipNulls(c) && v.isNullAt(0))) {
+          val u = v.copy()
+          if (inHead) heads(c) += u
+          if (behind(c) > 0) {
+            tails(c) += u
+            if (tails(c).length > behind(c)) tails(c).removeHead()
           }
-        (cnt, head.toArray, tailSeq)
-      })
-    val nParts = stats.length
-    def predecessorTail(p: Int): Array[UnsafeRow] = {
-      val out = new ArrayBuffer[UnsafeRow]
-      var i = p - 1
-      while (i >= 0 && out.length < behind) {
-        val t = stats(i)._3
-        // newest-missing-first from the end of partition i's tail
-        var j = t.length - 1
-        while (j >= 0 && out.length < behind) { out += t(j); j -= 1 }
-        i -= 1
+        }
+        c += 1
       }
-      out.reverse.toArray // oldest-to-newest
     }
-    def successorHead(p: Int): Array[UnsafeRow] = {
-      val out = new ArrayBuffer[UnsafeRow]
-      var i = p + 1
-      while (i < nParts && out.length < ahead) {
-        val h = stats(i)._2
-        var j = 0
-        while (j < h.length && out.length < ahead) { out += h(j); j += 1 }
-        i += 1
-      }
-      out.toArray
-    }
-    (stats.map(_._1), Array.tabulate(nParts)(predecessorTail),
-      Array.tabulate(nParts)(successorHead))
+    def snapshot(): Ends = Ends(heads.map(_.toArray), tails.map(_.toArray))
   }
 
-  /** The row window over one partition: `lag` holds up to `behind` rows
-    * before the current one (oldest first, seeded with the stitched
-    * predecessor tail), `lead` the current row and up to `ahead` rows
-    * after it (past the partition end, the stitched successor head).
-    * Memory is (behind + ahead + 1) rows; only the partition's own
-    * `count` rows are emitted. */
-  final class Cursor(iter: Iterator[InternalRow], count: Long,
-                     preTail: Array[UnsafeRow], sucHead: Array[UnsafeRow],
-                     behind: Int, ahead: Int) {
-    val lag = new ArrayDeque[InternalRow]
-    preTail.foreach(lag += _)
-    val lead = new ArrayDeque[InternalRow]
-    // copies: the scan iterator reuses its row
-    private val source: Iterator[InternalRow] = iter.map(_.copy()) ++ sucHead.iterator
-    /** Rows of this partition emitted so far. */
-    var emitted = 0L
-
-    def hasNext: Boolean = emitted < count
-
-    /** Fills the lookahead and returns the current row, `lead.head`. */
-    def current(): InternalRow = {
-      while (lead.length < ahead + 1 && source.hasNext) lead += source.next()
-      lead.head
-    }
-
-    /** Moves on: the current row becomes lag history. */
-    def advance(): Unit = {
-      if (behind > 0) {
-        lag += lead.head
-        if (lag.length > behind) lag.removeHead()
-      }
-      lead.removeHead()
-      emitted += 1
-    }
+  /** The chain walk over [[Fold]]'s summaries: per channel, each task's
+    * first group gets the newest `behind(c)` rows of the slices before it
+    * (`seed`), its last group the oldest `ahead(c)` of those after it
+    * (`after`). */
+  def walk(edges: Array[Edge[Ends]], ahead: Array[Int], behind: Array[Int])
+      : Walk[Array[Array[UnsafeRow]]] = {
+    val n = ahead.length
+    BoundaryScan.walk(edges, Array.fill(n)(Array.empty[UnsafeRow]),
+      (c: Array[Array[UnsafeRow]], s: Ends) =>
+        Array.tabulate(n)(i => (c(i) ++ s.tail(i)).takeRight(behind(i))),
+      (s: Ends, c: Array[Array[UnsafeRow]]) =>
+        Array.tabulate(n)(i => (s.head(i) ++ c(i)).take(ahead(i))))
   }
 }
 

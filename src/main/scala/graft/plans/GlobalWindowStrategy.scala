@@ -28,9 +28,10 @@ private[plans] trait WindowFamily {
   * SinglePartition WindowExec — the whole table through one task — and
   * a PARTITION BY window puts every row of a hot key in one task. Each
   * family in [[families]] replaces that with a range exchange over
-  * (partition keys ⧺ order key), a per-partition edge summary, a driver
-  * stitch and a per-partition pass (the per-family docs say what each
-  * stitches). This strategy walks the family table in order and plans a
+  * (partition keys ⧺ order key) and the boundary scan of
+  * [[GlobalWindowExec]]: a per-partition edge summary, a driver walk and
+  * a per-partition pass (the per-family docs say what each carries).
+  * This strategy walks the family table in order and plans a
   * node as the first family that claims all of its expressions;
   * [[GlobalWindowSplit]] cuts mixed nodes along the same table.
   *
@@ -51,7 +52,6 @@ object GlobalWindowStrategy extends SparkStrategy {
   private[plans] val families: IndexedSeq[WindowFamily] = IndexedSeq(
     GlobalRowNumberStrategy,
     GlobalOffsetWindowStrategy,
-    GlobalOffsetIgnoreNullsStrategy,
     GlobalRunningAggStrategy.Running,
     GlobalRunningAggStrategy.Suffix,
     GlobalSlidingAggStrategy,

@@ -3278,12 +3278,12 @@ object PipelineQueries {
 
     // NAIVE GLOBAL lag()/lead() — frameless OFFSET window functions,
     // the other half of the single-task global-window trap. The
-    // GlobalOffsetWindowStrategy plans a range shuffle + boundary-row
-    // stitch: each partition receives the max-lag tail of its
-    // predecessors and max-lead head of its successors (a few rows,
-    // independent of data size) and runs a constant-memory sliding
-    // window locally. Mixed offsets and per-function defaults in one
-    // node; deltas computed against the lagged value.
+    // GlobalOffsetWindowStrategy plans a range shuffle + the shared
+    // boundary scan: each partition receives the last max-lag values
+    // before it and the first max-lead values after it (a few values,
+    // independent of data size) and runs a constant-memory value ring
+    // locally. Mixed offsets and per-function defaults in one node;
+    // deltas computed against the lagged value.
     "q_lag_global" -> ((s, dir) => {
       events(s, dir).createOrReplaceTempView("events_v")
       s.sql("""SELECT event_id, user_id,
@@ -3350,11 +3350,12 @@ object PipelineQueries {
     // CENTERED / LOOKAHEAD moving frames — `ROWS BETWEEN k PRECEDING
     // AND j FOLLOWING` (the smoothing window every time-series user
     // writes) and the pure-lookahead `CURRENT ROW AND j FOLLOWING`.
-    // GlobalSlidingAggStrategy stitches BOTH boundaries: each partition
-    // receives its max-k predecessor tail and max-j successor head (the
-    // GlobalOffsetWindowExec stitch), then folds each row's frame from a
-    // trailing ring + lookahead queue — still one range exchange, still
-    // bit-exact vs the built-in (same fold association).
+    // GlobalSlidingAggStrategy carries BOTH boundaries: each partition
+    // receives the max-k rows before it and the max-j rows after it (the
+    // shared boundary scan's forward and back carries), then folds each
+    // row's frame from a trailing ring + lookahead queue — still one
+    // range exchange, still bit-exact vs the built-in (same fold
+    // association).
     "q_moving_centered" -> ((s, dir) => {
       events(s, dir).createOrReplaceTempView("events_v")
       s.sql("""SELECT event_id, user_id,
@@ -3468,9 +3469,10 @@ object PipelineQueries {
 
     // SKEW-SAFE PER-KEY LAG/LEAD — sessionization's workhorse, same hot
     // key problem as q_skew_window. Plain window SQL:
-    // GlobalOffsetWindowStrategy takes the global n-th neighbor over the
-    // (user, ts) range exchange — a key's rows are contiguous there —
-    // and a key guard turns a cross-key neighbor into the default.
+    // GlobalOffsetWindowStrategy takes the n-th neighbor over the
+    // (user, ts) range exchange — a key's rows are contiguous there, the
+    // boundary walk chains only equal key groups, and a neighbor past
+    // the key's edge is the default.
     "q_skew_lag" -> ((s, dir) => {
       events(s, dir).createOrReplaceTempView("events_v")
       s.sql("""SELECT event_id, user_id,
@@ -3692,7 +3694,7 @@ object PipelineQueries {
     // SKEW-SAFE PER-KEY GAP FILL — "previous non-null reading per
     // user": only purchase events carry a reading, so lag IGNORE NULLS
     // must skip arbitrarily long runs of other events. Plain window
-    // SQL; GlobalOffsetIgnoreNullsStrategy claims the PARTITION BY
+    // SQL; GlobalOffsetWindowStrategy claims the PARTITION BY
     // node — the boundary job ships each task's edge-group non-null
     // VALUES (bounded by the offset, independent of null-run length),
     // the driver walks the task chain only while the edge group

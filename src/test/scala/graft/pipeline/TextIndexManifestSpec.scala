@@ -92,6 +92,11 @@ class TextIndexManifestSpec extends SparkSuite {
     TextIndex.reshard(spark, p, 9)
     assert(TextIndex.storedShards(spark, p) === Some(9))
     assert(FileManifest.exists(spark, p))
+    // the staged totals are a recount of the swapped-in postings
+    val recount = spark.read.parquet(p).agg(count_distinct($"doc_id"), sum($"tf")).head()
+    assert((TextIndex.storedDocs(spark, p), TextIndex.storedTokens(spark, p)) ===
+      ((Some(recount.getLong(0)), Some(recount.getLong(1)))))
+    assert(recount.getLong(0) === afterMerge.length)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val df = TextIndex.searchAll(spark, p, Seq("alpha"))

@@ -3,9 +3,10 @@ package graft.plans
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
-/** GlobalOffsetIgnoreNullsStrategy: naive global lag/lead IGNORE NULLS
-  * must plan as the value-stitch exec and match the built-in single-task
-  * WindowExec exactly, including long null runs spanning partitions. */
+/** GlobalOffsetWindowStrategy, IGNORE NULLS: naive global lag/lead
+  * IGNORE NULLS must plan as the offset exec and match the built-in
+  * single-task WindowExec exactly, including long null runs spanning
+  * partitions. */
 class GlobalOffsetIgnoreNullsSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
 
@@ -28,11 +29,11 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite with WindowDifferential {
                FROM ign_t"""
     val out = spark.sql(q)
     val p = out.queryExecution.executedPlan.toString
-    assert(p.contains("GlobalOffsetIgnoreNulls"),
-      s"expected GlobalOffsetIgnoreNullsExec:\n$p")
+    assert(p.contains("GlobalOffsetWindow"),
+      s"expected GlobalOffsetWindowExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"built-in WindowExec should be replaced:\n$p")
-    assertMatchesBuiltIn("IGNORE NULLS offsets", 4, Seq("GlobalOffsetIgnoreNulls")) {
+    assertMatchesBuiltIn("IGNORE NULLS offsets", 4, Seq("GlobalOffsetWindow")) {
       spark.sql(q)
     }
   }
@@ -48,7 +49,7 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite with WindowDifferential {
            lag(v, 1) IGNORE NULLS OVER (ORDER BY id) AS p,
            lead(v, 1) IGNORE NULLS OVER (ORDER BY id) AS n
          FROM ign_tiny""")
-    assert(out.queryExecution.executedPlan.toString.contains("GlobalOffsetIgnoreNulls"))
+    assert(out.queryExecution.executedPlan.toString.contains("GlobalOffsetWindow"))
     val rows = out.collect().map(r => (r.getLong(0),
       if (r.isNullAt(1)) -1L else r.getLong(1),
       if (r.isNullAt(2)) -1L else r.getLong(2))).sortBy(_._1).toSeq
@@ -76,37 +77,36 @@ class GlobalOffsetIgnoreNullsSpec extends SparkSuite with WindowDifferential {
                  lag(v, 1) IGNORE NULLS OVER (PARTITION BY k ORDER BY id) AS prev_nn,
                  lag(v, 2) IGNORE NULLS OVER (PARTITION BY k ORDER BY id) AS prev2_nn,
                  lead(v, 1) IGNORE NULLS OVER (PARTITION BY k ORDER BY id) AS next_nn,
-                 lead(v, 3, -1) IGNORE NULLS OVER (PARTITION BY k ORDER BY id) AS next3_nn
+                 lead(v, 3, -1) IGNORE NULLS OVER (PARTITION BY k ORDER BY id) AS next3_nn,
+                 lag(v, 0, -1) IGNORE NULLS OVER (PARTITION BY k ORDER BY id) AS cur
                FROM ign_keyed"""
     val out = spark.sql(q)
     val p = out.queryExecution.executedPlan.toString
-    assert(p.contains("GlobalOffsetIgnoreNulls"),
+    assert(p.contains("GlobalOffsetWindow"),
       s"per-key IGNORE NULLS offsets must rescue:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"no built-in WindowExec may appear:\n$p")
     assert(!p.contains("hashpartitioning(k"),
       s"a hash exchange on k would pin the hot key to one task:\n$p")
     assertMatchesBuiltIn("per-key IGNORE NULLS offsets", 4,
-      Seq("GlobalOffsetIgnoreNulls"))(spark.sql(q))
+      Seq("GlobalOffsetWindow"))(spark.sql(q))
   }
 
-  test("respect-nulls expressions are untouched; mixed nodes split per family") {
+  test("both null modes and offset 0 in one node plan one offset exec") {
     df.createOrReplaceTempView("ign_t2")
-    val plain = spark.sql(
-      "SELECT id, lag(v, 1) OVER (ORDER BY id) AS p FROM ign_t2")
-    val pp = plain.queryExecution.executedPlan.toString
-    assert(pp.contains("GlobalOffsetWindow") && !pp.contains("GlobalOffsetIgnoreNulls"))
-    // mixed IGNORE/RESPECT in one OVER spec: GlobalWindowSplit separates
-    // the two families so BOTH rescue execs plan, and values still match
-    // the built-in
+    // mixed IGNORE/RESPECT NULLS in one OVER spec: one exec, one
+    // boundary job, values still match the built-in
     def mixed = spark.sql(
       """SELECT id, lag(v, 1) OVER (ORDER BY id) AS a,
-           lag(v, 1) IGNORE NULLS OVER (ORDER BY id) AS b
+           lag(v, 1) IGNORE NULLS OVER (ORDER BY id) AS b,
+           lead(v, 2) OVER (ORDER BY id) AS c,
+           lead(v, 3, -1) IGNORE NULLS OVER (ORDER BY id) AS d,
+           lag(v, 0) OVER (ORDER BY id) AS e,
+           lead(v, 0, -1) IGNORE NULLS OVER (ORDER BY id) AS f
          FROM ign_t2""")
-    val mp = mixed.queryExecution.executedPlan.toString
-    assert(mp.contains("GlobalOffsetWindow") && mp.contains("GlobalOffsetIgnoreNulls"),
-      s"mixed node must split into both rescue execs:\n$mp")
-    assertMatchesBuiltIn("mixed IGNORE/RESPECT NULLS", 4,
-      Seq("GlobalOffsetWindow", "GlobalOffsetIgnoreNulls"))(mixed)
+    val execs = rescues(mixed)
+    assert(execs.length == 1 && execs.head.isInstanceOf[GlobalOffsetWindowExec],
+      s"a mixed node must plan one offset exec:\n${mixed.queryExecution.executedPlan}")
+    assertMatchesBuiltIn("mixed IGNORE/RESPECT NULLS", 4, Seq("GlobalOffsetWindow"))(mixed)
   }
 }

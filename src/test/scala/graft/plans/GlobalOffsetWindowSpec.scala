@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** GlobalOffsetWindowStrategy: naive `lag()/lead() OVER (ORDER BY ...)`
-  * must plan as the range-shuffle + boundary-stitch exec and produce
+  * must plan as the range-shuffle + boundary-scan exec and produce
   * values identical to the built-in single-task WindowExec. */
 class GlobalOffsetWindowSpec extends SparkSuite with WindowDifferential {
   import spark.implicits._
@@ -54,18 +54,20 @@ class GlobalOffsetWindowSpec extends SparkSuite with WindowDifferential {
     assert(out == expected)
   }
 
-  test("falls back for ignoreNulls; partitioned specs rescue with a key guard") {
+  test("ignoreNulls plans the same exec; partitioned specs rescue per key group") {
     val w = Window.orderBy("k", "id")
-    // the global IGNORE NULLS variant has its own strategy
-    // (GlobalOffsetIgnoreNullsStrategy); THIS exec declines it
-    val ign = df.withColumn("lg", lag(col("id"), 1, null, true).over(w))
-    assert(!ign.queryExecution.executedPlan.toString.contains("GlobalOffsetWindow "))
-    // per-key lag/lead now rides the same boundary-stitch exec over a
-    // (key, order) range exchange, cross-key neighbors defaulted
+    // IGNORE NULLS is the same family and exec, every row a value
+    assertMatchesBuiltIn("global lag IGNORE NULLS", 4, Seq("GlobalOffsetWindow")) {
+      df.withColumn("lg", lag(when(col("id") % 3 === 0, col("id")), 1, null, true).over(w))
+    }
+    // per-key lag/lead rides the same exec over a (key, order) range
+    // exchange: the walk chains only equal key groups
     def part = df.withColumn("lg",
         lag("id", 1, -7L).over(Window.partitionBy(col("k") % 10).orderBy("id")))
       .withColumn("ld",
         lead("id", 2).over(Window.partitionBy(col("k") % 10).orderBy("id")))
+      .withColumn("l0",
+        lag(col("k") + 1, 0).over(Window.partitionBy(col("k") % 10).orderBy("id")))
     val pp = part.queryExecution.executedPlan.toString
     assert(pp.contains("GlobalOffsetWindow"), s"per-key lag must rescue:\n$pp")
     assert(pp.contains("rangepartitioning") && !pp.contains("hashpartitioning"),

@@ -6,7 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Seeded differential over the PARTITION BY window rescues: round r
-  * checks family r of the nine in [[GlobalWindowStrategy]] on a random
+  * checks draw r of nine — the eight families of [[GlobalWindowStrategy]],
+  * lag/lead drawn once per null mode — on a random
   * input with one hot key holding 40–80 % of the rows (plus a drawn
   * share of null keys, null values and value ties), at 16 and at 61
   * uncoalesced shuffle partitions over a range exchange, so the hot key
@@ -61,8 +62,9 @@ class PerKeyWindowFuzzSpec extends SparkSuite with WindowDifferential {
   private def byV() = Window.partitionBy("k")
     .orderBy(if (rnd.nextBoolean()) col("v").asc_nulls_first else col("v").desc_nulls_last)
 
-  /** The nine families in [[GlobalWindowStrategy.families]] order: a
-    * name, the exec the rescue must plan, and a draw of window columns
+  /** The families in [[GlobalWindowStrategy.families]] order, lag/lead
+    * once per null mode: a name, the exec the rescue must plan, and a
+    * draw of window columns
     * whose values are deterministic (position-based frames order by the
     * unique `id`; the value order `v` only feeds peer-inclusive shapes). */
   private val families: IndexedSeq[(String, String, () => Seq[(String, Column)])] =
@@ -78,7 +80,7 @@ class PerKeyWindowFuzzSpec extends SparkSuite with WindowDifferential {
         Seq("a" -> lag("v", 1 + rnd.nextInt(5), -1L).over(w),
           "b" -> lead("v", 1 + rnd.nextInt(5)).over(w))
       }),
-      ("lag/lead IGNORE NULLS", "GlobalOffsetIgnoreNulls", () => {
+      ("lag/lead IGNORE NULLS", "GlobalOffsetWindow", () => {
         val w = byId()
         Seq("a" -> lag(col("v"), 1 + rnd.nextInt(3), null, true).over(w),
           "b" -> lead(col("v"), 1 + rnd.nextInt(4), -1L, true).over(w))

@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.SparkSuite
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** The differential the window specs share: a frame planned with the
   * rescues must collect the same rows as the same frame planned as
@@ -31,13 +32,15 @@ trait WindowDifferential { self: SparkSuite =>
   def plansBuiltIn(d: DataFrame): Boolean = d.queryExecution.executedPlan.toString
     .linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window ["))
 
+  /** The window rescue execs in `d`'s executed plan, inside AQE stages
+    * too. */
+  def rescues(d: DataFrame): Seq[GlobalWindowExec] =
+    WindowDifferential.collect(d.queryExecution.executedPlan) {
+      case g: GlobalWindowExec => g
+    }
+
   /** Whether `d`'s executed plan holds a window rescue exec. */
-  def plansRescue(d: DataFrame): Boolean = {
-    val plan = d.queryExecution.executedPlan.toString
-    Seq("GlobalRowNumber", "GlobalOffsetWindow", "GlobalOffsetIgnoreNulls", "GlobalRunningAgg",
-      "GlobalSlidingAgg", "GlobalConstantAgg", "GlobalRangeFrame", "GlobalNthValue")
-      .exists(plan.contains)
-  }
+  def plansRescue(d: DataFrame): Boolean = rescues(d).nonEmpty
 
   /** Builds `frame` once per side, since a Dataset keeps its first
     * executed plan: the rescued side must plan every node named in
@@ -70,3 +73,6 @@ trait WindowDifferential { self: SparkSuite =>
       }
     }
 }
+
+/** Plan-tree walks that look inside AQE stages. */
+private object WindowDifferential extends AdaptiveSparkPlanHelper

@@ -40,9 +40,12 @@ class WindowJobCountSpec extends SparkSuite with JobCounting {
     ("offset", "lag(v, 2) OVER (ORDER BY id)", "GlobalOffsetWindowExec", 4),
     ("offset", "lead(v) OVER (PARTITION BY k ORDER BY id)", "GlobalOffsetWindowExec", 4),
     ("offset ignore nulls", "lag(v, 1) IGNORE NULLS OVER (ORDER BY id)",
-      "GlobalOffsetIgnoreNullsExec", 4),
+      "GlobalOffsetWindowExec", 4),
     ("offset ignore nulls", "lead(v, 2) IGNORE NULLS OVER (PARTITION BY k ORDER BY id)",
-      "GlobalOffsetIgnoreNullsExec", 4),
+      "GlobalOffsetWindowExec", 4),
+    // both null modes in one node plan one exec: one edge-summary job
+    ("offset mixed", "lag(v, 1) OVER (ORDER BY id) AS a, " +
+      "lag(v, 2) IGNORE NULLS OVER (ORDER BY id)", "GlobalOffsetWindowExec", 4),
     ("running", "SUM(v) OVER (ORDER BY id)", "GlobalRunningAggExec", 4),
     ("running", "MIN(v) OVER (PARTITION BY k ORDER BY id)", "GlobalRunningAggExec", 4),
     ("suffix", "SUM(v) OVER (ORDER BY id ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)",

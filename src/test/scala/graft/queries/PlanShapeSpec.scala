@@ -301,7 +301,7 @@ class PlanShapeSpec extends SparkSuite {
 
   test("skew-safe per-key IGNORE NULLS gap fill: value stitch, no WindowExec") {
     val p = plan("q_skew_gapfill")
-    assert(p.contains("GlobalOffsetIgnoreNulls"),
+    assert(p.contains("GlobalOffsetWindow"),
       s"per-key IGNORE NULLS offsets must ride the value stitch:\n$p")
     assert(p.contains("GlobalNthValue"),
       s"the per-key nth_value family must split out and rescue too:\n$p")
@@ -374,8 +374,8 @@ class PlanShapeSpec extends SparkSuite {
 
   test("naive SQL lag/lead IGNORE NULLS plans the value-stitch exec") {
     val p = plan("q_lag_ignorenulls_global")
-    assert(p.contains("GlobalOffsetIgnoreNulls"),
-      s"expected GlobalOffsetIgnoreNullsExec:\n$p")
+    assert(p.contains("GlobalOffsetWindow"),
+      s"expected GlobalOffsetWindowExec:\n$p")
     assert(!p.linesIterator.exists(_.trim.stripPrefix("+- ").startsWith("Window [")),
       s"single-task WindowExec must not survive for IGNORE NULLS offsets:\n$p")
   }
